@@ -13,9 +13,10 @@ contract.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 from collections.abc import Callable
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -55,14 +56,14 @@ def _ensure_shipped(spark: SparkSession) -> None:
     zip_path = "/tmp/nail_parquet_spark_pyfiles.zip"
     import os
 
-    pkg = "/root/repo/nail_parquet_spark"
+    repo = Path(__file__).resolve().parent
     with zipfile.ZipFile(zip_path, "w") as z:
-        for root, _, files in os.walk(pkg):
+        for root, _, files in os.walk(repo / "nail_parquet_spark"):
             if "__pycache__" in root:
                 continue
             for f in files:
                 full = os.path.join(root, f)
-                z.write(full, os.path.relpath(full, "/root/repo"))
+                z.write(full, os.path.relpath(full, repo))
     try:
         spark.sparkContext.addPyFile(zip_path)
     except Exception:

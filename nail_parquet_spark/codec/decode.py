@@ -13,6 +13,7 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
+from nail_parquet_spark.codec import zonemap
 from nail_parquet_spark.codec.kernels import EncodedBlock, decode_array
 
 
@@ -745,29 +746,29 @@ def decode_parquet_dir(spark, blocks_dir: str, out_dir: str,
 # zone-map predicate pushdown (block pruning from the per-block min/max)
 # ---------------------------------------------------------------------------
 
-_PRUNE_OPS = ("=", "==", "!=", ">", ">=", "<", "<=", "prefix", "in",
-              "isnull", "notnull")
-
-# IN-lists longer than this skip zone/bloom pruning (the OR-of-intervals
-# expression and the driver-side probe-hash work grow linearly; past this
-# the residual isin filter alone is the right plan)
-_IN_PRUNE_CAP = 64
+def _keep_pairs(blocks: DataFrame, pairs) -> DataFrame:
+    """Restrict a blocks table to a (part_id, block_id) keep-set as LITERAL
+    ``isin`` filters on each coordinate, which Catalyst pushes into the
+    parquet scan. The parts x bids product is a superset of the pair set —
+    safe wherever a residual step keeps answers exact (see
+    :func:`_filter_block_pairs` for the exact form)."""
+    parts = sorted({p for p, _ in pairs})
+    bids = sorted({b for _, b in pairs})
+    return blocks.filter(F.col("part_id").isin(parts) & F.col("block_id").isin(bids))
 
 
 def _keep_groups(blocks: DataFrame, meta: DataFrame, may,
                  max_groups: int) -> DataFrame:
     """Collect the (part_id, block_id) keep-set satisfying ``may`` and
-    re-apply it as literal isin filters (pushed into the parquet scan).
-    Above ``max_groups`` pruning is skipped — never wrong, only unpruned."""
+    re-apply it with :func:`_keep_pairs`. Above ``max_groups`` pruning is
+    skipped — never wrong, only unpruned."""
     pairs = (
         meta.filter(may).select("part_id", "block_id").distinct()
         .limit(max_groups + 1).collect()
     )
     if len(pairs) > max_groups:
         return blocks
-    parts = sorted({r["part_id"] for r in pairs})
-    bids = sorted({r["block_id"] for r in pairs})
-    return blocks.filter(F.col("part_id").isin(parts) & F.col("block_id").isin(bids))
+    return _keep_pairs(blocks, {(r["part_id"], r["block_id"]) for r in pairs})
 
 
 def prune_blocks(blocks: DataFrame, column: str, op: str, value,
@@ -785,115 +786,21 @@ def prune_blocks(blocks: DataFrame, column: str, op: str, value,
     superset of the exact pair set — safe, and the residual row filter
     (decode_table_where) keeps semantics exact.
 
-    Safety rules encoded below:
-    - stats are rendered with str()[:64]; a 64-char string max may be
-      truncated, so it prunes nothing (treated as +inf). A truncated min is
-      a prefix of the true min, hence still a valid lower bound.
-    - numeric/timestamp stats re-parse with try_cast; a failed parse keeps
-      the group (NULL bound = unknown, never prunes).
-    - min_val NULL with null_count < n_rows means stats were unavailable →
-      keep; min_val NULL on an all-null block → no comparison can match →
-      prune. Binary columns carry no stats → no pruning.
+    The prune rule and its safety rules (render cap, unparsed and missing
+    stats, statless kinds) are :func:`codec.zonemap.may_keep`'s.
     """
-    if op not in _PRUNE_OPS:
-        raise ValueError(f"op must be one of {_PRUNE_OPS}, got {op!r}")
+    if op not in zonemap.PRUNE_OPS:
+        raise ValueError(f"op must be one of {zonemap.PRUNE_OPS}, got {op!r}")
     if headers is None:
         headers, _ = _headers_by_column(blocks)
     if column not in headers:
         raise ValueError(f"column {column!r} not in the blocks table")
-    may = _zone_may_expr(column, op, value, headers)
+    may = zonemap.may_keep(headers, column, op, value)
     if may is None:
         return blocks
     meta = blocks.filter(F.col("column") == column).select(
         "part_id", "block_id", "min_val", "max_val", "n_rows", "null_count")
     return _keep_groups(blocks, meta, may, max_groups)
-
-
-def _zone_may_expr(column: str, op: str, value, headers: dict):
-    """The zone-map may-keep Column for ``column op value`` over a blocks
-    metadata row, or None when stats cannot prune this column/op (binary
-    columns, an oversized IN list). The expression references only
-    min_val/max_val/n_rows/null_count — all prune rules and safety notes
-    of :func:`prune_blocks` live here."""
-    from nail_parquet_spark.codec.kernels import _type_from_str
-
-    if op in ("isnull", "notnull"):
-        # null predicates need only the null counters, recorded for EVERY
-        # column type (binary included): isnull keeps blocks with any null,
-        # notnull keeps blocks with any non-null row
-        return (F.col("null_count") > 0) if op == "isnull" else (
-            F.col("null_count") < F.col("n_rows"))
-    t = _type_from_str(headers[column]["type"])
-    is_str = pa.types.is_string(t) or pa.types.is_large_string(t)
-    if op == "prefix" and not is_str:
-        raise ValueError("prefix predicate is only valid on string columns")
-    if pa.types.is_integer(t) or pa.types.is_boolean(t):
-        cast = "bigint"
-    elif pa.types.is_floating(t):
-        cast = "double"
-    elif pa.types.is_timestamp(t) or pa.types.is_date(t):
-        cast = "timestamp"
-    elif is_str:
-        cast = None
-    else:
-        return None  # binary etc.: no usable stats
-
-    in_vals: list | None = None
-    if op == "in":
-        in_vals = list(value)
-        if len(in_vals) > _IN_PRUNE_CAP:
-            return None
-    if cast is not None:
-        lo = F.col("min_val").try_cast(cast)
-        hi = F.col("max_val").try_cast(cast)
-        v = F.lit(None if in_vals is not None else value).cast(cast)
-        hi_known = hi.isNotNull()
-        lo_known = lo.isNotNull()
-        lits = [F.lit(x).cast(cast) for x in (in_vals or [])]
-    else:
-        lo = F.col("min_val")
-        hi = F.col("max_val")
-        v = F.lit(None if in_vals is not None else value)
-        hi_known = hi.isNotNull() & (F.length("max_val") < 64)
-        # a 64-char min may be truncated: a prefix of the true min, valid
-        # as a lower bound but NOT as an exact value for !=-constancy
-        lo_known = F.length("min_val") < 64
-        lits = [F.lit(x) for x in (in_vals or [])]
-    if op == "in":
-        if not lits:
-            # empty IN-list matches no row anywhere — prune every group
-            return F.lit(False)
-        cond = F.lit(False)
-        for lv in lits:
-            cond = cond | ((lo <= lv) & F.when(hi_known, hi >= lv)
-                           .otherwise(F.lit(True)))
-    elif op == "!=":
-        # prune only blocks provably CONSTANT-equal to the value: every
-        # non-null row is v (nulls never satisfy !=); all-null blocks fall
-        # out below via ~lo.isNull()
-        cond = ~(lo_known & hi_known & (lo == v) & (hi == v))
-    elif op == "prefix":
-        # strings with prefix p form the interval [p, p⁺). A block may hold
-        # one iff hi >= p and (lo <= p OR lo itself starts with p) — the
-        # lo-side disjunction stays valid under 64-char min truncation: a
-        # truncated lo is a prefix of the true lo, so it is <= p whenever
-        # the true lo's first len(lo) chars sit within p, and startswith
-        # still fires when the truncation kept at least len(p) chars.
-        cond = ((lo <= v) | lo.startswith(v)) & F.when(
-            hi_known, hi >= v
-        ).otherwise(F.lit(True))
-    elif op in ("=", "=="):
-        cond = (lo <= v) & F.when(hi_known, hi >= v).otherwise(F.lit(True))
-    elif op == ">=":
-        cond = F.when(hi_known, hi >= v).otherwise(F.lit(True))
-    elif op == ">":
-        cond = F.when(hi_known, hi > v).otherwise(F.lit(True))
-    elif op == "<=":
-        cond = lo <= v
-    else:  # "<"
-        cond = lo < v
-    stats_missing = lo.isNull() & (F.col("null_count") < F.col("n_rows"))
-    return stats_missing | ((~lo.isNull()) & cond)
 
 
 def prune_blocks_bloom(blocks: DataFrame, column: str, value,
@@ -987,7 +894,7 @@ def _bloom_may_expr(meta: DataFrame, column: str, value, headers: dict,
         # be present. Any unprobable value (or an oversized list) keeps the
         # whole thing unpruned — never wrong.
         vals = list(value)
-        if not vals or len(vals) > _IN_PRUNE_CAP:
+        if not vals or len(vals) > zonemap.IN_PRUNE_CAP:
             return None if vals else F.lit(False)
         probes = [bloom_probe_sql("bloom", x, kind) for x in vals]
         if any(p is None for p in probes):
@@ -1050,24 +957,26 @@ def _as_clause(item) -> list[tuple]:
 
 def _prune_one(pruned: DataFrame, col_: str, op_: str, val_,
                max_groups: int, headers: dict) -> DataFrame:
-    """Zone-map + bloom pruning for one predicate in ONE metadata job:
-    the two may-keep expressions AND together over the same
-    column-filtered metadata frame, so the keep-set collect runs once
-    where the chained prune_blocks -> prune_blocks_bloom form ran two
-    (r06 — at corpus scale each collect is a full metadata-table job).
+    """Zone-map + bloom pruning for one predicate with ONE keep-set
+    collect: the two may-keep expressions AND together over the same
+    column-filtered metadata frame, where the chained prune_blocks ->
+    prune_blocks_bloom form collected twice (r06 — at corpus scale each
+    collect is a full metadata-table job). A bloom ``prefix`` or
+    ``contains`` predicate first collects the stored key lengths (see
+    :func:`_bloom_may_expr`), so it costs two metadata jobs, not one.
     The combined keep-set equals the sequential composition's; the only
     divergence is at the max_groups cap, where either form may simply
     prune less — never wrong, the residual row filter keeps semantics
     exact."""
-    if op_ not in _PRUNE_OPS and op_ != "contains":
+    if op_ not in zonemap.PRUNE_OPS and op_ != "contains":
         raise ValueError(
-            f"op must be one of {_PRUNE_OPS + ('contains',)}, got {op_!r}")
+            f"op must be one of {zonemap.PRUNE_OPS + ('contains',)}, got {op_!r}")
     if col_ not in headers:
         raise ValueError(f"column {col_!r} not in the blocks table")
     mays = []
     if op_ != "contains":
         # zone maps cannot bound a substring predicate
-        z = _zone_may_expr(col_, op_, val_, headers)
+        z = zonemap.may_keep(headers, col_, op_, val_)
         if z is not None:
             mays.append(z)
     meta_cols = ["part_id", "block_id", "min_val", "max_val",
@@ -1107,10 +1016,7 @@ def _prune_clause(pruned: DataFrame, clause: list[tuple],
         pairs |= {(r["part_id"], r["block_id"]) for r in got}
         if len(pairs) > max_groups:
             return pruned
-    parts = sorted({p for p, _ in pairs})
-    bids = sorted({b for _, b in pairs})
-    return pruned.filter(F.col("part_id").isin(parts)
-                         & F.col("block_id").isin(bids))
+    return _keep_pairs(pruned, pairs)
 
 
 def decode_table_where_all(blocks: DataFrame, predicates,
@@ -1155,24 +1061,6 @@ def decode_table_where_all(blocks: DataFrame, predicates,
     return dec.filter(residual).select(*out_cols)
 
 
-def _stats_parser(headers: dict[str, dict], column: str):
-    """(parse, is_str) for reading a column's str()-rendered zone stats back
-    into a totally-ordered python value. Raises for stat kinds whose renders
-    are not truncation-order-safe (timestamps) — callers decode-then-sort."""
-    from nail_parquet_spark.codec.kernels import _type_from_str
-
-    t = _type_from_str(headers[column]["type"])
-    if pa.types.is_integer(t) or pa.types.is_boolean(t):
-        return int, False
-    if pa.types.is_floating(t):
-        return float, False
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return str, True
-    raise ValueError(
-        f"top-k pruning needs integer/float/string zone stats; column "
-        f"{column!r} has type {headers[column]['type']}")
-
-
 def prune_blocks_topk(blocks: DataFrame, column: str, k: int,
                       descending: bool = True,
                       max_groups: int = 100_000,
@@ -1180,33 +1068,15 @@ def prune_blocks_topk(blocks: DataFrame, column: str, k: int,
     """Zone-map pruning for ``ORDER BY column [DESC|ASC] LIMIT k``: keep
     only block groups that can contain a top-k row.
 
-    Metadata algorithm (driver-side, O(#groups), reads NO data):
-    1. collect per-group (min, max, n_rows, null_count) for ``column``;
-    2. sort bound-known groups by their best-possible value (max for
-       desc, min for asc);
-    3. take groups greedily until the taken groups' non-null rows reach
-       ``k``; the bound L = the worst value GUARANTEED inside the taken
-       set (min of taken mins for desc, max of taken maxes for asc) —
-       at least k rankable rows are at-or-better-than L;
-    4. additionally keep every group whose best side beats-or-ties L.
-       Any row outside the keep-set is strictly worse than L <= the true
-       k-th value, so it cannot rank; boundary ties all live inside the
-       keep-set, where the exact residual sort resolves them.
+    One driver-side collect of the per-group (min, max, n_rows,
+    null_count) of ``column`` (O(#groups), reads NO data), then the greedy
+    bound of :func:`codec.zonemap.topk_keep`, whose docstring holds the
+    algorithm and its safety rules. All-null groups are dropped (NULL never
+    ranks — see decode_topk). Over ``max_groups``, or when groups with
+    usable stats hold fewer than k rankable rows, pruning is skipped.
 
-    Safety degradations (never wrong, only unpruned):
-    - groups with missing stats (min NULL, not all-null) are always kept
-      and never contribute to the bound;
-    - string stats at the 64-char render cap: a truncated MAX is unknown
-      (treated as +inf: kept in desc mode, bars the bound in asc mode);
-      a truncated MIN is a valid lower bound (prefix <= true min) —
-      usable for the desc bound, and only ever keeps extra in asc;
-    - all-null groups are dropped (NULL never ranks — see decode_topk);
-    - over ``max_groups``, or when bounded groups hold fewer than k
-      rankable rows, pruning is skipped entirely.
-
-    Supported stat kinds: integer/boolean, float, string (the zone stats
-    are str()-rendered; timestamp renders are not total-order-safe under
-    truncation, so they raise — decode then sort for those).
+    Every column kind with zone stats is supported (integer, boolean,
+    float, timestamp, date, string); binary and list columns raise.
     """
     if k < 1:
         raise ValueError("prune_blocks_topk: k must be >= 1")
@@ -1214,7 +1084,8 @@ def prune_blocks_topk(blocks: DataFrame, column: str, k: int,
         headers, _ = _headers_by_column(blocks)
     if column not in headers:
         raise ValueError(f"column {column!r} not in the blocks table")
-    parse, is_str = _stats_parser(headers, column)
+    kind = zonemap.stat_kind(headers, column,
+                             need="top-k must decode, then sort")
 
     meta = (blocks.filter(F.col("column") == column)
             .select("part_id", "block_id", "min_val", "max_val",
@@ -1222,64 +1093,14 @@ def prune_blocks_topk(blocks: DataFrame, column: str, k: int,
             .limit(max_groups + 1).collect())
     if len(meta) > max_groups:
         return blocks
-
-    always: list[tuple] = []     # kept unconditionally, no bound available
-    bounded: list[tuple] = []    # (best, worst, nn, part, block)
+    rows = []
     for r in meta:
         nn = int(r["n_rows"]) - int(r["null_count"])
-        if nn <= 0:
-            continue  # all-null group: NULL never ranks
-        key = (r["part_id"], r["block_id"])
-        lo_s, hi_s = r["min_val"], r["max_val"]
-        if lo_s is None or hi_s is None:
-            always.append(key)
-            continue
-        try:
-            lo, hi = parse(lo_s), parse(hi_s)
-        except (TypeError, ValueError):
-            always.append(key)
-            continue
-        lo_trunc = is_str and len(lo_s) >= 64
-        hi_trunc = is_str and len(hi_s) >= 64
-        if descending:
-            # best = hi (+inf when truncated -> unconditional keep);
-            # worst-guarantee = lo (truncated lo is still a lower bound)
-            if hi_trunc:
-                always.append(key)
-            else:
-                bounded.append((hi, lo, nn, key))
-        else:
-            # best = lo (truncated lo only ever sorts the group earlier
-            # and weakens nothing); worst-guarantee = hi, unusable when
-            # truncated -> unconditional keep
-            if hi_trunc:
-                always.append(key)
-            else:
-                bounded.append((lo, hi, nn, key))
-
-    if sum(nn for _, _, nn, _ in bounded) < k:
-        return blocks  # cannot form a k-row guarantee: no pruning
-
-    bounded.sort(key=lambda g: g[0], reverse=descending)
-    taken = 0
-    bound = None
-    keep = set(always)
-    for i, (best, worst, nn, key) in enumerate(bounded):
-        keep.add(key)
-        taken += nn
-        if taken >= k:
-            worsts = [g[1] for g in bounded[: i + 1]]
-            bound = min(worsts) if descending else max(worsts)
-            rest = bounded[i + 1:]
-            break
-    for best, _, _, key in rest:
-        ok = (best >= bound) if descending else (best <= bound)
-        if ok:
-            keep.add(key)
-    parts = sorted({p for p, _ in keep})
-    bids = sorted({b for _, b in keep})
-    return blocks.filter(F.col("part_id").isin(parts)
-                         & F.col("block_id").isin(bids))
+        if nn > 0:  # an all-null group never ranks
+            rows.append(((r["part_id"], r["block_id"]), nn,
+                         r["min_val"], r["max_val"]))
+    keep = zonemap.topk_keep(kind, rows, k, descending)
+    return blocks if keep is None else _keep_pairs(blocks, keep)
 
 
 def decode_topk(blocks: DataFrame, column: str, k: int,
@@ -1339,24 +1160,19 @@ def prune_blocks_topk_by(blocks: DataFrame, group_col: str, column: str,
     bound of :func:`prune_blocks_topk` applies independently per group.
 
     Metadata algorithm (driver-side, O(#groups), reads NO payloads):
-    - a block whose group zone is a single parseable untruncated value
-      ("point block") joins that group's greedy bound: sort the group's
-      point blocks by best value, take until the guaranteed rankable-row
-      count reaches k, then additionally keep every point block whose best
-      side beats-or-ties the resulting bound;
-    - a block whose group zone spans values (or is unparseable/truncated)
+    - a block whose group zone is a single value
+      (:func:`codec.zonemap.point_value`, a "point block") joins that
+      group's greedy bound (:func:`codec.zonemap.topk_keep`, same value-side
+      rules as :func:`prune_blocks_topk`), computed independently per group;
+    - a block whose group zone spans values (or is unparsed/truncated)
       is ALWAYS kept — its rows may belong to any group, including groups
       living only in spanning blocks, so no per-group bound can drop it;
     - guaranteed rankable rows per block = n_rows - group nulls - value
       nulls (conservative under joint nulls: understating only prunes
       less); a block certainly empty of rankable rows (all-null group or
-      all-null value) is dropped — NULLs never rank in either column;
-    - value-side truncation rules are exactly prune_blocks_topk's (a
-      truncated MAX bars the bound side it backs; a truncated MIN is a
-      valid lower bound).
+      all-null value) is dropped — NULLs never rank in either column.
 
-    Supported stat kinds for BOTH columns: integer/boolean, float, string
-    (timestamp renders are not truncation-order-safe and raise). Over
+    Both columns need zone stats (binary and list columns raise). Over
     ``max_groups`` metadata rows per column, pruning is skipped.
     """
     if k < 1:
@@ -1368,8 +1184,9 @@ def prune_blocks_topk_by(blocks: DataFrame, group_col: str, column: str,
     for c in (group_col, column):
         if c not in headers:
             raise ValueError(f"column {c!r} not in the blocks table")
-    vparse, v_str = _stats_parser(headers, column)
-    gparse, g_str = _stats_parser(headers, group_col)
+    need = "grouped top-k must decode, then rank"
+    vkind = zonemap.stat_kind(headers, column, need=need)
+    gkind = zonemap.stat_kind(headers, group_col, need=need)
 
     # physical-block identity is (source file, part_id, block_id): encode
     # jobs restart part ids at 0, so the bare pair COLLIDES across the
@@ -1396,78 +1213,26 @@ def prune_blocks_topk_by(blocks: DataFrame, group_col: str, column: str,
             return blocks
         side[key] = r
 
-    always: set[tuple] = set()
-    # gval -> {"always": [key], "bounded": [(best, worst, nn, key)]}
-    per_group: dict[object, dict] = {}
+    keep: set[tuple] = set()
+    per_group: dict[object, list] = {}  # group value -> topk_keep rows
     for key, gr in gstats.items():
         vr = vstats.get(key)
         if vr is None:
-            always.add(key)  # value stats missing: keep unconditionally
+            keep.add(key)  # value stats missing: keep unconditionally
             continue
         n = int(gr["n_rows"])
         if int(gr["null_count"]) >= n or int(vr["null_count"]) >= n:
             continue  # certainly no rankable row in this block
-        glo_s, ghi_s = gr["min_val"], gr["max_val"]
-        if glo_s is None or ghi_s is None:
-            always.add(key)
-            continue
-        if g_str and (len(glo_s) >= 64 or len(ghi_s) >= 64):
-            always.add(key)  # truncated render: point-ness unknowable
-            continue
-        try:
-            glo, ghi = gparse(glo_s), gparse(ghi_s)
-        except (TypeError, ValueError):
-            always.add(key)
-            continue
-        if glo != ghi:
-            always.add(key)  # spanning block: may hold any group
+        point, gval = zonemap.point_value(gkind, gr["min_val"], gr["max_val"])
+        if not point:
+            keep.add(key)  # spanning or unknown group zone: any group
             continue
         nn = max(0, n - int(gr["null_count"]) - int(vr["null_count"]))
-        bucket = per_group.setdefault(glo, {"always": [], "bounded": []})
-        vlo_s, vhi_s = vr["min_val"], vr["max_val"]
-        if vlo_s is None or vhi_s is None:
-            bucket["always"].append(key)
-            continue
-        try:
-            vlo, vhi = vparse(vlo_s), vparse(vhi_s)
-        except (TypeError, ValueError):
-            bucket["always"].append(key)
-            continue
-        hi_trunc = v_str and len(vhi_s) >= 64
-        if descending:
-            if hi_trunc:
-                bucket["always"].append(key)  # best side unknown: +inf
-            else:
-                bucket["bounded"].append((vhi, vlo, nn, key))
-        else:
-            if hi_trunc:
-                bucket["always"].append(key)  # worst-guarantee unusable
-            else:
-                bucket["bounded"].append((vlo, vhi, nn, key))
-
-    keep = set(always)
-    for bucket in per_group.values():
-        keep.update(bucket["always"])
-        bounded = bucket["bounded"]
-        if sum(nn for _, _, nn, _ in bounded) < k:
-            keep.update(key for _, _, _, key in bounded)
-            continue
-        bounded.sort(key=lambda g: g[0], reverse=descending)
-        taken = 0
-        rest: list = []
-        bound = None
-        for i, (best, worst, nn, key) in enumerate(bounded):
-            keep.add(key)
-            taken += nn
-            if taken >= k:
-                worsts = [g[1] for g in bounded[: i + 1]]
-                bound = min(worsts) if descending else max(worsts)
-                rest = bounded[i + 1:]
-                break
-        for best, _, _, key in rest:
-            ok = (best >= bound) if descending else (best <= bound)
-            if ok:
-                keep.add(key)
+        per_group.setdefault(gval, []).append(
+            (key, nn, vr["min_val"], vr["max_val"]))
+    for rows in per_group.values():
+        kept = zonemap.topk_keep(vkind, rows, k, descending)
+        keep.update(kept if kept is not None else (r[0] for r in rows))
 
     # project physical keys back to (part, block) pairs: the pair filter
     # keeps every physical block sharing a kept pair — a superset, sound

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from nail_parquet_spark.codec.bloom import parse_bloom_spec as _parse_bloom
 from nail_parquet_spark.codec.kernels import encode_array, kind_of, xref_ref_of
 from nail_parquet_spark.codec.select import choose_codec, raw_bytes_of, xref_upgrade
+from nail_parquet_spark.codec.zonemap import render
 
 # canonical block-table columns; the DDL derives from this list so callers
 # (compaction, tests) never string-parse the schema
@@ -66,11 +67,7 @@ def _stat_strings(arr: pa.Array) -> tuple[str | None, str | None, int]:
                     mn_v = float("nan")
         if mn_v is None or mx_v is None:
             return None, None, distinct
-        return (
-            str(mn_v)[:64],
-            str(mx_v)[:64],
-            distinct,
-        )
+        return render(mn_v), render(mx_v), distinct
     except Exception:
         return None, None, distinct
 

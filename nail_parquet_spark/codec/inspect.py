@@ -425,15 +425,13 @@ def count_where_pushdown(blocks: DataFrame, column: str, op: str, value=None,
     the min-max-index count optimization (a sorted column's range count
     touches O(boundary) blocks, not O(data)).
 
-    Per block, from metadata alone (same parse/truncation safety rules as
-    codec/decode.prune_blocks — a stat that cannot be trusted never
-    decides):
+    Per block, from metadata alone (the classification and its safety
+    rules are :func:`codec.zonemap.count_classes`' — a stat that cannot be
+    trusted never decides):
 
-    - provably NO row matches → contributes 0 (the prune rule);
+    - provably NO row matches → contributes 0;
     - provably EVERY non-null row matches (e.g. ``>= v`` with block
-      min >= v; constant blocks for ``=``/``in``; both stats sharing the
-      prefix for ``prefix``, valid even under the 64-char render cap
-      because a truncated render's first chars are exact) → contributes
+      min >= v; constant blocks for ``=``/``in``) → contributes
       ``n_rows - null_count``, payload never read;
     - anything else is a boundary block: ONLY the predicate column of
       those groups decodes (xref references resolve via the group
@@ -454,15 +452,13 @@ def count_where_pushdown(blocks: DataFrame, column: str, op: str, value=None,
     over the same blocks table passes the pair from ``_headers_by_column``
     once instead of paying a header job per call.
     """
-    import pyarrow as pa
+    from nail_parquet_spark.codec import zonemap
+    from nail_parquet_spark.codec.decode import (_headers_by_column,
+                                                 _keep_pairs, _pred_expr,
+                                                 decode_table)
 
-    from nail_parquet_spark.codec.decode import (_PRUNE_OPS,
-                                                 _headers_by_column,
-                                                 _pred_expr, decode_table)
-    from nail_parquet_spark.codec.kernels import _type_from_str
-
-    if op not in _PRUNE_OPS:
-        raise ValueError(f"op must be one of {_PRUNE_OPS}, got {op!r}")
+    if op not in zonemap.PRUNE_OPS:
+        raise ValueError(f"op must be one of {zonemap.PRUNE_OPS}, got {op!r}")
     if headers is None or refs is None:
         headers, refs = _headers_by_column(blocks)
     if column not in headers:
@@ -480,91 +476,11 @@ def count_where_pushdown(blocks: DataFrame, column: str, op: str, value=None,
                 "groups_total": int(row["g"]),
                 "groups_metadata": int(row["g"]), "groups_decoded": 0}
 
-    t = _type_from_str(headers[column]["type"])
-    is_str = pa.types.is_string(t) or pa.types.is_large_string(t)
-    if op == "prefix" and not is_str:
-        raise ValueError("prefix predicate is only valid on string columns")
-    if pa.types.is_integer(t) or pa.types.is_boolean(t):
-        cast = "bigint"
-    elif pa.types.is_floating(t):
-        cast = "double"
-    elif pa.types.is_timestamp(t) or pa.types.is_date(t):
-        cast = "timestamp"
-    elif is_str:
-        cast = None
-    else:
-        raise ValueError(
-            f"column {column!r} ({headers[column]['type']}) carries no "
-            "zone stats; count requires a full decode"
-        )
-
-    in_vals = list(value) if op == "in" else None
-    if cast is not None:
-        lo = F.col("min_val").try_cast(cast)
-        hi = F.col("max_val").try_cast(cast)
-        v = F.lit(None if in_vals is not None else value).cast(cast)
-        hi_known = hi.isNotNull()
-        lo_known = lo.isNotNull()
-        lits = [F.lit(x).cast(cast) for x in (in_vals or [])]
-    else:
-        lo = F.col("min_val")
-        hi = F.col("max_val")
-        v = F.lit(None if in_vals is not None else value)
-        # same render-cap rules as prune_blocks: a truncated max is only a
-        # prefix of the true max (unusable as a bound); a truncated min is
-        # a valid LOWER bound; startswith stays exact under truncation
-        hi_known = hi.isNotNull() & (F.length("max_val") < 64)
-        lo_known = lo.isNotNull() & (F.length("min_val") < 64)
-        lits = [F.lit(x) for x in (in_vals or [])]
-
-    lo_bound = F.col("min_val").isNotNull() if cast is None else lo.isNotNull()
-    if op == "in":
-        if not lits:
-            g = meta.count()
-            return {"count": 0, "groups_total": int(g),
-                    "groups_metadata": int(g), "groups_decoded": 0}
-        may = F.lit(False)
-        for lv in lits:
-            may = may | ((lo <= lv) & F.when(hi_known, hi >= lv)
-                         .otherwise(F.lit(True)))
-        full = lo_known & hi_known & (lo == hi)
-        in_any = F.lit(False)
-        for lv in lits:
-            in_any = in_any | (lo == lv)
-        full = full & in_any
-    elif op == "!=":
-        may = ~(lo_known & hi_known & (lo == v) & (hi == v))
-        full = lo_known & hi_known & ((hi < v) | (lo > v))
-    elif op == "prefix":
-        may = ((lo <= v) | lo.startswith(v)) & F.when(
-            hi_known, hi >= v).otherwise(F.lit(True))
-        full = (F.col("min_val").isNotNull() & F.col("min_val").startswith(v)
-                & F.col("max_val").startswith(v))
-    elif op in ("=", "=="):
-        may = (lo <= v) & F.when(hi_known, hi >= v).otherwise(F.lit(True))
-        full = lo_known & hi_known & (lo == v) & (hi == v)
-    elif op == ">=":
-        may = F.when(hi_known, hi >= v).otherwise(F.lit(True))
-        full = lo_known & (lo >= v)
-    elif op == ">":
-        may = F.when(hi_known, hi > v).otherwise(F.lit(True))
-        full = lo_known & (lo > v)
-    elif op == "<=":
-        may = lo <= v
-        full = hi_known & (hi <= v)
-    else:  # "<"
-        may = lo < v
-        full = hi_known & (hi < v)
-
-    stats_missing = (~lo_bound) & (F.col("null_count") < F.col("n_rows"))
-    # classification (null-safe: an undecidable comparison is never a
-    # decision): all-null blocks match nothing; missing stats decode
-    safe = lambda c: F.coalesce(c, F.lit(False))  # noqa: E731
-    is_none = (~stats_missing) & (
-        (F.col("null_count") == F.col("n_rows")) | safe(lo_bound & ~may))
-    is_full = (~stats_missing) & safe(lo_bound & may & full) \
-        & (F.col("null_count") < F.col("n_rows"))
-    is_boundary = ~(is_none | is_full)
+    is_full, is_boundary = zonemap.count_classes(headers, column, op, value)
+    if op == "in" and not list(value):
+        g = meta.count()
+        return {"count": 0, "groups_total": int(g),
+                "groups_metadata": int(g), "groups_decoded": 0}
 
     # r06 fusion: ONE collect of classified per-block rows (the
     # classification expressions are the SAME Catalyst exprs as before, so
@@ -612,14 +528,11 @@ def count_where_pushdown(blocks: DataFrame, column: str, op: str, value=None,
             return {"count": meta_count, "groups_total": g_total,
                     "groups_metadata": g_total, "groups_decoded": 0}
 
-    parts = sorted({r["part_id"] for r in pairs})
-    bids = sorted({r["block_id"] for r in pairs})
     keys = {f"{r['part_id']}_{r['block_id']}" for r in pairs}
     # the parts×bids isin filter is a pushdown-friendly SUPERSET; exact
     # block identity comes from decode positions so full/none groups that
     # slip through the superset can never be double-counted
-    sub = blocks.filter(F.col("part_id").isin(parts)
-                        & F.col("block_id").isin(bids))
+    sub = _keep_pairs(blocks, {(r["part_id"], r["block_id"]) for r in pairs})
     dec = decode_table(sub, [column], with_positions=True,
                        headers=headers, refs=refs, pre_grouped=pre_grouped)
     cnt_b = (dec.filter(F.concat_ws("_", "_part_id", "_block_id")
@@ -646,17 +559,11 @@ def column_stats_pushdown(blocks: DataFrame,
     str); all-null columns report min/max None.
 
     Exactness is PROVEN or the call raises ValueError — never a silently
-    approximate answer:
-
-    - binary / list columns carry no zone stats by design → raise;
-    - a block with NULL stats but rows that are not all null (stats were
-      unavailable at encode time) → raise;
-    - a string stat at the 64-char render cap may be truncated (a
-      truncated max is a prefix of the true max — a valid bound, not the
-      value) → raise;
-    - a numeric/temporal stat that does not parse back via try_cast
-      (corrupt or foreign metadata) → raise, because a NULL from a failed
-      parse would silently drop that block from the extremes.
+    approximate answer: a column without zone stats, a block whose stats
+    are missing, and any stat that does not read back as its exact value
+    (:func:`codec.zonemap.read_back`: a string at the render cap, or a
+    render that does not parse) all raise, because each would otherwise
+    widen or silently drop that block's extremes.
 
     ``with_sum=True`` adds ``sum`` / ``avg`` for integer and float columns
     from the per-block ``zsum`` header stat (encode.py ``_sum_string``;
@@ -671,45 +578,26 @@ def column_stats_pushdown(blocks: DataFrame,
     raise, same contract as min/max; non-numeric columns raise. ``avg`` is
     ``sum / count`` as double (None when count is 0, ANSI AVG-of-nothing).
 
-    Why parsing is otherwise exact: stats are ``str(value)[:64]`` renders
-    (encode.py ``_stat_strings``). int64/bool renders always fit and
+    Why parsing is otherwise exact: int64/bool renders always fit and
     round-trip; Python float repr is the shortest round-trip form, so
     try_cast to double is bit-exact (``nan``/``inf`` renders parse too,
     and encode stamps max='nan' on NaN-bearing float blocks to match
     Spark/DuckDB's NaN-largest ordering); timestamp renders carry full
-    microseconds and offset within the cap. Only strings can hit the cap,
-    hence the length guard.
+    microseconds and offset within the cap.
     """
-    import pyarrow as pa
-
+    from nail_parquet_spark.codec import zonemap
     from nail_parquet_spark.codec.decode import _headers_by_column
-    from nail_parquet_spark.codec.kernels import _type_from_str
 
     headers, _ = _headers_by_column(blocks)
     if columns is None:
         columns = sorted(headers)
-    casts: dict[str, str | None] = {}
+    kinds = {}
     for c in columns:
         if c not in headers:
             raise ValueError(f"column {c!r} not in the blocks table")
-        t = _type_from_str(headers[c]["type"])
-        if pa.types.is_boolean(t):
-            casts[c] = "boolean"
-        elif pa.types.is_integer(t):
-            casts[c] = "bigint"
-        elif pa.types.is_floating(t):
-            casts[c] = "double"
-        elif pa.types.is_timestamp(t):
-            casts[c] = "timestamp"
-        elif pa.types.is_date(t):
-            casts[c] = "date"
-        elif pa.types.is_string(t) or pa.types.is_large_string(t):
-            casts[c] = None
-        else:
-            raise ValueError(
-                f"column {c!r} ({headers[c]['type']}) carries no zone "
-                "stats; exact min/max requires a decode"
-            )
+        kinds[c] = zonemap.stat_kind(headers, c,
+                                     need="exact min/max requires a decode")
+    casts = {c: k.cast for c, k in kinds.items()}
 
     if with_sum:
         bad_sum_cols = [c for c in columns
@@ -723,32 +611,18 @@ def column_stats_pushdown(blocks: DataFrame,
     aggs = []
     for c in columns:
         on = F.col("column") == c
-        mn_s = F.when(on, F.col("min_val"))
-        mx_s = F.when(on, F.col("max_val"))
-        if casts[c] is None:
-            mn_t, mx_t = mn_s, mx_s
-            # render-cap guard (string kinds only — others cannot hit 64)
-            aggs.append(F.max(F.when(
-                on, F.greatest(F.length("min_val"), F.length("max_val"))
-            )).alias(f"cap__{c}"))
-        else:
-            mn_t = mn_s.try_cast(casts[c])
-            mx_t = mx_s.try_cast(casts[c])
-            # a stat that fails to parse back must raise, not vanish
-            aggs.append(F.max(F.when(
-                on & F.col("min_val").isNotNull() & (
-                    mn_t.isNull() | mx_t.isNull()), F.lit(1)
-            )).alias(f"cap__{c}"))
+        mn_t, mn_ok = zonemap.read_back(kinds[c], F.col("min_val"))
+        mx_t, mx_ok = zonemap.read_back(kinds[c], F.col("max_val"))
         aggs += [
-            F.min(mn_t).alias(f"min__{c}"),
-            F.max(mx_t).alias(f"max__{c}"),
+            # a present stat that is not exact must raise, not vanish
+            F.max(F.when(on & F.col("min_val").isNotNull() & ~(mn_ok & mx_ok),
+                         F.lit(1))).alias(f"cap__{c}"),
+            F.min(F.when(on, mn_t)).alias(f"min__{c}"),
+            F.max(F.when(on, mx_t)).alias(f"max__{c}"),
             F.sum(F.when(on, F.col("n_rows"))).alias(f"rows__{c}"),
             F.sum(F.when(on, F.col("null_count"))).alias(f"nulls__{c}"),
-            # NULL stats on a not-all-null block = stats unavailable
-            F.max(F.when(
-                on & F.col("min_val").isNull()
-                & (F.col("null_count") < F.col("n_rows")), F.lit(1)
-            )).alias(f"bad__{c}"),
+            F.max(F.when(on & zonemap.missing(F.col("min_val")), F.lit(1)))
+            .alias(f"bad__{c}"),
         ]
         if with_sum:
             zs = F.when(on, F.get_json_object(F.col("header"), "$.zsum"))
@@ -773,12 +647,13 @@ def column_stats_pushdown(blocks: DataFrame,
                 f"column {c!r} has blocks without zone stats; exact "
                 "min/max requires a decode"
             )
-        if casts[c] is None and (row[f"cap__{c}"] or 0) >= 64:
+        if casts[c] is None and row[f"cap__{c}"] == 1:
             raise ValueError(
-                f"column {c!r} has string stats at the 64-char render "
-                "cap (possibly truncated); exact min/max requires a decode"
+                f"column {c!r} has string stats at the {zonemap.RENDER_CAP}"
+                "-char render cap (possibly truncated); exact min/max "
+                "requires a decode"
             )
-        if casts[c] is not None and row[f"cap__{c}"] == 1:
+        if row[f"cap__{c}"] == 1:
             raise ValueError(
                 f"column {c!r} has zone stats that do not parse back as "
                 f"{casts[c]} (inf/nan render or corrupt metadata); exact "
@@ -829,8 +704,8 @@ def group_stats_pushdown(blocks: DataFrame, group_col: str, value_col: str,
       from metadata alone: n_rows, value null_count, zone min/max, and
       the ``zsum`` header sum stat — payload bytes never read;
     - every other block (group zone spans values, group nulls present,
-      value stats/zsum missing or unparseable, string stats at the
-      64-char render cap) decodes RESIDUALLY, and only (group, value)
+      value stats/zsum missing or not exact — see
+      :func:`codec.zonemap.read_back`) decodes RESIDUALLY, and only (group, value)
       columns of it;
     - the two sides merge under one final keyed groupBy. NULL groups are
       grouped (SQL GROUP BY semantics): null-group rows only ever live in
@@ -848,17 +723,15 @@ def group_stats_pushdown(blocks: DataFrame, group_col: str, value_col: str,
     ``n_vals > 0`` signals decimal overflow (documented, never silent
     wraparound). Over ``max_groups`` residual block groups the whole
     table decodes (correct, unpruned). Value column must be integer or
-    float; the group column integer / boolean / float / string.
+    float; the group column any kind with zone stats
+    (:func:`codec.zonemap.stat_kind`).
     """
-    import pyarrow as pa
-
+    from nail_parquet_spark.codec import zonemap
     from nail_parquet_spark.codec.decode import (
         _filter_block_pairs,
         _headers_by_column,
-        _stats_parser,
         decode_table,
     )
-    from nail_parquet_spark.codec.kernels import _type_from_str
 
     if group_col == value_col:
         raise ValueError("group_col and value_col must differ")
@@ -866,25 +739,15 @@ def group_stats_pushdown(blocks: DataFrame, group_col: str, value_col: str,
     for c in (group_col, value_col):
         if c not in headers:
             raise ValueError(f"column {c!r} not in the blocks table")
-    _, g_is_str = _stats_parser(headers, group_col)  # validates the kind
-    vt = _type_from_str(headers[value_col]["type"])
-    if pa.types.is_integer(vt):
-        vcast, scast = "bigint", "decimal(38,0)"
-    elif pa.types.is_floating(vt):
-        vcast, scast = "double", "double"
-    else:
+    gkind = zonemap.stat_kind(headers, group_col,
+                              need="grouped stats must decode")
+    vkind = zonemap.stat_kind(headers, value_col)
+    vcast = vkind.cast if vkind is not None else None
+    if vcast not in ("bigint", "double"):
         raise ValueError(
             f"value column {value_col!r} ({headers[value_col]['type']}) "
             "is not integer/float; grouped SUM pushdown is numeric-only")
-    gt = _type_from_str(headers[group_col]["type"])
-    if pa.types.is_boolean(gt):
-        gcast = "boolean"
-    elif pa.types.is_integer(gt):
-        gcast = "bigint"
-    elif pa.types.is_floating(gt):
-        gcast = "double"
-    else:
-        gcast = None  # string: zone stats are the values themselves
+    scast = "decimal(38,0)" if vcast == "bigint" else "double"
 
     # physical-block identity is (source file, part_id, block_id): encode
     # jobs restart part ids at 0, so on a snapshot table's union of
@@ -920,27 +783,21 @@ def group_stats_pushdown(blocks: DataFrame, group_col: str, value_col: str,
                   F.col("null_count").alias("g_nulls"),
                   F.col("min_val").alias("g_min"),
                   F.col("max_val").alias("g_max")))
-    if gcast is None:
-        g_point = (F.col("g_min").isNotNull()
-                   & (F.col("g_min") == F.col("g_max"))
-                   & (F.length("g_min") < 64))
-        gval = F.col("g_min")
-    else:
-        g_lo = F.col("g_min").try_cast(gcast)
-        g_hi = F.col("g_max").try_cast(gcast)
-        g_point = g_lo.isNotNull() & g_hi.isNotNull() & (g_lo == g_hi)
-        gval = g_lo
+    gval, g_lo_ok = zonemap.read_back(gkind, F.col("g_min"))
+    g_hi, g_hi_ok = zonemap.read_back(gkind, F.col("g_max"))
+    g_point = g_lo_ok & g_hi_ok & (gval == g_hi)
     gm = gm.select("__src", "part_id", "block_id", "n_rows", "g_nulls",
                    gval.alias("g_val"),
                    ((F.col("g_nulls") == 0) & g_point).alias("g_ok"))
 
+    v_min, v_min_ok = zonemap.read_back(vkind, F.col("min_val"))
+    v_max, v_max_ok = zonemap.read_back(vkind, F.col("max_val"))
     vm = (srcb.filter(F.col("column") == value_col)
           .select("__src", "part_id", "block_id",
                   F.col("n_rows").alias("v_rows"),
                   F.col("null_count").alias("v_nulls"),
-                  F.col("min_val").try_cast(vcast).alias("v_min"),
-                  F.col("max_val").try_cast(vcast).alias("v_max"),
-                  F.col("min_val").isNotNull().alias("v_has_stats"),
+                  v_min.alias("v_min"), v_max.alias("v_max"),
+                  (v_min_ok & v_max_ok).alias("v_stats_ok"),
                   F.get_json_object("header", "$.zsum").try_cast(scast)
                   .alias("v_sum"),
                   F.get_json_object("header", "$.zsum").isNotNull()
@@ -948,9 +805,7 @@ def group_stats_pushdown(blocks: DataFrame, group_col: str, value_col: str,
     # value side is metadata-eligible when the block is all-null (sum 0,
     # no extremes) OR every stat is present and parsed back
     v_all_null = F.col("v_nulls") == F.col("v_rows")
-    v_ok = v_all_null | (F.col("v_has_stats")
-                         & F.col("v_min").isNotNull()
-                         & F.col("v_max").isNotNull()
+    v_ok = v_all_null | (F.col("v_stats_ok")
                          & F.col("v_has_sum")
                          & F.col("v_sum").isNotNull())
 

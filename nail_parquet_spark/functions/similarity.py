@@ -53,9 +53,10 @@ def _plane_sig_sql(vec_col: str, planes: list[list[float]]) -> str:
     which at 12-56 planes per signature was a measurable driver stall
     (~0.5-1 s per bucketing pass)."""
     terms = ["CAST(0 AS BIGINT)"]
+    col = "`" + vec_col.replace("`", "``") + "`"
     for j, p in enumerate(planes):
         arr = "array(" + ",".join(_fmt_double(float(x)) for x in p) + ")"
-        dot = (f"aggregate(zip_with(`{vec_col}`, {arr}, (x, y) -> x * y), "
+        dot = (f"aggregate(zip_with({col}, {arr}, (x, y) -> x * y), "
                "0.0D, (acc, v) -> acc + v)")
         terms.append(
             f"(CASE WHEN {dot} > 0 THEN CAST({1 << j} AS BIGINT) ELSE 0 END)")

@@ -1,4 +1,6 @@
-"""Encode-throughput + scaling benchmark (subprocess of bench.py).
+"""Encode-throughput + scaling pair (1 -> 4 cores). The repo benchmark is
+``python3 perfbench/run.py`` (see BENCHMARK.json); this script keeps the
+paired parallelism-scaling measurement it does not cover.
 
 Usage: python scripts/bench_encode.py <lo,hi> <rows> [policy]
 Prints one JSON line: {cpus_<lo>: {...}, cpus_<hi>: {...}, scale_pair,
@@ -29,8 +31,9 @@ import os
 import shutil
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 PAIR = sys.argv[1] if len(sys.argv) > 1 else "1,4"
 ROWS = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000

@@ -3,8 +3,9 @@ driver's comparison: row count, schema width, and order-insensitive
 value-hash (columns sorted by name, floats rounded)."""
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import duckdb
 import pandas as pd
 

@@ -1,7 +1,8 @@
 """Quick round-trip fuzz for codec kernels (dev loop; pytest mirrors this)."""
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import numpy as np
 import pyarrow as pa
 

@@ -9,8 +9,9 @@ import glob
 import json
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 ROWS = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
 DATA = os.environ.get("BENCH_DATA_DIR", "/tmp/nail_bench_web")

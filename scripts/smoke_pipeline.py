@@ -1,8 +1,9 @@
 """End-to-end M1 smoke: synthesize webpages -> encode -> inspect -> decode ->
 verify bit-identity. Dev loop script; pytest mirrors it."""
 import sys, time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from nail_parquet_spark.session import get_spark
 from nail_parquet_spark.synth import webpages_spark
 from nail_parquet_spark.codec.encode import encode_table

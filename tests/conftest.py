@@ -1,15 +1,19 @@
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 @pytest.fixture(scope="session")
 def spark():
     from nail_parquet_spark.session import get_spark
 
-    s = get_spark("pytest", master="local[4]", shuffle_partitions=4)
+    # bounded heap: under the library's 48g default the driver JVM of a
+    # full run grows to ~15 GB RSS, and on a 16 GB host the kernel kills it
+    s = get_spark("pytest", master="local[4]", shuffle_partitions=4,
+                  extra_conf={"spark.driver.memory": "4g"})
     yield s
     s.stop()
 

@@ -220,6 +220,10 @@ class TestCountWherePushdown:
         # block-aligned bound: zero decodes, pure metadata
         got = self._check(spark, df, blocks, "k", ">=", 5000, max_decoded=0)
         assert got["groups_decoded"] == 0
+        # a fractional literal compares as double, as in the filter: the
+        # block starting at 5000 is a boundary, neither full nor empty
+        self._check(spark, df, blocks, "k", ">=", 5000.5, max_decoded=1)
+        self._check(spark, df, blocks, "k", "<", 5000.5, max_decoded=1)
 
     def test_all_ops_match_ground_truth_unsorted(self, spark):
         import random

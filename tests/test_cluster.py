@@ -290,3 +290,18 @@ def test_plane_sig_sql_matches_column_form(spark):
     new = lsh_bucket(df, "v", planes).select("id", "lsh_bucket")
     assert new.exceptAll(old).count() == 0
     assert old.exceptAll(new).count() == 0
+
+
+def test_plane_sig_sql_backticked_column(spark):
+    """A vector column whose name holds a backtick gets the same buckets
+    as the same vectors under a plain name."""
+    from nail_parquet_spark.functions.similarity import (
+        lsh_bucket, random_hyperplanes)
+
+    planes = random_hyperplanes(3, 8, seed=3)
+    rows = [(i, [float(i) - 4.0, 1.0, -0.5 * i]) for i in range(10)]
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+    odd = df.withColumnRenamed("v", "my`vec")
+    got = lsh_bucket(odd, "my`vec", planes).select("id", "lsh_bucket")
+    want = lsh_bucket(df, "v", planes).select("id", "lsh_bucket")
+    assert sorted(got.collect()) == sorted(want.collect())

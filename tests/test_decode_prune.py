@@ -118,30 +118,51 @@ def test_decode_where_timestamps(spark):
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 
+def _long_str(x: int) -> str:
+    # order follows x; odd values run past the 64-char stats render cap,
+    # so their zone stats are truncated prefixes
+    return f"{x + 50:03d}" + ("z" * 70 if x % 2 else "")
+
+
 @settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture,
                                  HealthCheck.too_slow])
 @given(
     vals=st.lists(st.one_of(st.none(), st.integers(-50, 50)),
                   min_size=1, max_size=60),
-    op=st.sampled_from(["=", ">", ">=", "<", "<="]),
+    op=st.sampled_from(["=", "!=", ">", ">=", "<", "<=", "in"]),
     v=st.integers(-55, 55),
+    in_vals=st.lists(st.integers(-55, 55), max_size=4),
     block_rows=st.sampled_from([4, 16]),
     presorted=st.booleans(),
+    as_str=st.booleans(),
+    half=st.booleans(),
 )
-def test_prune_property_matches_plain_filter(spark, vals, op, v, block_rows,
-                                             presorted):
-    rows = [(i, x) for i, x in enumerate(vals)]
+def test_prune_property_matches_plain_filter(spark, vals, op, v, in_vals,
+                                             block_rows, presorted, as_str,
+                                             half):
+    from nail_parquet_spark.codec.inspect import count_where_pushdown
+
+    conv = _long_str if as_str else (lambda x: x)
+    # fractional literals against the integer column
+    lit = conv if as_str or not half else (lambda x: x + 0.5)
+    rows = [(i, None if x is None else conv(x)) for i, x in enumerate(vals)]
     if presorted:
         rows.sort(key=lambda r: (r[1] is None, r[1]))
-    df = spark.createDataFrame(rows, "k long, x long").coalesce(1)
+    value = [lit(x) for x in in_vals] if op == "in" else lit(v)
+    df = spark.createDataFrame(
+        rows, f"k long, x {'string' if as_str else 'long'}").coalesce(1)
     blocks = encode_table(df, codecs={"k": "plain", "x": "plain"},
                           block_rows=block_rows)
-    got = sorted(r.k for r in decode_table_where(blocks, "x", op, v).collect())
-    pyop = {"=": lambda a: a == v, ">": lambda a: a > v, ">=": lambda a: a >= v,
-            "<": lambda a: a < v, "<=": lambda a: a <= v}[op]
+    pyop = {"=": lambda a: a == value, "!=": lambda a: a != value,
+            ">": lambda a: a > value, ">=": lambda a: a >= value,
+            "<": lambda a: a < value, "<=": lambda a: a <= value,
+            "in": lambda a: a in value}[op]
     want = sorted(i for i, x in rows if x is not None and pyop(x))
+    got = sorted(r.k for r in
+                 decode_table_where(blocks, "x", op, value).collect())
     assert got == want
+    assert count_where_pushdown(blocks, "x", op, value)["count"] == len(want)
 
 
 def test_decode_where_all_conjunction(spark, sorted_blocks):

@@ -369,3 +369,49 @@ def test_grouped_union_identity_collapse_skips_pruning(spark):
     blocks = b1.unionByName(b2)
     pruned = prune_blocks_topk_by(blocks, "g", "v", 2)
     assert n_groups(pruned) == n_groups(blocks)
+
+
+def test_timestamp_and_date_topk(spark):
+    # whole-second and sub-second timestamps render in different shapes
+    # ('...00:00:07+00:00' vs '...00:00:03.000500+00:00'): only a parse
+    # orders them, so top-k must read them back, not compare the strings
+    base = "2024-01-01 00:00:00"
+    df = (
+        spark.range(40)
+        .select(
+            F.col("id").alias("id"),
+            F.when(F.col("id") % 11 == 5, F.lit(None)).otherwise(
+                F.lit(base).cast("timestamp")
+                + F.make_interval(secs=(F.col("id") * 7 % 40)
+                                  + F.when(F.col("id") % 3 == 0, F.lit(0.0005))
+                                  .otherwise(F.lit(0.0)))).alias("ts"),
+            F.date_add(F.lit(base).cast("date"),
+                       (F.col("id") * 13 % 40).cast("int")).alias("d"),
+            F.when(F.col("id") < 20, F.lit("a")).otherwise(F.lit("b"))
+            .alias("g"),
+        )
+        .repartition(1)
+        .sortWithinPartitions("g", "ts")
+    )
+    blocks = encode_table(df, codecs={"id": "plain", "ts": "delta_bitpack",
+                                      "d": "plain", "g": "dict"},
+                          block_rows=5).cache()
+    renders = [r[0] for r in blocks.filter(F.col("column") == "ts")
+               .select("max_val").collect() if r[0] is not None]
+    assert any("." in r for r in renders) and any("." not in r for r in renders)
+    cols = ["id", "ts", "d", "g"]
+    for col in ("ts", "d"):
+        for desc in (True, False):
+            got = [tuple(r) for r in
+                   decode_topk(blocks, col, 6, tiebreak="id",
+                               descending=desc, columns=cols).collect()]
+            assert got == expect(df.select(*cols), col, 6, desc=desc,
+                                 tiebreak="id"), (col, desc)
+            got_by = sorted(tuple(r) for r in
+                            decode_topk_by(blocks, "g", col, 3,
+                                           tiebreak="id", descending=desc,
+                                           columns=cols).collect())
+            assert got_by == expect_by(df.select(*cols), "g", col, 3,
+                                       desc=desc, tiebreak="id"), (col, desc)
+    # the layout is sorted by (g, ts): the bound keeps a minority of groups
+    assert n_groups(prune_blocks_topk(blocks, "ts", 6)) < n_groups(blocks) // 2

@@ -77,6 +77,27 @@ def test_float_value_and_int_group(spark):
         model(decode_table(blocks, columns=["g", "v"]), "g", "v", "double")
 
 
+def test_timestamp_date_and_bool_groups(spark):
+    # every kind with zone stats can group: point blocks read their group
+    # value back in the column's own type, so the metadata side unions
+    # with the residual decode
+    df = (spark.range(60).select(
+        (F.lit("2024-01-01").cast("timestamp")
+         + F.make_interval(hours=(F.col("id") / 20).cast("int"))).alias("ts"),
+        F.date_add(F.lit("2024-01-01").cast("date"),
+                   (F.col("id") / 20).cast("int")).alias("d"),
+        (F.col("id") < 30).alias("b"),
+        F.col("id").alias("v"))
+        .repartition(1).sortWithinPartitions("ts"))
+    blocks = encode_table(df, codecs={"ts": "plain", "d": "plain",
+                                      "b": "plain", "v": "plain"},
+                          block_rows=10).cache()
+    for g in ("ts", "d", "b"):
+        assert got_of(blocks, g, "v") == \
+            model(decode_table(blocks, columns=[g, "v"]),
+                  g, "v", "decimal(38,0)"), g
+
+
 def test_random_layout_multi_part(spark):
     import random
 
