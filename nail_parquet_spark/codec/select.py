@@ -12,8 +12,10 @@ even applies, see :253-257) with measured, per-column decisions.
 
 Policies:
   ratio    — smallest sample encoding wins, full stop
-  balanced — smallest among candidates whose sample throughput >= floor
-             (default 40 MB/s/core); fall back to ratio if none qualify
+  balanced — smallest among candidates rated at or above the speed floor
+             (default 40 MB/s/core); slower candidates are trialled only
+             when no candidate at the floor encodes, and then the smallest
+             of them wins
   speed    — fastest candidate within 1.3x of the smallest
 """
 
@@ -173,7 +175,8 @@ def candidate_codecs(kind: str, st: ColumnStats) -> list[str]:
         cands.append("zstd:9")
         # max-ratio tier (reference compression menu, optimize.rs:47-108):
         # beats zstd:6 ~8% on web text at 3-15 MB/s encode — the balanced
-        # policy's speed floor excludes it; 'ratio' policy and pinning reach it
+        # policy trials it only when no candidate at or above its speed
+        # floor encodes; 'ratio' policy and pinning reach it
         cands.append("brotli:9")
         if st.byte_entropy > 7.9:
             cands.append("plain")
@@ -242,7 +245,12 @@ def choose_codec(
     sample: pa.Array, policy: str = "balanced", min_mbps: float = 40.0,
     trial_byte_budget: int = 1 << 21,
 ) -> tuple[str, ColumnStats]:
-    """Pick a codec for a column given a sample of it."""
+    """Pick a codec for a column given a sample of it.
+
+    ``ratio`` and ``speed`` trial every candidate. ``balanced`` trials the
+    candidates rated at or above ``min_mbps`` first and returns the smallest;
+    slower candidates are trialled only when no candidate at the floor
+    encodes. Returns ``"plain"`` when no candidate encodes."""
     kind = kind_of(sample.type)
     st = column_stats(sample)
     if st.n == 0:
@@ -265,28 +273,30 @@ def choose_codec(
     else:
         cands = candidate_codecs(kind, st)
 
-    results = []
-    for c in cands:
-        try:
-            blk = encode_array(sample, c)
-        except Exception:
+    # ratio and speed need the global smallest, so they trial every
+    # candidate; under balanced a candidate below the floor can win only
+    # when none at the floor encodes, so that tier is trialled only then
+    tiers = [cands]
+    if policy not in ("ratio", "speed"):
+        tiers = [[c for c in cands if codec_speed(c) >= min_mbps],
+                 [c for c in cands if codec_speed(c) < min_mbps]]
+    for tier in tiers:
+        results = []
+        for c in tier:
+            try:
+                blk = encode_array(sample, c)
+            except Exception:
+                continue
+            results.append((c, len(blk.payload), codec_speed(c)))
+        if not results:
             continue
-        results.append((c, len(blk.payload), codec_speed(c)))
-    if not results:
-        return "plain", st
-
-    by_size = sorted(results, key=lambda r: r[1])
-    if policy == "ratio":
-        return by_size[0][0], st
-    if policy == "speed":
-        floor_size = by_size[0][1] * 1.3
-        ok = [r for r in results if r[1] <= floor_size]
-        return max(ok, key=lambda r: r[2])[0], st
-    # balanced
-    fast = [r for r in by_size if r[2] >= min_mbps]
-    if fast:
-        return fast[0][0], st
-    return by_size[0][0], st
+        # min keeps the first of equal sizes, in candidate order
+        smallest = min(results, key=lambda r: r[1])
+        if policy == "speed":
+            ok = [r for r in results if r[1] <= smallest[1] * 1.3]
+            return max(ok, key=lambda r: r[2])[0], st
+        return smallest[0], st
+    return "plain", st
 
 
 def _containment_frac(va: pa.Array, vb: pa.Array, probe: int = 64) -> float:

@@ -14,6 +14,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """A quarter of the machine's memory (``MemTotal``), at least 1g: a
+    fixed large heap can exceed the machine and get the JVM killed."""
+    try:
+        with open(meminfo) as f:
+            kb = int(next(l for l in f if l.startswith("MemTotal:")).split()[1])
+    except (OSError, StopIteration):
+        kb = 0
+    return f"{max(1, kb // (4 << 20))}g"
+
+
 def get_spark(
     app_name: str = "nail_parquet_spark",
     master: str | None = None,
@@ -24,6 +35,8 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in this sandbox; on a
     real cluster callers pass nothing and spark-submit supplies the master.
+    The driver heap is ``$SPARK_DRIVER_MEM`` when set, else a quarter of
+    the machine's memory (at least 1g); ``extra_conf`` overrides both.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -46,7 +59,8 @@ def get_spark(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory())
     )
     # Only set master when not already running inside a cluster submit.
     if not os.environ.get("SPARK_SUBMIT_DEPLOY_MODE"):
