@@ -1656,7 +1656,6 @@ def q_count_pushdown(spark, sf_dir):
     predicate column, and decode positions pin exact block identity (no
     double counts through the parts x bids superset filter). Exact by
     construction; oracle is plain COUNT(*) WHERE."""
-    from nail_parquet_spark.codec.decode import _headers_by_column
     from nail_parquet_spark.codec.encode import encode_table
     from nail_parquet_spark.codec.inspect import count_where_pushdown
 
@@ -1666,13 +1665,11 @@ def q_count_pushdown(spark, sf_dir):
     blocks = encode_table(
         o, codecs={"o_orderkey": "for_bitpack", "o_totalprice": "plain"},
         block_rows=4096).cache()
-    hd, rf = _headers_by_column(blocks)  # one header job for all 3 counts
     c1 = count_where_pushdown(blocks, "o_totalprice", ">=", 400000.0,
-                              headers=hd, refs=rf, pre_grouped=True)
+                              pre_grouped=True)
     c2 = count_where_pushdown(blocks, "o_totalprice", "<", 50000.0,
-                              headers=hd, refs=rf, pre_grouped=True)
-    c3 = count_where_pushdown(blocks, "o_orderkey", "=", 7,
-                              headers=hd, refs=rf, pre_grouped=True)
+                              pre_grouped=True)
+    c3 = count_where_pushdown(blocks, "o_orderkey", "=", 7, pre_grouped=True)
     blocks.unpersist()
     return spark.createDataFrame(
         [(c1["count"], c2["count"], c3["count"])],
@@ -2430,8 +2427,9 @@ def q_decode_pushdown(spark, sf_dir):
 def q_decode_bloom_pushdown(spark, sf_dir):
     """Encode documents with a per-block bloom index on source, then decode
     with an EQUALITY pushdown (codec/decode.prune_blocks_bloom: the probe
-    runs distributed as Catalyst bit arithmetic over the bitmaps; zone maps
-    alone cannot prune a high-cardinality equality). Value-exact against
+    runs inside the block index's one metadata read, as a higher-order
+    exists over the driver-hashed key; zone maps alone cannot prune a
+    high-cardinality equality). Value-exact against
     plain SQL because decode is bit-identical and the bloom can only skip
     provably-nonmatching blocks (residual filter keeps semantics exact)."""
     from nail_parquet_spark.codec.decode import decode_table_where
@@ -2477,7 +2475,7 @@ def q_decode_pushdown_in(spark, sf_dir):
 def q_decode_pushdown_or(spark, sf_dir):
     """Cross-column OR-clause pushdown (codec/decode.decode_table_where_all
     CNF form): (lang='de' OR n_chars>=500) AND doc_id<400. The OR-clause
-    keeps the UNION of its disjuncts' zone/bloom keep-sets (_prune_clause);
+    keeps the UNION of its disjuncts' zone/bloom keep-sets (BlockIndex.keep);
     the residual CNF filter over the bit-identical decode keeps semantics
     equal to plain SQL."""
     from nail_parquet_spark.codec.decode import decode_table_where_all

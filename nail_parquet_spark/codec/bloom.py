@@ -1,35 +1,34 @@
-"""Per-block bloom filters: equality pushdown for high-cardinality columns.
+"""Per-block bloom filters: equality, IN, prefix and substring pushdown.
 
-Zone maps (codec/decode.prune_blocks) prune range predicates well, but an
+Zone maps (:mod:`codec.zonemap`) prune range predicates well, but an
 equality probe on a high-cardinality column (``url = '...'``, ``doc_id =
 42``) rarely prunes anything — nearly every block's [min,max] spans the
 probe value. The parquet format solved this with optional split-block bloom
 filters; this is the block-engine analogue: an opt-in, per-(column, block)
 bloom bitmap stored in the ``bloom`` column of the blocks table, consulted
-by ``decode_table_where*`` for ``=`` conjuncts.
+for ``=``, ``in``, ``prefix`` and ``contains`` predicates.
 
-Design for 100 TB:
-- The bitmap never rides with the payload: pruning projects only the meta
-  columns + ``bloom`` (~1.25 bytes per distinct value at the default 10
-  bits/key), so the prune scan reads KBs per block, not MBs.
-- The membership test runs DISTRIBUTED as a Catalyst expression: the probe
-  value is hashed driver-side into k (h1 + i*h2) seeds, and the k bit
-  probes are pure substring/conv/bit arithmetic on the ``bloom`` bytes —
-  no Python, no UDF, no collect of bitmaps. Only the surviving
-  (part_id, block_id) keep-set is collected (same O(#groups) contract as
-  zone pruning).
+- Bitmaps never reach the driver, and never ride with the payload. The
+  driver hashes the probe keys once; :func:`bloom_probe` turns them into
+  one Column (a higher-order ``exists`` over an array literal of the key
+  hashes) that the block index (:mod:`codec.blockindex`) projects next to
+  the other metadata columns, so one metadata read returns a verdict per
+  block.
+- Each block is probed with its own stored ``k``, prefix length P and
+  n-gram length N, so tables mixing bloom specs need no discovery pass.
+- :func:`bloom_might_contain` is the Python twin of the Column probe and
+  its test oracle.
 - Opt-in per column (``encode_table(bloom_columns=[...])``): a bloom on a
   low-cardinality or never-probed column is pure write amplification.
 
-Layout (bytes, all big-endian so SQL ``conv(hex(substring(...)))`` can read
-them): [0]=k, [1:5]=m_bits, [5:]=bitmap. ``m_bits`` is per-block (sized to
-the block's distinct count), which is why it lives in the bitmap header and
+Layout (bytes, big-endian): [0]=k | flags, [1:5]=m_bits, [5:]=bitmap, then
+the optional P and N tail bytes. ``m_bits`` is per-block (sized to the
+block's distinct count), which is why it lives in the bitmap header and
 not the block header JSON.
 
 Hashing: md5(value-bytes) -> two 57-bit lanes, double hashing
-pos_i = (h1 + i*h2) mod m_bits. 57-bit lanes keep h1 + (k-1)*h2 <= 7*2^57
-inside int64, so the SQL probe can carry each position's numerator as a
-plain bigint literal. Value canonicalization is type-pinned: strings hash their
+pos_i = (h1 + i*h2) mod m_bits; the 57-bit lanes keep every numerator
+inside a bigint. Value canonicalization is type-pinned: strings hash their
 UTF-8 bytes, integers/booleans hash str(int(v)) — the probe side must (and
 does) canonicalize identically.
 """
@@ -42,6 +41,9 @@ import math
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.sql import functions as F
+
+from nail_parquet_spark.codec.zonemap import IN_PRUNE_CAP as IN_PROBE_CAP
 
 DEFAULT_BITS_PER_KEY = 10
 DEFAULT_K = 7
@@ -85,11 +87,31 @@ def canonical_bytes(value, kind: str) -> bytes | None:
     if kind == "str":
         return str(value).encode("utf-8")
     if kind == "int":
+        if isinstance(value, float) and not (
+                value.is_integer() and abs(value) < 2 ** 53):
+            # an int column compares with a float as a double: beyond
+            # 2^53 several ints equal one double, so no key stands for it
+            return None
         try:
             return str(int(value)).encode("ascii")
         except (TypeError, ValueError):
             return None
     return None  # float/timestamp/binary: no bloom
+
+
+def literal_kind(value) -> str | None:
+    """The bloom kind a literal (or IN list) probes as: ``str`` for
+    strings, ``int`` for ints, bools and floats. A probe only applies to
+    a column whose header kind is the same: the residual filter casts
+    across kinds, which a hashed key cannot follow."""
+    if isinstance(value, (list, tuple)):
+        kinds = {literal_kind(v) for v in value}
+        return kinds.pop() if len(kinds) == 1 else None
+    if isinstance(value, str):
+        return "str"
+    if isinstance(value, (int, float)):
+        return "int"
+    return None
 
 
 def bloom_build(arr: pa.Array, bits_per_key: int = DEFAULT_BITS_PER_KEY,
@@ -170,11 +192,13 @@ def bloom_ngram_len_of(bloom: bytes) -> int | None:
 
 def bloom_might_contain(bloom: bytes, value, kind: str,
                         op: str = "=") -> bool:
-    """Driver/test-side membership probe (the SQL expression's twin).
+    """Driver/test-side membership probe: the twin and oracle of
+    :func:`bloom_probe`.
 
     ``op='prefix'``: probes the tagged truncated prefix; returns True
     (no prune) when the bitmap carries no prefix keys or the query prefix
-    is shorter than the stored P."""
+    is shorter than the stored P. ``op='contains'`` likewise with the
+    n-gram keys and N."""
     if bloom is None:
         return True
     b = canonical_bytes(value, kind)
@@ -191,14 +215,7 @@ def bloom_might_contain(bloom: bytes, value, kind: str,
             return True
         grams = [b[i:i + nlen] for i in range(len(b) - nlen + 1)]
         return all(_probe_raw(bloom, _NGRAM_TAG + g) for g in grams)
-    k = bloom[0] & ~_FLAGS_MASK
-    m_bits = int.from_bytes(bloom[1:5], "big")
-    h1, h2 = bloom_lanes(b)
-    for j in range(k):
-        p = (h1 + j * h2) % m_bits
-        if not (bloom[5 + (p >> 3)] >> (p & 7)) & 1:
-            return False
-    return True
+    return _probe_raw(bloom, b)
 
 
 def _probe_raw(bloom: bytes, key: bytes) -> bool:
@@ -227,96 +244,87 @@ def _strided_grams(b: bytes, n: int, cap: int = _NGRAM_PROBE_CAP) -> list:
     return [b[i:i + n] for i in idx]
 
 
-def bloom_ngram_probe_sql(bloom_col: str, value, nlens: list[int],
-                          k: int = DEFAULT_K) -> "str | None":
-    """Catalyst SQL boolean: might ``bloom_col`` contain a value with
-    ``value`` as a SUBSTRING?
-
-    ``nlens``: the stored n-gram-key lengths present in the table (mixed
-    dirs are legal — each block probes with its OWN N via a CASE on the
-    trailing byte). A block with no gram keys, or whose N exceeds the
-    query length, stays un-pruned. Each arm ANDs the probes of up to
-    ``_NGRAM_PROBE_CAP`` evenly-strided query grams — a subset of the
-    necessary conditions, so capping is sound. Returns None when no
-    stored N is usable."""
+def _probe_alternatives(op: str, value, kind: str):
+    """The probe of ``column op value`` as alternatives ``(n, keys)``: a
+    block whose stored key length is n (0 for plain value keys, P for
+    prefix keys, N for n-gram keys) may hold a match iff every key of some
+    alternative with its n is present. None when the predicate cannot be
+    probed."""
+    if op in ("=", "=="):
+        vb = canonical_bytes(value, kind)
+        return None if vb is None else [(0, [vb])]
+    if op == "in":
+        vals = list(value)
+        if not vals or len(vals) > IN_PROBE_CAP:
+            return None
+        keys = [canonical_bytes(v, kind) for v in vals]
+        return None if None in keys else [(0, [k]) for k in keys]
+    if kind != "str" or op not in ("prefix", "contains"):
+        return None
     vb = canonical_bytes(value, "str")
-    if vb is None:
+    if op == "prefix":
+        alts = [(p, [_PREFIX_TAG + vb[:p]]) for p in range(1, min(len(vb), 255) + 1)]
+    else:
+        alts = [(n, [_NGRAM_TAG + g for g in _strided_grams(vb, n)])
+                for n in range(2, min(len(vb), 255) + 1)]
+    return alts or None
+
+
+def _byte(bloom, pos):
+    """Byte ``pos`` (1-based; negative counts from the end) of a bitmap."""
+    return F.conv(F.hex(bloom.substr(pos, F.lit(1))), 16, 10).cast("int")
+
+
+def bloom_probe(op: str, value, kind: str):
+    """A boolean Column over a blocks row: may the block hold a row
+    matching ``column op value`` (``=``, ``in``, ``prefix`` or
+    ``contains``), judged by its ``bloom`` bitmap? None when the predicate
+    cannot be probed. A NULL bitmap is always true.
+
+    The keys are hashed on the driver into one array literal of
+    :func:`_probe_alternatives`; a higher-order ``exists`` probes each block
+    with its own stored ``k``, P and N. The verdict equals
+    :func:`bloom_might_contain`'s, except that a ``contains`` query with
+    more than ``_NGRAM_PROBE_CAP`` grams probes a strided subset, which may
+    keep a block the twin drops — never the reverse."""
+    alts = _probe_alternatives(op, value, kind)
+    if alts is None:
         return None
-    usable = sorted({n for n in nlens if 2 <= n <= len(vb)})
-    if not usable:
-        return None
-    flag = (f"(cast(conv(hex(substring({bloom_col}, 1, 1)), 16, 10) as int)"
-            f" & {_NGRAM_FLAG}) != 0")
-    nlen = f"cast(conv(hex(substring({bloom_col}, -1, 1)), 16, 10) as int)"
-    arms = " ".join(
-        "WHEN {n} THEN ({probes})".format(
-            n=n,
-            probes=" AND ".join(
-                _probe_conjunction(bloom_col, _NGRAM_TAG + g, k)
-                for g in _strided_grams(vb, n)),
-        )
-        for n in usable
-    )
-    return f"(NOT ({flag}) OR (CASE {nlen} {arms} ELSE true END))"
+    b = F.col("bloom")
+    b0 = _byte(b, F.lit(1))
+    if op == "prefix":
+        # P rides before the N byte when gram keys are also present
+        ppos = F.when(b0.bitwiseAND(_NGRAM_FLAG) != 0, F.lit(-2)).otherwise(F.lit(-1))
+        own = F.when(b0.bitwiseAND(_PREFIX_FLAG) != 0, _byte(b, ppos))
+    elif op == "contains":
+        own = F.when(b0.bitwiseAND(_NGRAM_FLAG) != 0, _byte(b, F.lit(-1)))
+    else:
+        own = F.lit(0)
+    own = F.coalesce(own, F.lit(-1))
+    k = b0.bitwiseAND(0xFF & ~_FLAGS_MASK)
+    m = F.conv(F.hex(b.substr(F.lit(2), F.lit(4))), 16, 10).cast("bigint")
+    lit = F.array(*[
+        F.struct(F.lit(n).alias("n"), F.array(*[
+            F.struct(F.lit(h1).cast("bigint").alias("h1"),
+                     F.lit(h2).cast("bigint").alias("h2"))
+            for h1, h2 in map(bloom_lanes, keys)]).alias("keys"))
+        for n, keys in alts])
 
+    def bit_set(key):
+        # 57-bit lanes keep h1 + j*h2 inside a bigint for every j < 63
+        def probe(j):
+            pos = F.pmod(key["h1"] + j * key["h2"], m)
+            byte = _byte(b, (F.shiftright(pos, 3) + 6).cast("int"))
+            return F.call_function("shiftright", byte,
+                                   pos.bitwiseAND(7).cast("int")).bitwiseAND(1) == 1
+        return F.forall(F.sequence(F.lit(0), k - 1), probe)
 
-def _probe_conjunction(bloom_col: str, key: bytes, k: int) -> str:
-    """The k bit-probe AND-chain for one hashed key (shared by eq/prefix)."""
-    h1, h2 = bloom_lanes(key)
-    m = f"cast(conv(hex(substring({bloom_col}, 2, 4)), 16, 10) as bigint)"
-    probes = []
-    for j in range(k):
-        pos = f"pmod({h1 + j * h2}L, {m})"
-        byte = (f"cast(conv(hex(substring({bloom_col}, "
-                f"6 + cast(({pos}) / 8 as int), 1)), 16, 10) as int)")
-        probes.append(f"(({byte} & shiftleft(1, cast(pmod({pos}, 8) as int))) != 0)")
-    return "(" + " AND ".join(probes) + ")"
+    def applies(a):
+        return a["n"] == own
 
-
-def bloom_prefix_probe_sql(bloom_col: str, value, plens: list[int],
-                           k: int = DEFAULT_K) -> "str | None":
-    """Catalyst SQL boolean: might ``bloom_col`` contain a value with
-    string prefix ``value``?
-
-    ``plens``: the stored prefix-key lengths present in the table (from
-    :func:`discover_prefix_lens` — one encode run uses one P, but mixed
-    dirs are legal). Each block is probed with its OWN P via a CASE on the
-    trailing byte; blocks with no prefix keys, or whose P exceeds the
-    query prefix, stay un-pruned (true). Returns None when no stored P is
-    usable — caller skips bloom pruning entirely."""
-    vb = canonical_bytes(value, "str")
-    if vb is None:
-        return None
-    usable = sorted({p for p in plens if 1 <= p <= len(vb)})
-    if not usable:
-        return None
-    b0 = f"cast(conv(hex(substring({bloom_col}, 1, 1)), 16, 10) as int)"
-    flag = f"({b0} & {_PREFIX_FLAG}) != 0"
-    # P rides before the N byte when gram keys are also present (pinned
-    # tail order [P][N])
-    ppos = f"(CASE WHEN ({b0} & {_NGRAM_FLAG}) != 0 THEN -2 ELSE -1 END)"
-    plen = f"cast(conv(hex(substring({bloom_col}, {ppos}, 1)), 16, 10) as int)"
-    arms = " ".join(
-        f"WHEN {p} THEN {_probe_conjunction(bloom_col, _PREFIX_TAG + vb[:p], k)}"
-        for p in usable
-    )
-    return f"(NOT ({flag}) OR (CASE {plen} {arms} ELSE true END))"
-
-
-def bloom_probe_sql(bloom_col: str, value, kind: str,
-                    k: int = DEFAULT_K) -> "str | None":
-    """Catalyst SQL boolean: might ``bloom_col`` contain ``value``?
-
-    NULL bloom => NULL (caller treats as keep). The k byte probes read the
-    big-endian header fields with substring/hex/conv — whole-stage-codegen
-    arithmetic, no UDF. ``k`` must match the encode-side constant (it is
-    also byte 0 of the bitmap; the expression trusts the pinned constant
-    and the tests pin the two together)."""
-    vb = canonical_bytes(value, kind)
-    if vb is None:
-        return None
-    # numerators precomputed driver-side: fit int64 by the 57-bit lanes
-    return _probe_conjunction(bloom_col, vb, k)
+    may = (~F.exists(lit, applies)
+           | F.exists(lit, lambda a: applies(a) & F.forall(a["keys"], bit_set)))
+    return b.isNull() | may
 
 
 def parse_bloom_spec(specs) -> dict[str, "tuple[int | None, int | None]"]:

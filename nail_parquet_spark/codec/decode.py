@@ -14,94 +14,16 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from nail_parquet_spark.codec import zonemap
+from nail_parquet_spark.codec.blockindex import BlockIndex, _src_expr_frame
 from nail_parquet_spark.codec.kernels import EncodedBlock, decode_array
+from nail_parquet_spark.sources.io import TaskFile
 
 
-def _headers_by_column(blocks: DataFrame) -> tuple[dict[str, dict], dict[str, set]]:
-    """(one parsed header per column, every xref reference per column) — a
-    tiny driver-side metadata read, like a parquet footer fetch.
-
-    Grouping by (column, codec, xref-ref) covers blocks tables whose batches
-    were encoded by different jobs with different codec choices (a resumable
-    out_dir mixing pre-xref and xref batches, or even two xref batches with
-    different references): the fetch closure must see EVERY reference any
-    block of a column uses. The blocks `codec` column holds the normalized
-    name ('xref', no ref), so the ref is pulled from the header JSON."""
-    headers, refs, _ = _headers_refs_codecs(blocks)
-    return headers, refs
-
-
-def _headers_refs_codecs(
-    blocks: DataFrame,
-) -> tuple[dict[str, dict], dict[str, set], dict[str, dict]]:
-    """:func:`_headers_by_column` plus per-column codec metadata, all from
-    the SAME single metadata job (r06: the dictionary-pushdown operators
-    previously ran a second ``codec.distinct`` job and a third eligibility
-    probe for facts this grouped read already held).
-
-    Third element: ``{column: {codec: {"max_null": int}}}`` — every codec
-    any block of the column uses, with the max per-block null_count seen
-    under that codec (the int/float dictionary-distinct eligibility rule
-    needs "has any dict block with nulls", not just the codec set)."""
-    import json
-
-    rows = (
-        blocks.select(
-            "column", "codec",
-            F.get_json_object("header", "$.params.ref").alias("__ref"),
-            "header", "null_count",
-        )
-        .groupBy("column", "codec", "__ref")
-        .agg(F.first("header").alias("header"),
-             F.max("null_count").alias("max_null"))
-        .collect()
-    )
-    headers: dict[str, dict] = {}
-    refs: dict[str, set] = {}
-    codecs: dict[str, dict] = {}
-    for r in rows:
-        h = json.loads(r["header"])
-        headers.setdefault(r["column"], h)
-        cmeta = codecs.setdefault(r["column"], {})
-        prev = cmeta.setdefault(r["codec"], {"max_null": 0})
-        prev["max_null"] = max(prev["max_null"], int(r["max_null"] or 0))
-        if h.get("codec") == "xref":
-            refs.setdefault(r["column"], set()).add(h["params"]["ref"])
-    return headers, refs, codecs
-
-
-# Above this file count, decode_parquet_dir derives headers with a Spark job
-# (distributed footer reads) instead of the driver loop below: the loop is
-# O(files) sequential driver IO — fine for a per-job blocks dir (tens of
-# files), wrong for a 100k-file lake table.
+# Above this file count, decode_parquet_dir indexes the blocks with a Spark
+# job instead of the driver's pyarrow reads: those are O(files) sequential
+# driver IO — fine for a per-job blocks dir (tens of files), wrong for a
+# 100k-file lake table.
 _DRIVER_HEADER_MAX_FILES = 256
-
-
-def _headers_from_files(files: list[str]) -> tuple[dict[str, dict], dict[str, set]]:
-    """Same contract as ``_headers_by_column`` but via direct column-pruned
-    pyarrow reads of (column, header) — no Spark job (saves a full stage,
-    ~0.5 s/job). Reads EVERY file so heterogeneous codec choices across
-    resumed jobs are still all seen."""
-    import json
-
-    import pyarrow.parquet as _pq
-
-    headers: dict[str, dict] = {}
-    refs: dict[str, set] = {}
-    seen: set[tuple] = set()
-    for f in files:
-        t = _pq.read_table(f, columns=["column", "header"], use_threads=False)
-        for c, hs in zip(t.column("column").to_pylist(),
-                         t.column("header").to_pylist()):
-            key = (c, hs)
-            if key in seen:
-                continue
-            seen.add(key)
-            h = json.loads(hs)
-            headers.setdefault(c, h)
-            if h.get("codec") == "xref":
-                refs.setdefault(c, set()).add(h["params"]["ref"])
-    return headers, refs
 
 
 def _schema_from_headers(headers: dict[str, dict], columns: list[str]) -> pa.Schema:
@@ -125,7 +47,8 @@ def _schema_from_headers(headers: dict[str, dict], columns: list[str]) -> pa.Sch
 
 def blocks_arrow_schema(blocks: DataFrame, columns: list[str]) -> pa.Schema:
     """Reconstruct the original Arrow schema from one header per column."""
-    return _schema_from_headers(_headers_by_column(blocks)[0], columns)
+    return _schema_from_headers(BlockIndex.load(blocks, stats=False).headers,
+                                columns)
 
 
 def _fetch_closure(headers: dict[str, dict], refs: dict[str, set],
@@ -168,34 +91,6 @@ def _with_src_key(blocks: DataFrame, file_keyed: bool = True) -> DataFrame:
     if not file_keyed:
         return blocks.select(F.lit("").alias("__src"), *base)
     return _src_expr_frame(blocks, warn=True).select("__src", *base)
-
-
-def _src_expr_frame(blocks: DataFrame, warn: bool = False) -> DataFrame:
-    """``blocks`` plus a ``__src`` source-file column — empty string when
-    ``input_file_name()`` is unavailable (in-memory encode output, cached
-    relations, multi-source plans). An empty ``__src`` means physical-block
-    identity degrades to the bare (part, block) pair, which can collide
-    across encode jobs: metadata-side callers MUST detect duplicate keys
-    and fall back (the decode side's _iter_groups refuses duplicates
-    loudly). Keeps all original columns."""
-    try:
-        out = blocks.withColumn("__src", F.input_file_name())
-        out.schema  # force analysis: MULTI_SOURCES_UNSUPPORTED surfaces here
-        return out
-    except Exception as e:
-        if "MULTI_SOURCES" not in str(e) and "input_file_name" not in str(e):
-            raise
-        if warn:
-            import warnings
-
-            warnings.warn(
-                "decode: input_file_name() is unavailable for this blocks "
-                "plan (multi-source); falling back to non-file-keyed "
-                "grouping — only safe when ALL blocks come from one encode "
-                "job",
-                stacklevel=4,
-            )
-        return blocks.withColumn("__src", F.lit(""))
 
 
 def _iter_groups(batches, columns, strict: bool = True, with_key: bool = False):
@@ -320,6 +215,20 @@ def _spark_ddl_of(schema: pa.Schema) -> str:
     return ", ".join(parts)
 
 
+def _columns(headers: dict, columns, *extra) -> tuple[list[str], list[str]]:
+    """(output columns: ``columns`` or every column, columns to decode:
+    the output plus the ``extra`` predicate and order columns)."""
+    out = list(columns) if columns is not None else sorted(headers)
+    return out, out + [c for c in dict.fromkeys(extra)
+                       if c is not None and c not in out]
+
+
+def _empty(blocks: DataFrame, headers: dict, columns: list[str]) -> DataFrame:
+    """An empty frame typed like the decode of ``columns``."""
+    return blocks.sparkSession.createDataFrame(
+        [], _spark_ddl_of(_schema_from_headers(headers, columns)))
+
+
 # reserved row-coordinate columns appended by decode_table(with_positions=
 # True): the (block-file, part, block, row-offset) address of a decoded row —
 # the same shape as an Iceberg v2 position-delete coordinate (file_path, pos),
@@ -355,20 +264,19 @@ def decode_table(blocks: DataFrame, columns: list[str] | None = None,
 
     DETERMINISM CONTRACT: ``blocks`` must evaluate to the same rows on
     every action (file-backed, cached, or checkpointed). Decode and its
-    pushdown variants run MULTIPLE jobs over the plan (header read, zone
-    prune collect, payload decode); an uncached in-memory plan downstream
-    of a sampling shuffle (``repartitionByRange``'s boundaries re-draw per
-    action) can shift rows between groups across those jobs and corrupt
-    results. This is Spark's own repeatability contract, restated here
-    because the failure is silent.
+    pushdown variants run MORE THAN ONE job over the plan (the metadata
+    read of :class:`codec.blockindex.BlockIndex`, then the payload
+    decode); an uncached in-memory plan downstream of a sampling shuffle
+    (``repartitionByRange``'s boundaries re-draw per action) can shift
+    rows between groups across those jobs and corrupt results. This is
+    Spark's own repeatability contract, restated here because the failure
+    is silent.
 
-    ``headers``/``refs`` (optional, r06): pass the pair a caller already
-    collected via ``_headers_by_column(blocks)`` to skip this function's
-    own header job — the pushdown operators run several metadata jobs over
-    the same blocks plan, and each redundant header read re-evaluates an
-    uncached plan end to end. They must describe THIS blocks table (or a
-    superset); an empty-after-pruning blocks frame then also decodes to an
-    empty typed frame instead of raising on absent headers.
+    ``headers``/``refs`` (optional): those of a
+    :class:`codec.blockindex.BlockIndex` the caller already loaded for THIS
+    blocks table (or a superset) skip this function's own metadata read, as
+    the pushdown operators do; an empty-after-pruning blocks frame then
+    decodes to an empty typed frame instead of raising.
 
     ``pre_grouped=True`` (r06) skips the co-locating repartition + sort:
     valid when every block group's rows are already ADJACENT within one
@@ -387,9 +295,10 @@ def decode_table(blocks: DataFrame, columns: list[str] | None = None,
     if missing_columns not in ("error", "null"):
         raise ValueError("missing_columns must be 'error' or 'null'")
     if headers is None or refs is None:
-        headers, refs = _headers_by_column(blocks)
+        idx = BlockIndex.load(blocks, stats=False)
+        headers, refs = idx.headers, idx.refs
     if columns is None:
-        # the header read already enumerated the columns — no extra job
+        # the index already enumerated the columns — no extra job
         columns = sorted(headers)
     if with_positions:
         clash = [c for c in columns if c in POS_COLUMNS]
@@ -578,7 +487,8 @@ def decode_to_parquet(blocks: DataFrame, out_dir: str,
     if missing_columns not in ("error", "null"):
         raise ValueError("missing_columns must be 'error' or 'null'")
     fill = missing_columns == "null"
-    headers, refs = _headers_by_column(blocks)
+    idx = BlockIndex.load(blocks, stats=False)
+    headers, refs = idx.headers, idx.refs
     if columns is None:
         columns = sorted(headers)
     out_schema = _schema_from_headers(headers, columns)
@@ -595,34 +505,13 @@ def decode_to_parquet(blocks: DataFrame, out_dir: str,
     part = part.sortWithinPartitions("__src", "part_id", "block_id")
 
     def dec(batches):
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        tid = ctx.partitionId() if ctx is not None else 0
-        att = ctx.attemptNumber() if ctx is not None else 0
-        path = os.path.join(out_dir, f"part-{tid:05d}.parquet")
-        # attempt-unique temp + atomic rename: duplicate task attempts
-        # (speculation, zombie retries) must never interleave into the
-        # final file (see encode_parquet_dir)
-        tmp = os.path.join(out_dir, f".part-{tid:05d}.attempt-{att}.inprogress")
-        import glob as _glob2
-        import re as _re2
-
-        # only temps from STRICTLY OLDER attempts (see encode_parquet_dir)
-        for stale in _glob2.glob(os.path.join(out_dir, f".part-{tid:05d}.attempt-*.inprogress")):
-            m = _re2.search(r"attempt-(\d+)\.inprogress$", stale)
-            if m and int(m.group(1)) < att:
-                try:
-                    os.remove(stale)
-                except OSError:
-                    pass
-        w = _BufferedWriter(tmp, out_schema, compression, use_dictionary)
+        out = TaskFile(out_dir, "part", ".parquet")
+        w = _BufferedWriter(out.tmp, out_schema, compression, use_dictionary)
         for grp in _iter_groups(batches, columns, strict=not fill):
             w.write(_decode_group(grp, columns, out_schema, fill_missing=fill))
         if w.close():
-            os.replace(tmp, path)
             yield pa.record_batch(
-                [pa.array([path]), pa.array([w.n_rows], pa.int64())],
+                [pa.array([out.commit()]), pa.array([w.n_rows], pa.int64())],
                 names=["file", "n_rows"],
             )
 
@@ -657,10 +546,9 @@ def decode_parquet_dir(spark, blocks_dir: str, out_dir: str,
     files = list_parquet_files(blocks_dir)
     if not files:
         raise ValueError(f"no block files under {blocks_dir}")
-    if len(files) <= _DRIVER_HEADER_MAX_FILES:
-        headers, refs = _headers_from_files(files)
-    else:
-        headers, refs = _headers_by_column(spark.read.parquet(blocks_dir))
+    idx = (BlockIndex.from_files(files) if len(files) <= _DRIVER_HEADER_MAX_FILES
+           else BlockIndex.load(spark.read.parquet(blocks_dir), stats=False))
+    headers, refs = idx.headers, idx.refs
     if columns is None:
         columns = sorted(headers)
     out_schema = _schema_from_headers(headers, columns)
@@ -675,25 +563,9 @@ def decode_parquet_dir(spark, blocks_dir: str, out_dir: str,
 
     def dec(batches):
         import pyarrow.parquet as _pq
-        from pyspark import TaskContext
 
-        ctx = TaskContext.get()
-        tid = ctx.partitionId() if ctx is not None else 0
-        att = ctx.attemptNumber() if ctx is not None else 0
-        out_path = os.path.join(out_dir, f"part-{tid:05d}.parquet")
-        tmp = os.path.join(out_dir, f".part-{tid:05d}.attempt-{att}.inprogress")  # atomic commit (see decode_to_parquet)
-        import glob as _glob2
-        import re as _re2
-
-        # only temps from STRICTLY OLDER attempts (see encode_parquet_dir)
-        for stale in _glob2.glob(os.path.join(out_dir, f".part-{tid:05d}.attempt-*.inprogress")):
-            m = _re2.search(r"attempt-(\d+)\.inprogress$", stale)
-            if m and int(m.group(1)) < att:
-                try:
-                    os.remove(stale)
-                except OSError:
-                    pass
-        w = _BufferedWriter(tmp, out_schema, compression, use_dictionary)
+        out = TaskFile(out_dir, "part", ".parquet")
+        w = _BufferedWriter(out.tmp, out_schema, compression, use_dictionary)
         colset = set(fetch_cols)
         for batch in batches:
             for path in batch.column(0).to_pylist():
@@ -733,9 +605,8 @@ def decode_parquet_dir(spark, blocks_dir: str, out_dir: str,
                     w.write(_decode_group(grp, columns, out_schema,
                                           fill_missing=fill))
         if w.close():
-            os.replace(tmp, out_path)
             yield pa.record_batch(
-                [pa.array([out_path]), pa.array([w.n_rows], pa.int64())],
+                [pa.array([out.commit()]), pa.array([w.n_rows], pa.int64())],
                 names=["file", "n_rows"],
             )
 
@@ -743,7 +614,7 @@ def decode_parquet_dir(spark, blocks_dir: str, out_dir: str,
 
 
 # ---------------------------------------------------------------------------
-# zone-map predicate pushdown (block pruning from the per-block min/max)
+# predicate pushdown: block pruning decided on the driver by the block index
 # ---------------------------------------------------------------------------
 
 def _keep_pairs(blocks: DataFrame, pairs) -> DataFrame:
@@ -757,18 +628,11 @@ def _keep_pairs(blocks: DataFrame, pairs) -> DataFrame:
     return blocks.filter(F.col("part_id").isin(parts) & F.col("block_id").isin(bids))
 
 
-def _keep_groups(blocks: DataFrame, meta: DataFrame, may,
-                 max_groups: int) -> DataFrame:
-    """Collect the (part_id, block_id) keep-set satisfying ``may`` and
-    re-apply it with :func:`_keep_pairs`. Above ``max_groups`` pruning is
-    skipped — never wrong, only unpruned."""
-    pairs = (
-        meta.filter(may).select("part_id", "block_id").distinct()
-        .limit(max_groups + 1).collect()
-    )
-    if len(pairs) > max_groups:
-        return blocks
-    return _keep_pairs(blocks, {(r["part_id"], r["block_id"]) for r in pairs})
+def _prune(blocks: DataFrame, idx: BlockIndex, clauses) -> DataFrame:
+    """``blocks`` restricted to the groups the index keeps for the CNF
+    ``clauses`` (:meth:`BlockIndex.keep`); unpruned when it keeps all."""
+    keep = idx.keep(clauses)
+    return blocks if keep is None else _keep_pairs(blocks, keep)
 
 
 def prune_blocks(blocks: DataFrame, column: str, op: str, value,
@@ -778,133 +642,54 @@ def prune_blocks(blocks: DataFrame, column: str, op: str, value,
     (encode-side ``min_val``/``max_val``) prove no row can satisfy
     ``column op value`` — the engine's parquet-row-group-pruning analogue.
 
-    The keep-set is collected driver-side (O(#groups), capped at
-    ``max_groups`` — above the cap pruning is skipped, never wrong) and
-    re-applied as LITERAL ``isin`` filters on (part_id, block_id), which
-    Catalyst pushes into the parquet scan: pruned groups' payload bytes are
-    never read, not merely decoded-and-dropped. The pair-of-INs is a
-    superset of the exact pair set — safe, and the residual row filter
-    (decode_table_where) keeps semantics exact.
+    The keep-set is decided on the driver over one metadata read
+    (:class:`codec.blockindex.BlockIndex`; over ``max_groups`` groups
+    pruning is skipped, never wrong) and re-applied as LITERAL ``isin``
+    filters on (part_id, block_id), which Catalyst pushes into the parquet
+    scan: pruned groups' payload bytes are never read, not merely
+    decoded-and-dropped. The pair-of-INs is a superset of the exact pair
+    set — safe, and the residual row filter (decode_table_where) keeps
+    semantics exact.
 
-    The prune rule and its safety rules (render cap, unparsed and missing
-    stats, statless kinds) are :func:`codec.zonemap.may_keep`'s.
+    The prune rule and its safety rules (literal coercion, render cap,
+    unparsed and missing stats, statless kinds) are
+    :func:`codec.zonemap.block_class`'s. ``headers`` is accepted for
+    compatibility; the index read carries them.
     """
     if op not in zonemap.PRUNE_OPS:
         raise ValueError(f"op must be one of {zonemap.PRUNE_OPS}, got {op!r}")
-    if headers is None:
-        headers, _ = _headers_by_column(blocks)
-    if column not in headers:
-        raise ValueError(f"column {column!r} not in the blocks table")
-    may = zonemap.may_keep(headers, column, op, value)
-    if may is None:
-        return blocks
-    meta = blocks.filter(F.col("column") == column).select(
-        "part_id", "block_id", "min_val", "max_val", "n_rows", "null_count")
-    return _keep_groups(blocks, meta, may, max_groups)
+    return _prune(blocks, BlockIndex.load(blocks, max_groups),
+                  [[(column, op, value)]])
 
 
 def prune_blocks_bloom(blocks: DataFrame, column: str, value,
                        max_groups: int = 100_000,
                        headers: dict[str, dict] | None = None,
                        op: str = "=") -> DataFrame:
-    """Equality (and, with ``op='prefix'``, string-prefix) pushdown via the
+    """Equality (and ``in``, ``prefix``, ``contains``) pushdown via the
     opt-in per-block bloom bitmaps (codec/bloom.py): drop (part_id,
     block_id) groups whose ``column`` bloom proves the predicate matches no
     row. The complement of zone maps — min/max rarely excludes an equality
     probe on a high-cardinality column, a 10-bits/key bloom excludes ~99%
     of non-matching blocks. Prefix pruning needs bitmaps built with
-    ``"col:<P>"`` specs and a query prefix of at least P bytes; blocks
-    without prefix keys are kept (never wrong, only less pruned).
+    ``"col:<P>"`` specs and a query prefix of at least P bytes, substring
+    pruning ``"col:g<N>"`` specs; blocks without such keys are kept (never
+    wrong, only less pruned).
 
-    The membership test runs distributed as a pure Catalyst expression
-    (``bloom_probe_sql``: substring/conv/bit arithmetic on the bitmap
-    bytes, probe hashes computed driver-side); only the surviving keep-set
-    is collected, same O(#groups) cap-and-skip contract as
-    ``prune_blocks``. A NULL bloom (no filter on that block, pre-bloom
-    dir, unsupported type) always keeps the group — never wrong, only
-    less pruned. Bitmaps stay out of the decode path entirely: this
-    projection reads (part_id, block_id, bloom) only."""
+    The membership test runs inside the block index's one metadata read
+    (:func:`codec.bloom.bloom_probe`), so bitmaps never reach the driver;
+    the keep-set, which zone maps narrow too, is applied like
+    ``prune_blocks``'. A NULL bloom (no filter on that block, pre-bloom
+    dir, unsupported type) always keeps the group, and a ``prefix`` on a
+    non-string column prunes nothing. ``headers`` is accepted for
+    compatibility."""
     if "bloom" not in blocks.columns:
         return blocks
-    if headers is None:
-        headers, _ = _headers_by_column(blocks)
-    if column not in headers:
-        raise ValueError(f"column {column!r} not in the blocks table")
-    meta = blocks.filter(F.col("column") == column).select(
-        "part_id", "block_id", "bloom")
-    may = _bloom_may_expr(meta, column, value, headers, op)
-    if may is None:
-        return blocks
-    return _keep_groups(blocks, meta, may, max_groups)
-
-
-def _bloom_may_expr(meta: DataFrame, column: str, value, headers: dict,
-                    op: str = "="):
-    """The bloom may-keep Column for ``column op value`` over a blocks
-    metadata row carrying a ``bloom`` column, or None when bitmaps cannot
-    prune (unsupported column kind, unprobable value, oversized IN list).
-    ``meta`` must be the column-filtered metadata frame — the
-    prefix/contains paths pull their stored key lengths from it. All
-    probe rules and safety notes of :func:`prune_blocks_bloom` live
-    here."""
-    from nail_parquet_spark.codec.bloom import (
-        _NGRAM_FLAG, _PREFIX_FLAG, bloom_ngram_probe_sql,
-        bloom_prefix_probe_sql, bloom_probe_sql)
-    from nail_parquet_spark.codec.kernels import _type_from_str
-
-    t = _type_from_str(headers[column]["type"])
-    if pa.types.is_integer(t) or pa.types.is_boolean(t):
-        kind = "int"
-    elif pa.types.is_string(t) or pa.types.is_large_string(t):
-        kind = "str"
-    else:
-        return None
-    if op == "prefix":
-        if kind != "str":
-            return None
-        # discover the stored prefix-key lengths (tail byte of flagged
-        # bitmaps — P rides BEFORE the N byte when gram keys are also
-        # present): one encode run uses one P, so this driver pull is a
-        # handful of tiny rows — then each block probes with its own P
-        b0 = F.conv(F.hex(F.substring("bloom", 1, 1)), 16, 10).cast("int")
-        flag = b0.bitwiseAND(_PREFIX_FLAG) != 0
-        ppos = F.when(b0.bitwiseAND(_NGRAM_FLAG) != 0, F.lit(-2)) \
-            .otherwise(F.lit(-1))
-        plens = [
-            int(r[0]) for r in meta.filter(F.col("bloom").isNotNull() & flag)
-            .select(F.conv(F.hex(F.substring(F.col("bloom"), ppos, F.lit(1))),
-                           16, 10).cast("int")).distinct().limit(64).collect()
-        ]
-        probe = bloom_prefix_probe_sql("bloom", value, plens)
-    elif op == "contains":
-        if kind != "str":
-            return None
-        # discover the stored n-gram-key lengths (always the LAST tail
-        # byte of 0x40-flagged bitmaps); each block probes its own N
-        b0 = F.conv(F.hex(F.substring("bloom", 1, 1)), 16, 10).cast("int")
-        nflag = b0.bitwiseAND(_NGRAM_FLAG) != 0
-        nlens = [
-            int(r[0]) for r in meta.filter(F.col("bloom").isNotNull() & nflag)
-            .select(F.conv(F.hex(F.substring("bloom", -1, 1)), 16, 10)
-                    .cast("int")).distinct().limit(64).collect()
-        ]
-        probe = bloom_ngram_probe_sql("bloom", value, nlens)
-    elif op == "in":
-        # OR of per-value probes: a block survives if ANY listed value may
-        # be present. Any unprobable value (or an oversized list) keeps the
-        # whole thing unpruned — never wrong.
-        vals = list(value)
-        if not vals or len(vals) > zonemap.IN_PRUNE_CAP:
-            return None if vals else F.lit(False)
-        probes = [bloom_probe_sql("bloom", x, kind) for x in vals]
-        if any(p is None for p in probes):
-            return None
-        probe = " OR ".join(f"({p})" for p in probes)
-    else:
-        probe = bloom_probe_sql("bloom", value, kind)
-    if probe is None:
-        return None
-    return F.col("bloom").isNull() | F.expr(probe)
+    idx = BlockIndex.load(blocks, max_groups, probes=[(column, op, value)])
+    if op == "prefix" and column in idx.headers \
+            and idx.headers[column]["kind"] != "str":
+        return blocks  # no prefix keys on a non-string column
+    return _prune(blocks, idx, [[(column, op, value)]])
 
 
 def decode_table_where(blocks: DataFrame, column: str, op: str, value,
@@ -946,6 +731,18 @@ def _pred_expr(col_: str, op_: str, val_) -> F.Column:
     }[op_]
 
 
+def _cnf_expr(clauses) -> F.Column:
+    """The residual filter of CNF ``clauses`` (ANDed OR-lists)."""
+    residual = None
+    for clause in clauses:
+        one = None
+        for col_, op_, val_ in clause:
+            e = _pred_expr(col_, op_, val_)
+            one = e if one is None else (one | e)
+        residual = one if residual is None else (residual & one)
+    return residual
+
+
 def _as_clause(item) -> list[tuple]:
     """Normalize a predicate item: a bare (col, op, val) triple is a
     1-disjunct clause; a list/tuple of triples is an OR-clause."""
@@ -955,68 +752,15 @@ def _as_clause(item) -> list[tuple]:
     return [tuple(item)]
 
 
-def _prune_one(pruned: DataFrame, col_: str, op_: str, val_,
-               max_groups: int, headers: dict) -> DataFrame:
-    """Zone-map + bloom pruning for one predicate with ONE keep-set
-    collect: the two may-keep expressions AND together over the same
-    column-filtered metadata frame, where the chained prune_blocks ->
-    prune_blocks_bloom form collected twice (r06 — at corpus scale each
-    collect is a full metadata-table job). A bloom ``prefix`` or
-    ``contains`` predicate first collects the stored key lengths (see
-    :func:`_bloom_may_expr`), so it costs two metadata jobs, not one.
-    The combined keep-set equals the sequential composition's; the only
-    divergence is at the max_groups cap, where either form may simply
-    prune less — never wrong, the residual row filter keeps semantics
-    exact."""
-    if op_ not in zonemap.PRUNE_OPS and op_ != "contains":
-        raise ValueError(
-            f"op must be one of {zonemap.PRUNE_OPS + ('contains',)}, got {op_!r}")
-    if col_ not in headers:
-        raise ValueError(f"column {col_!r} not in the blocks table")
-    mays = []
-    if op_ != "contains":
-        # zone maps cannot bound a substring predicate
-        z = zonemap.may_keep(headers, col_, op_, val_)
-        if z is not None:
-            mays.append(z)
-    meta_cols = ["part_id", "block_id", "min_val", "max_val",
-                 "n_rows", "null_count"]
-    if "bloom" in pruned.columns:
-        meta_cols.append("bloom")
-    meta = pruned.filter(F.col("column") == col_).select(*meta_cols)
-    if op_ in ("=", "==", "prefix", "in", "contains") and "bloom" in meta_cols:
-        b = _bloom_may_expr(meta, col_, val_, headers, op_)
-        if b is not None:
-            mays.append(b)
-    if not mays:
-        return pruned
-    may = mays[0]
-    for m in mays[1:]:
-        may = may & m
-    return _keep_groups(pruned, meta, may, max_groups)
-
-
-def _prune_clause(pruned: DataFrame, clause: list[tuple],
-                  max_groups: int, headers: dict) -> DataFrame:
-    """Prune for an OR-clause: a group survives when ANY disjunct's zone
-    maps / blooms admit it — the UNION of the per-disjunct keep-sets,
-    collected driver-side (O(#groups) per disjunct, same cost class as
-    prune_blocks) and re-applied as literal isin filters. Over
-    ``max_groups`` the clause prunes nothing — never wrong, only
-    unpruned."""
-    if len(clause) == 1:
-        return _prune_one(pruned, *clause[0], max_groups, headers)
-    pairs: set = set()
-    for col_, op_, val_ in clause:
-        f1 = _prune_one(pruned, col_, op_, val_, max_groups, headers)
-        got = (f1.select("part_id", "block_id").distinct()
-               .limit(max_groups + 1).collect())
-        if len(got) > max_groups:
-            return pruned
-        pairs |= {(r["part_id"], r["block_id"]) for r in got}
-        if len(pairs) > max_groups:
-            return pruned
-    return _keep_pairs(pruned, pairs)
+def _where_index(blocks: DataFrame, predicates,
+                 max_groups: int) -> tuple[list, BlockIndex]:
+    """(CNF clauses, block index with their bloom verdicts) for a
+    ``predicates`` list in the ``decode_table_where_all`` grammar."""
+    clauses = [_as_clause(p) for p in predicates]
+    if not clauses:
+        raise ValueError("predicates must be non-empty")
+    probes = [p for clause in clauses for p in clause]
+    return clauses, BlockIndex.load(blocks, max_groups, probes=probes)
 
 
 def decode_table_where_all(blocks: DataFrame, predicates,
@@ -1027,38 +771,41 @@ def decode_table_where_all(blocks: DataFrame, predicates,
                            pre_grouped: bool = False) -> DataFrame:
     """CNF pushdown decode: ``predicates`` is a list of clauses ANDed
     together, where each clause is either a bare (column, op, value)
-    triple or a LIST of triples ORed together. Each clause prunes block
-    groups via zone maps + blooms (single-disjunct clauses chain exactly
-    as before; OR-clauses keep the union of their disjuncts' keep-sets —
-    see _prune_clause), then ONE decode runs over the surviving groups and
-    the exact CNF expression filters residually. Semantics equal
-    decode_table(...).filter((p11 OR p12 ...) AND (p21 ...) AND ...)."""
-    clauses = [_as_clause(p) for p in predicates]
-    if not clauses:
-        raise ValueError("predicates must be non-empty")
-    headers, refs = _headers_by_column(blocks)
-    out_cols = columns if columns is not None else sorted(headers)
-    pruned = blocks
-    for clause in clauses:
-        pruned = _prune_clause(pruned, clause, max_groups, headers)
-    use_cols = list(out_cols)
-    for clause in clauses:
-        for col_, _, _ in clause:
-            if col_ not in use_cols:
-                use_cols.append(col_)
+    triple or a LIST of triples ORed together. One metadata read
+    (:class:`codec.blockindex.BlockIndex`) decides on the driver which
+    block groups zone maps and blooms admit — a group survives a clause
+    when some disjunct admits it — then ONE decode runs over the surviving
+    groups and the exact CNF expression filters residually. Semantics
+    equal decode_table(...).filter((p11 OR p12 ...) AND (p21 ...) AND ...)."""
+    clauses, idx = _where_index(blocks, predicates, max_groups)
+    pruned = _prune(blocks, idx, clauses)
+    out_cols, use_cols = _columns(idx.headers, columns,
+                                  *(p[0] for clause in clauses for p in clause))
     # headers pass through: an all-pruned frame decodes to an empty typed
-    # frame, so the emptiness probe job is gone (r06)
+    # frame, with no emptiness probe job
     dec = decode_table(pruned, columns=use_cols,
                        num_partitions=num_partitions, file_keyed=file_keyed,
-                       headers=headers, refs=refs, pre_grouped=pre_grouped)
-    residual = None
-    for clause in clauses:
-        one = None
-        for col_, op_, val_ in clause:
-            e = _pred_expr(col_, op_, val_)
-            one = e if one is None else (one | e)
-        residual = one if residual is None else (residual & one)
-    return dec.filter(residual).select(*out_cols)
+                       headers=idx.headers, refs=idx.refs,
+                       pre_grouped=pre_grouped)
+    return dec.filter(_cnf_expr(clauses)).select(*out_cols)
+
+
+def _prune_topk(blocks: DataFrame, idx: BlockIndex, column: str, k: int,
+                descending: bool) -> DataFrame:
+    if k < 1:
+        raise ValueError("prune_blocks_topk: k must be >= 1")
+    if column not in idx.headers:
+        raise ValueError(f"column {column!r} not in the blocks table")
+    kind = zonemap.stat_kind(idx.headers, column,
+                             need="top-k must decode, then sort")
+    if idx.blocks is None:
+        return blocks
+    rows = [(b.key, b.n_rows - b.null_count, b.min_val, b.max_val)
+            for b in idx.blocks.get(column, ())
+            if b.n_rows > b.null_count]  # an all-null group never ranks
+    keep = zonemap.topk_keep(kind, rows, k, descending)
+    return blocks if keep is None else _keep_pairs(
+        blocks, {(p, b) for _, p, b in keep})
 
 
 def prune_blocks_topk(blocks: DataFrame, column: str, k: int,
@@ -1068,39 +815,20 @@ def prune_blocks_topk(blocks: DataFrame, column: str, k: int,
     """Zone-map pruning for ``ORDER BY column [DESC|ASC] LIMIT k``: keep
     only block groups that can contain a top-k row.
 
-    One driver-side collect of the per-group (min, max, n_rows,
-    null_count) of ``column`` (O(#groups), reads NO data), then the greedy
-    bound of :func:`codec.zonemap.topk_keep`, whose docstring holds the
-    algorithm and its safety rules. All-null groups are dropped (NULL never
-    ranks — see decode_topk). Over ``max_groups``, or when groups with
-    usable stats hold fewer than k rankable rows, pruning is skipped.
+    The per-group (min, max, n_rows, null_count) of ``column`` come from
+    one metadata read (:class:`codec.blockindex.BlockIndex`, reads NO
+    data), then the greedy bound of :func:`codec.zonemap.topk_keep`, whose
+    docstring holds the algorithm and its safety rules. All-null groups
+    are dropped (NULL never ranks — see decode_topk). Over ``max_groups``,
+    or when groups with usable stats hold fewer than k rankable rows,
+    pruning is skipped.
 
     Every column kind with zone stats is supported (integer, boolean,
     float, timestamp, date, string); binary and list columns raise.
+    ``headers`` is accepted for compatibility.
     """
-    if k < 1:
-        raise ValueError("prune_blocks_topk: k must be >= 1")
-    if headers is None:
-        headers, _ = _headers_by_column(blocks)
-    if column not in headers:
-        raise ValueError(f"column {column!r} not in the blocks table")
-    kind = zonemap.stat_kind(headers, column,
-                             need="top-k must decode, then sort")
-
-    meta = (blocks.filter(F.col("column") == column)
-            .select("part_id", "block_id", "min_val", "max_val",
-                    "n_rows", "null_count")
-            .limit(max_groups + 1).collect())
-    if len(meta) > max_groups:
-        return blocks
-    rows = []
-    for r in meta:
-        nn = int(r["n_rows"]) - int(r["null_count"])
-        if nn > 0:  # an all-null group never ranks
-            rows.append(((r["part_id"], r["block_id"]), nn,
-                         r["min_val"], r["max_val"]))
-    keep = zonemap.topk_keep(kind, rows, k, descending)
-    return blocks if keep is None else _keep_pairs(blocks, keep)
+    return _prune_topk(blocks, BlockIndex.load(blocks, max_groups), column,
+                       k, descending)
 
 
 def decode_topk(blocks: DataFrame, column: str, k: int,
@@ -1123,25 +851,79 @@ def decode_topk(blocks: DataFrame, column: str, k: int,
     ``decode_table(blocks, columns).filter(col.isNotNull())
     .orderBy(col [desc], tiebreak).limit(k)``.
     """
-    headers, refs = _headers_by_column(blocks)
-    out_cols = columns if columns is not None else sorted(headers)
-    use_cols = list(out_cols)
-    for extra in (column, tiebreak):
-        if extra is not None and extra not in use_cols:
-            use_cols.append(extra)
-    pruned = prune_blocks_topk(blocks, column, k, descending=descending,
-                               max_groups=max_groups, headers=headers)
+    idx = BlockIndex.load(blocks, max_groups)
+    out_cols, use_cols = _columns(idx.headers, columns, column, tiebreak)
+    pruned = _prune_topk(blocks, idx, column, k, descending)
     # headers pass through, so an all-pruned frame decodes to an empty typed
-    # frame directly — no emptiness probe job (r06: each extra action over
-    # an uncached blocks plan re-ran the whole upstream encode)
+    # frame directly — no emptiness probe job
     dec = decode_table(pruned, columns=use_cols,
                        num_partitions=num_partitions, file_keyed=file_keyed,
-                       headers=headers, refs=refs, pre_grouped=pre_grouped)
+                       headers=idx.headers, refs=idx.refs,
+                       pre_grouped=pre_grouped)
     order = [F.col(column).desc() if descending else F.col(column).asc()]
     if tiebreak is not None:
         order.append(F.col(tiebreak).asc())
     return (dec.filter(F.col(column).isNotNull())
             .orderBy(*order).limit(int(k)).select(*out_cols))
+
+
+def _prune_topk_by(blocks: DataFrame, idx: BlockIndex, group_col: str,
+                   column: str, k: int, descending: bool) -> DataFrame:
+    if k < 1:
+        raise ValueError("prune_blocks_topk_by: k must be >= 1")
+    if group_col == column:
+        raise ValueError("group_col and column must differ")
+    for c in (group_col, column):
+        if c not in idx.headers:
+            raise ValueError(f"column {c!r} not in the blocks table")
+    need = "grouped top-k must decode, then rank"
+    vkind = zonemap.stat_kind(idx.headers, column, need=need)
+    gkind = zonemap.stat_kind(idx.headers, group_col, need=need)
+    if idx.blocks is None:
+        return blocks
+
+    # physical-block identity is (source file, part_id, block_id): encode
+    # jobs restart part ids at 0, so the bare pair COLLIDES across the
+    # batch=* dirs a snapshot table unions — keying stats by the pair
+    # alone would overwrite one batch's block with another's and could
+    # prune rows that hold a group's true top-k
+    gstats: dict[tuple, object] = {}
+    vstats: dict[tuple, object] = {}
+    for side, c in ((gstats, group_col), (vstats, column)):
+        for b in idx.blocks.get(c, ()):
+            if b.key in side:
+                # physical identity collapsed (empty source over a union of
+                # in-memory encode jobs): stats would shadow each other, so
+                # prune NOTHING — the decode layer's duplicate-group refusal
+                # then decides loudly whether the table is even readable
+                return blocks
+            side[b.key] = b
+
+    keep: set[tuple] = set()
+    per_group: dict[object, list] = {}  # group value -> topk_keep rows
+    for key, gr in gstats.items():
+        vr = vstats.get(key)
+        if vr is None:
+            keep.add(key)  # value stats missing: keep unconditionally
+            continue
+        n = gr.n_rows
+        if gr.null_count >= n or vr.null_count >= n:
+            continue  # certainly no rankable row in this block
+        point, gval = zonemap.point_value(gkind, gr.min_val, gr.max_val)
+        if not point:
+            keep.add(key)  # spanning or unknown group zone: any group
+            continue
+        nn = max(0, n - gr.null_count - vr.null_count)
+        per_group.setdefault(gval, []).append(
+            (key, nn, vr.min_val, vr.max_val))
+    for rows in per_group.values():
+        kept = zonemap.topk_keep(vkind, rows, k, descending)
+        keep.update(kept if kept is not None else (r[0] for r in rows))
+
+    # project physical keys back to (part, block) pairs: the pair filter
+    # keeps every physical block sharing a kept pair — a superset, sound
+    # (an empty keep-set short-circuits to filter(False) inside the helper)
+    return _filter_block_pairs(blocks, {(p, b) for _, p, b in keep})
 
 
 def prune_blocks_topk_by(blocks: DataFrame, group_col: str, column: str,
@@ -1159,7 +941,8 @@ def prune_blocks_topk_by(blocks: DataFrame, group_col: str, column: str,
     blocks are single-group "point blocks" and the single-column greedy
     bound of :func:`prune_blocks_topk` applies independently per group.
 
-    Metadata algorithm (driver-side, O(#groups), reads NO payloads):
+    Metadata algorithm (driver-side over the block index, reads NO
+    payloads):
     - a block whose group zone is a single value
       (:func:`codec.zonemap.point_value`, a "point block") joins that
       group's greedy bound (:func:`codec.zonemap.topk_keep`, same value-side
@@ -1173,71 +956,11 @@ def prune_blocks_topk_by(blocks: DataFrame, group_col: str, column: str,
       all-null value) is dropped — NULLs never rank in either column.
 
     Both columns need zone stats (binary and list columns raise). Over
-    ``max_groups`` metadata rows per column, pruning is skipped.
+    ``max_groups`` block groups, pruning is skipped. ``headers`` is
+    accepted for compatibility.
     """
-    if k < 1:
-        raise ValueError("prune_blocks_topk_by: k must be >= 1")
-    if group_col == column:
-        raise ValueError("group_col and column must differ")
-    if headers is None:
-        headers, _ = _headers_by_column(blocks)
-    for c in (group_col, column):
-        if c not in headers:
-            raise ValueError(f"column {c!r} not in the blocks table")
-    need = "grouped top-k must decode, then rank"
-    vkind = zonemap.stat_kind(headers, column, need=need)
-    gkind = zonemap.stat_kind(headers, group_col, need=need)
-
-    # physical-block identity is (source file, part_id, block_id): encode
-    # jobs restart part ids at 0, so the bare pair COLLIDES across the
-    # batch=* dirs a snapshot table unions — keying stats by the pair
-    # alone would overwrite one batch's block with another's and could
-    # prune rows that hold a group's true top-k
-    meta = (_src_expr_frame(blocks)
-            .filter(F.col("column").isin([group_col, column]))
-            .select("__src", "column", "part_id", "block_id", "min_val",
-                    "max_val", "n_rows", "null_count")
-            .limit(2 * max_groups + 1).collect())
-    if len(meta) > 2 * max_groups:
-        return blocks
-    gstats: dict[tuple, object] = {}
-    vstats: dict[tuple, object] = {}
-    for r in meta:
-        key = (r["__src"], r["part_id"], r["block_id"])
-        side = gstats if r["column"] == group_col else vstats
-        if key in side:
-            # physical identity collapsed (empty __src over a union of
-            # in-memory encode jobs): stats would shadow each other, so
-            # prune NOTHING — the decode layer's duplicate-group refusal
-            # then decides loudly whether the table is even readable
-            return blocks
-        side[key] = r
-
-    keep: set[tuple] = set()
-    per_group: dict[object, list] = {}  # group value -> topk_keep rows
-    for key, gr in gstats.items():
-        vr = vstats.get(key)
-        if vr is None:
-            keep.add(key)  # value stats missing: keep unconditionally
-            continue
-        n = int(gr["n_rows"])
-        if int(gr["null_count"]) >= n or int(vr["null_count"]) >= n:
-            continue  # certainly no rankable row in this block
-        point, gval = zonemap.point_value(gkind, gr["min_val"], gr["max_val"])
-        if not point:
-            keep.add(key)  # spanning or unknown group zone: any group
-            continue
-        nn = max(0, n - int(gr["null_count"]) - int(vr["null_count"]))
-        per_group.setdefault(gval, []).append(
-            (key, nn, vr["min_val"], vr["max_val"]))
-    for rows in per_group.values():
-        kept = zonemap.topk_keep(vkind, rows, k, descending)
-        keep.update(kept if kept is not None else (r[0] for r in rows))
-
-    # project physical keys back to (part, block) pairs: the pair filter
-    # keeps every physical block sharing a kept pair — a superset, sound
-    # (an empty keep-set short-circuits to filter(False) inside the helper)
-    return _filter_block_pairs(blocks, {(p, b) for _, p, b in keep})
+    return _prune_topk_by(blocks, BlockIndex.load(blocks, max_groups),
+                          group_col, column, k, descending)
 
 
 def decode_topk_by(blocks: DataFrame, group_col: str, column: str, k: int,
@@ -1267,19 +990,15 @@ def decode_topk_by(blocks: DataFrame, group_col: str, column: str, k: int,
     """
     from pyspark.sql import Window
 
-    headers, refs = _headers_by_column(blocks)
-    out_cols = columns if columns is not None else sorted(headers)
-    use_cols = list(out_cols)
-    for extra in (group_col, column, tiebreak):
-        if extra is not None and extra not in use_cols:
-            use_cols.append(extra)
-    pruned = prune_blocks_topk_by(blocks, group_col, column, k,
-                                  descending=descending,
-                                  max_groups=max_groups, headers=headers)
+    idx = BlockIndex.load(blocks, max_groups)
+    out_cols, use_cols = _columns(idx.headers, columns, group_col, column,
+                                  tiebreak)
+    pruned = _prune_topk_by(blocks, idx, group_col, column, k, descending)
     # headers pass through: no emptiness probe job (see decode_topk)
     dec = decode_table(pruned, columns=use_cols,
                        num_partitions=num_partitions, file_keyed=file_keyed,
-                       headers=headers, refs=refs, pre_grouped=pre_grouped)
+                       headers=idx.headers, refs=idx.refs,
+                       pre_grouped=pre_grouped)
     order = [F.col(column).desc() if descending else F.col(column).asc()]
     if tiebreak is not None:
         order.append(F.col(tiebreak).asc())
@@ -1349,9 +1068,6 @@ def decode_semijoin(blocks: DataFrame, keys: DataFrame, key_col: str,
     anti-joined out BEFORE full materialization, so a snapshot table's
     merge-on-read view composes without resurfacing deleted rows.
     """
-    headers, refs = _headers_by_column(blocks)
-    if key_col not in headers:
-        raise ValueError(f"column {key_col!r} not in the blocks table")
     if key_col in keys.columns:
         probe = keys.select(key_col)
     elif len(keys.columns) == 1:
@@ -1362,28 +1078,21 @@ def decode_semijoin(blocks: DataFrame, keys: DataFrame, key_col: str,
             "and is not single-column")
     probe = probe.filter(F.col(key_col).isNotNull()).distinct()
 
-    out_cols = columns if columns is not None else sorted(headers)
-    use_cols = list(out_cols)
-    if key_col not in use_cols:
-        use_cols.append(key_col)
-
-    def empty():
-        schema = _schema_from_headers(headers, out_cols)
-        return blocks.sparkSession.createDataFrame([], _spark_ddl_of(schema))
-
-    # stage 1: inline-able probe -> metadata-only block pruning
-    pruned = blocks
+    # stage 1: an inline-able probe set prunes blocks from metadata alone,
+    # read in the same single index load as the headers
     sample = [r[0] for r in probe.limit(inline_keys_max + 1).collect()]
+    inline = [[(key_col, "in", sample)]] if len(sample) <= inline_keys_max else []
+    idx = BlockIndex.load(blocks, max_groups,
+                          probes=[p for clause in inline for p in clause])
+    headers, refs = idx.headers, idx.refs
+    if key_col not in headers:
+        raise ValueError(f"column {key_col!r} not in the blocks table")
+
+    out_cols, use_cols = _columns(headers, columns, key_col)
     if not sample:
-        return empty()
-    if len(sample) <= inline_keys_max:
-        try:
-            pruned = _prune_one(blocks, key_col, "in", sample,
-                                max_groups, headers)
-        except ValueError:
-            pruned = blocks  # kind without zone stats: no pruning
-        # no emptiness probe job: with headers passed through, an all-
-        # pruned frame flows to empty coords -> empty() in the tail (r06)
+        return _empty(blocks, headers, out_cols)
+    # an all-pruned frame flows to empty coords -> an empty frame in the tail
+    pruned = _prune(blocks, idx, inline) if inline else blocks
 
     # stage 2: key-column-only decode -> matching row coordinates
     keydec = decode_table(pruned, columns=[key_col], with_positions=True,
@@ -1396,7 +1105,7 @@ def decode_semijoin(blocks: DataFrame, keys: DataFrame, key_col: str,
                              on=POS_COLUMNS, how="left_anti")
 
     # stage 3: decode only block groups holding a match, keep exact rows
-    return _materialize_coords(pruned, coords, out_cols, use_cols, empty,
+    return _materialize_coords(pruned, coords, out_cols, use_cols,
                                num_partitions, file_keyed, max_groups,
                                headers=headers, refs=refs,
                                pre_grouped=pre_grouped)
@@ -1404,10 +1113,8 @@ def decode_semijoin(blocks: DataFrame, keys: DataFrame, key_col: str,
 
 def _materialize_coords(blocks: DataFrame, coords: DataFrame,
                         out_cols: list[str], use_cols: list[str],
-                        empty, num_partitions, file_keyed,
-                        max_groups: int,
-                        headers: dict[str, dict] | None = None,
-                        refs: dict[str, set] | None = None,
+                        num_partitions, file_keyed, max_groups: int,
+                        headers: dict[str, dict], refs: dict[str, set],
                         pre_grouped: bool = False) -> DataFrame:
     """Late-materialization tail shared by the coordinate-driven decodes:
     decode full payloads ONLY for block groups holding at least one
@@ -1419,7 +1126,7 @@ def _materialize_coords(blocks: DataFrame, coords: DataFrame,
     hit = blocks
     if len(got) <= max_groups:
         if not got:
-            return empty()
+            return _empty(blocks, headers, out_cols)
         hit = _filter_block_pairs(
             blocks, {(r["_part_id"], r["_block_id"]) for r in got})
     full = decode_table(hit, columns=use_cols, with_positions=True,
@@ -1459,20 +1166,13 @@ def decode_sample(blocks: DataFrame, key_col: str, fraction: float,
     """
     if not (0.0 <= fraction <= 1.0):
         raise ValueError("decode_sample: fraction must be in [0, 1]")
-    headers, refs = _headers_by_column(blocks)
+    idx = BlockIndex.load(blocks, stats=False)
+    headers, refs = idx.headers, idx.refs
     if key_col not in headers:
         raise ValueError(f"column {key_col!r} not in the blocks table")
-    out_cols = columns if columns is not None else sorted(headers)
-    use_cols = list(out_cols)
-    if key_col not in use_cols:
-        use_cols.append(key_col)
-
-    def empty():
-        schema = _schema_from_headers(headers, out_cols)
-        return blocks.sparkSession.createDataFrame([], _spark_ddl_of(schema))
-
+    out_cols, use_cols = _columns(headers, columns, key_col)
     if fraction == 0.0:
-        return empty()
+        return _empty(blocks, headers, out_cols)
     keydec = decode_table(blocks, columns=[key_col], with_positions=True,
                           num_partitions=num_partitions,
                           file_keyed=file_keyed, headers=headers, refs=refs,
@@ -1492,7 +1192,7 @@ def decode_sample(blocks: DataFrame, key_col: str, fraction: float,
     if deletes is not None:
         coords = coords.join(deletes.select(*POS_COLUMNS),
                              on=POS_COLUMNS, how="left_anti")
-    return _materialize_coords(blocks, coords, out_cols, use_cols, empty,
+    return _materialize_coords(blocks, coords, out_cols, use_cols,
                                num_partitions, file_keyed, max_groups,
                                headers=headers, refs=refs,
                                pre_grouped=pre_grouped)

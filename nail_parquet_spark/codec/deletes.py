@@ -32,27 +32,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nail_parquet_spark.codec.blockindex import BlockIndex
 from nail_parquet_spark.codec.decode import (
     POS_COLUMNS,
-    _as_clause,
-    _headers_by_column,
-    _pred_expr,
-    _prune_clause,
+    _cnf_expr,
+    _prune,
+    _where_index,
     decode_table,
 )
 
 POS_DDL = "_src_file string, _part_id bigint, _block_id bigint, _pos bigint"
-
-
-def _cnf_expr(clauses) -> F.Column:
-    residual = None
-    for clause in clauses:
-        one = None
-        for col_, op_, val_ in clause:
-            e = _pred_expr(col_, op_, val_)
-            one = e if one is None else (one | e)
-        residual = one if residual is None else (residual & one)
-    return residual
 
 
 def positions_where(blocks: DataFrame, predicates,
@@ -64,25 +53,20 @@ def positions_where(blocks: DataFrame, predicates,
     clause is a triple or a list of ORed triples). Zone maps and blooms
     prune block groups first; only the predicate columns of surviving
     groups decode. Returns a DataFrame with exactly ``POS_COLUMNS``."""
-    clauses = [_as_clause(p) for p in predicates]
-    if not clauses:
-        raise ValueError("predicates must be non-empty")
-    headers, refs = _headers_by_column(blocks)
+    clauses, idx = _where_index(blocks, predicates, max_groups)
     pred_cols: list[str] = []
     for clause in clauses:
         for col_, _, _ in clause:
             if col_ not in pred_cols:
                 pred_cols.append(col_)
-    missing = [c for c in pred_cols if c not in headers]
+    missing = [c for c in pred_cols if c not in idx.headers]
     if missing:
         raise ValueError(f"predicate columns not in block table: {missing}")
-    pruned = blocks
-    for clause in clauses:
-        pruned = _prune_clause(pruned, clause, max_groups, headers)
     # headers pass through: an all-pruned frame decodes to zero coordinate
-    # rows directly, so the emptiness probe job is gone (r06)
-    dec = decode_table(pruned, columns=pred_cols, file_keyed=file_keyed,
-                       with_positions=True, headers=headers, refs=refs)
+    # rows directly, with no emptiness probe job
+    dec = decode_table(_prune(blocks, idx, clauses), columns=pred_cols,
+                       file_keyed=file_keyed, with_positions=True,
+                       headers=idx.headers, refs=idx.refs)
     return dec.filter(_cnf_expr(clauses)).select(*POS_COLUMNS)
 
 
@@ -95,18 +79,13 @@ def decode_except_where(blocks: DataFrame, deletes: DataFrame, predicates,
     zone-map/bloom pruning still skips non-matching block groups (pruning
     never changes a surviving row's coordinates — group identity is
     physical), then the anti-join and the exact residual filter apply."""
-    clauses = [_as_clause(p) for p in predicates]
-    if not clauses:
-        raise ValueError("predicates must be non-empty")
-    headers, refs = _headers_by_column(blocks)
-    pruned = blocks
-    for clause in clauses:
-        pruned = _prune_clause(pruned, clause, max_groups, headers)
-    out_cols = list(columns) if columns is not None else sorted(headers)
+    clauses, idx = _where_index(blocks, predicates, max_groups)
+    pruned = _prune(blocks, idx, clauses)
+    out_cols = list(columns) if columns is not None else sorted(idx.headers)
     kept = decode_except(pruned, deletes, columns=out_cols,
                          file_keyed=file_keyed,
                          broadcast_deletes=broadcast_deletes,
-                         headers=headers, refs=refs)
+                         headers=idx.headers, refs=idx.refs)
     return kept.filter(_cnf_expr(clauses))
 
 
@@ -127,7 +106,8 @@ def decode_except(blocks: DataFrame, deletes: DataFrame,
     a mapInArrow plan has no stats, and a sort-merge anti-join would
     shuffle every decoded row)."""
     if headers is None or refs is None:
-        headers, refs = _headers_by_column(blocks)
+        idx = BlockIndex.load(blocks, stats=False)
+        headers, refs = idx.headers, idx.refs
     out_cols = list(columns) if columns is not None else sorted(headers)
     dec = decode_table(blocks, columns=out_cols,
                        num_partitions=num_partitions, file_keyed=file_keyed,

@@ -26,6 +26,7 @@ from nail_parquet_spark.codec.bloom import parse_bloom_spec as _parse_bloom
 from nail_parquet_spark.codec.kernels import encode_array, kind_of, xref_ref_of
 from nail_parquet_spark.codec.select import choose_codec, raw_bytes_of, xref_upgrade
 from nail_parquet_spark.codec.zonemap import render
+from nail_parquet_spark.sources.io import TaskFile
 
 # canonical block-table columns; the DDL derives from this list so callers
 # (compaction, tests) never string-parse the schema
@@ -633,33 +634,13 @@ def encode_parquet_dir(
     _os.makedirs(out_dir, exist_ok=True)
 
     def enc_sink(batches):
+        import time as _time
+
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
         tid = ctx.partitionId() if ctx is not None else 0
-        att = ctx.attemptNumber() if ctx is not None else 0
-        out_path = _os.path.join(out_dir, f"blocks-{tid:05d}.parquet")
-        # write to an attempt-unique temp name, rename on success: Spark's
-        # task-commit protocol doesn't cover files we write ourselves, so a
-        # speculative/zombie duplicate attempt must never interleave writes
-        # into the final file (os.replace is atomic; duplicate attempts
-        # produce identical content, last rename wins)
-        tmp_path = _os.path.join(out_dir, f".blocks-{tid:05d}.attempt-{att}.inprogress")
-        # clean temps left by STRICTLY OLDER attempts of this partition:
-        # a concurrent duplicate attempt (speculation/zombie) must never have
-        # its live temp unlinked by this one, and a late-waking zombie
-        # (lower attempt number) must never unlink the tracked retry's file
-        import glob as _glob2
-        import re as _re2
-
-        for stale in _glob2.glob(_os.path.join(out_dir, f".blocks-{tid:05d}.attempt-*.inprogress")):
-            m = _re2.search(r"attempt-(\d+)\.inprogress$", stale)
-            if m and int(m.group(1)) < att:
-                try:
-                    _os.remove(stale)
-                except OSError:
-                    pass
-        import time as _time
+        out = TaskFile(out_dir, "blocks", ".parquet")
 
         t0 = _time.time()
         pool = None
@@ -683,7 +664,7 @@ def encode_parquet_dir(
                                            executor=pool, bloom_cols=_parse_bloom(bloom_columns))
                         block_id += 1
                         if writer is None:
-                            writer = _pq.ParquetWriter(tmp_path, rb.schema, compression=compression)
+                            writer = _pq.ParquetWriter(out.tmp, rb.schema, compression=compression)
                         writer.write_batch(rb)
                         n_blocks += rb.num_rows
                         n_rows += chunk.num_rows
@@ -694,7 +675,7 @@ def encode_parquet_dir(
                 pool.shutdown(wait=False)
         if writer is not None:
             writer.close()
-            _os.replace(tmp_path, out_path)
+            out_path = out.commit()
             wall = _time.time() - t0
             yield pa.record_batch(
                 [

@@ -98,14 +98,14 @@ def distinct_pushdown(blocks: DataFrame, column: str,
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from nail_parquet_spark.codec.decode import (_headers_refs_codecs,
-                                                 _spark_ddl_of)
+    from nail_parquet_spark.codec.blockindex import BlockIndex
+    from nail_parquet_spark.codec.decode import _spark_ddl_of
     from nail_parquet_spark.codec.kernels import _type_from_str
 
-    # ONE metadata job serves headers, xref refs, AND the per-codec
-    # eligibility facts (r06: the codec.distinct job + the per-block
-    # eligibility probe repeated work this grouped read already held)
-    headers, refs, codec_meta = _headers_refs_codecs(blocks)
+    # ONE metadata read serves headers, xref refs, AND the per-codec
+    # eligibility facts
+    idx = BlockIndex.load(blocks, stats=False)
+    headers, refs, codec_meta = idx.headers, idx.refs, idx.codecs
     if column not in headers:
         raise ValueError(f"column {column!r} not in the blocks table")
     typ = _type_from_str(headers[column]["type"])
@@ -128,8 +128,8 @@ def distinct_pushdown(blocks: DataFrame, column: str,
                             headers=headers, refs=refs).distinct()
 
     if dict_only:
-        # the guarantee is checked driver-side from the header read's
-        # per-codec metadata and raises before any decode work is planned
+        # the guarantee is checked driver-side from the index's per-codec
+        # metadata and raises before any decode work is planned
         kind = headers[column]["kind"]
         if kind in ("str", "bin"):
             bad = [(c, m["max_null"]) for c, m in codec_meta[column].items()
@@ -243,13 +243,13 @@ def frequency_pushdown(blocks: DataFrame, column: str,
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from nail_parquet_spark.codec.decode import (_headers_refs_codecs,
-                                                 _spark_ddl_of)
+    from nail_parquet_spark.codec.blockindex import BlockIndex
+    from nail_parquet_spark.codec.decode import _spark_ddl_of
     from nail_parquet_spark.codec.kernels import _type_from_str
 
-    # ONE metadata job serves headers, refs, and the codec set (r06: the
-    # codec.distinct job and the dict_only probe are folded into it)
-    headers, refs, codec_meta = _headers_refs_codecs(blocks)
+    # ONE metadata read serves headers, xref refs, and the codec set
+    idx = BlockIndex.load(blocks, stats=False)
+    headers, refs, codec_meta = idx.headers, idx.refs, idx.codecs
     if column not in headers:
         raise ValueError(f"column {column!r} not in the blocks table")
     typ = _type_from_str(headers[column]["type"])
@@ -425,8 +425,9 @@ def count_where_pushdown(blocks: DataFrame, column: str, op: str, value=None,
     the min-max-index count optimization (a sorted column's range count
     touches O(boundary) blocks, not O(data)).
 
-    Per block, from metadata alone (the classification and its safety
-    rules are :func:`codec.zonemap.count_classes`' — a stat that cannot be
+    Per block, from one metadata read (:class:`codec.blockindex.BlockIndex`;
+    the classification and its safety rules are
+    :func:`codec.zonemap.block_class`' — a stat or literal that cannot be
     trusted never decides):
 
     - provably NO row matches → contributes 0;
@@ -440,104 +441,112 @@ def count_where_pushdown(blocks: DataFrame, column: str, op: str, value=None,
       never double-count.
 
     ``isnull`` / ``notnull`` answer 100% from null counters — no decode,
-    ever. NULL rows never match value predicates (ANSI). If the boundary
-    set exceeds ``max_groups`` the whole count falls back to one full
-    predicate-column decode — never wrong, only unpruned.
+    ever. NULL rows never match value predicates (ANSI). Over
+    ``max_groups`` block groups the index holds no per-block rows: the
+    same per-block rule then runs inside tasks over the metadata rows, and
+    if the boundary set also exceeds ``max_groups`` the whole count falls
+    back to one full predicate-column decode — never wrong, only
+    unpruned.
 
     Returns ``{"count", "groups_total", "groups_metadata",
     "groups_decoded"}`` so callers (and benchmarks) can see how much the
-    index actually decided.
-
-    ``headers``/``refs`` (optional, r06): a caller issuing several counts
-    over the same blocks table passes the pair from ``_headers_by_column``
-    once instead of paying a header job per call.
+    index actually decided. ``headers``/``refs`` are accepted for
+    compatibility; the index read carries them.
     """
     from nail_parquet_spark.codec import zonemap
-    from nail_parquet_spark.codec.decode import (_headers_by_column,
-                                                 _keep_pairs, _pred_expr,
+    from nail_parquet_spark.codec.blockindex import BlockIndex
+    from nail_parquet_spark.codec.decode import (_keep_pairs, _pred_expr,
                                                  decode_table)
 
     if op not in zonemap.PRUNE_OPS:
         raise ValueError(f"op must be one of {zonemap.PRUNE_OPS}, got {op!r}")
-    if headers is None or refs is None:
-        headers, refs = _headers_by_column(blocks)
+    idx = BlockIndex.load(blocks, max_groups)
+    headers, refs = idx.headers, idx.refs
     if column not in headers:
         raise ValueError(f"column {column!r} not in the blocks table")
-    mine = blocks.filter(F.col("column") == column)
-    meta = mine.select("part_id", "block_id", "min_val", "max_val",
-                       "n_rows", "null_count")
+    kind = zonemap.stat_kind(headers, column)
+    zonemap.check_prefix(kind, op)
+    nulls_only = op in ("isnull", "notnull")
+    if kind is None and not nulls_only:
+        raise ValueError(
+            f"column {column!r} ({headers[column]['type']}) carries no zone "
+            "stats; count requires a full decode")
+    lit = None if nulls_only else zonemap.coerce(headers, column, op, value,
+                                                 idx.tz)
 
-    if op in ("isnull", "notnull"):
-        matches = (F.col("null_count") if op == "isnull"
-                   else F.col("n_rows") - F.col("null_count"))
-        row = meta.agg(F.sum(matches).alias("c"),
-                       F.count("*").alias("g")).collect()[0]
-        return {"count": int(row["c"] or 0),
-                "groups_total": int(row["g"]),
-                "groups_metadata": int(row["g"]), "groups_decoded": 0}
+    def classify(n_rows, null_count, lo, hi):
+        """(class, rows the metadata counts) of one block."""
+        if nulls_only:
+            return zonemap.FULL, (null_count if op == "isnull"
+                                  else n_rows - null_count)
+        c = zonemap.block_class(kind, op, lit, n_rows, null_count, lo, hi)
+        return c, n_rows - null_count
 
-    is_full, is_boundary = zonemap.count_classes(headers, column, op, value)
-    if op == "in" and not list(value):
-        g = meta.count()
-        return {"count": 0, "groups_total": int(g),
-                "groups_metadata": int(g), "groups_decoded": 0}
-
-    # r06 fusion: ONE collect of classified per-block rows (the
-    # classification expressions are the SAME Catalyst exprs as before, so
-    # try_cast/ANSI semantics are unchanged) replaces the old aggregate job
-    # + the separate boundary-pair collect — each extra action over an
-    # uncached blocks plan re-ran the whole upstream encode. Bounded by the
-    # same ``max_groups`` cap the pair collect already imposed.
-    rows = (meta.select(
-        "part_id", "block_id",
-        (F.col("n_rows") - F.col("null_count")).alias("__nn"),
-        is_full.alias("__full"), is_boundary.alias("__boundary"))
-        .limit(max_groups + 1).collect())
     pred = _pred_expr(column, op, value)
-    if len(rows) > max_groups:
-        # block count exceeds the driver-side enumeration cap: keep the
-        # PRE-r06 two-job flow unchanged (aggregate for the totals; the
-        # boundary cap applies to boundary blocks only, so a huge table
-        # with a thin boundary still decodes only its boundary)
-        agg = meta.agg(
-            F.sum(F.when(is_full, F.col("n_rows") - F.col("null_count"))
+    if idx.blocks is not None:
+        g_total = meta_count = 0
+        boundary = []
+        for b in idx.blocks.get(column, ()):
+            c, n = classify(b.n_rows, b.null_count, b.min_val, b.max_val)
+            g_total += 1
+            if c == zonemap.FULL:
+                meta_count += n
+            elif c == zonemap.BOUNDARY:
+                boundary.append(b.key)
+        g_boundary = len(boundary)
+        keys = sorted({f"{s}\x00{p}\x00{q}" for s, p, q in boundary})
+        ident = F.concat_ws("\x00", "_src_file", "_part_id", "_block_id")
+    else:
+        # over the cap: the same per-block rule, run inside tasks
+        def classify_batches(batches):
+            import pyarrow as pa
+
+            for rb in batches:
+                cls, n = zip(*map(classify, *(rb.column(i).to_pylist()
+                                              for i in range(2, 6)))) \
+                    if rb.num_rows else ((), ())
+                yield pa.record_batch(
+                    [rb.column(0), rb.column(1), pa.array(cls, pa.int32()),
+                     pa.array(n, pa.int64())],
+                    names=["part_id", "block_id", "cls", "n"])
+
+        classes = (blocks.filter(F.col("column") == column)
+                   .select("part_id", "block_id", "n_rows", "null_count",
+                           "min_val", "max_val")
+                   .mapInArrow(classify_batches,
+                               "part_id int, block_id bigint, cls int, n bigint"))
+        agg = classes.agg(
+            F.sum(F.when(F.col("cls") == zonemap.FULL, F.col("n"))
                   .otherwise(F.lit(0))).alias("meta_count"),
             F.count("*").alias("g_total"),
-            F.sum(F.when(is_boundary, 1).otherwise(0)).alias("g_boundary"),
+            F.sum((F.col("cls") == zonemap.BOUNDARY).cast("long"))
+            .alias("g_boundary"),
         ).collect()[0]
         meta_count = int(agg["meta_count"] or 0)
         g_total = int(agg["g_total"])
         g_boundary = int(agg["g_boundary"] or 0)
-        if g_boundary == 0:
-            return {"count": meta_count, "groups_total": g_total,
-                    "groups_metadata": g_total, "groups_decoded": 0}
         if g_boundary > max_groups:
-            cnt = decode_table(blocks, [column], headers=headers,
-                               refs=refs,
+            cnt = decode_table(blocks, [column], headers=headers, refs=refs,
                                pre_grouped=pre_grouped).filter(pred).count()
             return {"count": int(cnt), "groups_total": g_total,
                     "groups_metadata": 0, "groups_decoded": g_total}
-        pairs = (meta.filter(is_boundary).select("part_id", "block_id")
-                 .distinct().collect())
-    else:
-        g_total = len(rows)
-        meta_count = sum(int(r["__nn"]) for r in rows if r["__full"])
-        pairs = [r for r in rows if r["__boundary"]]
-        g_boundary = len(pairs)
-        if g_boundary == 0:
-            return {"count": meta_count, "groups_total": g_total,
-                    "groups_metadata": g_total, "groups_decoded": 0}
+        boundary = ([(None, r["part_id"], r["block_id"]) for r in
+                     classes.filter(F.col("cls") == zonemap.BOUNDARY)
+                     .select("part_id", "block_id").distinct().collect()]
+                    if g_boundary else [])
+        keys = sorted(f"{p}\x00{q}" for _, p, q in boundary)
+        ident = F.concat_ws("\x00", "_part_id", "_block_id")
+    if g_boundary == 0:
+        return {"count": meta_count, "groups_total": g_total,
+                "groups_metadata": g_total, "groups_decoded": 0}
 
-    keys = {f"{r['part_id']}_{r['block_id']}" for r in pairs}
     # the parts×bids isin filter is a pushdown-friendly SUPERSET; exact
     # block identity comes from decode positions so full/none groups that
     # slip through the superset can never be double-counted
-    sub = _keep_pairs(blocks, {(r["part_id"], r["block_id"]) for r in pairs})
+    sub = _keep_pairs(blocks, {(p, q) for _, p, q in boundary})
     dec = decode_table(sub, [column], with_positions=True,
                        headers=headers, refs=refs, pre_grouped=pre_grouped)
-    cnt_b = (dec.filter(F.concat_ws("_", "_part_id", "_block_id")
-                        .isin(sorted(keys)))
-             .filter(pred).count())
+    cnt_b = dec.filter(ident.isin(keys)).filter(pred).count()
     return {"count": meta_count + int(cnt_b), "groups_total": g_total,
             "groups_metadata": g_total - g_boundary,
             "groups_decoded": g_boundary}
@@ -586,9 +595,9 @@ def column_stats_pushdown(blocks: DataFrame,
     microseconds and offset within the cap.
     """
     from nail_parquet_spark.codec import zonemap
-    from nail_parquet_spark.codec.decode import _headers_by_column
+    from nail_parquet_spark.codec.blockindex import BlockIndex
 
-    headers, _ = _headers_by_column(blocks)
+    headers = BlockIndex.load(blocks, stats=False).headers
     if columns is None:
         columns = sorted(headers)
     kinds = {}
@@ -727,15 +736,13 @@ def group_stats_pushdown(blocks: DataFrame, group_col: str, value_col: str,
     (:func:`codec.zonemap.stat_kind`).
     """
     from nail_parquet_spark.codec import zonemap
-    from nail_parquet_spark.codec.decode import (
-        _filter_block_pairs,
-        _headers_by_column,
-        decode_table,
-    )
+    from nail_parquet_spark.codec.blockindex import BlockIndex, _src_expr_frame
+    from nail_parquet_spark.codec.decode import _filter_block_pairs, decode_table
 
     if group_col == value_col:
         raise ValueError("group_col and value_col must differ")
-    headers, refs = _headers_by_column(blocks)
+    idx = BlockIndex.load(blocks, stats=False)
+    headers, refs = idx.headers, idx.refs
     for c in (group_col, value_col):
         if c not in headers:
             raise ValueError(f"column {c!r} not in the blocks table")
@@ -753,8 +760,6 @@ def group_stats_pushdown(blocks: DataFrame, group_col: str, value_col: str,
     # jobs restart part ids at 0, so on a snapshot table's union of
     # batch=* dirs the bare pair collides — joining g/v metadata on it
     # would many-to-many multiply and double-count rows
-    from nail_parquet_spark.codec.decode import _src_expr_frame
-
     srcb = _src_expr_frame(blocks)
     # duplicate physical identities (empty __src over a union of in-memory
     # encode jobs) would double-count through the metadata join: fall back

@@ -6,8 +6,19 @@ exact column and group stats, and top-k pruning all read those strings back
 through this module, so one set of rules holds everywhere:
 
 - a column's :class:`StatKind` (from its header type) says how a render
-  reads back: a Spark ``try_cast`` on the Catalyst side, a monotone Python
-  parse on the driver side. Binary, list and other kinds carry no stats;
+  reads back: a monotone Python parse on the driver, and a Spark
+  ``try_cast`` for the distributed column and group stats. Binary, list
+  and other kinds carry no stats;
+- pruning, count classification and both top-k pruners decide on the
+  driver, over the rows of the block index (:mod:`codec.blockindex`):
+  :func:`block_class` sorts a block into matches-nothing, boundary or
+  matches-every-non-null-row, and :func:`topk_keep` bounds a top-k;
+- a literal is compared the way the residual filter compares it with the
+  column (:func:`coerce`): an int stat against a float literal compares as
+  a float, NaN sorts largest, naive timestamp strings are read in the
+  session time zone, and dates and timestamps take a strict ISO grammar.
+  A literal outside those rules decides nothing, so the residual filter
+  sees every row, and raises where plain Spark raises;
 - a NULL stat on a block that is not all-null means the stats were
   unavailable, and a non-string render that does not parse back is
   unknown: neither ever decides anything about the block;
@@ -20,6 +31,7 @@ through this module, so one set of rules holds everywhere:
 from __future__ import annotations
 
 import datetime as _dt
+import re
 from typing import Any, Callable, NamedTuple
 
 import pyarrow as pa
@@ -56,11 +68,14 @@ def _parse_bool(s: str) -> bool:
     return s == "True"
 
 
-def _parse_float(s: str) -> tuple[int, float]:
+def _float_key(v: float) -> tuple[int, float]:
     # Spark orders NaN above +inf and equal to itself; encode stamps
     # max='nan' on NaN-bearing blocks
-    v = float(s)
     return (1, 0.0) if v != v else (0, v)
+
+
+def _parse_float(s: str) -> tuple[int, float]:
+    return _float_key(float(s))
 
 
 _BOOL = StatKind("boolean", _parse_bool)
@@ -100,7 +115,7 @@ def stat_kind(headers: dict, column: str, need: str | None = None):
 
 
 # ---------------------------------------------------------------------------
-# Catalyst side: expressions over one blocks metadata row
+# Catalyst side: the distributed column and group stats
 # ---------------------------------------------------------------------------
 
 def read_back(kind: StatKind, stat: Column) -> tuple[Column, Column]:
@@ -118,38 +133,109 @@ def missing(lo: Column) -> Column:
     return lo.isNull() & (F.col("null_count") < F.col("n_rows"))
 
 
-def _check_prefix(kind: StatKind | None, op: str) -> None:
+# ---------------------------------------------------------------------------
+# driver side: the block index rows
+# ---------------------------------------------------------------------------
+
+NONE, BOUNDARY, FULL = 0, 1, 2  # block classes: see block_class
+
+_DATE_RE = re.compile(r"\d{4}-\d{2}-\d{2}")
+_TS_RE = re.compile(r"\d{4}-\d{2}-\d{2}"
+                    r"([ T]\d{2}:\d{2}:\d{2}(\.\d{1,6})?(Z|[+-]\d{2}:\d{2})?)?")
+
+
+def check_prefix(kind: StatKind | None, op: str) -> None:
     if op == "prefix" and (kind is None or not kind.is_str):
         raise ValueError("prefix predicate is only valid on string columns")
 
 
-def _may_full(kind: StatKind, op: str, value):
-    """(lo, may, full) for a value predicate: lo is the block min in the
-    column's type (NULL when missing or unparsed), may = some row can
-    match, full = every non-null row matches. Literals stay uncast, so a
-    stat compares with them under the same coercion as the column does in
-    the residual filter (``k >= 4.5`` compares as double, not as 4)."""
-    lo, lo_known = read_back(kind, F.col("min_val"))
-    hi, hi_known = read_back(kind, F.col("max_val"))
+def _iso(typ, grammar: re.Pattern, s: str):
+    """``s`` parsed as ``typ`` when it matches the strict ``grammar`` and
+    names a real date or time, else None (Spark refuses it too)."""
+    try:
+        return typ.fromisoformat(s) if grammar.fullmatch(s) else None
+    except ValueError:
+        return None
 
-    def hi_ok(c: Column) -> Column:
-        # an unknown (truncated or unparsed) max bounds nothing
-        return F.when(hi_known, c).otherwise(F.lit(True))
 
+def _ts_literal(value, aware: bool, tz: str | None):
+    """A timestamp literal as Spark casts it for a timestamp column, or
+    None. ``aware``: the column is a session-time-zone timestamp (renders
+    carry an offset); otherwise it is a wall-clock one."""
+    if isinstance(value, str):
+        v = _iso(_dt.datetime, _TS_RE, value)
+        if v is None:
+            return None
+        if v.tzinfo is None and aware and tz is not None:
+            from zoneinfo import ZoneInfo
+
+            v = v.replace(tzinfo=ZoneInfo(tz))
+    elif isinstance(value, _dt.datetime) and aware:
+        # PySpark reads a naive datetime in the local time zone
+        v = value if value.tzinfo is not None else value.astimezone()
+    else:
+        return None
+    return v if (v.tzinfo is not None) == aware else None
+
+
+def coerce(headers: dict, column: str, op: str, value, tz: str | None = None):
+    """``(parse, v)``: the literal ``v`` (a list for ``in``) and a parse
+    of a stat render into the domain in which the residual filter compares
+    them, or None when the comparison is not one of the rules in the
+    module docstring (or the IN list is over ``IN_PRUNE_CAP``). ``tz`` is
+    the session time zone."""
     if op == "in":
-        lits = [F.lit(x) for x in value]
-        may = F.lit(False)
-        in_any = F.lit(False)
-        for lv in lits:
-            may = may | ((lo <= lv) & hi_ok(hi >= lv))
-            in_any = in_any | (lo == lv)
-        return lo, may, lo_known & hi_known & (lo == hi) & in_any
-    v = F.lit(value)
+        vals = list(value)
+        if len(vals) > IN_PRUNE_CAP:
+            return None
+        one = [coerce(headers, column, "=", x, tz) for x in vals]
+        if any(c is None for c in one) or len({c[0] for c in one}) > 1:
+            return None
+        return (one[0][0] if one else str), [c[1] for c in one]
+    kind = stat_kind(headers, column)
+    if kind is None or value is None:
+        return None
+    if kind is _STR:
+        return (str, value) if isinstance(value, str) else None
+    if kind is _BOOL:
+        return (_parse_bool, value) if isinstance(value, bool) else None
+    if kind is _DATE:
+        v = (_iso(_dt.date, _DATE_RE, value) if isinstance(value, str)
+             else value if type(value) is _dt.date else None)
+        return None if v is None else (_DATE.parse, v)
+    if kind is _TS:
+        from nail_parquet_spark.codec.kernels import _type_from_str
+
+        aware = _type_from_str(headers[column]["type"]).tz is not None
+        v = _ts_literal(value, aware, tz)
+        return None if v is None else (_TS.parse, v)
+    if isinstance(value, bool) or not isinstance(value, (int, float)):
+        return None
+    if isinstance(value, int) and not -2 ** 63 <= value < 2 ** 63:
+        return None
+    if kind is _INT and isinstance(value, int):
+        return int, value
+    if kind is _INT:
+        return _int_as_float, _float_key(value)
+    return _parse_float, _float_key(float(value))
+
+
+def _int_as_float(s: str) -> tuple[int, float]:
+    return _float_key(float(int(s)))
+
+
+def _decide(op: str, v, lo, hi, lo_exact: bool, hi_s: str):
+    """(some row may match, every non-null row matches) for one block's
+    parsed bounds; a max of None (truncated) bounds nothing."""
+    hi_exact = hi is not None
+    if op == "in":
+        return (any(lo <= x and (not hi_exact or hi >= x) for x in v),
+                lo_exact and hi_exact and lo == hi and lo in v)
     if op == "!=":
-        # only a block provably constant-equal to v has no match (nulls
-        # never satisfy !=; all-null blocks are decided by the caller)
-        return (lo, ~(lo_known & hi_known & (lo == v) & (hi == v)),
-                lo_known & hi_known & ((hi < v) | (lo > v)))
+        # only a block provably constant-equal to v has no match
+        exact = lo_exact and hi_exact
+        return (not (exact and lo == v and hi == v),
+                exact and (hi < v or lo > v))
     if op == "prefix":
         # strings with prefix p form the interval [p, p⁺). A block may hold
         # one iff hi >= p and (lo <= p OR lo itself starts with p) — valid
@@ -158,73 +244,50 @@ def _may_full(kind: StatKind, op: str, value):
         # within p, and startswith still fires when the truncation kept at
         # least len(p) chars. Both stats starting with p is exact under
         # truncation too, since a render's first chars are exact.
-        return (lo, ((lo <= v) | lo.startswith(v)) & hi_ok(hi >= v),
-                lo.isNotNull() & lo.startswith(v) & hi.startswith(v))
+        return ((lo <= v or lo.startswith(v)) and (not hi_exact or hi >= v),
+                lo.startswith(v) and hi_s.startswith(v))
     if op in ("=", "=="):
-        return (lo, (lo <= v) & hi_ok(hi >= v),
-                lo_known & hi_known & (lo == v) & (hi == v))
+        return (lo <= v and (not hi_exact or hi >= v),
+                lo_exact and hi_exact and lo == v and hi == v)
     if op == ">=":
-        return lo, hi_ok(hi >= v), lo_known & (lo >= v)
+        return not hi_exact or hi >= v, lo_exact and lo >= v
     if op == ">":
-        return lo, hi_ok(hi > v), lo_known & (lo > v)
+        return not hi_exact or hi > v, lo_exact and lo > v
     if op == "<=":
-        return lo, lo <= v, hi_known & (hi <= v)
-    return lo, lo < v, hi_known & (hi < v)  # "<"
+        return lo <= v, hi_exact and hi <= v
+    return lo < v, hi_exact and hi < v  # "<"
 
 
-def may_keep(headers: dict, column: str, op: str, value):
-    """The prune rule: a Column over a blocks metadata row that is true when
-    some row of the block may satisfy ``column op value``, or None when
-    zone stats cannot prune this column/op (statless kind, IN list over
-    ``IN_PRUNE_CAP``). Blocks with missing stats are always kept."""
-    if op in ("isnull", "notnull"):
-        # null predicates need only the null counters, recorded for EVERY
-        # column type (binary included)
-        return (F.col("null_count") > 0) if op == "isnull" else (
-            F.col("null_count") < F.col("n_rows"))
-    kind = stat_kind(headers, column)
-    _check_prefix(kind, op)
-    if kind is None:
-        return None
-    if op == "in":
-        value = list(value)
-        if len(value) > IN_PRUNE_CAP:
-            return None
-        if not value:
-            return F.lit(False)  # matches no row anywhere
-    lo, may, _ = _may_full(kind, op, value)
-    return missing(lo) | (lo.isNotNull() & may)
+def block_class(kind: StatKind | None, op: str, lit, n_rows: int,
+                null_count: int, lo_s: str | None, hi_s: str | None) -> int:
+    """``NONE`` (no row of the block matches ``column op value``),
+    ``FULL`` (every non-null row does) or ``BOUNDARY`` (only a decode can
+    tell) for a value predicate, whose literal ``lit`` is :func:`coerce`'s
+    result. The stats read back through :func:`parse_stats` in the
+    literal's domain. A literal that does not coerce, missing or unparsed
+    stats and incomparable values all give ``BOUNDARY``: they never
+    decide."""
+    if lit is None or kind is None:
+        return BOUNDARY
+    if null_count >= n_rows:
+        return NONE  # nulls never match a value predicate
+    parse, v = lit
+    b = parse_stats(kind._replace(parse=parse), lo_s, hi_s)
+    if b is None:
+        return BOUNDARY
+    lo_exact = not kind.is_str or len(lo_s) < RENDER_CAP
+    try:
+        may, full = _decide(op, v, *b, lo_exact, hi_s)
+    except TypeError:
+        return BOUNDARY
+    return (FULL if full else BOUNDARY) if may else NONE
 
 
-def count_classes(headers: dict, column: str, op: str, value):
-    """(full, boundary) Columns classifying each block for an exact count
-    of ``column op value`` (a value op; null ops need only the counters):
-    full = every non-null row matches, boundary = only a decode can tell;
-    every other block matches nothing. Undecidable comparisons never
-    decide: all-null blocks match nothing, blocks with missing stats are
-    boundary. Raises for statless columns."""
-    kind = stat_kind(headers, column)
-    _check_prefix(kind, op)
-    if kind is None:
-        raise ValueError(
-            f"column {column!r} ({headers[column]['type']}) carries no zone "
-            "stats; count requires a full decode")
-    lo, may, full = _may_full(kind, op, value)
-    decidable = ~missing(lo)
-    some_rows = F.col("null_count") < F.col("n_rows")
+def null_keep(op: str, n_rows: int, null_count: int) -> bool:
+    """Prune rule of ``isnull``/``notnull``, from the null counters kept
+    for every column type."""
+    return null_count > 0 if op == "isnull" else null_count < n_rows
 
-    def safe(c: Column) -> Column:
-        return F.coalesce(c, F.lit(False))
-
-    known = lo.isNotNull()
-    is_none = decidable & (~some_rows | safe(known & ~may))
-    is_full = decidable & safe(known & may & full) & some_rows
-    return is_full, ~(is_none | is_full)
-
-
-# ---------------------------------------------------------------------------
-# driver side: collected metadata rows
-# ---------------------------------------------------------------------------
 
 def parse_stats(kind: StatKind, lo_s: str | None, hi_s: str | None):
     """(lo, hi) of one block's rendered stats as totally-ordered Python

@@ -35,9 +35,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nail_parquet_spark.codec.blockindex import BlockIndex
 from nail_parquet_spark.codec.decode import (
     POS_COLUMNS,
-    _headers_by_column,
     _schema_from_headers,
     _spark_ddl_of,
     decode_table,
@@ -144,7 +144,8 @@ def table_changes(spark: SparkSession, out_dir: str, from_snapshot: int,
     new_batches = {s["batch"] for s in window_data}
 
     headers_blocks = read_blocks_at(spark, out_dir, to_snapshot)
-    headers, refs = _headers_by_column(headers_blocks)
+    idx = BlockIndex.load(headers_blocks, stats=False)
+    headers, refs = idx.headers, idx.refs
     out_cols = columns if columns is not None else sorted(headers)
     clash = [c for c in out_cols if c in (CHANGE_TYPE, COMMIT_SNAPSHOT)]
     if clash:

@@ -56,9 +56,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nail_parquet_spark.codec.compact import rekey_groups
+from nail_parquet_spark.codec.blockindex import BlockIndex
 from nail_parquet_spark.codec.decode import (
     POS_COLUMNS,
-    _headers_by_column,
     decode_table,
 )
 from nail_parquet_spark.codec.deletes import (
@@ -186,7 +186,7 @@ def delete_keys(spark: SparkSession, out_dir: str, keys: DataFrame,
     empty key table commits nothing. ``deleted_keys`` counts distinct KEYS,
     not rows (the rows are not scanned — that is the point)."""
     blocks = read_blocks_at(spark, out_dir)  # validates the table exists
-    headers, _ = _headers_by_column(blocks)
+    headers = BlockIndex.load(blocks, stats=False).headers
     eq_cols = list(keys.columns)
     missing = [c for c in eq_cols if c not in headers]
     if missing:
@@ -318,7 +318,8 @@ def read_table(spark: SparkSession, out_dir: str,
                                 num_partitions=num_partitions)
         return decode_except(blocks, pos, columns=columns,
                              num_partitions=num_partitions)
-    headers, refs = _headers_by_column(blocks)
+    idx = BlockIndex.load(blocks, stats=False)
+    headers, refs = idx.headers, idx.refs
     out_cols = list(columns) if columns is not None else sorted(headers)
     eq_all = {c for r in eq_recs for c in r["eq_cols"]}
     need = sorted(set(out_cols) | eq_all)
@@ -351,7 +352,8 @@ def upsert(spark: SparkSession, out_dir: str, rows: DataFrame,
 
     keys = [key] if isinstance(key, str) else list(key)
     blocks = read_blocks_at(spark, out_dir)
-    headers, refs = _headers_by_column(blocks)
+    idx = BlockIndex.load(blocks, stats=False)
+    headers, refs = idx.headers, idx.refs
     if set(rows.columns) != set(headers):
         raise ValueError(
             f"upsert rows columns {sorted(rows.columns)} must equal the "
@@ -434,7 +436,7 @@ def purge_deletes(spark: SparkSession, out_dir: str, new_dir: str,
             "purge must write OUTSIDE the table it reads (overwriting a "
             "path the job is concurrently reading can lose the table)")
     blocks = read_blocks_at(spark, out_dir)
-    headers, _ = _headers_by_column(blocks)
+    headers = BlockIndex.load(blocks, stats=False).headers
     out_cols = sorted(headers)
 
     # affected-group keys as one 64-bit hash (types pinned long to match the

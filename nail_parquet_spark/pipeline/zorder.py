@@ -101,7 +101,7 @@ def zorder_sort(df: DataFrame, cols: list[str], bits: int = 8,
     SAMPLING pass whose seed is the RDD id, which changes per action — an
     uncached downstream plan can therefore shift rows between partitions
     across jobs. That silently breaks multi-job consumers (e.g.
-    ``decode_table_where`` collects prune keys in one job and decodes
+    ``decode_table_where`` reads the block index in one job and decodes
     payloads in another), and it costs an extra full-input pass at 100 TB.
     Equal-width slices of the z space are a pure per-row function, and the
     bucket codes feeding z are already equi-width (or equi-depth under

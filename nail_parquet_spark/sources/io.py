@@ -29,6 +29,40 @@ def list_parquet_files(path: str) -> list[str]:
     return out
 
 
+class TaskFile:
+    """The file one Spark task writes itself: ``path`` is
+    ``<out_dir>/<stem>-<partition><ext>``, ``tmp`` an attempt-unique temp
+    name to write first, and :meth:`commit` renames it into place
+    atomically. Spark's task commit does not cover such files, so a
+    speculative or zombie duplicate attempt must never write into the final
+    file. Creating one removes the temps of STRICTLY OLDER attempts only:
+    a concurrent duplicate's live temp is never unlinked, and a late zombie
+    never unlinks the tracked retry's file."""
+
+    def __init__(self, out_dir: str, stem: str, ext: str):
+        import glob
+        import re
+
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        tid = ctx.partitionId() if ctx is not None else 0
+        att = ctx.attemptNumber() if ctx is not None else 0
+        self.path = os.path.join(out_dir, f"{stem}-{tid:05d}{ext}")
+        self.tmp = os.path.join(out_dir, f".{stem}-{tid:05d}.attempt-{att}.inprogress")
+        for stale in glob.glob(os.path.join(out_dir, f".{stem}-{tid:05d}.attempt-*.inprogress")):
+            m = re.search(r"attempt-(\d+)\.inprogress$", stale)
+            if m and int(m.group(1)) < att:
+                try:
+                    os.remove(stale)
+                except OSError:
+                    pass
+
+    def commit(self) -> str:
+        os.replace(self.tmp, self.path)
+        return self.path
+
+
 def _fmt_of(path: str, fmt: str | None) -> str:
     if fmt:
         return fmt
@@ -138,16 +172,12 @@ def write_parquet_arrow(df: DataFrame, path: str, compression: str = "zstd",
                         compression_level: int | None = None,
                         mode: str = "overwrite") -> list:
     """Distributed parquet sink through the pyarrow C++ writer: each task
-    writes its partition to one file (attempt-unique temp + atomic rename,
-    the codec.decode sink pattern). Covers container codecs Spark's JVM
+    writes its partition to one file (:class:`TaskFile`). Covers container codecs Spark's JVM
     writer lacks in this environment — brotli (the reference's compression
     menu, optimize.rs:47-108) works here because pyarrow ships the codec
     natively. Files written with brotli need a brotli-capable reader
     (``read_parquet_arrow`` below, pyarrow, duckdb, …) — a stock JVM Spark
     scan will refuse the container. Returns the (file, n_rows) manifest."""
-    import glob as _glob
-    import os
-    import re as _re
     import shutil as _shutil
 
     import pyarrow as pa
@@ -160,20 +190,8 @@ def write_parquet_arrow(df: DataFrame, path: str, compression: str = "zstd",
 
     def sink(batches):
         import pyarrow.parquet as _pq
-        from pyspark import TaskContext
 
-        ctx = TaskContext.get()
-        tid = ctx.partitionId() if ctx is not None else 0
-        att = ctx.attemptNumber() if ctx is not None else 0
-        out_path = os.path.join(path, f"part-{tid:05d}.parquet")
-        tmp = os.path.join(path, f".part-{tid:05d}.attempt-{att}.inprogress")
-        for stale in _glob.glob(os.path.join(path, f".part-{tid:05d}.attempt-*.inprogress")):
-            m = _re.search(r"attempt-(\d+)\.inprogress$", stale)
-            if m and int(m.group(1)) < att:
-                try:
-                    os.remove(stale)
-                except OSError:
-                    pass
+        out = TaskFile(path, "part", ".parquet")
         writer = None
         n_rows = 0
         for batch in batches:
@@ -181,15 +199,14 @@ def write_parquet_arrow(df: DataFrame, path: str, compression: str = "zstd",
                 kw = {}
                 if compression_level is not None:
                     kw["compression_level"] = compression_level
-                writer = _pq.ParquetWriter(tmp, batch.schema,
+                writer = _pq.ParquetWriter(out.tmp, batch.schema,
                                            compression=compression, **kw)
             writer.write_batch(batch)
             n_rows += batch.num_rows
         if writer is not None:
             writer.close()
-            os.replace(tmp, out_path)
             yield pa.record_batch(
-                [pa.array([out_path]), pa.array([n_rows], pa.int64())],
+                [pa.array([out.commit()]), pa.array([n_rows], pa.int64())],
                 names=["file", "n_rows"])
 
     return df.mapInArrow(sink, schema="file string, n_rows bigint").collect()
@@ -276,12 +293,9 @@ def read_arrow_ipc(spark: SparkSession, path: str) -> DataFrame:
 def write_arrow_ipc(df: DataFrame, path: str, compression: str | None = "zstd",
                     mode: str = "overwrite") -> list:
     """Distributed Arrow IPC / Feather-v2 sink: each task writes its
-    partition to one ``part-NNNNN.arrow`` file (attempt-unique temp +
-    atomic rename, same commit pattern as ``write_parquet_arrow``).
+    partition to one ``part-NNNNN.arrow`` file (:class:`TaskFile`).
     ``compression`` is the IPC buffer codec (zstd/lz4/None). Returns the
     (file, n_rows) manifest."""
-    import glob as _glob
-    import re as _re
     import shutil as _shutil
 
     import pyarrow as pa
@@ -297,33 +311,20 @@ def write_arrow_ipc(df: DataFrame, path: str, compression: str | None = "zstd",
 
     def sink(batches):
         import pyarrow.ipc as _pi
-        from pyspark import TaskContext
 
-        ctx = TaskContext.get()
-        tid = ctx.partitionId() if ctx is not None else 0
-        att = ctx.attemptNumber() if ctx is not None else 0
-        out_path = os.path.join(path, f"part-{tid:05d}.arrow")
-        tmp = os.path.join(path, f".part-{tid:05d}.attempt-{att}.inprogress")
-        for stale in _glob.glob(os.path.join(path, f".part-{tid:05d}.attempt-*.inprogress")):
-            m = _re.search(r"attempt-(\d+)\.inprogress$", stale)
-            if m and int(m.group(1)) < att:
-                try:
-                    os.remove(stale)
-                except OSError:
-                    pass
+        out = TaskFile(path, "part", ".arrow")
         writer = None
         n_rows = 0
         for batch in batches:
             if writer is None:
                 opts = _pi.IpcWriteOptions(compression=compression)
-                writer = _pi.new_file(tmp, batch.schema, options=opts)
+                writer = _pi.new_file(out.tmp, batch.schema, options=opts)
             writer.write_batch(batch)
             n_rows += batch.num_rows
         if writer is not None:
             writer.close()
-            os.replace(tmp, out_path)
             yield pa.record_batch(
-                [pa.array([out_path]), pa.array([n_rows], pa.int64())],
+                [pa.array([out.commit()]), pa.array([n_rows], pa.int64())],
                 names=["file", "n_rows"])
 
     return df.mapInArrow(sink, schema="file string, n_rows bigint").collect()

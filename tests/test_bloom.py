@@ -1,5 +1,5 @@
-"""Per-block bloom-filter index: build/probe kernels, the SQL probe
-expression's bit-exact parity with the Python twin, encode wiring, and
+"""Per-block bloom-filter index: build/probe kernels, the Column probe's
+bit-exact parity with the Python twin, encode wiring, and
 equality-pushdown pruning + exactness through decode_table_where."""
 import numpy as np
 import pyarrow as pa
@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from nail_parquet_spark.codec.bloom import (
     bloom_build,
     bloom_might_contain,
-    bloom_probe_sql,
+    bloom_probe,
     expected_fpp,
 )
 from nail_parquet_spark.codec.decode import (
@@ -44,15 +44,39 @@ def test_bloom_int_and_unsupported_kinds():
     assert not bloom_might_contain(b0, "x", "str")
 
 
-def test_bloom_probe_sql_matches_python(spark):
-    vals = pa.array([f"k{i}" for i in range(512)])
-    b = bloom_build(vals)
-    probes = [f"k{i}" for i in range(0, 512, 37)] + [f"absent{i}" for i in range(40)]
-    df = spark.createDataFrame([(b,)], "bloom binary")
-    for v in probes:
-        got = df.select(F.expr(bloom_probe_sql("bloom", v, "str")).alias("m")) \
-            .first()["m"]
-        assert got == bloom_might_contain(b, v, "str"), v
+_HOSTS = pa.array([f"host{i:03d}/path/{i}" for i in range(256)])
+_STR_BLOOMS = [bloom_build(_HOSTS), bloom_build(_HOSTS, prefix_len=12),
+               bloom_build(_HOSTS, prefix_len=3), bloom_build(_HOSTS, ngram_len=4),
+               bloom_build(_HOSTS, ngram_len=5),
+               bloom_build(_HOSTS, prefix_len=12, ngram_len=4), None]
+_INT_BLOOMS = [bloom_build(pa.array(range(0, 1000, 3), pa.int64())), None]
+_PRESENT = [f"host{i:03d}/path/{i}" for i in range(0, 256, 9)]
+_ABSENT = [f"nope{i:03d}/path/{i}" for i in range(60)]
+
+
+@pytest.mark.parametrize("op, kind, queries", [
+    ("=", "str", _PRESENT[:10] + _ABSENT[:10]),
+    ("=", "int", [3, 4, 999, 1000, 5.0, 6.0]),
+    ("in", "str", [_PRESENT[:30] + _ABSENT[:30], _ABSENT, [_PRESENT[5]]]),
+    ("in", "int", [list(range(1000, 1060)), list(range(1000, 1059)) + [42]]),
+    ("prefix", "str", ["host012/pa", "host0", "ho", "nope012/pa", "host250/path/x",
+                       "zz", "host1"]),
+    ("contains", "str", ["012/pa", "th/1", "zzzz", "t07", "ost25", "nope/",
+                         "h/250"]),
+], ids=["eq-str", "eq-int", "in-str", "in-int", "prefix", "contains"])
+def test_bloom_column_probe_matches_python(spark, op, kind, queries):
+    # blocks with mixed prefix (P) and n-gram (N) key lengths and NULL
+    # blooms, probed in one select: a 60-key IN, prefixes and substrings
+    # each read the block's own stored P/N
+    blooms = _STR_BLOOMS if kind == "str" else _INT_BLOOMS
+    df = spark.createDataFrame(list(enumerate(blooms)), "i int, bloom binary")
+    got = df.select("i", *[bloom_probe(op, q, kind).alias(f"q{j}")
+                           for j, q in enumerate(queries)]).orderBy("i").collect()
+    for j, q in enumerate(queries):
+        for i, b in enumerate(blooms):
+            want = (any(bloom_might_contain(b, v, kind) for v in q) if op == "in"
+                    else bloom_might_contain(b, q, kind, op=op))
+            assert got[i][f"q{j}"] == want, (op, q, i)
 
 
 def _blocks(spark, n=2000):
@@ -99,6 +123,8 @@ def test_prune_blocks_bloom_prunes_and_is_exact(spark):
     out3 = decode_table_where(blocks, "url", "=", "https://absent.com",
                               columns=["id", "url"], file_keyed=False)
     assert out3.count() == 0 and out3.columns == ["id", "url"]
+    # a prefix on a non-string column prunes nothing
+    assert prune_blocks_bloom(blocks, "id", "15", op="prefix") is blocks
     blocks.unpersist()
 
 
@@ -141,26 +167,6 @@ def test_prefix_bloom_build_and_twin():
                                "str", op="prefix")
     with pytest.raises(ValueError):
         bloom_build(pa.array([1, 2], pa.int64()), prefix_len=8)
-
-
-def test_prefix_probe_sql_matches_python(spark):
-    from nail_parquet_spark.codec.bloom import bloom_prefix_probe_sql
-
-    vals = pa.array([f"host{i:03d}/path/{i}" for i in range(256)])
-    b12 = bloom_build(vals, prefix_len=12)
-    b_plain = bloom_build(vals)
-    df = spark.createDataFrame([(b12,), (b_plain,), (None,)], "bloom binary")
-    probes = ([f"host{i:03d}/path/x"[:14] for i in range(0, 256, 41)]
-              + [f"nope{i:03d}/path/zzz" for i in range(20)])
-    for v in probes:
-        sql = bloom_prefix_probe_sql("bloom", v, [12])
-        got = [r["m"] for r in df.select(
-            (F.col("bloom").isNull() | F.expr(sql)).alias("m")).collect()]
-        want = [bloom_might_contain(x, v, "str", op="prefix")
-                for x in (b12, b_plain, None)]
-        assert got == want, v
-    # unusable P (longer than every query prefix) -> no expression
-    assert bloom_prefix_probe_sql("bloom", "ab", [12]) is None
 
 
 def test_prefix_bloom_end_to_end_pruning(spark):
@@ -227,26 +233,6 @@ class TestNgramKeys:
             bloom_build(pa.array([1, 2], pa.int64()), ngram_len=4)
         with pytest.raises(ValueError, match="ngram_len"):
             bloom_build(pa.array(["x"]), ngram_len=1)
-
-    def test_sql_probe_matches_python_twin(self, spark):
-        from nail_parquet_spark.codec.bloom import (
-            bloom_build, bloom_might_contain, bloom_ngram_probe_sql)
-
-        vals = pa.array([f"doc-{i:04d}-tail" for i in range(200)])
-        blooms = [bloom_build(vals, ngram_len=4),
-                  bloom_build(vals, prefix_len=3, ngram_len=4),
-                  bloom_build(vals),            # no gram keys: never prunes
-                  None]
-        queries = ["0042-tail", "doc-01", "zzzzzz", "-tail", "0199"]
-        df = spark.createDataFrame([(i, b) for i, b in enumerate(blooms)],
-                                   "i int, bloom binary")
-        for q in queries:
-            sql = bloom_ngram_probe_sql("bloom", q, [4])
-            got = {r.i: bool(r.m) for r in df.selectExpr(
-                "i", f"coalesce(bloom IS NULL OR {sql}, true) AS m").collect()}
-            for i, b in enumerate(blooms):
-                want = bloom_might_contain(b, q, "str", op="contains")
-                assert got[i] == want, (i, q)
 
     def test_strided_gram_cap(self):
         from nail_parquet_spark.codec.bloom import _strided_grams

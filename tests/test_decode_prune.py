@@ -115,13 +115,43 @@ def test_decode_where_timestamps(spark):
     assert got == 10  # hours 30..39
 
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+import datetime as _dt
+
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 
 def _long_str(x: int) -> str:
     # order follows x; odd values run past the 64-char stats render cap,
     # so their zone stats are truncated prefixes
     return f"{x + 50:03d}" + ("z" * 70 if x % 2 else "")
+
+
+_SPECIAL_FLOATS = {50: float("nan"), 49: float("inf"), -50: float("-inf")}
+_T0 = _dt.datetime(2024, 1, 1)
+# column type per variant; ts and date columns cast their ISO strings in
+# Spark, so data and literals share the session time zone
+_VARIANT_TYPES = {"int": "long", "big": "long", "str": "string",
+                  "float": "double", "ts": "timestamp", "date": "date"}
+
+
+def _variant_value(variant: str, x: int, half: bool = False, lit: bool = False):
+    """Draw ``x`` as a column value (or, with ``lit``, as a literal)."""
+    if variant == "int":
+        return x + 0.5 if lit and half else x
+    if variant == "big":
+        # 2^53 + x: a float literal rounds to the even neighbour, and the
+        # column compares with it as a double
+        return float(2 ** 53 + x) if lit else 2 ** 53 + x
+    if variant == "str":
+        return _long_str(x)
+    if variant == "float":
+        return _SPECIAL_FLOATS.get(x, x / 4)
+    if variant == "ts":
+        t = _T0 + _dt.timedelta(hours=x, minutes=30 if lit and half else 0)
+        return t.isoformat(" ")
+    if lit and half:
+        return "20240101"  # Spark refuses it as a date: must decide nothing
+    return (_T0.date() + _dt.timedelta(days=x)).isoformat()
 
 
 @settings(max_examples=6, deadline=None,
@@ -135,34 +165,58 @@ def _long_str(x: int) -> str:
     in_vals=st.lists(st.integers(-55, 55), max_size=4),
     block_rows=st.sampled_from([4, 16]),
     presorted=st.booleans(),
-    as_str=st.booleans(),
+    variant=st.sampled_from(sorted(_VARIANT_TYPES)),
     half=st.booleans(),
 )
+@example(vals=[50, 49, -50, 1, None, 3, 50], op=">", v=49, in_vals=[],
+         block_rows=4, presorted=True, variant="float", half=False)
+@example(vals=[50, -50, 2, 50, None], op="=", v=50, in_vals=[],
+         block_rows=4, presorted=False, variant="float", half=False)
+@example(vals=[1, 1, 1, 1, 0, 0, 0, 0], op="=", v=0, in_vals=[],
+         block_rows=4, presorted=True, variant="big", half=False)
+@example(vals=list(range(-20, 20)), op=">=", v=5, in_vals=[], block_rows=4,
+         presorted=True, variant="ts", half=True)
+@example(vals=list(range(-20, 20)), op="<", v=3, in_vals=[], block_rows=4,
+         presorted=True, variant="date", half=False)
+@example(vals=[None, 3, 5, 1], op=">=", v=0, in_vals=[], block_rows=4,
+         presorted=False, variant="date", half=True)
+@example(vals=[None, None], op="<", v=0, in_vals=[], block_rows=4,
+         presorted=False, variant="date", half=True)
 def test_prune_property_matches_plain_filter(spark, vals, op, v, in_vals,
-                                             block_rows, presorted, as_str,
+                                             block_rows, presorted, variant,
                                              half):
+    from pyspark.errors import PySparkException
+
+    from nail_parquet_spark.codec.decode import _pred_expr
     from nail_parquet_spark.codec.inspect import count_where_pushdown
 
-    conv = _long_str if as_str else (lambda x: x)
-    # fractional literals against the integer column
-    lit = conv if as_str or not half else (lambda x: x + 0.5)
-    rows = [(i, None if x is None else conv(x)) for i, x in enumerate(vals)]
+    rows = [(i, None if x is None else _variant_value(variant, x))
+            for i, x in enumerate(vals)]
     if presorted:
-        rows.sort(key=lambda r: (r[1] is None, r[1]))
-    value = [lit(x) for x in in_vals] if op == "in" else lit(v)
-    df = spark.createDataFrame(
-        rows, f"k long, x {'string' if as_str else 'long'}").coalesce(1)
+        rows.sort(key=lambda r: (r[1] is None, vals[r[0]]))
+    value = ([_variant_value(variant, x, lit=True) for x in in_vals]
+             if op == "in" else _variant_value(variant, v, half, lit=True))
+    src_type = "string" if variant in ("ts", "date") else _VARIANT_TYPES[variant]
+    df = (spark.createDataFrame(rows, f"k long, x {src_type}")
+          .withColumn("x", F.col("x").cast(_VARIANT_TYPES[variant]))
+          .coalesce(1))
     blocks = encode_table(df, codecs={"k": "plain", "x": "plain"},
                           block_rows=block_rows)
-    pyop = {"=": lambda a: a == value, "!=": lambda a: a != value,
-            ">": lambda a: a > value, ">=": lambda a: a >= value,
-            "<": lambda a: a < value, "<=": lambda a: a <= value,
-            "in": lambda a: a in value}[op]
-    want = sorted(i for i, x in rows if x is not None and pyop(x))
-    got = sorted(r.k for r in
-                 decode_table_where(blocks, "x", op, value).collect())
+
+    def outcome(f):
+        # a literal Spark refuses must raise here exactly when it does there
+        try:
+            return f()
+        except PySparkException:
+            return "raises"
+
+    want = outcome(lambda: sorted(
+        r.k for r in df.filter(_pred_expr("x", op, value)).collect()))
+    got = outcome(lambda: sorted(
+        r.k for r in decode_table_where(blocks, "x", op, value).collect()))
     assert got == want
-    assert count_where_pushdown(blocks, "x", op, value)["count"] == len(want)
+    n = outcome(lambda: count_where_pushdown(blocks, "x", op, value)["count"])
+    assert n == (want if want == "raises" else len(want))
 
 
 def test_decode_where_all_conjunction(spark, sorted_blocks):
@@ -388,12 +442,11 @@ def test_decode_where_or_clause(spark, sorted_blocks):
     assert got == want and len(got) == 19
     # the OR-clause's keep-set is the UNION of the disjuncts' groups:
     # k<10 keeps group 0, s>='v090' keeps group 9 -> exactly 2 groups
-    from nail_parquet_spark.codec.decode import _prune_clause, _headers_by_column
+    from nail_parquet_spark.codec.blockindex import BlockIndex
 
-    headers, _ = _headers_by_column(blocks)
-    kept = _prune_clause(blocks, [("k", "<", 10), ("s", ">=", "v090")],
-                         100_000, headers)
-    assert n_groups(kept) == 2
+    kept = BlockIndex.load(blocks).keep(
+        [[("k", "<", 10), ("s", ">=", "v090")]])
+    assert len(kept) == 2
     # an OR-clause with a contradiction on both sides -> empty, schema kept
     empty = decode_table_where_all(
         blocks, [[("k", ">", 200), ("k", "<", -1)]])

@@ -1,4 +1,6 @@
 """Format IO round trips (convert.rs:30-57, io.rs:14-34 parity)."""
+import os
+
 import pytest
 
 from nail_parquet_spark.sources.io import _fmt_of, convert, read_data, write_data
@@ -162,3 +164,32 @@ def test_csv_gz_roundtrip(spark, tmp_path):
     write_data(df, out)
     back = read_data(spark, out)
     assert back.count() == 2
+
+
+def test_task_file_commit_removes_only_older_attempts(tmp_path, monkeypatch):
+    import pyspark
+
+    from nail_parquet_spark.sources.io import TaskFile
+
+    class Ctx:
+        def partitionId(self):
+            return 3
+
+        def attemptNumber(self):
+            return 1
+
+    monkeypatch.setattr(pyspark.TaskContext, "get", staticmethod(lambda: Ctx()))
+    older = tmp_path / ".part-00003.attempt-0.inprogress"
+    newer = tmp_path / ".part-00003.attempt-2.inprogress"
+    other = tmp_path / ".part-00004.attempt-0.inprogress"
+    final = tmp_path / "part-00003.parquet"
+    for f in (older, newer, other, final):
+        f.write_text("old")
+    out = TaskFile(str(tmp_path), "part", ".parquet")
+    assert not older.exists()
+    assert newer.exists() and other.exists()
+    assert out.tmp == str(tmp_path / ".part-00003.attempt-1.inprogress")
+    with open(out.tmp, "w") as fh:
+        fh.write("new")
+    assert out.commit() == str(final)
+    assert final.read_text() == "new" and not os.path.exists(out.tmp)
