@@ -88,9 +88,9 @@ def compact_blocks(blocks: DataFrame, out_dir: str,
             )
     # keep only the canonical block columns: partition-discovery extras
     # (batch=..., unit=...) must not become data columns in the output
-    from nail_parquet_spark.codec.encode import BLOCKS_COLUMNS
+    from nail_parquet_spark.codec.encode import BLOCKS_SCHEMA
 
-    canon = [n for n, _ in BLOCKS_COLUMNS]
+    canon = BLOCKS_SCHEMA.names
     if "bloom" not in blocks.columns:
         # pre-bloom block dirs stay compactable (the column is optional
         # metadata; decode/prune treat a NULL bloom as "no filter, keep")

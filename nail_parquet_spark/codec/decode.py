@@ -465,7 +465,7 @@ def decode_to_parquet(blocks: DataFrame, out_dir: str,
                       missing_columns: str = "error") -> DataFrame:
     """Sink-side decode: tasks write decoded rows straight to parquet with
     the pyarrow C++ writer, so the decoded raw bytes never cross the
-    Python->JVM boundary (the mirror of ``encode_parquet_files`` — measured
+    Python->JVM boundary (as ``encode_parquet_dir``'s never do — measured
     ~10x faster than decode_table + a JVM sink for binary-heavy columns).
 
     Returns a small manifest DataFrame (file, n_rows); the decoded table is
@@ -636,8 +636,7 @@ def _prune(blocks: DataFrame, idx: BlockIndex, clauses) -> DataFrame:
 
 
 def prune_blocks(blocks: DataFrame, column: str, op: str, value,
-                 max_groups: int = 100_000,
-                 headers: dict[str, dict] | None = None) -> DataFrame:
+                 max_groups: int = 100_000) -> DataFrame:
     """Drop whole (part_id, block_id) groups whose ``column`` zone stats
     (encode-side ``min_val``/``max_val``) prove no row can satisfy
     ``column op value`` — the engine's parquet-row-group-pruning analogue.
@@ -653,8 +652,7 @@ def prune_blocks(blocks: DataFrame, column: str, op: str, value,
 
     The prune rule and its safety rules (literal coercion, render cap,
     unparsed and missing stats, statless kinds) are
-    :func:`codec.zonemap.block_class`'s. ``headers`` is accepted for
-    compatibility; the index read carries them.
+    :func:`codec.zonemap.block_class`'s.
     """
     if op not in zonemap.PRUNE_OPS:
         raise ValueError(f"op must be one of {zonemap.PRUNE_OPS}, got {op!r}")
@@ -664,7 +662,6 @@ def prune_blocks(blocks: DataFrame, column: str, op: str, value,
 
 def prune_blocks_bloom(blocks: DataFrame, column: str, value,
                        max_groups: int = 100_000,
-                       headers: dict[str, dict] | None = None,
                        op: str = "=") -> DataFrame:
     """Equality (and ``in``, ``prefix``, ``contains``) pushdown via the
     opt-in per-block bloom bitmaps (codec/bloom.py): drop (part_id,
@@ -681,8 +678,7 @@ def prune_blocks_bloom(blocks: DataFrame, column: str, value,
     the keep-set, which zone maps narrow too, is applied like
     ``prune_blocks``'. A NULL bloom (no filter on that block, pre-bloom
     dir, unsupported type) always keeps the group, and a ``prefix`` on a
-    non-string column prunes nothing. ``headers`` is accepted for
-    compatibility."""
+    non-string column prunes nothing."""
     if "bloom" not in blocks.columns:
         return blocks
     idx = BlockIndex.load(blocks, max_groups, probes=[(column, op, value)])
@@ -810,8 +806,7 @@ def _prune_topk(blocks: DataFrame, idx: BlockIndex, column: str, k: int,
 
 def prune_blocks_topk(blocks: DataFrame, column: str, k: int,
                       descending: bool = True,
-                      max_groups: int = 100_000,
-                      headers: dict[str, dict] | None = None) -> DataFrame:
+                      max_groups: int = 100_000) -> DataFrame:
     """Zone-map pruning for ``ORDER BY column [DESC|ASC] LIMIT k``: keep
     only block groups that can contain a top-k row.
 
@@ -825,7 +820,6 @@ def prune_blocks_topk(blocks: DataFrame, column: str, k: int,
 
     Every column kind with zone stats is supported (integer, boolean,
     float, timestamp, date, string); binary and list columns raise.
-    ``headers`` is accepted for compatibility.
     """
     return _prune_topk(blocks, BlockIndex.load(blocks, max_groups), column,
                        k, descending)
@@ -928,8 +922,7 @@ def _prune_topk_by(blocks: DataFrame, idx: BlockIndex, group_col: str,
 
 def prune_blocks_topk_by(blocks: DataFrame, group_col: str, column: str,
                          k: int, descending: bool = True,
-                         max_groups: int = 100_000,
-                         headers: dict[str, dict] | None = None) -> DataFrame:
+                         max_groups: int = 100_000) -> DataFrame:
     """Zone-map pruning for a per-group top-k (``row_number() OVER
     (PARTITION BY group_col ORDER BY column [DESC|ASC]) <= k``): keep only
     block groups that can contain a top-k row of SOME group.
@@ -956,8 +949,7 @@ def prune_blocks_topk_by(blocks: DataFrame, group_col: str, column: str,
       all-null value) is dropped — NULLs never rank in either column.
 
     Both columns need zone stats (binary and list columns raise). Over
-    ``max_groups`` block groups, pruning is skipped. ``headers`` is
-    accepted for compatibility.
+    ``max_groups`` block groups, pruning is skipped.
     """
     return _prune_topk_by(blocks, BlockIndex.load(blocks, max_groups),
                           group_col, column, k, descending)

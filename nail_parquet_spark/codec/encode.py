@@ -6,10 +6,11 @@ a parquet column chunk plus its footer metadata entry (what `nail metadata
 except blocks are first-class queryable data.
 
 All encoding happens inside ``mapInArrow`` (Arrow batches end-to-end, no
-per-row Python). Codec choice is made once per (executor partition, column)
-from a sampled prefix, or forced via the ``codecs`` override — the analogue
-of `nail optimize --compression/--dictionary` knobs
-(/root/reference/src/commands/optimize.rs:34-40).
+per-row Python). Codec choice is one driver-side pass per job: a sampler
+(a ``limit`` over the DataFrame, or the first (file, row group) work item of
+a parquet scan) feeds the one planner, ``_plan_codecs``. The ``codecs``
+override pins columns instead — the analogue of nail-parquet's
+``optimize --compression/--dictionary`` knobs.
 """
 
 from __future__ import annotations
@@ -21,23 +22,34 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from nail_parquet_spark.codec.bloom import parse_bloom_spec as _parse_bloom
+from nail_parquet_spark.codec.bloom import bloom_build, parse_bloom_spec as _parse_bloom
 from nail_parquet_spark.codec.kernels import encode_array, kind_of, xref_ref_of
 from nail_parquet_spark.codec.select import choose_codec, raw_bytes_of, xref_upgrade
 from nail_parquet_spark.codec.zonemap import render
 from nail_parquet_spark.sources.io import TaskFile
 
-# canonical block-table columns; the DDL derives from this list so callers
-# (compaction, tests) never string-parse the schema
-BLOCKS_COLUMNS = [
-    ("part_id", "int"), ("block_id", "bigint"), ("column", "string"),
-    ("codec", "string"), ("n_rows", "bigint"), ("raw_bytes", "bigint"),
-    ("enc_bytes", "bigint"), ("null_count", "bigint"), ("min_val", "string"),
-    ("max_val", "string"), ("distinct_est", "bigint"), ("header", "string"),
-    ("payload", "binary"), ("bloom", "binary"),
-]
-BLOCKS_SCHEMA = ", ".join(f"{n} {t}" for n, t in BLOCKS_COLUMNS)
+# rows per codec-selection sample
+SAMPLE_ROWS = 8192
+
+# the block table, one row per (part, block, column); the Spark schema and
+# the canonical column list (compaction, purge) derive from it
+BLOCKS_SCHEMA = pa.schema([
+    ("part_id", pa.int32()), ("block_id", pa.int64()), ("column", pa.string()),
+    ("codec", pa.string()), ("n_rows", pa.int64()), ("raw_bytes", pa.int64()),
+    ("enc_bytes", pa.int64()), ("null_count", pa.int64()), ("min_val", pa.string()),
+    ("max_val", pa.string()), ("distinct_est", pa.int64()), ("header", pa.string()),
+    ("payload", pa.binary()), ("bloom", pa.binary()),
+])
+
+# encode_parquet_dir's per-task lineage row
+MANIFEST_SCHEMA = pa.schema([
+    ("file", pa.string()), ("part_id", pa.int32()), ("n_blocks", pa.int64()),
+    ("n_rows", pa.int64()), ("raw_bytes", pa.int64()), ("enc_bytes", pa.int64()),
+    ("columns", pa.string()), ("wall_s", pa.float64()), ("mbps", pa.float64()),
+    ("ratio", pa.float64()),
+])
 
 
 def _stat_strings(arr: pa.Array) -> tuple[str | None, str | None, int]:
@@ -101,10 +113,50 @@ def _sum_string(arr: pa.Array) -> "str | None":
     return None
 
 
+def _plan_codecs(
+    sample: dict[str, pa.Array], columns: list[str], pinned: dict[str, str],
+    policy: str = "balanced", min_mbps: float = 40.0,
+    bloom: "dict | None" = None,
+) -> dict[str, str]:
+    """The one codec planner behind every encode path: ``choose_codec`` for
+    each of ``columns`` over its ``sample`` array, then the cross-column
+    ``xref_upgrade``, then the xref and ``bloom`` (a parsed bloom spec)
+    checks against the encoded columns (``columns`` plus ``pinned``).
+
+    ``pinned`` codecs are kept as given. Pinned str/bin columns in the
+    sample are offered to the xref upgrade as references; other kinds can
+    never be references. Returns the codec of every encoded column."""
+    chosen = dict(pinned)
+    if columns:
+        refs = [c for c in sample if c in pinned and c not in columns
+                and kind_of(sample[c].type) in ("str", "bin")]
+        arrs = {c: sample[c] for c in [*columns, *refs]}
+        for c in columns:
+            chosen[c] = choose_codec(arrs[c], policy=policy, min_mbps=min_mbps)[0]
+        chosen = xref_upgrade(arrs, chosen, policy=policy, min_mbps=min_mbps,
+                              upgradable=list(columns))
+    _validate_codecs(chosen, list(chosen))
+    bad = [c for c in (bloom or {}) if c not in chosen]
+    if bad:
+        raise ValueError(f"bloom_columns not among encoded columns: {bad}")
+    return chosen
+
+
+def _sample_df(df: DataFrame, columns: list[str],
+               pinned: dict[str, str]) -> dict[str, pa.Array]:
+    """The DataFrame sampler: the first ``SAMPLE_ROWS`` rows of ``columns``
+    and the pinned columns, in one Spark job — or nothing, when there is
+    no codec to choose."""
+    if not columns:
+        return {}
+    cols = list(dict.fromkeys([*columns, *pinned]))
+    tbl = df.select(*cols).limit(SAMPLE_ROWS).toArrow()
+    return {c: tbl.column(c).combine_chunks() for c in cols}
+
+
 def choose_codecs_for_df(
     df: DataFrame, columns: list[str], policy: str = "balanced",
-    sample_rows: int = 8192, min_mbps: float = 40.0,
-    pinned: dict[str, str] | None = None,
+    min_mbps: float = 40.0, pinned: dict[str, str] | None = None,
 ) -> dict[str, str]:
     """One driver-side sampled selection pass -> codec decision table,
     broadcast to all encoder tasks (SURVEY.md §4.3 'codec auto-selector').
@@ -113,23 +165,13 @@ def choose_codecs_for_df(
     out of the hot path — at 1000 executors the alternative is 1000
     redundant trial encodes per column.
 
-    ``pinned`` columns keep their caller-forced codec but ARE sampled (only
-    the str/bin ones — other kinds can't be references) so the xref upgrade
-    may reference them. Returns choices for ``columns`` only."""
+    ``pinned`` columns keep their caller-forced codec; the str/bin ones may
+    serve the xref upgrade as references. Returns choices for ``columns``
+    only."""
     pinned = dict(pinned or {})
-    ref_candidates = [
-        c for c, t in df.select(*pinned).dtypes
-        if t in ("string", "binary")
-    ] if pinned else []
-    allc = list(columns) + [c for c in ref_candidates if c not in columns]
-    sample = df.select(*allc).limit(sample_rows).toArrow()
-    arrs = {c: sample.column(c).combine_chunks() for c in allc}
-    out = {c: pinned[c] for c in ref_candidates}
-    for c in columns:
-        out[c] = choose_codec(arrs[c], policy=policy, min_mbps=min_mbps)[0]
-    out = xref_upgrade(arrs, out, policy=policy, min_mbps=min_mbps,
-                       upgradable=list(columns))
-    return {c: out[c] for c in columns}
+    chosen = _plan_codecs(_sample_df(df, columns, pinned), columns, pinned,
+                          policy, min_mbps)
+    return {c: chosen[c] for c in columns}
 
 
 def _validate_codecs(chosen: dict[str, str], cols: list[str]) -> None:
@@ -157,9 +199,7 @@ def encode_table(
     columns: list[str] | None = None,
     codecs: dict[str, str] | None = None,
     policy: str = "balanced",
-    sample_rows: int = 8192,
     block_rows: int = 65536,
-    with_stats: bool = True,
     bloom_columns: "list[str] | None" = None,
 ) -> DataFrame:
     """Encode selected columns of ``df`` into a blocks DataFrame.
@@ -169,18 +209,11 @@ def encode_table(
     (or a {col: P} dict) also insert P-byte prefix keys for string-prefix
     pushdown."""
     cols = columns or df.columns
-    bloom_cols = _parse_bloom(bloom_columns)
-    bad = [c for c in bloom_cols if c not in cols]
-    if bad:
-        raise ValueError(f"bloom_columns not among encoded columns: {bad}")
-    chosen = dict(codecs or {})
-    missing = [c for c in cols if c not in chosen]
-    if missing:
-        chosen.update(choose_codecs_for_df(
-            df, missing, policy, sample_rows,
-            pinned={c: v for c, v in chosen.items() if c in cols},
-        ))
-    _validate_codecs(chosen, cols)
+    bloom = _parse_bloom(bloom_columns)
+    pinned = {c: v for c, v in (codecs or {}).items() if c in cols}
+    missing = [c for c in cols if c not in pinned]
+    chosen = _plan_codecs(_sample_df(df, missing, pinned), missing, pinned,
+                          policy, bloom=bloom)
     proj = df.select(*cols)
 
     def enc(batches):
@@ -212,99 +245,40 @@ def encode_table(
                 yield pa.Table.from_batches(pending).combine_chunks()
 
         for chunk in chunks():
-            yield _encode_chunk(chunk, cols, chosen, with_stats, pid, block_id,
-                                bloom_cols=bloom_cols)
+            yield _encode_chunk(chunk, cols, chosen, bloom, pid, block_id)
             block_id += 1
 
-    return proj.mapInArrow(enc, schema=BLOCKS_SCHEMA)
+    return proj.mapInArrow(enc, schema=from_arrow_schema(BLOCKS_SCHEMA))
 
 
-def _encode_chunk(chunk, cols, chosen, with_stats, pid, block_id,
-                  executor=None, bloom_cols=()) -> pa.RecordBatch:
-    """Encode one row chunk (pa.Table or RecordBatch) into block rows.
-
-    ``executor`` (a ThreadPoolExecutor) overlaps per-column encodes —
-    pyarrow's zstd releases the GIL, measured ~1.9x on the web table's
-    html+text pair. Only pass one when the task owns >1 core
-    (spark.task.cpus); with 1-core tasks threads oversubscribe the executor.
-
-    ``bloom_cols``: columns that get a per-block bloom bitmap (equality
-    pushdown, codec/bloom.py) — opt-in, str/int columns only.
-    """
-    out = {k: [] for k in (
-        "part_id", "block_id", "column", "codec", "n_rows",
-        "raw_bytes", "enc_bytes", "null_count", "min_val",
-        "max_val", "distinct_est", "header", "payload", "bloom")}
-
-    def _arr_of(cname):
-        arr = chunk.column(chunk.schema.get_field_index(cname))
-        if isinstance(arr, pa.ChunkedArray):
-            arr = arr.combine_chunks()
-        return arr
-
-    arrs = {c: _arr_of(c) for c in cols}
-
-    def _enc_one(c):
+def _encode_chunk(chunk: pa.Table, cols, chosen, bloom, part_id,
+                  block_id) -> pa.RecordBatch:
+    """Encode one row chunk into one block row per column, zone stats
+    included. ``bloom`` (a parsed bloom spec) names the columns that get a
+    per-block bloom bitmap (equality pushdown, codec/bloom.py)."""
+    arrs = {c: chunk.column(c).combine_chunks() for c in cols}
+    rows = []
+    for c in cols:
+        arr = arrs[c]
         ref = xref_ref_of(chosen[c])
-        if ref is None:
-            return encode_array(arrs[c], chosen[c])
-        return encode_array(arrs[c], chosen[c], ref_arr=arrs[ref])
-
-    if executor is not None:
-        blks = dict(zip(cols, executor.map(_enc_one, cols)))
-    else:
-        blks = None
-    for cname in cols:
-        arr = arrs[cname]
-        blk = blks[cname] if blks is not None else _enc_one(cname)
-        if with_stats:
-            mn, mx, dist = _stat_strings(arr)
-            zs = _sum_string(arr)
-            if zs is not None:
-                blk.header["zsum"] = zs  # before header_json below
-        else:
-            mn = mx = None
-            dist = -1
-        out["part_id"].append(pid)
-        out["block_id"].append(block_id)
-        out["column"].append(cname)
-        out["codec"].append(blk.header["codec"])
-        out["n_rows"].append(chunk.num_rows)
-        out["raw_bytes"].append(raw_bytes_of(arr))
-        out["enc_bytes"].append(len(blk.payload) + len(blk.header_json()))
-        out["null_count"].append(arr.null_count)
-        out["min_val"].append(mn)
-        out["max_val"].append(mx)
-        out["distinct_est"].append(dist)
-        out["header"].append(blk.header_json())
-        out["payload"].append(blk.payload)
-        if cname in bloom_cols:
-            from nail_parquet_spark.codec.bloom import bloom_build
-
-            plen, nlen = _parse_bloom(bloom_cols).get(cname) or (None, None)
-            out["bloom"].append(
-                bloom_build(arr, prefix_len=plen, ngram_len=nlen))
-        else:
-            out["bloom"].append(None)
-    return pa.record_batch(
-        [
-            pa.array(out["part_id"], pa.int32()),
-            pa.array(out["block_id"], pa.int64()),
-            pa.array(out["column"], pa.string()),
-            pa.array(out["codec"], pa.string()),
-            pa.array(out["n_rows"], pa.int64()),
-            pa.array(out["raw_bytes"], pa.int64()),
-            pa.array(out["enc_bytes"], pa.int64()),
-            pa.array(out["null_count"], pa.int64()),
-            pa.array(out["min_val"], pa.string()),
-            pa.array(out["max_val"], pa.string()),
-            pa.array(out["distinct_est"], pa.int64()),
-            pa.array(out["header"], pa.string()),
-            pa.array(out["payload"], pa.binary()),
-            pa.array(out["bloom"], pa.binary()),
-        ],
-        names=list(out.keys()),
-    )
+        blk = encode_array(arr, chosen[c], ref_arr=arrs[ref] if ref else None)
+        mn, mx, dist = _stat_strings(arr)
+        zs = _sum_string(arr)
+        if zs is not None:
+            blk.header["zsum"] = zs  # before header_json below
+        header = blk.header_json()
+        spec = bloom.get(c)
+        rows.append({
+            "part_id": part_id, "block_id": block_id, "column": c,
+            "codec": blk.header["codec"], "n_rows": chunk.num_rows,
+            "raw_bytes": raw_bytes_of(arr),
+            "enc_bytes": len(blk.payload) + len(header),
+            "null_count": arr.null_count, "min_val": mn, "max_val": mx,
+            "distinct_est": dist, "header": header, "payload": blk.payload,
+            "bloom": None if spec is None else bloom_build(
+                arr, prefix_len=spec[0], ngram_len=spec[1]),
+        })
+    return pa.RecordBatch.from_pylist(rows, schema=BLOCKS_SCHEMA)
 
 
 def _hive_partition_values(rel_dir: str) -> dict[str, "str | None"]:
@@ -363,11 +337,11 @@ def _infer_partition_type(values) -> str:
     return "string"
 
 
-def _plan_parquet_encode(spark, path, columns, codecs, policy, sample_rows,
-                         num_partitions):
-    """Shared planning for the scan-side encode paths: enumerate
-    (file, row-group) work items, pick codecs from one sampled row group,
-    and build the work-items DataFrame.
+def _plan_parquet_encode(spark, path, columns, codecs, policy, num_partitions,
+                         bloom):
+    """Planning for the scan-side encode: enumerate (file, row-group) work
+    items, pick codecs from the first work item's row group (the parquet
+    sampler feeding ``_plan_codecs``), and build the work-items DataFrame.
 
     Hive-partitioned layouts (``key=value`` directory segments between the
     input root and the files) are MATERIALIZED: each partition column
@@ -418,65 +392,46 @@ def _plan_parquet_encode(spark, path, columns, codecs, policy, sample_rows,
         for rg in range(md.num_row_groups):
             items.append((p, rg))
 
-    first = _pq.ParquetFile(paths[0])
+    # the first work item, not the first file: a leading file may hold no
+    # row group at all
+    first = _pq.ParquetFile(items[0][0] if items else paths[0])
     if columns:
         all_cols = list(columns)
         part_cols = [c for c in part_cols if c in all_cols]
     else:
-        all_cols = [
-            first.schema_arrow.field(i).name for i in range(len(first.schema_arrow))
-        ] + part_cols
+        all_cols = first.schema_arrow.names + part_cols
     part_types = {
         k: _infer_partition_type([kv.get(k) for kv in part_vals.values()])
         for k in part_cols
     }
-    empty_input = not items  # legal: a fully-filtered corpus writes a
-    # 0-row-group parquet file; encode then produces an empty block table
-    # (no sampling possible, codec choice moot — pin the generic fallback)
-    chosen = dict(codecs or {})
+    pinned = {c: v for c, v in (codecs or {}).items() if c in all_cols}
     for c in part_cols:
         # per-file constants: rle is optimal and needs no sampling (float
         # kind has no rle kernel — zstd over the constant runs instead;
         # decimal has no typed kernel at all and rides the ipc_zstd
         # fallback, for which any requested codec is a no-op)
-        chosen.setdefault(c, "zstd" if part_types[c] == "double" else "rle")
-    missing = [c for c in all_cols if c not in chosen]
-    if missing and empty_input:
-        for c in missing:
-            chosen[c] = "zstd"
+        pinned.setdefault(c, "zstd" if part_types[c] == "double" else "rle")
+    missing = [c for c in all_cols if c not in pinned]
+    if not items:
+        # legal: a fully-filtered corpus writes a 0-row-group parquet file;
+        # encode then produces an empty block table (no sampling possible,
+        # codec choice moot — pin the generic fallback)
+        pinned.update(dict.fromkeys(missing, "zstd"))
         missing = []
+    sample = {}
     if missing:
-        # sample the unpinned columns plus any str/bin PINNED columns (the
-        # xref upgrade may reference a pinned column as its
-        # decode-independent ref; other kinds can never be references, so
-        # reading them would be wasted planning I/O)
-        schema = first.schema_arrow
-        pinned_refs = [
-            c for c in all_cols
-            if c not in missing and c not in part_cols and (
-                pa.types.is_string(schema.field(c).type)
-                or pa.types.is_large_string(schema.field(c).type)
-                or pa.types.is_binary(schema.field(c).type)
-                or pa.types.is_large_binary(schema.field(c).type)
-            )
-        ]
-        sample_cols = missing + pinned_refs
-        sample = first.read_row_group(0, columns=sample_cols)
-        arrs = {
-            c: sample.column(c).combine_chunks().slice(0, sample_rows)
-            for c in sample_cols
-        }
-        for c in missing:
-            chosen[c] = choose_codec(arrs[c], policy=policy)[0]
-        chosen = xref_upgrade(arrs, chosen, policy=policy, upgradable=missing)
-    _validate_codecs(chosen, all_cols)
+        file_cols = [c for c in all_cols if c not in part_cols]
+        tbl = first.read_row_group(items[0][1], columns=file_cols)
+        sample = {c: tbl.column(c).combine_chunks().slice(0, SAMPLE_ROWS)
+                  for c in file_cols}
+    chosen = _plan_codecs(sample, missing, pinned, policy, bloom=bloom)
 
     # num_partitions pins job parallelism (concurrent tasks) independently of
     # the session master — the scaling bench uses it to run the same job at
     # two parallelism levels inside one JVM. Round-robin the items across
     # slices via parallelize (no repartition = no extra shuffle stage; a
     # fixed per-job stage taxes the high-parallelism level relatively more).
-    if empty_input:
+    if not items:
         items_df = spark.createDataFrame([], "path string, rg int")
     else:
         n_parts = num_partitions or min(len(items), spark.sparkContext.defaultParallelism * 4)
@@ -523,78 +478,6 @@ def _with_partition_columns(tbl: "pa.Table", file_path: str,
     return tbl
 
 
-def encode_parquet_files(
-    spark,
-    path: str | list[str],
-    columns: list[str] | None = None,
-    codecs: dict[str, str] | None = None,
-    policy: str = "balanced",
-    sample_rows: int = 8192,
-    block_rows: int = 65536,
-    with_stats: bool = True,
-    num_partitions: int | None = None,
-    encode_threads: int = 1,
-    bloom_columns: "list[str] | None" = None,
-) -> DataFrame:
-    """Scan-side encode: tasks read parquet ROW GROUPS directly with the
-    pyarrow C++ reader and encode in place.
-
-    Why this exists: ``encode_table`` pays the JVM columnar->Arrow->socket
-    conversion for every raw byte (measured ~5 MB/s/core on binary-heavy
-    columns — the pandas-UDF tax). For the encode pipeline the kernels
-    consume Arrow natively, so shipping raw data through the JVM buys
-    nothing. Here Spark schedules (path, row-group) work items (locality,
-    retries, speculation still apply); only the compact encoded blocks cross
-    the JVM boundary. This is the same pattern Petastorm/Ray datasets use,
-    and it's how the pipeline would front an Iceberg table at 100 TB: the
-    work items come from the table's file manifest.
-    """
-    items_df, all_cols, chosen, part_info = _plan_parquet_encode(
-        spark, path, columns, codecs, policy, sample_rows, num_partitions
-    )
-    file_cols = [c for c in all_cols if c not in part_info[0]]
-    import pyarrow.parquet as _pq
-
-    def enc(batches):
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        block_id = 0
-        pool = None
-        if encode_threads > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool = ThreadPoolExecutor(encode_threads)
-        try:
-            for batch in batches:
-                for p, rg in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
-                    # use_threads=False: a Spark task owns ONE core;
-                    # pyarrow's default pool would oversubscribe the executor
-                    # (and fake the 1-task baseline in scaling measurements)
-                    tbl = _pq.ParquetFile(p).read_row_group(
-                        rg, columns=file_cols, use_threads=False
-                    )
-                    tbl = _with_partition_columns(tbl, p, part_info)
-                    for off in range(0, tbl.num_rows, block_rows):
-                        chunk = tbl.slice(off, min(block_rows, tbl.num_rows - off))
-                        yield _encode_chunk(chunk, all_cols, chosen, with_stats, pid, block_id,
-                                            executor=pool, bloom_cols=_parse_bloom(bloom_columns))
-                        block_id += 1
-        finally:
-            if pool is not None:
-                pool.shutdown(wait=False)
-
-    return items_df.mapInArrow(enc, schema=BLOCKS_SCHEMA)
-
-
-MANIFEST_SCHEMA = (
-    "file string, part_id int, n_blocks bigint, n_rows bigint, "
-    "raw_bytes bigint, enc_bytes bigint, columns string, "
-    "wall_s double, mbps double, ratio double"
-)
-
-
 def encode_parquet_dir(
     spark,
     path: str | list[str],
@@ -602,12 +485,9 @@ def encode_parquet_dir(
     columns: list[str] | None = None,
     codecs: dict[str, str] | None = None,
     policy: str = "balanced",
-    sample_rows: int = 8192,
     block_rows: int = 65536,
-    with_stats: bool = True,
     num_partitions: int | None = None,
     compression: str = "none",
-    encode_threads: int = 1,
     bloom_columns: "list[str] | None" = None,
 ) -> DataFrame:
     """Scan-side encode with a PYTHON-side parquet sink, all in ONE task
@@ -620,6 +500,15 @@ def encode_parquet_dir(
     Iceberg-commit-shaped lineage records, and group-complete block files
     feed the shuffle-free ``decode_parquet_dir``.
 
+    Why scan-side: ``encode_table`` pays the JVM columnar->Arrow->socket
+    conversion for every raw byte (measured ~5 MB/s/core on binary-heavy
+    columns — the pandas-UDF tax). The kernels consume Arrow natively, so
+    here Spark only schedules the work items (locality, retries and
+    speculation still apply) — the pattern Petastorm/Ray datasets use, and
+    how the pipeline would front an Iceberg table: the work items come from
+    the table's file manifest. The blocks table is
+    ``spark.read.parquet(out_dir)``.
+
     Container ``compression`` defaults to none: payloads are already
     codec-compressed, so a container codec only burns CPU re-compressing
     incompressible bytes."""
@@ -627,8 +516,9 @@ def encode_parquet_dir(
 
     import pyarrow.parquet as _pq
 
+    bloom = _parse_bloom(bloom_columns)
     items_df, all_cols, chosen, part_info = _plan_parquet_encode(
-        spark, path, columns, codecs, policy, sample_rows, num_partitions
+        spark, path, columns, codecs, policy, num_partitions, bloom
     )
     file_cols = [c for c in all_cols if c not in part_info[0]]
     _os.makedirs(out_dir, exist_ok=True)
@@ -643,55 +533,42 @@ def encode_parquet_dir(
         out = TaskFile(out_dir, "blocks", ".parquet")
 
         t0 = _time.time()
-        pool = None
-        if encode_threads > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool = ThreadPoolExecutor(encode_threads)
         writer = None
         block_id = 0
         n_blocks = n_rows = raw = enc_b = 0
         try:
             for batch in batches:
                 for p, rg in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
+                    # use_threads=False: a Spark task owns ONE core; pyarrow's
+                    # default pool would oversubscribe the executor
                     tbl = _pq.ParquetFile(p).read_row_group(
                         rg, columns=file_cols, use_threads=False
                     )
                     tbl = _with_partition_columns(tbl, p, part_info)
                     for off in range(0, tbl.num_rows, block_rows):
                         chunk = tbl.slice(off, min(block_rows, tbl.num_rows - off))
-                        rb = _encode_chunk(chunk, all_cols, chosen, with_stats, tid, block_id,
-                                           executor=pool, bloom_cols=_parse_bloom(bloom_columns))
+                        rb = _encode_chunk(chunk, all_cols, chosen, bloom, tid, block_id)
                         block_id += 1
                         if writer is None:
-                            writer = _pq.ParquetWriter(out.tmp, rb.schema, compression=compression)
+                            writer = _pq.ParquetWriter(out.tmp, BLOCKS_SCHEMA,
+                                                       compression=compression)
                         writer.write_batch(rb)
                         n_blocks += rb.num_rows
                         n_rows += chunk.num_rows
                         raw += sum(rb.column("raw_bytes").to_pylist())
                         enc_b += sum(rb.column("enc_bytes").to_pylist())
         finally:
-            if pool is not None:
-                pool.shutdown(wait=False)
+            if writer is not None:
+                writer.close()
         if writer is not None:
-            writer.close()
             out_path = out.commit()
             wall = _time.time() - t0
-            yield pa.record_batch(
-                [
-                    pa.array([out_path]),
-                    pa.array([tid], pa.int32()),
-                    pa.array([n_blocks], pa.int64()),
-                    pa.array([n_rows], pa.int64()),
-                    pa.array([raw], pa.int64()),
-                    pa.array([enc_b], pa.int64()),
-                    pa.array([",".join(sorted(all_cols))]),
-                    pa.array([round(wall, 3)], pa.float64()),
-                    pa.array([round(raw / wall / 1e6, 2) if wall else 0.0], pa.float64()),
-                    pa.array([round(raw / enc_b, 4) if enc_b else 0.0], pa.float64()),
-                ],
-                names=["file", "part_id", "n_blocks", "n_rows", "raw_bytes",
-                       "enc_bytes", "columns", "wall_s", "mbps", "ratio"],
-            )
+            yield pa.RecordBatch.from_pylist([{
+                "file": out_path, "part_id": tid, "n_blocks": n_blocks,
+                "n_rows": n_rows, "raw_bytes": raw, "enc_bytes": enc_b,
+                "columns": ",".join(sorted(all_cols)), "wall_s": round(wall, 3),
+                "mbps": round(raw / wall / 1e6, 2) if wall else 0.0,
+                "ratio": round(raw / enc_b, 4) if enc_b else 0.0,
+            }], schema=MANIFEST_SCHEMA)
 
-    return items_df.mapInArrow(enc_sink, schema=MANIFEST_SCHEMA)
+    return items_df.mapInArrow(enc_sink, schema=from_arrow_schema(MANIFEST_SCHEMA))

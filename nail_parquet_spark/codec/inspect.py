@@ -416,8 +416,6 @@ def frequency_pushdown(blocks: DataFrame, column: str,
 
 def count_where_pushdown(blocks: DataFrame, column: str, op: str, value=None,
                          max_groups: int = 100_000,
-                         headers: dict | None = None,
-                         refs: dict | None = None,
                          pre_grouped: bool = False) -> dict:
     """Exact ``SELECT COUNT(*) WHERE column op value`` over an encoded
     blocks table, answered from zone-map metadata for every block the
@@ -450,8 +448,7 @@ def count_where_pushdown(blocks: DataFrame, column: str, op: str, value=None,
 
     Returns ``{"count", "groups_total", "groups_metadata",
     "groups_decoded"}`` so callers (and benchmarks) can see how much the
-    index actually decided. ``headers``/``refs`` are accepted for
-    compatibility; the index read carries them.
+    index actually decided.
     """
     from nail_parquet_spark.codec import zonemap
     from nail_parquet_spark.codec.blockindex import BlockIndex
@@ -583,9 +580,9 @@ def column_stats_pushdown(blocks: DataFrame,
     deterministic for a fixed block layout but summation-order-defined
     (per-block arrow pairwise sums merged in any order) — documented, not
     hidden: a float ``sum`` may differ from a sequential scan in the last
-    ulp. Blocks encoded before this stat existed (or with stats disabled)
-    raise, same contract as min/max; non-numeric columns raise. ``avg`` is
-    ``sum / count`` as double (None when count is 0, ANSI AVG-of-nothing).
+    ulp. Blocks encoded before this stat existed raise, same contract as
+    min/max; non-numeric columns raise. ``avg`` is ``sum / count`` as
+    double (None when count is 0, ANSI AVG-of-nothing).
 
     Why parsing is otherwise exact: int64/bool renders always fit and
     round-trip; Python float repr is the shortest round-trip form, so
@@ -639,8 +636,8 @@ def column_stats_pushdown(blocks: DataFrame,
                 "decimal(38,0)" if casts[c] == "bigint" else "double")
             aggs += [
                 F.sum(z_t).alias(f"sum__{c}"),
-                # no zsum on a not-all-null block (pre-stat encode or
-                # stats disabled), or a stored sum that fails to parse
+                # no zsum on a not-all-null block (pre-stat encode), or a
+                # stored sum that fails to parse
                 F.max(F.when(
                     on & ((zs.isNull()
                            & (F.col("null_count") < F.col("n_rows")))
@@ -680,7 +677,7 @@ def column_stats_pushdown(blocks: DataFrame,
             if row[f"badsum__{c}"] == 1:
                 raise ValueError(
                     f"column {c!r} has blocks without a stored sum stat "
-                    "(encoded before sum stats, or stats disabled); exact "
+                    "(encoded before sum stats); exact "
                     "SUM requires a decode"
                 )
             if n - nulls == 0:

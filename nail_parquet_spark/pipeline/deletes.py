@@ -454,9 +454,9 @@ def purge_deletes(spark: SparkSession, out_dir: str, new_dir: str,
     gkey = F.xxhash64(F.input_file_name(), F.col("part_id").cast("long"),
                       F.col("block_id").cast("long"))
 
-    from nail_parquet_spark.codec.encode import BLOCKS_COLUMNS
+    from nail_parquet_spark.codec.encode import BLOCKS_SCHEMA
 
-    canon = [n for n, _ in BLOCKS_COLUMNS]
+    canon = BLOCKS_SCHEMA.names
     base = blocks
     if "bloom" not in base.columns:
         base = base.withColumn("bloom", F.lit(None).cast("binary"))

@@ -10,8 +10,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 def spark():
     from nail_parquet_spark.session import get_spark
 
-    # bounded heap: under the library's 48g default the driver JVM of a
-    # full run grows to ~15 GB RSS, and on a 16 GB host the kernel kills it
+    # fixed 4g heap: the library's default (a quarter of the host's memory)
+    # would make the test heap depend on the machine
     s = get_spark("pytest", master="local[4]", shuffle_partitions=4,
                   extra_conf={"spark.driver.memory": "4g"})
     yield s

@@ -16,7 +16,7 @@ from nail_parquet_spark.codec.decode import (
     decode_table_where,
     prune_blocks_bloom,
 )
-from nail_parquet_spark.codec.encode import encode_table
+from nail_parquet_spark.codec.encode import encode_parquet_dir, encode_table
 
 rng = np.random.default_rng(5)
 
@@ -97,10 +97,16 @@ def test_encode_emits_blooms_only_for_requested(spark):
     assert m["score"].with_bloom == 0
 
 
-def test_bloom_rejects_unencoded_column(spark):
+def test_bloom_rejects_unencoded_column(spark, tmp_path):
     df = spark.range(10).selectExpr("id", "cast(id as string) AS s")
-    with pytest.raises(ValueError, match="bloom_columns"):
-        encode_table(df, columns=["id"], bloom_columns=["s"])
+    src = str(tmp_path / "src")
+    df.write.parquet(src)
+    for columns, bloom in ((["id"], ["s"]), (None, ["nope"])):
+        with pytest.raises(ValueError, match="bloom_columns"):
+            encode_table(df, columns=columns, bloom_columns=bloom)
+        with pytest.raises(ValueError, match="bloom_columns"):
+            encode_parquet_dir(spark, src, str(tmp_path / "enc"),
+                               columns=columns, bloom_columns=bloom)
 
 
 def test_prune_blocks_bloom_prunes_and_is_exact(spark):

@@ -123,19 +123,6 @@ def test_encode_parquet_dir_sink_roundtrip(spark, web, tmp_path):
     assert res["total_mismatches"] == 0
 
 
-def test_encode_threads_same_output(spark, web, tmp_path):
-    """encode_threads only changes scheduling, never bytes."""
-    from nail_parquet_spark.codec.encode import encode_parquet_dir
-
-    src = str(tmp_path / "src")
-    web.write.parquet(src)
-    a = encode_parquet_dir(spark, src, str(tmp_path / "b1"), num_partitions=2).collect()
-    b = encode_parquet_dir(spark, src, str(tmp_path / "b2"), num_partitions=2,
-                           encode_threads=3).collect()
-    assert sum(r["enc_bytes"] for r in a) == sum(r["enc_bytes"] for r in b)
-    assert sum(r["n_rows"] for r in a) == sum(r["n_rows"] for r in b) == 20_000
-
-
 def test_encode_empty_table(spark, tmp_path):
     """A fully-filtered corpus writes a 0-row parquet file; encode must
     produce an empty block table, not crash planning (curate pipelines hit
@@ -147,6 +134,32 @@ def test_encode_empty_table(spark, tmp_path):
     bdir = str(tmp_path / "empty_blocks")
     manifests = encode_parquet_dir(spark, src, bdir, num_partitions=2).collect()
     assert manifests == [] or sum(m["n_rows"] for m in manifests) == 0
+
+
+def test_encode_leading_empty_file(spark, tmp_path):
+    """A directory whose first listed file holds no row group still encodes
+    with codec auto-selection (the sample is the first work item, not the
+    first file's row group 0) and round-trips."""
+    import pyarrow.parquet as pq
+
+    from nail_parquet_spark.codec.decode import decode_parquet_dir
+    from nail_parquet_spark.codec.encode import encode_parquet_dir
+
+    src = tmp_path / "src"
+    src.mkdir()
+    t = pa.table({"id": pa.array(range(100), pa.int64()),
+                  "s": pa.array([f"row {i % 7}" for i in range(100)])})
+    pq.ParquetWriter(str(src / "a.parquet"), t.schema).close()  # 0 row groups
+    pq.write_table(t, str(src / "b.parquet"))
+    want = spark.read.parquet(str(src))
+    assert want.count() == 100
+    bdir = str(tmp_path / "blocks")
+    manifests = encode_parquet_dir(spark, str(src), bdir).collect()
+    assert sum(m["n_rows"] for m in manifests) == 100
+    ddir = str(tmp_path / "dec")
+    decode_parquet_dir(spark, bdir, ddir).collect()
+    res = verify_roundtrip(want, spark.read.parquet(ddir), key="id")
+    assert res["joined_rows"] == 100 and res["total_mismatches"] == 0
 
 
 def test_encode_list_columns_end_to_end(spark):

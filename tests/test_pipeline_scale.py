@@ -1,12 +1,12 @@
 """Scale-feature tests: salted repartition, manifests, resumable encode,
-scan-side (files-mode) encode."""
+scan-side encode."""
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from nail_parquet_spark.codec.decode import decode_table, verify_roundtrip
-from nail_parquet_spark.codec.encode import encode_parquet_files, encode_table
+from nail_parquet_spark.codec.encode import encode_parquet_dir, encode_table
 from nail_parquet_spark.pipeline.checkpoint import encode_resumable, read_manifests
 from nail_parquet_spark.pipeline.manifest import metrics_rollup, partition_manifest
 from nail_parquet_spark.pipeline.partition import host_frequency, salted_repartition_by_host
@@ -40,11 +40,12 @@ def test_host_frequency(spark, web_parquet):
     assert top["n_rows"] > 20_000 * 0.05  # hot host exists
 
 
-def test_files_mode_encode_matches_table_mode(spark, web_parquet):
+def test_files_mode_encode_matches_table_mode(spark, web_parquet, tmp_path):
     codecs = {"url": "zstd", "warc_ts": "delta_bitpack", "html": "zstd",
               "text": "zstd", "lang": "dict"}
-    fb = encode_parquet_files(spark, web_parquet, codecs=codecs)
-    dec = decode_table(fb, columns=["url", "warc_ts", "html", "text", "lang"])
+    bdir = str(tmp_path / "blocks")
+    encode_parquet_dir(spark, web_parquet, bdir, codecs=codecs).collect()
+    dec = decode_table(spark.read.parquet(bdir), columns=["url", "warc_ts", "html", "text", "lang"])
     src = spark.read.parquet(web_parquet)
     res = verify_roundtrip(src, dec, key="url")
     assert res["joined_rows"] == 20_000 and res["total_mismatches"] == 0
@@ -102,9 +103,10 @@ def test_decode_to_parquet_roundtrip(spark, web_parquet, tmp_path):
 
     codecs = {"url": "zstd", "warc_ts": "delta_bitpack", "html": "zstd",
               "text": "zstd", "lang": "dict"}
-    blocks = encode_parquet_files(spark, web_parquet, codecs=codecs)
+    bdir = str(tmp_path / "blocks")
+    encode_parquet_dir(spark, web_parquet, bdir, codecs=codecs).collect()
     out = str(tmp_path / "decoded")
-    man = decode_to_parquet(blocks, out, columns=["url", "warc_ts", "html", "text", "lang"])
+    man = decode_to_parquet(spark.read.parquet(bdir), out, columns=["url", "warc_ts", "html", "text", "lang"])
     assert man.agg({"n_rows": "sum"}).collect()[0][0] == 20_000
     res = verify_roundtrip(spark.read.parquet(web_parquet), spark.read.parquet(out), key="url")
     assert res["total_mismatches"] == 0 and res["joined_rows"] == 20_000
@@ -137,7 +139,7 @@ def test_decode_parquet_dir_shuffle_free(spark, web_parquet, tmp_path):
     codecs = {"url": "zstd", "warc_ts": "delta_bitpack", "html": "zstd",
               "text": "zstd", "lang": "dict"}
     bdir = str(tmp_path / "blocks")
-    encode_parquet_files(spark, web_parquet, codecs=codecs).write.parquet(bdir)
+    encode_parquet_dir(spark, web_parquet, bdir, codecs=codecs).collect()
     out = str(tmp_path / "decoded")
     man = decode_parquet_dir(spark, bdir, out, columns=cols)
     assert man.agg({"n_rows": "sum"}).collect()[0][0] == 20_000

@@ -144,24 +144,23 @@ def test_xref_end_to_end_subset_decode(spark, tmp_path):
     from nail_parquet_spark.codec.decode import (
         decode_parquet_dir, decode_table, verify_roundtrip,
     )
-    from nail_parquet_spark.codec.encode import encode_parquet_dir, encode_parquet_files
+    from nail_parquet_spark.codec.encode import encode_parquet_dir
     from nail_parquet_spark.synth import webpages_spark
 
     src = str(tmp_path / "pages")
     webpages_spark(spark, 8_000, seed=7, n_parts=2).write.parquet(src)
     codecs = {"url": "zstd", "warc_ts": "for_bitpack", "html": "xref:text:3",
               "text": "zstd", "lang": "dict"}
-    blocks = encode_parquet_files(spark, src, codecs=codecs)
-    dec = decode_table(blocks, columns=["url", "html"])
+    enc_dir = str(tmp_path / "enc")
+    encode_parquet_dir(spark, src, enc_dir, codecs=codecs).collect()
+    dec = decode_table(spark.read.parquet(enc_dir), columns=["url", "html"])
     assert dec.columns == ["url", "html"]
     res = verify_roundtrip(
         spark.read.parquet(src).select("url", "html"), dec, key="url")
     assert res["joined_rows"] == 8_000 and res["total_mismatches"] == 0
 
     # shuffle-free dir decode, html-only subset
-    enc_dir = str(tmp_path / "enc")
     out_dir = str(tmp_path / "dec")
-    encode_parquet_dir(spark, src, enc_dir, codecs=codecs).collect()
     decode_parquet_dir(spark, enc_dir, out_dir, columns=["url", "html"]).collect()
     back = spark.read.parquet(out_dir)
     assert back.columns == ["url", "html"]
@@ -308,6 +307,37 @@ def test_encode_table_pinned_column_can_be_ref(spark):
     assert list(chosen) == ["html"]  # pinned entries are not returned
 
 
+def test_dataframe_and_parquet_samplers_agree(spark, tmp_path):
+    """Both samplers feed the one planner: on a single-row-group file they
+    see the same rows, so choose_codecs_for_df and encode_parquet_dir pick
+    the same codecs, with pinned text offered to html as a reference. The
+    block ``codec`` column drops levels and references, so the headers
+    (codec, level, reference, sizes) are compared against an encode with
+    the DataFrame sampler's choices pinned."""
+    import pyarrow.parquet as pq
+
+    from nail_parquet_spark.codec.encode import choose_codecs_for_df, encode_parquet_dir
+    from nail_parquet_spark.synth import make_webpages_batch
+
+    p = str(tmp_path / "pages.parquet")
+    pq.write_table(pa.Table.from_batches([make_webpages_batch(23, 0, 4_000)]), p)
+    assert pq.ParquetFile(p).metadata.num_row_groups == 1
+    pinned = {"text": "zstd:6", "warc_ts": "delta_bitpack"}
+    df = spark.read.parquet(p)
+    chosen = choose_codecs_for_df(df, [c for c in df.columns if c not in pinned],
+                                  pinned=pinned)
+    assert chosen["html"].startswith("xref:text"), chosen
+
+    def headers(codecs, name):
+        out = str(tmp_path / name)
+        encode_parquet_dir(spark, p, out, codecs=codecs).collect()
+        rows = spark.read.parquet(out).select("column", "header").collect()
+        assert len(rows) == 5  # one block per column
+        return {r["column"]: r["header"] for r in rows}
+
+    assert headers(pinned, "auto") == headers({**chosen, **pinned}, "forced")
+
+
 def test_compact_blocks_rekeys_and_preserves_groups(spark, tmp_path):
     """Compaction merges many small block files from SEVERAL encode jobs
     (colliding part ids) into few files with globally unique group ids and
@@ -359,7 +389,7 @@ def test_encode_skips_hidden_and_temp_paths(spark, tmp_path):
     import os
     import shutil as _shutil
 
-    from nail_parquet_spark.codec.encode import encode_parquet_files
+    from nail_parquet_spark.codec.encode import encode_parquet_dir
     from nail_parquet_spark.sources.io import list_parquet_files
     from nail_parquet_spark.synth import webpages_spark
 
@@ -372,9 +402,11 @@ def test_encode_skips_hidden_and_temp_paths(spark, tmp_path):
     _shutil.copy(real, src + "/_temporary/0/stale.parquet")
     _shutil.copy(real, src + "/.hidden.parquet")
     assert list_parquet_files(src) == [real]
-    blocks = encode_parquet_files(
-        spark, src, codecs={"url": "zstd", "warc_ts": "for_bitpack",
-                            "html": "zstd", "text": "zstd", "lang": "dict"})
+    enc = str(tmp_path / "enc")
+    encode_parquet_dir(
+        spark, src, enc, codecs={"url": "zstd", "warc_ts": "for_bitpack",
+                                 "html": "zstd", "text": "zstd", "lang": "dict"}).collect()
+    blocks = spark.read.parquet(enc)
     n = blocks.filter(F.col("column") == "url").agg(F.sum("n_rows")).collect()[0][0]
     assert n == 1_000  # stale copies not double-counted
 
@@ -407,23 +439,25 @@ def test_encode_scan_side_hive_partition_columns(spark, tmp_path):
     ADVICE r3 medium: the footer-based reader would otherwise silently drop
     them), and round-trip bit-identically through decode."""
     from nail_parquet_spark.codec.decode import decode_table, verify_roundtrip
-    from nail_parquet_spark.codec.encode import encode_parquet_files
+    from nail_parquet_spark.codec.encode import encode_parquet_dir
     from nail_parquet_spark.synth import webpages_spark
 
     src = str(tmp_path / "parts")
     want = webpages_spark(spark, 500, seed=43, n_parts=1)
     want.write.partitionBy("lang").parquet(src)
     codecs = {"url": "zstd", "warc_ts": "for_bitpack", "html": "zstd", "text": "zstd"}
-    blocks = encode_parquet_files(spark, src, codecs=codecs).cache()
+    encode_parquet_dir(spark, src, str(tmp_path / "enc"), codecs=codecs).collect()
+    blocks = spark.read.parquet(str(tmp_path / "enc")).cache()
     # lang exists only in directory names yet is encoded (rle constants)
     assert blocks.filter(F.col("column") == "lang").count() > 0
     dec = decode_table(blocks, columns=["url", "warc_ts", "html", "text", "lang"])
     res = verify_roundtrip(spark.read.parquet(src), dec, key="url")
     assert res["joined_rows"] == 500 and res["total_mismatches"] == 0
     # explicit column subsets may name partition columns directly
-    sub = encode_parquet_files(spark, src, columns=["url", "lang"],
-                               codecs={"url": "zstd", "lang": "rle"})
-    got = decode_table(sub, columns=["url", "lang"])
+    encode_parquet_dir(spark, src, str(tmp_path / "sub"), columns=["url", "lang"],
+                       codecs={"url": "zstd", "lang": "rle"}).collect()
+    got = decode_table(spark.read.parquet(str(tmp_path / "sub")),
+                       columns=["url", "lang"])
     wanted = {(r["url"], r["lang"]) for r in want.select("url", "lang").collect()}
     assert {(r["url"], r["lang"]) for r in got.collect()} == wanted
     blocks.unpersist()
@@ -441,7 +475,7 @@ def test_hive_partition_value_parsing(spark, tmp_path):
     from nail_parquet_spark.codec.decode import decode_table
     from nail_parquet_spark.codec.encode import (
         _hive_partition_values,
-        encode_parquet_files,
+        encode_parquet_dir,
     )
 
     assert _hive_partition_values("date=2024-01-01/lang=en%20us") == {
@@ -455,7 +489,9 @@ def test_hive_partition_value_parsing(spark, tmp_path):
     os.makedirs(root + "/k=__HIVE_DEFAULT_PARTITION__")
     pq.write_table(t, root + "/k=a%20b/f1.parquet")
     pq.write_table(t, root + "/k=__HIVE_DEFAULT_PARTITION__/f2.parquet")
-    blocks = encode_parquet_files(spark, root, codecs={"v": "plain", "k": "rle"})
+    enc = str(tmp_path / "enc")
+    encode_parquet_dir(spark, root, enc, codecs={"v": "plain", "k": "rle"}).collect()
+    blocks = spark.read.parquet(enc)
     got = {(r["v"], r["k"]) for r in decode_table(blocks, columns=["v", "k"]).collect()}
     assert got == {(1, "a b"), (2, "a b"), (1, None), (2, None)}
 
@@ -473,7 +509,7 @@ def test_hive_partition_type_inference(spark, tmp_path):
     from nail_parquet_spark.codec.decode import decode_table
     from nail_parquet_spark.codec.encode import (
         _infer_partition_type,
-        encode_parquet_files,
+        encode_parquet_dir,
     )
 
     assert _infer_partition_type(["1", "42", None]) == "long"
@@ -502,8 +538,10 @@ def test_hive_partition_type_inference(spark, tmp_path):
                  "year=__HIVE_DEFAULT_PARTITION__/score=3"]:
         os.makedirs(os.path.join(root, part))
         pq.write_table(t, os.path.join(root, part, "f.parquet"))
-    blocks = encode_parquet_files(
-        spark, root, codecs={"v": "plain"})  # partition codecs auto-selected
+    enc = str(tmp_path / "enc")
+    encode_parquet_dir(
+        spark, root, enc, codecs={"v": "plain"}).collect()  # partition codecs auto-selected
+    blocks = spark.read.parquet(enc)
     dec = decode_table(blocks, columns=["v", "year", "score"])
     schema = {f.name: f.dataType.simpleString() for f in dec.schema.fields}
     assert schema["year"] == "bigint" and schema["score"] == "double"
@@ -529,7 +567,7 @@ def test_hive_partition_decimal_date_parity(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from nail_parquet_spark.codec.decode import decode_table
-    from nail_parquet_spark.codec.encode import encode_parquet_files
+    from nail_parquet_spark.codec.encode import encode_parquet_dir
 
     root = str(tmp_path / "decdate")
     t = pa.table({"v": pa.array([1, 2], pa.int64())})
@@ -538,8 +576,9 @@ def test_hive_partition_decimal_date_parity(spark, tmp_path):
         os.makedirs(os.path.join(root, part))
         pq.write_table(t, os.path.join(root, part, "f.parquet"))
 
-    blocks = encode_parquet_files(spark, root, codecs={"v": "plain"})
-    dec = decode_table(blocks, columns=["v", "big", "day"])
+    enc = str(tmp_path / "enc")
+    encode_parquet_dir(spark, root, enc, codecs={"v": "plain"}).collect()
+    dec = decode_table(spark.read.parquet(enc), columns=["v", "big", "day"])
     schema = {f.name: f.dataType.simpleString() for f in dec.schema.fields}
     sp = spark.read.parquet(root)
     sp_schema = {f.name: f.dataType.simpleString() for f in sp.schema.fields}
