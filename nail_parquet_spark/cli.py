@@ -2007,18 +2007,13 @@ def main(argv: list[str] | None = None) -> int:
 
         src = df
         if args.advise:
-            import pyarrow as _pa  # noqa: F401
-
+            from nail_parquet_spark.codec.encode import _sample_df
             from nail_parquet_spark.codec.kernels import encode_array
             from nail_parquet_spark.codec.select import (
                 choose_codec, raw_bytes_of)
 
-            t = src.limit(args.advise_rows).toArrow()
-            for name in t.column_names:
-                arr = t.column(name).combine_chunks()
-                if isinstance(arr, _pa.ChunkedArray):  # older pyarrow
-                    arr = (arr.chunk(0) if arr.num_chunks
-                           else _pa.array([], type=arr.type))
+            sample = _sample_df(src, src.columns, {}, args.advise_rows)
+            for name, arr in sample.items():
                 codec, st = choose_codec(arr, policy=args.policy)
                 raw = raw_bytes_of(arr) or 1
                 try:

@@ -162,13 +162,14 @@ def bloom_build(arr: pa.Array, bits_per_key: int = DEFAULT_BITS_PER_KEY,
     m_bits = max(64, ((bits_per_key * max(n, 1) + 7) // 8) * 8)
     bits = np.zeros(m_bits // 8, dtype=np.uint8)
     if n:
-        pos = np.empty(n * k, dtype=np.int64)
-        i = 0
-        for b in keys:
-            h1, h2 = bloom_lanes(b)
-            for j in range(k):
-                pos[i] = (h1 + j * h2) % m_bits
-                i += 1
+        # bloom_lanes for every key at once: the md5 digests as big-endian
+        # (h1, h2) word pairs masked to 57 bits; k < 64 (byte 0 keeps the
+        # two flag bits), so h1 + (k-1)*h2 < 2^63 never overflows an int64
+        digests = b"".join(hashlib.md5(b).digest() for b in keys)
+        lanes = (np.frombuffer(digests, dtype=">u8").reshape(n, 2)
+                 & np.uint64(_LANE_MASK)).astype(np.int64)
+        h1, h2 = lanes[:, :1], lanes[:, 1:] | 1
+        pos = ((h1 + np.arange(k, dtype=np.int64) * h2) % m_bits).ravel()
         np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
     flag = (_PREFIX_FLAG if prefix_len else 0) | (_NGRAM_FLAG if ngram_len else 0)
     tail = (bytes([prefix_len]) if prefix_len else b"") + \

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, functions as F
 from nail_parquet_spark.codec import zonemap
 from nail_parquet_spark.codec.blockindex import BlockIndex, _src_expr_frame
 from nail_parquet_spark.codec.kernels import EncodedBlock, decode_array
-from nail_parquet_spark.sources.io import TaskFile
+from nail_parquet_spark.sources.io import TaskFile, map_slices
 
 
 # Above this file count, decode_parquet_dir indexes the blocks with a Spark
@@ -555,62 +555,56 @@ def decode_parquet_dir(spark, blocks_dir: str, out_dir: str,
     fetch_cols = _fetch_closure(headers, refs, columns)
     os.makedirs(out_dir, exist_ok=True)
 
-    # one file per slice via parallelize — no repartition, so the job is a
-    # single shuffle-free stage (same pattern as encode_parquet_dir)
-    rdd = spark.sparkContext.parallelize([[f] for f in files], len(files)) \
-        .flatMap(lambda s: [(p,) for p in s])
-    items = spark.createDataFrame(rdd, "path string")
-
-    def dec(batches):
+    # task i decodes block file i (map_slices) — no repartition, so the job
+    # is a single shuffle-free stage (same pattern as encode_parquet_dir)
+    def dec(path):
         import pyarrow.parquet as _pq
 
         out = TaskFile(out_dir, "part", ".parquet")
         w = _BufferedWriter(out.tmp, out_schema, compression, use_dictionary)
         colset = set(fetch_cols)
-        for batch in batches:
-            for path in batch.column(0).to_pylist():
-                # use_threads=False: a Spark task owns ONE core (see encode)
-                tbl = _pq.read_table(
-                    path,
-                    columns=["part_id", "block_id", "column", "header", "payload"],
-                    use_threads=False,
+        # use_threads=False: a Spark task owns ONE core (see encode)
+        tbl = _pq.read_table(
+            path,
+            columns=["part_id", "block_id", "column", "header", "payload"],
+            use_threads=False,
+        )
+        pids = tbl.column("part_id").to_pylist()
+        bids = tbl.column("block_id").to_pylist()
+        cols_ = tbl.column("column").to_pylist()
+        hdrs = tbl.column("header").to_pylist()
+        pays = tbl.column("payload")
+        groups: dict[tuple[int, int], dict[str, tuple[str, bytes]]] = {}
+        for i in range(tbl.num_rows):
+            if cols_[i] not in colset:
+                continue  # column-subset decode: ignore unrequested blocks
+            g = groups.setdefault((pids[i], bids[i]), {})
+            if cols_[i] in g:
+                raise ValueError(
+                    f"duplicate block for column {cols_[i]!r} in "
+                    f"group {(pids[i], bids[i])} of {path}: colliding "
+                    "group ids (run compact_blocks to re-key)"
                 )
-                pids = tbl.column("part_id").to_pylist()
-                bids = tbl.column("block_id").to_pylist()
-                cols_ = tbl.column("column").to_pylist()
-                hdrs = tbl.column("header").to_pylist()
-                pays = tbl.column("payload")
-                groups: dict[tuple[int, int], dict[str, tuple[str, bytes]]] = {}
-                for i in range(tbl.num_rows):
-                    if cols_[i] not in colset:
-                        continue  # column-subset decode: ignore unrequested blocks
-                    g = groups.setdefault((pids[i], bids[i]), {})
-                    if cols_[i] in g:
-                        raise ValueError(
-                            f"duplicate block for column {cols_[i]!r} in "
-                            f"group {(pids[i], bids[i])} of {path}: colliding "
-                            "group ids (run compact_blocks to re-key)"
-                        )
-                    g[cols_[i]] = (hdrs[i], pays[i].as_py())
-                for key, grp in groups.items():
-                    # completeness is per group against the REQUESTED
-                    # columns (xref deps raise inside _decode_group): blocks
-                    # of heterogeneous jobs may carry different column sets
-                    missing = [c for c in columns if c not in grp]
-                    if missing and not fill:
-                        raise ValueError(
-                            f"block group {key} in {path} is missing "
-                            f"requested columns {missing}"
-                        )
-                    w.write(_decode_group(grp, columns, out_schema,
-                                          fill_missing=fill))
+            g[cols_[i]] = (hdrs[i], pays[i].as_py())
+        for key, grp in groups.items():
+            # completeness is per group against the REQUESTED
+            # columns (xref deps raise inside _decode_group): blocks
+            # of heterogeneous jobs may carry different column sets
+            missing = [c for c in columns if c not in grp]
+            if missing and not fill:
+                raise ValueError(
+                    f"block group {key} in {path} is missing "
+                    f"requested columns {missing}"
+                )
+            w.write(_decode_group(grp, columns, out_schema,
+                                  fill_missing=fill))
         if w.close():
             yield pa.record_batch(
                 [pa.array([out.commit()]), pa.array([w.n_rows], pa.int64())],
                 names=["file", "n_rows"],
             )
 
-    return items.mapInArrow(dec, schema="file string, n_rows bigint")
+    return map_slices(spark, files, dec, "file string, n_rows bigint")
 
 
 # ---------------------------------------------------------------------------

@@ -7,10 +7,13 @@ except blocks are first-class queryable data.
 
 All encoding happens inside ``mapInArrow`` (Arrow batches end-to-end, no
 per-row Python). Codec choice is one driver-side pass per job: a sampler
-(a ``limit`` over the DataFrame, or the first (file, row group) work item of
-a parquet scan) feeds the one planner, ``_plan_codecs``. The ``codecs``
-override pins columns instead — the analogue of nail-parquet's
-``optimize --compression/--dictionary`` knobs.
+(the first rows of the DataFrame, read by one task in partition order, or
+the first (file, row group) work item of a parquet scan) feeds the one
+planner, ``_plan_codecs``. The ``codecs`` override pins columns instead —
+the analogue of nail-parquet's ``optimize --compression/--dictionary``
+knobs. The scan-side encode deals its work items into per-task slices
+that run as one shuffle-free stage over a JVM-built frame
+(``sources.io.map_slices``).
 """
 
 from __future__ import annotations
@@ -28,7 +31,7 @@ from nail_parquet_spark.codec.bloom import bloom_build, parse_bloom_spec as _par
 from nail_parquet_spark.codec.kernels import encode_array, kind_of, xref_ref_of
 from nail_parquet_spark.codec.select import choose_codec, raw_bytes_of, xref_upgrade
 from nail_parquet_spark.codec.zonemap import render
-from nail_parquet_spark.sources.io import TaskFile
+from nail_parquet_spark.sources.io import TaskFile, map_slices
 
 # rows per codec-selection sample
 SAMPLE_ROWS = 8192
@@ -142,15 +145,25 @@ def _plan_codecs(
     return chosen
 
 
-def _sample_df(df: DataFrame, columns: list[str],
-               pinned: dict[str, str]) -> dict[str, pa.Array]:
-    """The DataFrame sampler: the first ``SAMPLE_ROWS`` rows of ``columns``
-    and the pinned columns, in one Spark job — or nothing, when there is
-    no codec to choose."""
+def _sample_df(df: DataFrame, columns: list[str], pinned: dict[str, str],
+               n: "int | None" = None) -> dict[str, pa.Array]:
+    """The DataFrame sampler: the first ``n`` (default ``SAMPLE_ROWS``)
+    rows of ``columns`` and the pinned columns — or nothing, when there is
+    no codec to choose.
+
+    Cost: one Spark job; over a scan, one stage of one task and no
+    shuffle (a shuffle in ``df``'s own plan keeps its map stage, and the
+    one task reads its output). The task reads ``df``'s partitions in
+    order (``coalesce(1)``) and stops once it has ``n`` rows, so the sample
+    is the first ``n`` rows in partition order, and an unfiltered table is
+    read only up to them. A DataFrame filtered below ``n`` rows is read
+    whole, by that one task. A plain ``limit(n)`` collect instead runs a
+    local limit in every partition and shuffles up to ``n`` rows from each
+    to one reducer."""
     if not columns:
         return {}
     cols = list(dict.fromkeys([*columns, *pinned]))
-    tbl = df.select(*cols).limit(SAMPLE_ROWS).toArrow()
+    tbl = df.select(*cols).coalesce(1).limit(SAMPLE_ROWS if n is None else n).toArrow()
     return {c: tbl.column(c).combine_chunks() for c in cols}
 
 
@@ -341,7 +354,8 @@ def _plan_parquet_encode(spark, path, columns, codecs, policy, num_partitions,
                          bloom):
     """Planning for the scan-side encode: enumerate (file, row-group) work
     items, pick codecs from the first work item's row group (the parquet
-    sampler feeding ``_plan_codecs``), and build the work-items DataFrame.
+    sampler feeding ``_plan_codecs``), and deal the items into per-task
+    slices.
 
     Hive-partitioned layouts (``key=value`` directory segments between the
     input root and the files) are MATERIALIZED: each partition column
@@ -354,7 +368,8 @@ def _plan_parquet_encode(spark, path, columns, codecs, policy, num_partitions,
     explicit file subset (e.g. one resume batch) never parses partitions
     at all — only dir inputs do.
 
-    Returns (items_df, all_cols, chosen, part_info) where part_info is
+    Returns (slices, all_cols, chosen, part_info) where slices[i] lists
+    task i's (file, row group) items and part_info is
     (part_cols, {file_path: {key: value}}, {key: type}), empty for flat
     layouts."""
     import os as _os
@@ -429,22 +444,18 @@ def _plan_parquet_encode(spark, path, columns, codecs, policy, num_partitions,
     # num_partitions pins job parallelism (concurrent tasks) independently of
     # the session master — the scaling bench uses it to run the same job at
     # two parallelism levels inside one JVM. Round-robin the items across
-    # slices via parallelize (no repartition = no extra shuffle stage; a
-    # fixed per-job stage taxes the high-parallelism level relatively more).
-    if not items:
-        items_df = spark.createDataFrame([], "path string, rg int")
-    else:
-        n_parts = num_partitions or min(len(items), spark.sparkContext.defaultParallelism * 4)
-        slices = [items[i::n_parts] for i in range(min(n_parts, len(items)))]
-        rdd = spark.sparkContext.parallelize(slices, len(slices)).flatMap(lambda s: s)
-        items_df = spark.createDataFrame(rdd, "path string, rg int")
+    # slices, one task each (map_slices: no repartition = no extra shuffle
+    # stage; a fixed per-job stage taxes the high-parallelism level
+    # relatively more).
+    n_parts = num_partitions or min(len(items), spark.sparkContext.defaultParallelism * 4)
+    slices = [items[i::n_parts] for i in range(min(n_parts, len(items)))]
     # keep only the (file -> value) entries for materialized columns so the
     # task closure stays O(files x partition depth)
     part_info = (part_cols,
                  {f: {k: v for k, v in kv.items() if k in part_cols}
                   for f, kv in part_vals.items()} if part_cols else {},
                  {k: t for k, t in part_types.items() if k in part_cols})
-    return items_df, all_cols, chosen, part_info
+    return slices, all_cols, chosen, part_info
 
 
 def _with_partition_columns(tbl: "pa.Table", file_path: str,
@@ -517,13 +528,13 @@ def encode_parquet_dir(
     import pyarrow.parquet as _pq
 
     bloom = _parse_bloom(bloom_columns)
-    items_df, all_cols, chosen, part_info = _plan_parquet_encode(
+    slices, all_cols, chosen, part_info = _plan_parquet_encode(
         spark, path, columns, codecs, policy, num_partitions, bloom
     )
     file_cols = [c for c in all_cols if c not in part_info[0]]
     _os.makedirs(out_dir, exist_ok=True)
 
-    def enc_sink(batches):
+    def enc_sink(items):
         import time as _time
 
         from pyspark import TaskContext
@@ -537,26 +548,25 @@ def encode_parquet_dir(
         block_id = 0
         n_blocks = n_rows = raw = enc_b = 0
         try:
-            for batch in batches:
-                for p, rg in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
-                    # use_threads=False: a Spark task owns ONE core; pyarrow's
-                    # default pool would oversubscribe the executor
-                    tbl = _pq.ParquetFile(p).read_row_group(
-                        rg, columns=file_cols, use_threads=False
-                    )
-                    tbl = _with_partition_columns(tbl, p, part_info)
-                    for off in range(0, tbl.num_rows, block_rows):
-                        chunk = tbl.slice(off, min(block_rows, tbl.num_rows - off))
-                        rb = _encode_chunk(chunk, all_cols, chosen, bloom, tid, block_id)
-                        block_id += 1
-                        if writer is None:
-                            writer = _pq.ParquetWriter(out.tmp, BLOCKS_SCHEMA,
-                                                       compression=compression)
-                        writer.write_batch(rb)
-                        n_blocks += rb.num_rows
-                        n_rows += chunk.num_rows
-                        raw += sum(rb.column("raw_bytes").to_pylist())
-                        enc_b += sum(rb.column("enc_bytes").to_pylist())
+            for p, rg in items:
+                # use_threads=False: a Spark task owns ONE core; pyarrow's
+                # default pool would oversubscribe the executor
+                tbl = _pq.ParquetFile(p).read_row_group(
+                    rg, columns=file_cols, use_threads=False
+                )
+                tbl = _with_partition_columns(tbl, p, part_info)
+                for off in range(0, tbl.num_rows, block_rows):
+                    chunk = tbl.slice(off, min(block_rows, tbl.num_rows - off))
+                    rb = _encode_chunk(chunk, all_cols, chosen, bloom, tid, block_id)
+                    block_id += 1
+                    if writer is None:
+                        writer = _pq.ParquetWriter(out.tmp, BLOCKS_SCHEMA,
+                                                   compression=compression)
+                    writer.write_batch(rb)
+                    n_blocks += rb.num_rows
+                    n_rows += chunk.num_rows
+                    raw += sum(rb.column("raw_bytes").to_pylist())
+                    enc_b += sum(rb.column("enc_bytes").to_pylist())
         finally:
             if writer is not None:
                 writer.close()
@@ -571,4 +581,4 @@ def encode_parquet_dir(
                 "ratio": round(raw / enc_b, 4) if enc_b else 0.0,
             }], schema=MANIFEST_SCHEMA)
 
-    return items_df.mapInArrow(enc_sink, schema=from_arrow_schema(MANIFEST_SCHEMA))
+    return map_slices(spark, slices, enc_sink, from_arrow_schema(MANIFEST_SCHEMA))

@@ -63,6 +63,27 @@ class TaskFile:
         return self.path
 
 
+def map_slices(spark: SparkSession, slices: list, fn, schema) -> DataFrame:
+    """The work-item frame of a scan-side job: task ``i`` of one
+    shuffle-free stage runs ``fn(slices[i])``, an iterator of Arrow record
+    batches in ``schema``, so ``TaskContext.partitionId()`` is ``i``.
+
+    The frame is built in the JVM: ``spark.range(0, n, 1, n)`` puts one id
+    in each partition, and each task looks its slice up in the closure.
+    Each task thus starts one Python worker, the ``mapInArrow`` one; a
+    ``parallelize`` frame starts a second one per task to emit the items.
+    PySpark broadcasts a pickled closure over 1 MB once per executor, so
+    a long slice list is not shipped with every task. No slices give an
+    empty frame."""
+    def run(batches):
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                yield from fn(slices[i])
+
+    n = len(slices)
+    return spark.range(0, n, 1, max(n, 1)).mapInArrow(run, schema)
+
+
 def _fmt_of(path: str, fmt: str | None) -> str:
     if fmt:
         return fmt
@@ -213,11 +234,11 @@ def write_parquet_arrow(df: DataFrame, path: str, compression: str = "zstd",
 
 
 def read_parquet_arrow(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed parquet scan through the pyarrow C++ reader (one task
-    per file): reads container codecs the JVM scan lacks (brotli). Schema
+    """Distributed parquet scan through the pyarrow C++ reader: task ``i``
+    reads file ``i`` of the sorted listing (:func:`map_slices`, one stage,
+    no shuffle). Reads container codecs the JVM scan lacks (brotli). Schema
     comes from the first file's footer; every batch is cast to it so mixed
     physical encodings across files still union."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from nail_parquet_spark.codec.decode import _spark_ddl_of
@@ -226,31 +247,26 @@ def read_parquet_arrow(spark: SparkSession, path: str) -> DataFrame:
     if not files:
         raise ValueError(f"no parquet files under {path}")
     schema = pq.read_schema(files[0])
-    ddl = _spark_ddl_of(schema)
-    rdd = spark.sparkContext.parallelize([[f] for f in files], len(files)) \
-        .flatMap(lambda s: [(p,) for p in s])
-    items = spark.createDataFrame(rdd, "path string")
 
-    def scan(batches):
+    def scan(p):
         import pyarrow.parquet as _pq
 
-        for batch in batches:
-            for p in batch.column(0).to_pylist():
-                pf = _pq.ParquetFile(p)
-                for g in range(pf.metadata.num_row_groups):
-                    tbl = pf.read_row_group(g, use_threads=False).cast(schema)
-                    yield from tbl.to_batches()
+        pf = _pq.ParquetFile(p)
+        for g in range(pf.metadata.num_row_groups):
+            tbl = pf.read_row_group(g, use_threads=False).cast(schema)
+            yield from tbl.to_batches()
 
-    return items.mapInArrow(scan, schema=ddl)
+    return map_slices(spark, files, scan, _spark_ddl_of(schema))
 
 
 def read_arrow_ipc(spark: SparkSession, path: str) -> DataFrame:
     """Distributed Arrow IPC / Feather-v2 scan (one task per file): the
     zero-copy interchange format pandas/polars/duckdb exchange. ``path`` is
     a single ``.arrow``/``.feather`` file or a directory of them (hidden
-    segments skipped, Spark's convention). Record batches stream through
-    ``mapInArrow`` — no JVM row conversion; the first file's schema wins
-    and every batch is cast to it."""
+    segments skipped, Spark's convention). Task ``i`` reads file ``i``
+    (:func:`map_slices`, one stage, no shuffle) and its record batches
+    stream through ``mapInArrow`` — no JVM row conversion; the first file's
+    schema wins and every batch is cast to it."""
     import glob as _glob
 
     import pyarrow.ipc as pi
@@ -272,22 +288,17 @@ def read_arrow_ipc(spark: SparkSession, path: str) -> DataFrame:
         raise ValueError(f"no .arrow/.feather files under {path}")
     with pi.open_file(files[0]) as rd:
         schema = rd.schema
-    ddl = _spark_ddl_of(schema)
-    items = spark.createDataFrame([(f,) for f in files],
-                                  "path string").repartition(len(files))
 
-    def scan(batches):
+    def scan(p):
         import pyarrow as _pa
         import pyarrow.ipc as _pi
 
-        for batch in batches:
-            for p in batch.column(0).to_pylist():
-                with _pi.open_file(p) as rd:
-                    for i in range(rd.num_record_batches):
-                        tbl = _pa.Table.from_batches([rd.get_batch(i)])
-                        yield from tbl.cast(schema).to_batches()
+        with _pi.open_file(p) as rd:
+            for i in range(rd.num_record_batches):
+                tbl = _pa.Table.from_batches([rd.get_batch(i)])
+                yield from tbl.cast(schema).to_batches()
 
-    return items.mapInArrow(scan, schema=ddl)
+    return map_slices(spark, files, scan, _spark_ddl_of(schema))
 
 
 def write_arrow_ipc(df: DataFrame, path: str, compression: str | None = "zstd",

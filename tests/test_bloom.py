@@ -44,6 +44,55 @@ def test_bloom_int_and_unsupported_kinds():
     assert not bloom_might_contain(b0, "x", "str")
 
 
+def _loop_bitmap(arr, k=7, bits_per_key=10, prefix_len=None, ngram_len=None):
+    """Oracle: the bitmap bytes of ``bloom_build`` as its per-key,
+    per-hash loop over ``bloom_lanes`` computed them."""
+    import pyarrow.compute as pc
+
+    from nail_parquet_spark.codec.bloom import (
+        _NGRAM_TAG, _PREFIX_TAG, bloom_lanes, canonical_bytes,
+    )
+    from nail_parquet_spark.codec.kernels import kind_of
+
+    kind = kind_of(arr.type)
+    vals = [canonical_bytes(v, kind) for v in pc.unique(arr.drop_null()).to_pylist()]
+    keys = list(vals)
+    if prefix_len:
+        keys.extend({_PREFIX_TAG + b[:prefix_len] for b in vals})
+    if ngram_len:
+        keys.extend({_NGRAM_TAG + b[i:i + ngram_len]
+                     for b in vals for i in range(len(b) - ngram_len + 1)})
+    m_bits = max(64, ((bits_per_key * max(len(keys), 1) + 7) // 8) * 8)
+    bits = np.zeros(m_bits // 8, dtype=np.uint8)
+    for b in keys:
+        h1, h2 = bloom_lanes(b)
+        for j in range(k):
+            pos = (h1 + j * h2) % m_bits
+            bits[pos >> 3] |= np.uint8(1 << (pos & 7))
+    return bits.tobytes()
+
+
+_URLS = pa.array([f"https://h{i % 97}.example.com/p/{i * 7919 % 8192}?q={i}"
+                  for i in range(8192)] + [None])
+
+
+@pytest.mark.parametrize("arr, kw", [
+    (_URLS, {}),
+    (_URLS, {"prefix_len": 20}),
+    (_URLS.slice(0, 300), {"ngram_len": 4}),
+    (pa.array([int(v) for v in rng.integers(-2**62, 2**62, 5000)] + [None, 0, -1],
+              pa.int64()), {}),
+    (pa.array([None] * 5, pa.string()), {}),
+    (_URLS.slice(0, 500), {"k": 1}),
+    (_URLS.slice(0, 500), {"k": 63}),
+], ids=["str", "str-prefix", "str-ngram", "int", "all-null", "k1", "k63"])
+def test_bloom_build_matches_loop_oracle(arr, kw):
+    b = bloom_build(arr, **kw)
+    m_bits = int.from_bytes(b[1:5], "big")
+    assert b[0] & 0x3F == kw.get("k", 7)
+    assert b[5:5 + m_bits // 8] == _loop_bitmap(arr, **kw)
+
+
 _HOSTS = pa.array([f"host{i:03d}/path/{i}" for i in range(256)])
 _STR_BLOOMS = [bloom_build(_HOSTS), bloom_build(_HOSTS, prefix_len=12),
                bloom_build(_HOSTS, prefix_len=3), bloom_build(_HOSTS, ngram_len=4),

@@ -338,6 +338,53 @@ def test_dataframe_and_parquet_samplers_agree(spark, tmp_path):
     assert headers(pinned, "auto") == headers({**chosen, **pinned}, "forced")
 
 
+def test_dataframe_sampler_is_one_task_limit(spark, tmp_path, monkeypatch):
+    """``_sample_df`` returns the rows of a plain ``limit(n)`` collect (the
+    oracle) in one job of one stage and one task, and a filtered frame
+    with fewer than ``n`` rows whole."""
+    import pyarrow.parquet as pq
+
+    from nail_parquet_spark.codec import encode
+    from nail_parquet_spark.synth import make_webpages_batch
+
+    src = tmp_path / "pages"
+    src.mkdir()
+    for i, n_rows in enumerate([700, 500, 900]):
+        pq.write_table(pa.Table.from_batches(
+            [make_webpages_batch(40 + i, 0, n_rows)]), str(src / f"p{i}.parquet"))
+    df = spark.read.parquet(str(src))
+    assert df.rdd.getNumPartitions() >= 3
+    # more rows than the largest file: the sample spans two partitions
+    monkeypatch.setattr(encode, "SAMPLE_ROWS", 1_200)
+    cols, pinned = ["url", "lang"], {"warc_ts": "for_bitpack"}
+
+    sc = spark.sparkContext
+    sc.setJobGroup("sample-df-test", "sampler cost")
+    try:
+        got = encode._sample_df(df, cols, pinned)
+    finally:
+        sc.setJobGroup("", "")
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("sample-df-test")
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    assert len(jobs) == 1 and len(stages) == 1
+    assert tracker.getStageInfo(stages[0]).numTasks == 1
+
+    want = df.select("url", "lang", "warc_ts").limit(1_200).toArrow()
+    assert list(got) == ["url", "lang", "warc_ts"]
+    for c in got:
+        assert got[c].equals(want.column(c).combine_chunks()), c
+
+    few = df.filter(F.col("lang") == "de")
+    n_few = few.count()
+    assert 0 < n_few < 1_200
+    got = encode._sample_df(few, cols, pinned)
+    want = few.select("url", "lang", "warc_ts").limit(1_200).toArrow()
+    assert all(len(a) == n_few for a in got.values())
+    for c in got:
+        assert got[c].equals(want.column(c).combine_chunks()), c
+
+
 def test_compact_blocks_rekeys_and_preserves_groups(spark, tmp_path):
     """Compaction merges many small block files from SEVERAL encode jobs
     (colliding part ids) into few files with globally unique group ids and
