@@ -1,21 +1,30 @@
 """Driver-side block index: one metadata read per blocks-table op.
 
-:meth:`BlockIndex.load` reads the non-payload columns of every block in ONE
-Spark action (a plain select, like a parquet footer fetch) and parses them
-once into one header per column, the xref references and per-codec null
-facts, and per column one stat row per block (:class:`Block`). Zone-map
-pruning, count classification and top-k bounds decide on the driver over
-those rows (:mod:`codec.zonemap`). Bloom probes run inside the same select
-(:func:`codec.bloom.bloom_probe`), one verdict column per probed
-predicate, so bitmaps and payloads never reach the driver.
+:meth:`BlockIndex.load` reads the non-payload columns of every block and
+parses them once into one header per column, the xref references and
+per-codec null facts, and per column one stat row per block
+(:class:`Block`). Zone-map pruning, count classification and top-k bounds
+decide on the driver over those rows (:mod:`codec.zonemap`), and each
+probed predicate adds one bloom verdict per block, so bitmaps never leave
+the reader and payloads are never read.
 
-Each partition sends at most its share of ``max_groups + 1`` rows; when
-one fills its share, an exact group count decides. Over ``max_groups``
-groups the index keeps no per-block rows, takes its headers from a grouped
-read of (column, codec, xref reference) and prunes nothing (never wrong,
-only unpruned); under it one full read follows. Headers-only loads share a
-small fixed budget, then take the grouped read. :meth:`from_files` feeds
-the same parse from pyarrow reads of block files, with no Spark job.
+The read runs on the driver, with no Spark job, when the blocks frame is a
+bare scan of at most ``_DRIVER_HEADER_MAX_FILES`` local parquet files
+whose footers count fewer rows than the budget below: pyarrow reads the
+metadata columns (milliseconds for tens of files), and
+:func:`codec.bloom.bloom_admits` judges the probed column's bitmaps.
+Every other frame (in-memory encode output, filtered or cached frames,
+other sources, remote files, larger tables) takes ONE Spark action, a
+plain select with one verdict Column per probed predicate
+(:func:`codec.bloom.bloom_probe`). Both give the same index.
+
+In the Spark read each partition sends at most its share of
+``max_groups + 1`` rows; when one fills its share, an exact group count
+decides. Over ``max_groups`` groups the index keeps no per-block rows,
+takes its headers from a grouped read of (column, codec, xref reference)
+and prunes nothing (never wrong, only unpruned); under it one full read
+follows. Headers-only loads share a small fixed budget, then take the
+grouped read.
 """
 
 from __future__ import annotations
@@ -36,6 +45,11 @@ BLOOM_OPS = ("=", "==", "in", "prefix", "contains")
 _POS_MASK = (1 << 33) - 1
 # metadata rows a headers-only load reads before it takes the grouped read
 _HEADER_ROWS = 4096
+# Above this many files a blocks table is indexed by a Spark job, not by
+# the driver's pyarrow reads: those are O(files) sequential driver IO —
+# fine for a per-job blocks dir (tens of files), wrong for a 100k-file
+# lake table.
+_DRIVER_HEADER_MAX_FILES = 256
 
 
 class Block(NamedTuple):
@@ -87,6 +101,37 @@ def _collect_within(frame: DataFrame, n_parts: int, budget: int):
     return [r[:-1] for r in rows]
 
 
+def _driver_files(blocks: DataFrame) -> list[str] | None:
+    """The files of ``blocks`` when the driver may read its index itself:
+    the optimized plan is a bare parquet scan (no filter, projection, join
+    or cache above it) of at most ``_DRIVER_HEADER_MAX_FILES`` local
+    files. None otherwise."""
+    try:
+        plan = blocks._jdf.queryExecution().optimizedPlan()
+    except AttributeError:  # a Spark Connect frame has no JVM plan
+        return None
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().getClass().getSimpleName()
+            != "ParquetFileFormat"):
+        return None
+    files = blocks.inputFiles()
+    if (len(files) > _DRIVER_HEADER_MAX_FILES
+            or not all(f.startswith("file:") for f in files)):
+        return None
+    return files
+
+
+def _local_path(f: str) -> str:
+    """The local path of a ``file:`` URI (as ``inputFiles()`` returns it:
+    percent-encoded); other strings are paths already."""
+    from urllib.parse import unquote, urlparse
+
+    return unquote(urlparse(f).path) if f.startswith("file:") else f
+
+
 class BlockIndex:
     """Headers, xref references, codec facts and (under the cap) per-block
     stat rows and bloom verdicts of one blocks table."""
@@ -109,60 +154,103 @@ class BlockIndex:
     @classmethod
     def load(cls, blocks: DataFrame, max_groups: int = 100_000,
              probes=(), stats: bool = True) -> "BlockIndex":
-        """Index ``blocks``, in one Spark action unless a partition fills
-        its share of the row budget. ``probes``: predicates ``(column, op,
-        value)`` whose bloom verdicts the read projects; only ``BLOOM_OPS``
-        on a table with a ``bloom`` column probe. ``stats=False`` asks for
-        headers, refs and codec facts only."""
+        """Index ``blocks``. ``probes``: predicates ``(column, op, value)``
+        whose bloom verdicts the read adds; only ``BLOOM_OPS`` on a table
+        with a ``bloom`` column probe. ``stats=False`` asks for headers,
+        refs and codec facts only.
+
+        A bare scan of at most ``_DRIVER_HEADER_MAX_FILES`` local parquet
+        files whose footers count fewer rows than the budget (``max_groups
+        + 1`` with stats, ``_HEADER_ROWS`` without) is read on the driver
+        by :meth:`from_files`: no Spark job, a footer read and then one
+        read of the metadata columns per file (milliseconds for tens of
+        files). Any other frame takes one Spark action, unless a partition
+        fills its share of the budget."""
         tz = blocks.sparkSession.conf.get("spark.sql.session.timeZone")
-        cols, verdicts = [], []
+        cols = []
         if stats and "bloom" in blocks.columns:
             for c, op, v in probes:
                 kind = bloom.literal_kind(v) if op in BLOOM_OPS else None
-                probe = bloom.bloom_probe(op, v, kind) if kind else None
-                if probe is not None:
+                if kind and bloom.probe_lanes(op, v, kind) is not None:
                     cols.append((c, op, v, kind))
-                    verdicts.append(F.when(F.col("column") == c, probe))
+        budget = max_groups + 1 if stats else _HEADER_ROWS
+        files = _driver_files(blocks)
+        if files is not None:
+            idx = cls.from_files(files, cols, max_groups, tz,
+                                 max_rows=budget - 1)
+            if idx is not None:
+                return idx
         frame = _src_expr_frame(blocks)
+        verdicts = [F.when(F.col("column") == c, bloom.bloom_probe(op, v, kind))
+                    for c, op, v, kind in cols]
         meta = frame.select("__src", *META_COLUMNS, *verdicts)
-        rows = _collect_within(meta, blocks.rdd.getNumPartitions(),
-                               max_groups + 1 if stats else _HEADER_ROWS)
+        rows = _collect_within(meta, blocks.rdd.getNumPartitions(), budget)
         if rows is None:
             if not stats or (frame.select("__src", "part_id", "block_id")
                              .distinct().count() > max_groups):
-                return cls._grouped(blocks, tz)
+                return cls._grouped(frame, tz)
             rows = meta.collect()
         return cls._parse(rows, max_groups, cols, tz)
 
     @classmethod
-    def from_files(cls, files: list[str]) -> "BlockIndex":
+    def from_files(cls, files: list[str], probes=(),
+                   max_groups=float("inf"), tz: str | None = None,
+                   max_rows=float("inf")) -> "BlockIndex | None":
         """The index of block files read with pyarrow on the driver: every
-        file's rows, so mixed codecs across resumed jobs are all seen."""
+        file's rows, so mixed codecs across resumed jobs are all seen.
+        ``files`` are paths or ``file:`` URIs, and each row's source key is
+        the string as given. ``probes`` are the index's ``(column, op,
+        value, kind)``: for the probed column's rows the ``bloom`` bitmap is
+        judged by :func:`codec.bloom.bloom_admits`, and a file without a
+        ``bloom`` column reads as NULL bitmaps. None when the footers count
+        more than ``max_rows`` rows; no column is read then."""
         import pyarrow.parquet as pq
 
-        def records():
-            for f in files:
-                t = pq.read_table(f, columns=META_COLUMNS, use_threads=False)
-                yield from zip([f] * t.num_rows,
-                               *(t.column(c).to_pylist() for c in META_COLUMNS))
+        paths = [_local_path(f) for f in files]
+        metas = [pq.read_metadata(p) for p in paths]
+        if sum(m.num_rows for m in metas) > max_rows:
+            return None
+        lanes = [(c, op, bloom.probe_lanes(op, v, kind))
+                 for c, op, v, kind in probes]
 
-        return cls._parse(records(), float("inf"), [], None)
+        def records():
+            for f, p, m in zip(files, paths, metas):
+                has_bloom = bool(lanes) and "bloom" in m.schema.names
+                t = pq.read_table(p, columns=META_COLUMNS + ["bloom"] * has_bloom,
+                                  use_threads=False)
+                cols = t.column("column").to_pylist()
+                bitmaps = t.column("bloom") if has_bloom else None
+                verdicts = [
+                    [bloom.bloom_admits(bitmaps[i].as_py() if has_bloom else None,
+                                        op, ln) if col == c else None
+                     for i, col in enumerate(cols)]
+                    for c, op, ln in lanes]
+                yield from zip([f] * t.num_rows,
+                               *(t.column(c).to_pylist() for c in META_COLUMNS),
+                               *verdicts)
+
+        return cls._parse(records(), max_groups, probes, tz)
 
     @classmethod
-    def _grouped(cls, blocks: DataFrame, tz: str | None) -> "BlockIndex":
-        """Headers only, from one row per (column, codec, xref reference):
-        a grouped read whose size does not grow with the table."""
+    def _grouped(cls, frame: DataFrame, tz: str | None) -> "BlockIndex":
+        """Headers only, from one row per (column, codec, xref reference)
+        of ``frame`` (the blocks with their ``__src``): a grouped read
+        whose size does not grow with the table. Each row carries the
+        header of its first block in key order, as :meth:`_parse` reads
+        them."""
         ref = F.when(F.col("codec").startswith("xref"),
                      F.get_json_object("header", "$.params.ref"))
+        key = F.struct("__src", "part_id", "block_id")
         rows = (
-            blocks.select("column", "codec", ref.alias("__ref"), "header",
-                          "null_count")
+            frame.select("column", "codec", ref.alias("__ref"), "header",
+                         "null_count", key.alias("__key"))
             .groupBy("column", "codec", "__ref")
-            .agg(F.first("header").alias("header"),
+            .agg(F.min_by("header", "__key").alias("header"),
+                 F.min("__key").alias("__key"),
                  F.max("null_count").alias("max_null"))
             .collect())
         idx = cls({}, {}, {}, tz=tz)
-        for r in rows:
+        for r in sorted(rows, key=lambda r: tuple(r["__key"])):
             idx._add_header(r["column"], r["codec"], r["header"], r["max_null"])
         return idx
 
@@ -170,9 +258,13 @@ class BlockIndex:
     def _parse(cls, records, max_groups, probes, tz) -> "BlockIndex":
         """Build the index from ``(src, part_id, block_id, column, codec,
         n_rows, null_count, min_val, max_val, header, *verdicts)``
-        records."""
+        records, taken in key order."""
         idx = cls({}, {}, {}, {}, probes, tz)
         groups = set()
+        # key order, not read order: the Spark and driver reads see the
+        # rows in different orders, a column's header is its first block's,
+        # and top-k bounds break ties by position
+        records = sorted(records, key=lambda r: tuple(r[:3]))
         for src, pid, bid, col, codec, n, nulls, lo, hi, hdr, *v in records:
             key = (src, pid, bid)
             groups.add(key)

@@ -8,12 +8,14 @@ filters; this is the block-engine analogue: an opt-in, per-(column, block)
 bloom bitmap stored in the ``bloom`` column of the blocks table, consulted
 for ``=``, ``in``, ``prefix`` and ``contains`` predicates.
 
-- Bitmaps never reach the driver, and never ride with the payload. The
-  driver hashes the probe keys once; :func:`bloom_probe` turns them into
-  one Column (a higher-order ``exists`` over an array literal of the key
-  hashes) that the block index (:mod:`codec.blockindex`) projects next to
-  the other metadata columns, so one metadata read returns a verdict per
-  block.
+- Bitmaps never ride with the payload, and a Spark read never sends them
+  to the driver. The driver hashes the probe keys once
+  (:func:`probe_lanes`); :func:`bloom_probe` turns them into one Column (a
+  higher-order ``exists`` over an array literal of the key hashes) that
+  the block index (:mod:`codec.blockindex`) projects next to the other
+  metadata columns, so one metadata read returns a verdict per block. When
+  the index reads a local table's files on the driver itself,
+  :func:`bloom_admits` gives the same verdict from the same hashes.
 - Each block is probed with its own stored ``k``, prefix length P and
   n-gram length N, so tables mixing bloom specs need no discovery pass.
 - :func:`bloom_might_contain` is the Python twin of the Column probe and
@@ -221,9 +223,13 @@ def bloom_might_contain(bloom: bytes, value, kind: str,
 
 def _probe_raw(bloom: bytes, key: bytes) -> bool:
     """Raw key membership probe against one bitmap (no canonicalization)."""
+    return _lanes_set(bloom, *bloom_lanes(key))
+
+
+def _lanes_set(bloom: bytes, h1: int, h2: int) -> bool:
+    """Are all ``k`` bits of the key with lanes ``(h1, h2)`` set?"""
     k = bloom[0] & ~_FLAGS_MASK
     m_bits = int.from_bytes(bloom[1:5], "big")
-    h1, h2 = bloom_lanes(key)
     for j in range(k):
         p = (h1 + j * h2) % m_bits
         if not (bloom[5 + (p >> 3)] >> (p & 7)) & 1:
@@ -271,6 +277,35 @@ def _probe_alternatives(op: str, value, kind: str):
     return alts or None
 
 
+def probe_lanes(op: str, value, kind: str):
+    """:func:`_probe_alternatives` with every key hashed to its lanes:
+    ``[(n, [(h1, h2), ...]), ...]``, or None when the predicate cannot be
+    probed. Both verdicts, the Column's and :func:`bloom_admits`, read
+    these."""
+    alts = _probe_alternatives(op, value, kind)
+    if alts is None:
+        return None
+    return [(n, [bloom_lanes(k) for k in keys]) for n, keys in alts]
+
+
+def bloom_admits(bloom: bytes | None, op: str, lanes) -> bool:
+    """The verdict of :func:`bloom_probe`'s Column on one bitmap, in
+    Python: ``lanes`` are :func:`probe_lanes` of the predicate. Only the
+    alternatives whose n equals the bitmap's own key length for ``op``
+    apply; with none, the block may match."""
+    if bloom is None:
+        return True
+    if op == "prefix":
+        own = bloom_prefix_len_of(bloom) or -1
+    elif op == "contains":
+        own = bloom_ngram_len_of(bloom) or -1
+    else:
+        own = 0
+    hits = [keys for n, keys in lanes if n == own]
+    return not hits or any(all(_lanes_set(bloom, h1, h2) for h1, h2 in keys)
+                           for keys in hits)
+
+
 def _byte(bloom, pos):
     """Byte ``pos`` (1-based; negative counts from the end) of a bitmap."""
     return F.conv(F.hex(bloom.substr(pos, F.lit(1))), 16, 10).cast("int")
@@ -283,13 +318,14 @@ def bloom_probe(op: str, value, kind: str):
     cannot be probed. A NULL bitmap is always true.
 
     The keys are hashed on the driver into one array literal of
-    :func:`_probe_alternatives`; a higher-order ``exists`` probes each block
-    with its own stored ``k``, P and N. The verdict equals
-    :func:`bloom_might_contain`'s, except that a ``contains`` query with
+    :func:`probe_lanes`, parsed from one SQL string; a higher-order
+    ``exists`` probes each block with its own stored ``k``, P and N. The
+    verdict equals :func:`bloom_admits`'s, and
+    :func:`bloom_might_contain`'s except that a ``contains`` query with
     more than ``_NGRAM_PROBE_CAP`` grams probes a strided subset, which may
     keep a block the twin drops — never the reverse."""
-    alts = _probe_alternatives(op, value, kind)
-    if alts is None:
+    lanes = probe_lanes(op, value, kind)
+    if lanes is None:
         return None
     b = F.col("bloom")
     b0 = _byte(b, F.lit(1))
@@ -304,12 +340,13 @@ def bloom_probe(op: str, value, kind: str):
     own = F.coalesce(own, F.lit(-1))
     k = b0.bitwiseAND(0xFF & ~_FLAGS_MASK)
     m = F.conv(F.hex(b.substr(F.lit(2), F.lit(4))), 16, 10).cast("bigint")
-    lit = F.array(*[
-        F.struct(F.lit(n).alias("n"), F.array(*[
-            F.struct(F.lit(h1).cast("bigint").alias("h1"),
-                     F.lit(h2).cast("bigint").alias("h2"))
-            for h1, h2 in map(bloom_lanes, keys)]).alias("keys"))
-        for n, keys in alts])
+    # one parse of an all-integer SQL literal: a nested F.lit/F.struct
+    # build costs a py4j round trip per value
+    lit = F.expr("array(%s)" % ", ".join(
+        "named_struct('n', %d, 'keys', array(%s))" % (n, ", ".join(
+            "named_struct('h1', CAST(%d AS BIGINT), 'h2', CAST(%d AS BIGINT))"
+            % hk for hk in keys))
+        for n, keys in lanes))
 
     def bit_set(key):
         # 57-bit lanes keep h1 + j*h2 inside a bigint for every j < 63

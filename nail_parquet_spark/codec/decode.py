@@ -14,16 +14,10 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from nail_parquet_spark.codec import zonemap
-from nail_parquet_spark.codec.blockindex import BlockIndex, _src_expr_frame
+from nail_parquet_spark.codec.blockindex import (_DRIVER_HEADER_MAX_FILES,
+                                                 BlockIndex, _src_expr_frame)
 from nail_parquet_spark.codec.kernels import EncodedBlock, decode_array
 from nail_parquet_spark.sources.io import TaskFile, map_slices
-
-
-# Above this file count, decode_parquet_dir indexes the blocks with a Spark
-# job instead of the driver's pyarrow reads: those are O(files) sequential
-# driver IO — fine for a per-job blocks dir (tens of files), wrong for a
-# 100k-file lake table.
-_DRIVER_HEADER_MAX_FILES = 256
 
 
 def _schema_from_headers(headers: dict[str, dict], columns: list[str]) -> pa.Schema:
@@ -264,13 +258,15 @@ def decode_table(blocks: DataFrame, columns: list[str] | None = None,
 
     DETERMINISM CONTRACT: ``blocks`` must evaluate to the same rows on
     every action (file-backed, cached, or checkpointed). Decode and its
-    pushdown variants run MORE THAN ONE job over the plan (the metadata
-    read of :class:`codec.blockindex.BlockIndex`, then the payload
-    decode); an uncached in-memory plan downstream of a sampling shuffle
+    pushdown variants read the plan MORE THAN ONCE (the metadata read of
+    :class:`codec.blockindex.BlockIndex`, then the payload decode job); an
+    uncached in-memory plan downstream of a sampling shuffle
     (``repartitionByRange``'s boundaries re-draw per action) can shift
-    rows between groups across those jobs and corrupt results. This is
+    rows between groups across those reads and corrupt results. This is
     Spark's own repeatability contract, restated here because the failure
-    is silent.
+    is silent. For a bare scan of local parquet files the metadata read is
+    a driver read of the same files, not a Spark job; files rewritten
+    between the two reads break the contract the same way.
 
     ``headers``/``refs`` (optional): those of a
     :class:`codec.blockindex.BlockIndex` the caller already loaded for THIS

@@ -146,26 +146,23 @@ WEBPAGES_SCHEMA = pa.schema(
 
 def webpages_spark(spark, n_rows: int, seed: int = 42, n_parts: int | None = None,
                    n_hosts: int = 1000):
-    """Distributed synthesis: each Spark partition generates its row range via
-    mapInArrow — no data ever funnels through the driver."""
-    from pyspark.sql import functions as F
+    """Distributed synthesis: task i of one shuffle-free stage generates row
+    range i via mapInArrow — no data ever funnels through the driver."""
+    from nail_parquet_spark.sources.io import map_slices
 
     if n_parts is None:
         n_parts = max(1, spark.sparkContext.defaultParallelism)
     rows_per = (n_rows + n_parts - 1) // n_parts
     ranges = [(i * rows_per, min((i + 1) * rows_per, n_rows)) for i in range(n_parts)]
     ranges = [r for r in ranges if r[1] > r[0]]
-    rdf = spark.createDataFrame(ranges, "start long, end long").repartition(len(ranges), "start")
 
-    def gen(batches):
-        for batch in batches:
-            starts = batch.column("start").to_pylist()
-            ends = batch.column("end").to_pylist()
-            for s, e in zip(starts, ends):
-                for cs in range(s, e, 65536):
-                    yield make_webpages_batch(seed, cs, min(65536, e - cs), n_hosts=n_hosts)
+    def gen(r):
+        s, e = r
+        for cs in range(s, e, 65536):
+            yield make_webpages_batch(seed, cs, min(65536, e - cs), n_hosts=n_hosts)
 
-    return rdf.mapInArrow(gen, schema="url string, warc_ts timestamp, html binary, text string, lang string")
+    return map_slices(spark, ranges, gen,
+                      "url string, warc_ts timestamp, html binary, text string, lang string")
 
 
 def webpages_pandas(n_rows: int, seed: int = 42, n_hosts: int = 1000):

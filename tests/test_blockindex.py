@@ -135,3 +135,138 @@ def test_cap_counts_groups_not_rows(spark, small):
             [[("k", "=", 5)]]) == {(0, 1)}
     got = count_where_pushdown(blocks, "k", ">=", 13, max_groups=12)
     assert (got["count"], got["groups_decoded"]) == (27, 1)
+
+
+_PROBES = [("url", "=", "https://h07.example/p/329"),
+           ("url", "==", "https://nowhere.example/p/1"),
+           ("url", "in", [f"https://h{i % 40:02d}.example/p/{i * 7}"
+                          for i in range(50)]),
+           ("url", "prefix", "https://h1"),
+           ("url", "prefix", "https://h99.example/p/9900000000000000000000"),
+           ("url", "contains", "h21.example/p/21"),
+           ("url", "contains", "xample/"),
+           ("k", "=", 70), ("k", "in", [1, 2, 599])]
+
+
+@pytest.fixture(scope="module")
+def on_disk(spark, tmp_path_factory):
+    """A 600-row source in 3 files of 2 row groups each, and its blocks
+    tables (50-row groups) with a plain url bloom and with a url bloom
+    carrying prefix and n-gram keys."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nail_parquet_spark.codec.encode import encode_parquet_dir
+
+    root = tmp_path_factory.mktemp("driver index")
+    src = root / "src"
+    src.mkdir()
+    for f in range(3):
+        ids = list(range(f * 200, (f + 1) * 200))
+        pq.write_table(pa.table({
+            "url": [f"https://h{i % 40:02d}.example/p/{i * 7}" for i in ids],
+            "k": pa.array(ids, pa.int64())}),
+            str(src / f"p{f}.parquet"), row_group_size=100)
+    tables = {}
+    for name, spec in (("eq", ["url"]), ("grams", ["url:12:g4"])):
+        out = str(root / name)
+        encode_parquet_dir(spark, str(src), out, codecs={"url": "zstd",
+                                                         "k": "for_bitpack"},
+                           block_rows=50, bloom_columns=spec).collect()
+        tables[name] = out
+    return spark.read.parquet(str(src)), tables
+
+
+def _fields(idx):
+    return (idx.headers, idx.refs, idx.codecs, idx.blocks, idx.n_groups,
+            idx.probes)
+
+
+def _with_jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"blockindex-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("table", ["eq", "grams"])
+@pytest.mark.parametrize("max_groups, stats", [(100_000, True), (5, True),
+                                               (100_000, False)])
+def test_driver_index_equals_spark_read(spark, on_disk, table, max_groups,
+                                        stats):
+    # a bare scan is indexed on the driver; the same frame behind a no-op
+    # filter takes the Spark read, and both give the same index, bloom
+    # verdicts and source keys included
+    _, tables = on_disk
+    bare = spark.read.parquet(tables[table])
+    probes = _PROBES if stats else ()
+    got, jobs = _with_jobs(spark, lambda: BlockIndex.load(
+        bare, max_groups, probes=probes, stats=stats))
+    want, spark_jobs = _with_jobs(spark, lambda: BlockIndex.load(
+        bare.filter(F.col("n_rows") >= 0), max_groups, probes=probes,
+        stats=stats))
+    assert _fields(got) == _fields(want)
+    assert spark_jobs > 0
+    if max_groups > 12:
+        assert jobs == 0 and got.n_groups == 12
+        srcs = {b.key[0] for bs in got.blocks.values() for b in bs}
+        assert srcs == set(bare.inputFiles())
+    else:
+        assert got.blocks is None  # 12 groups over a cap of 5
+    if stats and max_groups > 12:
+        assert [op for _, op, _, _ in got.probes] == [op for _, op, _ in _PROBES]
+        pruned = [[b.blooms[i] for b in got.blocks["url"]].count(False)
+                  for i in range(len(_PROBES))]
+        # =, ==, in prune on any url bloom; prefix (12-byte keys) and
+        # contains (4-grams) only where the bloom carries their keys
+        assert pruned == ([11, 12, 7] + [0] * 6 if table == "eq"
+                          else [11, 12, 10, 0, 12, 10, 0, 0, 0])
+        assert all(b.blooms == (None,) * 7 + (True,) * 2
+                   for b in got.blocks["k"])
+
+
+def test_driver_index_ops_equal_plain_spark(spark, on_disk):
+    src, tables = on_disk
+    rows = lambda df: sorted(df.select("url", "k").collect())  # noqa: E731
+    urls = _PROBES[2][2] + ["https://nowhere"]
+    keys = spark.createDataFrame([(u,) for u in urls], "url string")
+    bare = spark.read.parquet(tables["grams"])
+    for clauses, want in (
+            ([("url", "=", "https://h07.example/p/329")],
+             F.col("url") == "https://h07.example/p/329"),
+            ([("url", "contains", "h21.example/p/21"), ("k", ">=", 100)],
+             F.col("url").contains("h21.example/p/21")
+             & (F.col("k") >= 100))):
+        assert (rows(decode_table_where_all(bare, clauses))
+                == rows(src.filter(want)))
+    got = count_where_pushdown(bare, "k", ">=", 333)
+    assert got["count"] == src.filter(F.col("k") >= 333).count()
+    assert (rows(decode_semijoin(bare, keys, "url"))
+            == rows(src.join(keys, "url", "left_semi")))
+
+
+def test_other_frames_take_the_spark_read(spark, on_disk, monkeypatch):
+    # a filtered frame, more files than the driver reads, and a footer row
+    # count over the budget each take the Spark read, with the same index
+    _, tables = on_disk
+    bare = spark.read.parquet(tables["grams"])
+    want = BlockIndex.load(bare, probes=_PROBES)
+    n_rows = sum(len(bs) for bs in want.blocks.values())
+    assert n_rows > want.n_groups == 12
+    for frame, max_groups in ((bare.filter(F.col("n_rows") >= 0), 100_000),
+                              (bare, want.n_groups)):
+        got, jobs = _with_jobs(spark, lambda: BlockIndex.load(
+            frame, max_groups, probes=_PROBES))
+        assert jobs > 0 and _fields(got) == _fields(want)
+    monkeypatch.setattr(blockindex, "_DRIVER_HEADER_MAX_FILES",
+                        len(bare.inputFiles()) - 1)
+    got, jobs = _with_jobs(spark, lambda: BlockIndex.load(
+        spark.read.parquet(tables["grams"]), probes=_PROBES))
+    assert jobs > 0 and _fields(got) == _fields(want)

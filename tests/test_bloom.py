@@ -7,10 +7,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from nail_parquet_spark.codec.bloom import (
+    _NGRAM_PROBE_CAP,
+    bloom_admits,
     bloom_build,
     bloom_might_contain,
+    bloom_ngram_len_of,
     bloom_probe,
     expected_fpp,
+    probe_lanes,
 )
 from nail_parquet_spark.codec.decode import (
     decode_table_where,
@@ -109,23 +113,32 @@ _ABSENT = [f"nope{i:03d}/path/{i}" for i in range(60)]
     ("in", "str", [_PRESENT[:30] + _ABSENT[:30], _ABSENT, [_PRESENT[5]]]),
     ("in", "int", [list(range(1000, 1060)), list(range(1000, 1059)) + [42]]),
     ("prefix", "str", ["host012/pa", "host0", "ho", "nope012/pa", "host250/path/x",
-                       "zz", "host1"]),
+                       "zz", "host1", "host012/path/12/and/a/long/tail/to/read",
+                       "nope012/path/12/and/a/long/tail/to/read"]),
     ("contains", "str", ["012/pa", "th/1", "zzzz", "t07", "ost25", "nope/",
-                         "h/250"]),
+                         "h/250", "host012/path/12", "nope012/path/12x"]),
 ], ids=["eq-str", "eq-int", "in-str", "in-int", "prefix", "contains"])
 def test_bloom_column_probe_matches_python(spark, op, kind, queries):
     # blocks with mixed prefix (P) and n-gram (N) key lengths and NULL
     # blooms, probed in one select: a 60-key IN, prefixes and substrings
-    # each read the block's own stored P/N
+    # (up to 40 bytes, and more grams than the probe's cap) each read the
+    # block's own stored P/N. The driver's verdict equals the Column's.
     blooms = _STR_BLOOMS if kind == "str" else _INT_BLOOMS
     df = spark.createDataFrame(list(enumerate(blooms)), "i int, bloom binary")
     got = df.select("i", *[bloom_probe(op, q, kind).alias(f"q{j}")
                            for j, q in enumerate(queries)]).orderBy("i").collect()
     for j, q in enumerate(queries):
+        lanes = probe_lanes(op, q, kind)
         for i, b in enumerate(blooms):
+            col = got[i][f"q{j}"]
+            assert bloom_admits(b, op, lanes) == col, (op, q, i)
             want = (any(bloom_might_contain(b, v, kind) for v in q) if op == "in"
                     else bloom_might_contain(b, q, kind, op=op))
-            assert got[i][f"q{j}"] == want, (op, q, i)
+            n = bloom_ngram_len_of(b) if op == "contains" else None
+            if n and len(q) - n + 1 > _NGRAM_PROBE_CAP:
+                assert col or not want, (op, q, i)  # a strided gram subset
+            else:
+                assert col == want, (op, q, i)
 
 
 def _blocks(spark, n=2000):

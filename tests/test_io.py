@@ -243,3 +243,27 @@ def test_scan_side_jobs_run_over_a_range_frame(spark, tmp_path):
             w.write_table(want.slice(i * 450, 450))
     back = plan(read_arrow_ipc(spark, str(ipc)))
     assert back.toArrow().column("url").equals(want.column("url"))
+
+
+@pytest.mark.parametrize("n_parts, digest", [
+    (16, "3977ef19fe64345acd97b679780bea5c760a6899fd839e33acf93ef3df9eb112"),
+    (3, "870c19e8bb07f791ce9a8fb41c1724b04027bf8e8a5fcae616d0d92d6dce109b"),
+])
+def test_webpages_spark_one_range_per_task(spark, n_parts, digest):
+    """Task i generates row range i: per-partition row counts are the
+    range sizes (a hash repartition of the ranges left some partitions
+    empty and stacked several ranges on others), and the rows are those of
+    the shuffled frame, whatever their order (``digest``)."""
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from nail_parquet_spark.synth import webpages_spark
+
+    df = webpages_spark(spark, 2_000, seed=3, n_parts=n_parts)
+    sizes = dict(df.groupBy(F.spark_partition_id()).count().collect())
+    per = -(-2_000 // n_parts)
+    assert sizes == {i: min(per, 2_000 - i * per) for i in range(n_parts)}
+    rows = sorted(hashlib.md5(repr(tuple(r)).encode()).hexdigest()
+                  for r in df.collect())
+    assert hashlib.sha256("".join(rows).encode()).hexdigest() == digest
