@@ -10,13 +10,16 @@ the reader and payloads are never read.
 
 The read runs on the driver, with no Spark job, when the blocks frame is a
 bare scan of at most ``_DRIVER_HEADER_MAX_FILES`` local parquet files
-whose footers count fewer rows than the budget below: pyarrow reads the
-metadata columns (milliseconds for tens of files), and
-:func:`codec.bloom.bloom_admits` judges the probed column's bitmaps.
-Every other frame (in-memory encode output, filtered or cached frames,
-other sources, remote files, larger tables) takes ONE Spark action, a
-plain select with one verdict Column per probed predicate
-(:func:`codec.bloom.bloom_probe`). Both give the same index.
+whose footers count at most ``_DRIVER_MAX_ROWS`` rows and fewer than the
+budget below: pyarrow reads the metadata columns, and
+:func:`codec.bloom.bloom_admits` judges the probed column's bitmaps. On 4
+local cores it took 0.03-0.2 s at 1k metadata rows and 1.4-2.5 s at 100k
+(4.2-4.6 s with a 50-key probe over 20k 10 KB bitmaps), 0.1-0.9 of the Spark
+read's time at every size up to those limits. Every other frame
+(in-memory encode output, filtered or cached frames, other sources,
+remote files, larger tables) takes ONE Spark action, a plain select with
+one verdict Column per probed predicate (:func:`codec.bloom.bloom_probe`).
+Both give the same index.
 
 In the Spark read each partition sends at most its share of
 ``max_groups + 1`` rows; when one fills its share, an exact group count
@@ -45,11 +48,15 @@ BLOOM_OPS = ("=", "==", "in", "prefix", "contains")
 _POS_MASK = (1 << 33) - 1
 # metadata rows a headers-only load reads before it takes the grouped read
 _HEADER_ROWS = 4096
-# Above this many files a blocks table is indexed by a Spark job, not by
-# the driver's pyarrow reads: those are O(files) sequential driver IO —
-# fine for a per-job blocks dir (tens of files), wrong for a 100k-file
-# lake table.
+# The driver reads a bare local table's index itself (no Spark job) up to
+# these many files and metadata rows. Both are the largest sizes timed
+# against the Spark read (4 local cores, 10 KB url bitmaps), and the driver
+# was not slower at any of them: its reads are O(files) sequential IO and
+# O(rows) Python, so a 100k-file lake table belongs to a Spark job.
+# Headers-only loads stop at their _HEADER_ROWS budget: at 30k rows the
+# grouped Spark read already matched the driver's.
 _DRIVER_HEADER_MAX_FILES = 256
+_DRIVER_MAX_ROWS = 100_000
 
 
 class Block(NamedTuple):
@@ -124,14 +131,6 @@ def _driver_files(blocks: DataFrame) -> list[str] | None:
     return files
 
 
-def _local_path(f: str) -> str:
-    """The local path of a ``file:`` URI (as ``inputFiles()`` returns it:
-    percent-encoded); other strings are paths already."""
-    from urllib.parse import unquote, urlparse
-
-    return unquote(urlparse(f).path) if f.startswith("file:") else f
-
-
 class BlockIndex:
     """Headers, xref references, codec facts and (under the cap) per-block
     stat rows and bloom verdicts of one blocks table."""
@@ -160,12 +159,13 @@ class BlockIndex:
         refs and codec facts only.
 
         A bare scan of at most ``_DRIVER_HEADER_MAX_FILES`` local parquet
-        files whose footers count fewer rows than the budget (``max_groups
-        + 1`` with stats, ``_HEADER_ROWS`` without) is read on the driver
-        by :meth:`from_files`: no Spark job, a footer read and then one
-        read of the metadata columns per file (milliseconds for tens of
-        files). Any other frame takes one Spark action, unless a partition
-        fills its share of the budget."""
+        files whose footers count at most ``_DRIVER_MAX_ROWS`` rows and
+        fewer than the budget (``max_groups + 1`` with stats,
+        ``_HEADER_ROWS`` without) is read on the driver by
+        :meth:`from_files`: no Spark job, a footer read and then one read
+        of the metadata columns per file, about 0.04 s for 16 files of 1k
+        rows and 2 s for 100k rows. Any other frame takes one Spark action,
+        unless a partition fills its share of the budget."""
         tz = blocks.sparkSession.conf.get("spark.sql.session.timeZone")
         cols = []
         if stats and "bloom" in blocks.columns:
@@ -177,7 +177,7 @@ class BlockIndex:
         files = _driver_files(blocks)
         if files is not None:
             idx = cls.from_files(files, cols, max_groups, tz,
-                                 max_rows=budget - 1)
+                                 max_rows=min(budget - 1, _DRIVER_MAX_ROWS))
             if idx is not None:
                 return idx
         frame = _src_expr_frame(blocks)
@@ -193,20 +193,22 @@ class BlockIndex:
         return cls._parse(rows, max_groups, cols, tz)
 
     @classmethod
-    def from_files(cls, files: list[str], probes=(),
-                   max_groups=float("inf"), tz: str | None = None,
-                   max_rows=float("inf")) -> "BlockIndex | None":
+    def from_files(cls, files: list[str], probes, max_groups,
+                   tz: str | None, max_rows: int) -> "BlockIndex | None":
         """The index of block files read with pyarrow on the driver: every
         file's rows, so mixed codecs across resumed jobs are all seen.
-        ``files`` are paths or ``file:`` URIs, and each row's source key is
-        the string as given. ``probes`` are the index's ``(column, op,
-        value, kind)``: for the probed column's rows the ``bloom`` bitmap is
-        judged by :func:`codec.bloom.bloom_admits`, and a file without a
-        ``bloom`` column reads as NULL bitmaps. None when the footers count
-        more than ``max_rows`` rows; no column is read then."""
+        ``files`` are ``file:`` URIs as ``inputFiles()`` gives them
+        (percent-encoded), and each row's source key is the URI. ``probes``
+        are the index's ``(column, op, value, kind)``: for the probed
+        column's rows the ``bloom`` bitmap is judged by
+        :func:`codec.bloom.bloom_admits`, and a file without a ``bloom``
+        column reads as NULL bitmaps. None when the footers count more
+        than ``max_rows`` rows; no column is read then."""
+        from urllib.parse import unquote, urlparse
+
         import pyarrow.parquet as pq
 
-        paths = [_local_path(f) for f in files]
+        paths = [unquote(urlparse(f).path) for f in files]
         metas = [pq.read_metadata(p) for p in paths]
         if sum(m.num_rows for m in metas) > max_rows:
             return None
@@ -216,8 +218,11 @@ class BlockIndex:
         def records():
             for f, p, m in zip(files, paths, metas):
                 has_bloom = bool(lanes) and "bloom" in m.schema.names
-                t = pq.read_table(p, columns=META_COLUMNS + ["bloom"] * has_bloom,
-                                  use_threads=False)
+                # ParquetFile with the footer already read: pq.read_table
+                # sets up a dataset per call, several times the read itself
+                with pq.ParquetFile(p, metadata=m) as pf:
+                    t = pf.read(columns=META_COLUMNS + ["bloom"] * has_bloom,
+                                use_threads=False)
                 cols = t.column("column").to_pylist()
                 bitmaps = t.column("bloom") if has_bloom else None
                 verdicts = [

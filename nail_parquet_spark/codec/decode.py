@@ -14,8 +14,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from nail_parquet_spark.codec import zonemap
-from nail_parquet_spark.codec.blockindex import (_DRIVER_HEADER_MAX_FILES,
-                                                 BlockIndex, _src_expr_frame)
+from nail_parquet_spark.codec.blockindex import BlockIndex, _src_expr_frame
 from nail_parquet_spark.codec.kernels import EncodedBlock, decode_array
 from nail_parquet_spark.sources.io import TaskFile, map_slices
 
@@ -537,13 +536,21 @@ def decode_parquet_dir(spark, blocks_dir: str, out_dir: str,
         raise ValueError("missing_columns must be 'error' or 'null'")
     fill = missing_columns == "null"
 
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from nail_parquet_spark.codec.encode import BLOCKS_SCHEMA
     from nail_parquet_spark.sources.io import list_parquet_files
 
     files = list_parquet_files(blocks_dir)
     if not files:
         raise ValueError(f"no block files under {blocks_dir}")
-    idx = (BlockIndex.from_files(files) if len(files) <= _DRIVER_HEADER_MAX_FILES
-           else BlockIndex.load(spark.read.parquet(blocks_dir), stats=False))
+    # the files list_parquet_files found, nested ones included, so that
+    # columns and xref references only a nested file carries are seen; the
+    # blocks schema is known, and inferring it would cost a Spark job
+    blocks = (spark.read.schema(from_arrow_schema(BLOCKS_SCHEMA))
+              .options(recursiveFileLookup=True, pathGlobFilter="*.parquet")
+              .parquet(blocks_dir))
+    idx = BlockIndex.load(blocks, stats=False)
     headers, refs = idx.headers, idx.refs
     if columns is None:
         columns = sorted(headers)

@@ -5,7 +5,8 @@ from pyspark.sql import functions as F
 
 from nail_parquet_spark.codec import blockindex
 from nail_parquet_spark.codec.blockindex import BlockIndex
-from nail_parquet_spark.codec.decode import (_pred_expr, decode_semijoin,
+from nail_parquet_spark.codec.decode import (_pred_expr, decode_parquet_dir,
+                                             decode_semijoin,
                                              decode_table_where_all,
                                              decode_topk)
 from nail_parquet_spark.codec.encode import encode_table
@@ -252,10 +253,12 @@ def test_driver_index_ops_equal_plain_spark(spark, on_disk):
             == rows(src.join(keys, "url", "left_semi")))
 
 
-def test_other_frames_take_the_spark_read(spark, on_disk, monkeypatch):
-    # a filtered frame, more files than the driver reads, and a footer row
-    # count over the budget each take the Spark read, with the same index
-    _, tables = on_disk
+def test_other_frames_take_the_spark_read(spark, on_disk, monkeypatch,
+                                          tmp_path):
+    # a filtered frame, more files or footer rows than the driver reads,
+    # and a footer row count over the budget each take the Spark read,
+    # with the same index; decode_parquet_dir follows the same rule
+    src, tables = on_disk
     bare = spark.read.parquet(tables["grams"])
     want = BlockIndex.load(bare, probes=_PROBES)
     n_rows = sum(len(bs) for bs in want.blocks.values())
@@ -265,8 +268,21 @@ def test_other_frames_take_the_spark_read(spark, on_disk, monkeypatch):
         got, jobs = _with_jobs(spark, lambda: BlockIndex.load(
             frame, max_groups, probes=_PROBES))
         assert jobs > 0 and _fields(got) == _fields(want)
-    monkeypatch.setattr(blockindex, "_DRIVER_HEADER_MAX_FILES",
-                        len(bare.inputFiles()) - 1)
-    got, jobs = _with_jobs(spark, lambda: BlockIndex.load(
-        spark.read.parquet(tables["grams"]), probes=_PROBES))
-    assert jobs > 0 and _fields(got) == _fields(want)
+    rows = lambda df: sorted(df.select("url", "k").collect())  # noqa: E731
+    want_rows = rows(src)
+
+    def scan(out):
+        _, jobs = _with_jobs(spark, lambda: decode_parquet_dir(
+            spark, tables["grams"], str(tmp_path / out)).collect())
+        assert rows(spark.read.parquet(str(tmp_path / out))) == want_rows
+        return jobs
+
+    driver_jobs = scan("driver")
+    for name, limit in (("_DRIVER_HEADER_MAX_FILES", len(bare.inputFiles()) - 1),
+                        ("_DRIVER_MAX_ROWS", n_rows - 1)):
+        with monkeypatch.context() as m:
+            m.setattr(blockindex, name, limit)
+            got, jobs = _with_jobs(spark, lambda: BlockIndex.load(
+                bare, probes=_PROBES))
+            assert jobs > 0 and _fields(got) == _fields(want), name
+            assert scan(name) == driver_jobs + 1, name

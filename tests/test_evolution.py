@@ -57,6 +57,27 @@ def test_decode_parquet_dir_null_fill(spark, evolved_dir, tmp_path):
     assert got.filter(F.col("b").isNull()).count() == 100
 
 
+def test_decode_parquet_dir_reads_nested_headers(spark, evolved_dir,
+                                                 tmp_path):
+    # the later batch's files sit in a plain (not key=value) subdirectory
+    # under the older batch's: its column b must still reach the headers
+    import glob
+    import shutil
+
+    enc = tmp_path / "enc"
+    (enc / "later").mkdir(parents=True)
+    for f in glob.glob(f"{evolved_dir}/batch=0/*.parquet"):
+        shutil.copy(f, enc)
+    for f in glob.glob(f"{evolved_dir}/batch=1/*.parquet"):
+        shutil.copy(f, enc / "later")
+    out = str(tmp_path / "dec")
+    decode_parquet_dir(spark, str(enc), out, missing_columns="null").collect()
+    got = spark.read.parquet(out)
+    assert sorted(got.columns) == ["a", "b", "k"]
+    assert got.count() == 250
+    assert got.filter(F.col("b").isNull()).count() == 100
+
+
 def test_unknown_column_still_errors(spark, evolved_dir):
     # evolution covers columns that exist in SOME batch; a column in NO
     # batch has no header to type the NULLs and must keep failing loudly
