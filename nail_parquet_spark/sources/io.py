@@ -74,7 +74,9 @@ def map_slices(spark: SparkSession, slices: list, fn, schema) -> DataFrame:
     ``parallelize`` frame starts a second one per task to emit the items.
     PySpark broadcasts a pickled closure over 1 MB once per executor, so
     a long slice list is not shipped with every task. No slices give an
-    empty frame."""
+    empty frame. A Python task's fixed cost was dominated by the per-task
+    re-read of the import archives, which ``nail_parquet_spark._daemon``
+    (the ``get_spark`` default) removes."""
     def run(batches):
         for batch in batches:
             for i in batch.column(0).to_pylist():
