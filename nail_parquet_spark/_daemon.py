@@ -8,10 +8,12 @@ parsed ~27k directory entries (~0.16 s) before doing any work. Run as the
 daemon, this module re-reads an archive only when its ``os.stat`` key
 changed or the shared directory cache lacks it; otherwise the importer is
 pointed at the cached directory. Workers are forked from the daemon, so
-each one keeps the patch. ``session.get_spark`` selects it with
-``spark.python.daemon.module``.
+each one keeps the patch, and the daemon reads every archive once before
+it forks (:func:`prime`), so not even a worker's first task re-reads one.
+``session.get_spark`` selects it with ``spark.python.daemon.module``.
 """
 
+import importlib
 import os
 import sys
 import zipimport
@@ -35,9 +37,16 @@ def invalidate_caches(self):
         self._files = files
 
 
-if __name__ == "__main__":
+def prime():
+    """Install the patch, then read each archive on the path once: workers
+    forked afterwards inherit ``_keys`` and the directory cache."""
     if sys.version_info < (3, 13):  # 3.13 only drops the cached directory
         zipimport.zipimporter.invalidate_caches = invalidate_caches
-    from pyspark.daemon import manager
+    importlib.invalidate_caches()
 
+
+if __name__ == "__main__":
+    from pyspark.daemon import manager  # creates the archives' importers
+
+    prime()
     manager()

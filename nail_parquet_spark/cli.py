@@ -292,8 +292,6 @@ def main(argv: list[str] | None = None) -> int:
         (("--quality-text-column",), {"default": "text"}),
         (("--quality-id-column",), {"default": None, "help": "doc id column (default: first column)"}))
     add("decode", (("-c", "--columns"), {"default": None}),
-        (("--shuffle-free",), {"action": "store_true",
-                               "help": "block files are group-complete (written by this engine's sink) — decode in place, zero shuffle"}),
         (("--where",), {"default": None, "dest": "where", "action": "append",
                         "help": "predicate pushdown 'col>=value' (ops: > >= < <= =) — "
                                 "zone-map block pruning skips non-matching groups; "
@@ -1074,29 +1072,6 @@ def main(argv: list[str] | None = None) -> int:
         stats = column_stats_pushdown(
             blocks, cols, with_sum=getattr(args, "with_sum", False))
         print(json.dumps(stats, indent=2, default=str))
-        return 0
-    if args.cmd == "decode" and getattr(args, "shuffle_free", False):
-        # decode_parquet_dir does its own recursive file discovery; no need
-        # to plan a read of the blocks table first
-        from nail_parquet_spark.codec.decode import decode_parquet_dir
-
-        if not args.output:
-            p.error("decode requires -o/--output")
-        import os as _os
-
-        if (_os.path.isdir(_os.path.join(args.input, "_snapshots"))
-                and not getattr(args, "no_deletes", False)):
-            from nail_parquet_spark.pipeline.deletes import committed_deletes
-
-            if committed_deletes(args.input):
-                p.error("this table has committed position deletes, which the "
-                        "shuffle-free path cannot apply — decode without "
-                        "--shuffle-free, or pass --no-deletes for the raw "
-                        "audit view")
-        cols = args.columns.split(",") if args.columns else None
-        rows = decode_parquet_dir(spark, args.input, args.output, columns=cols,
-                                  missing_columns=args.missing_columns).collect()
-        print(f"decoded {sum(r['n_rows'] for r in rows)} rows -> {args.output}")
         return 0
     mor_deletes = None
     if args.cmd == "decode":

@@ -108,11 +108,12 @@ def _collect_within(frame: DataFrame, n_parts: int, budget: int):
     return [r[:-1] for r in rows]
 
 
-def _driver_files(blocks: DataFrame) -> list[str] | None:
-    """The files of ``blocks`` when the driver may read its index itself:
-    the optimized plan is a bare parquet scan (no filter, projection, join
-    or cache above it) of at most ``_DRIVER_HEADER_MAX_FILES`` local
-    files. None otherwise."""
+def _local_scan_files(blocks: DataFrame) -> list[str] | None:
+    """The files of ``blocks``, sorted, when its optimized plan is a bare
+    parquet scan (no filter, projection, join or cache above it) of local
+    ``file:`` files; None otherwise. The index reads such a table on the
+    driver (up to its limits below), and the parquet-sink decode runs one
+    task per file."""
     try:
         plan = blocks._jdf.queryExecution().optimizedPlan()
     except AttributeError:  # a Spark Connect frame has no JVM plan
@@ -124,11 +125,18 @@ def _driver_files(blocks: DataFrame) -> list[str] | None:
             or rel.fileFormat().getClass().getSimpleName()
             != "ParquetFileFormat"):
         return None
-    files = blocks.inputFiles()
-    if (len(files) > _DRIVER_HEADER_MAX_FILES
-            or not all(f.startswith("file:") for f in files)):
+    files = sorted(blocks.inputFiles())
+    if not all(f.startswith("file:") for f in files):
         return None
     return files
+
+
+def _local_path(uri: str) -> str:
+    """The path of a ``file:`` URI as ``inputFiles()`` gives it
+    (percent-encoded)."""
+    from urllib.parse import unquote, urlparse
+
+    return unquote(urlparse(uri).path)
 
 
 class BlockIndex:
@@ -148,6 +156,8 @@ class BlockIndex:
         self.probes = list(probes)  # (column, op, value, bloom kind)
         self.tz = tz  # session time zone, for timestamp literals
         self.n_groups = None  # distinct block groups
+        # the sorted files of a bare local parquet scan, else None
+        self.files = None
 
     # ---- sources ------------------------------------------------------
     @classmethod
@@ -165,7 +175,9 @@ class BlockIndex:
         :meth:`from_files`: no Spark job, a footer read and then one read
         of the metadata columns per file, about 0.04 s for 16 files of 1k
         rows and 2 s for 100k rows. Any other frame takes one Spark action,
-        unless a partition fills its share of the budget."""
+        unless a partition fills its share of the budget. Either way
+        ``files`` holds the files of a bare local parquet scan, whatever
+        their number, and None for any other frame."""
         tz = blocks.sparkSession.conf.get("spark.sql.session.timeZone")
         cols = []
         if stats and "bloom" in blocks.columns:
@@ -174,12 +186,21 @@ class BlockIndex:
                 if kind and bloom.probe_lanes(op, v, kind) is not None:
                     cols.append((c, op, v, kind))
         budget = max_groups + 1 if stats else _HEADER_ROWS
-        files = _driver_files(blocks)
-        if files is not None:
+        files = _local_scan_files(blocks)
+        idx = None
+        if files is not None and len(files) <= _DRIVER_HEADER_MAX_FILES:
             idx = cls.from_files(files, cols, max_groups, tz,
                                  max_rows=min(budget - 1, _DRIVER_MAX_ROWS))
-            if idx is not None:
-                return idx
+        if idx is None:
+            idx = cls._spark_read(blocks, cols, max_groups, tz, budget, stats)
+        idx.files = files
+        return idx
+
+    @classmethod
+    def _spark_read(cls, blocks: DataFrame, cols, max_groups, tz, budget,
+                    stats: bool) -> "BlockIndex":
+        """The index from one Spark action over ``blocks``, unless a
+        partition fills its share of ``budget``."""
         frame = _src_expr_frame(blocks)
         verdicts = [F.when(F.col("column") == c, bloom.bloom_probe(op, v, kind))
                     for c, op, v, kind in cols]
@@ -204,11 +225,9 @@ class BlockIndex:
         :func:`codec.bloom.bloom_admits`, and a file without a ``bloom``
         column reads as NULL bitmaps. None when the footers count more
         than ``max_rows`` rows; no column is read then."""
-        from urllib.parse import unquote, urlparse
-
         import pyarrow.parquet as pq
 
-        paths = [unquote(urlparse(f).path) for f in files]
+        paths = [_local_path(f) for f in files]
         metas = [pq.read_metadata(p) for p in paths]
         if sum(m.num_rows for m in metas) > max_rows:
             return None

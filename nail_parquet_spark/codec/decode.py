@@ -3,18 +3,25 @@
 Blocks of one (part_id, block_id) group are co-located by a hash
 repartition, ordered within the partition, then streamed through
 ``mapInArrow``: each completed group decodes its per-column payloads back to
-Arrow arrays and emits a record batch of the original schema. Row order is
-not preserved across the round trip (verification joins on a key — per the
-north rule, byte-identical ``text`` per ``url``).
+Arrow arrays and emits a record batch of the original schema. The parquet
+sink (:func:`decode_to_parquet`) skips that shuffle for a bare scan of
+local block files, where every file-keyed group lies inside one file: one
+task reads, sorts and decodes each file. Both feed the same group assembly
+(:func:`_iter_groups`). Row order is not preserved across the round trip
+(verification joins on a key — per the north rule, byte-identical ``text``
+per ``url``).
 """
 
 from __future__ import annotations
+
+import os
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from nail_parquet_spark.codec import zonemap
-from nail_parquet_spark.codec.blockindex import BlockIndex, _src_expr_frame
+from nail_parquet_spark.codec.blockindex import (BlockIndex, _local_path,
+                                                 _src_expr_frame)
 from nail_parquet_spark.codec.kernels import EncodedBlock, decode_array
 from nail_parquet_spark.sources.io import TaskFile, map_slices
 
@@ -38,12 +45,6 @@ def _schema_from_headers(headers: dict[str, dict], columns: list[str]) -> pa.Sch
     return pa.schema([(c, types[c]) for c in columns])
 
 
-def blocks_arrow_schema(blocks: DataFrame, columns: list[str]) -> pa.Schema:
-    """Reconstruct the original Arrow schema from one header per column."""
-    return _schema_from_headers(BlockIndex.load(blocks, stats=False).headers,
-                                columns)
-
-
 def _fetch_closure(headers: dict[str, dict], refs: dict[str, set],
                    columns: list[str]) -> list[str]:
     """Columns whose blocks must be FETCHED to decode ``columns``: xref
@@ -65,8 +66,13 @@ def _fetch_closure(headers: dict[str, dict], refs: dict[str, set],
     return fetch
 
 
-def _with_src_key(blocks: DataFrame, file_keyed: bool = True) -> DataFrame:
-    """Project (source-file, part_id, block_id, column, header, payload).
+def _grouped(blocks: DataFrame, fetch_cols: list[str], file_keyed: bool,
+             pre_grouped: bool = False) -> DataFrame:
+    """(source-file, part_id, block_id, column, header, payload) rows of the
+    ``fetch_cols`` blocks, each group's rows adjacent within one partition:
+    co-located by a hash repartition and sorted, unless ``pre_grouped``
+    says they already are. Columns are restricted BEFORE grouping, so the
+    shuffle carries only fetched payloads.
 
     The source file disambiguates block groups across independently-run
     encode jobs (each restarts partition ids at 0 — e.g. the batch dirs of a
@@ -81,14 +87,28 @@ def _with_src_key(blocks: DataFrame, file_keyed: bool = True) -> DataFrame:
     tables that were repartitioned/compacted AFTER encoding (groups may span
     files there), and only safe when ALL blocks come from one encode job."""
     base = ["part_id", "block_id", "column", "header", "payload"]
-    if not file_keyed:
-        return blocks.select(F.lit("").alias("__src"), *base)
-    return _src_expr_frame(blocks, warn=True).select("__src", *base)
+    if file_keyed:
+        part = _src_expr_frame(blocks, warn=True).select("__src", *base)
+    else:
+        part = blocks.select(F.lit("").alias("__src"), *base)
+    part = part.filter(F.col("column").isin(fetch_cols))
+    if pre_grouped:
+        return part
+    return (part.repartition("__src", "part_id", "block_id")
+            .sortWithinPartitions("__src", "part_id", "block_id"))
+
+
+def _fill_missing(missing_columns: str) -> bool:
+    """True for ``missing_columns="null"`` (null-fill), False for
+    ``"error"`` (refuse incomplete groups)."""
+    if missing_columns not in ("error", "null"):
+        raise ValueError("missing_columns must be 'error' or 'null'")
+    return missing_columns == "null"
 
 
 def _iter_groups(batches, columns, strict: bool = True, with_key: bool = False):
-    """Shared group-assembly state machine for the shuffled decode paths:
-    rows arrive sorted by (src, part_id, block_id); flush on key transition,
+    """Shared group-assembly state machine of every decode: rows arrive
+    sorted by (src, part_id, block_id); flush on key transition,
     validate the requested columns per group, and refuse duplicate
     (group, column) rows — a duplicate means two distinct groups share a key
     (e.g. a union of in-memory encode jobs where the file key is empty) and
@@ -230,7 +250,6 @@ POS_COLUMNS = ["_src_file", "_part_id", "_block_id", "_pos"]
 
 
 def decode_table(blocks: DataFrame, columns: list[str] | None = None,
-                 num_partitions: int | None = None,
                  file_keyed: bool = True,
                  missing_columns: str = "error",
                  with_positions: bool = False,
@@ -287,8 +306,7 @@ def decode_table(blocks: DataFrame, columns: list[str] | None = None,
     (``missing_columns='error'``, the default) instead of mis-decoding;
     combining ``pre_grouped=True`` with ``missing_columns='null'`` puts
     that contract on the caller."""
-    if missing_columns not in ("error", "null"):
-        raise ValueError("missing_columns must be 'error' or 'null'")
+    fill = _fill_missing(missing_columns)
     if headers is None or refs is None:
         idx = BlockIndex.load(blocks, stats=False)
         headers, refs = idx.headers, idx.refs
@@ -315,24 +333,11 @@ def decode_table(blocks: DataFrame, columns: list[str] | None = None,
     # when the caller didn't request it
     fetch_cols = _fetch_closure(headers, refs, columns)
 
-    # Restrict to the fetched columns BEFORE grouping, then co-locate and
-    # sort each (file, part_id, block_id) group's rows. Groups flush on key
-    # transition (the sort makes a group's rows adjacent), and completeness
-    # is judged PER GROUP against the requested columns — so batches encoded
-    # by different jobs with different column sets or codecs each decode by
-    # their own dependencies instead of a global column count.
-    # pre_grouped: encode output already satisfies the adjacency the
-    # shuffle+sort would establish — skip the payload Exchange entirely.
-    part = _with_src_key(blocks, file_keyed).filter(F.col("column").isin(fetch_cols))
-    if not pre_grouped:
-        if num_partitions:
-            part = part.repartition(num_partitions, "__src", "part_id",
-                                    "block_id")
-        else:
-            part = part.repartition("__src", "part_id", "block_id")
-        part = part.sortWithinPartitions("__src", "part_id", "block_id")
-
-    fill = missing_columns == "null"
+    # Groups flush on key transition, and completeness is judged PER GROUP
+    # against the requested columns — so batches encoded by different jobs
+    # with different column sets or codecs each decode by their own
+    # dependencies instead of a global column count.
+    part = _grouped(blocks, fetch_cols, file_keyed, pre_grouped)
 
     def dec(batches):
         if not with_positions:
@@ -410,12 +415,15 @@ class _BufferedWriter:
     ~128k-row row groups with 1 MB pages: one row group per encode block
     costs the C++ writer ~20% in per-group overhead (stats flush, page
     finalize) and yields worse files for downstream scans. Bounded buffer,
-    not whole-file — the live set stays ~100 MB at web-page row widths."""
+    not whole-file — the live set stays ~100 MB at web-page row widths.
+    No dictionary pages: decoded web pages are mostly unique (dict pages
+    overflow and fall back anyway), and skipping the attempt is ~20% off
+    the write wall."""
 
     ROW_GROUP_ROWS = 131072
 
-    def __init__(self, tmp, schema, compression, use_dictionary):
-        self._args = (tmp, schema, compression, use_dictionary)
+    def __init__(self, tmp, schema, compression):
+        self._args = (tmp, schema, compression)
         self.writer = None
         self.n_rows = 0
         self._pending: list = []
@@ -433,10 +441,10 @@ class _BufferedWriter:
         if self.writer is None:
             import pyarrow.parquet as _pq
 
-            tmp, schema, compression, use_dictionary = self._args
+            tmp, schema, compression = self._args
             self.writer = _pq.ParquetWriter(
                 tmp, schema, compression=compression,
-                use_dictionary=use_dictionary, data_page_size=1 << 20)
+                use_dictionary=False, data_page_size=1 << 20)
         self.writer.write_table(pa.Table.from_batches(self._pending),
                                 row_group_size=self.ROW_GROUP_ROWS)
         self.n_rows += self._pending_rows
@@ -451,12 +459,42 @@ class _BufferedWriter:
         return True
 
 
+def _per_file(blocks: DataFrame, files: list[str] | None,
+              file_keyed: bool) -> bool:
+    """Whether the sink decode reads ``files`` one task each instead of
+    shuffling. ``files`` are those of a bare local parquet scan
+    (:attr:`BlockIndex.files`); under the file-keyed group identity every
+    group of such a scan lies inside one file. A file larger than
+    ``spark.sql.files.maxPartitionBytes`` would make one task hold more
+    than Spark's own reader gives it, so it takes the shuffle too."""
+    if files is None or not file_keyed:
+        return False
+    split = (blocks.sparkSession._jsparkSession.sessionState().conf()
+             .filesMaxPartitionBytes())
+    return all(os.path.getsize(_local_path(f)) <= split for f in files)
+
+
+def _file_rows(uri: str, fetch_cols: list[str]):
+    """The :func:`_grouped` rows of one block file, read with pyarrow: the
+    ``fetch_cols`` blocks sorted by (part_id, block_id), after the file's
+    URI as ``__src``."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    # use_threads=False: a Spark task owns ONE core (see encode)
+    t = pq.read_table(_local_path(uri), use_threads=False,
+                      columns=["part_id", "block_id", "column", "header",
+                               "payload"])
+    t = (t.filter(pc.is_in(t.column("column"), pa.array(fetch_cols)))
+         .sort_by([("part_id", "ascending"), ("block_id", "ascending")]))
+    yield from t.add_column(0, "__src", pa.array([uri] * t.num_rows,
+                                                 pa.string())).to_batches()
+
+
 def decode_to_parquet(blocks: DataFrame, out_dir: str,
                       columns: list[str] | None = None,
-                      num_partitions: int | None = None,
                       compression: str = "snappy",
                       file_keyed: bool = True,
-                      use_dictionary=False,
                       missing_columns: str = "error") -> DataFrame:
     """Sink-side decode: tasks write decoded rows straight to parquet with
     the pyarrow C++ writer, so the decoded raw bytes never cross the
@@ -466,22 +504,23 @@ def decode_to_parquet(blocks: DataFrame, out_dir: str,
     Returns a small manifest DataFrame (file, n_rows); the decoded table is
     ``spark.read.parquet(out_dir)``.
 
+    The source of each task follows the plan. A bare scan of local block
+    files (``spark.read.parquet`` of a block dir, ``read_blocks_at``)
+    under ``file_keyed=True`` whose files each fit one read split decodes
+    one task per file, one stage with no Exchange: this engine's encode
+    writes whole groups per file. Every other frame (in-memory
+    ``encode_table`` output, filtered, cached or joined frames, remote
+    files, ``file_keyed=False``, larger files) is co-located by a hash
+    repartition and sorted, as in ``decode_table``. Both feed the same
+    group assembly, so duplicate and incomplete groups are refused alike.
+
     ``file_keyed`` semantics (and the round-3 breaking default for tables
     rewritten after encoding) are documented on ``decode_table``.
-
-    ``use_dictionary`` defaults to False: decoded web pages are mostly
-    unique (dict pages overflow and fall back anyway) and skipping the
-    attempt is ~20% off the write wall; pass True (or a column-name list)
-    to re-dictionarize low-cardinality outputs.
 
     ``missing_columns="null"``: schema-evolution read — groups lacking a
     requested column null-fill it (see ``decode_table``).
     """
-    import os
-
-    if missing_columns not in ("error", "null"):
-        raise ValueError("missing_columns must be 'error' or 'null'")
-    fill = missing_columns == "null"
+    fill = _fill_missing(missing_columns)
     idx = BlockIndex.load(blocks, stats=False)
     headers, refs = idx.headers, idx.refs
     if columns is None:
@@ -490,18 +529,9 @@ def decode_to_parquet(blocks: DataFrame, out_dir: str,
     fetch_cols = _fetch_closure(headers, refs, columns)
     os.makedirs(out_dir, exist_ok=True)
 
-    # Same column-subset, group-key, and flush-on-transition rules as
-    # decode_table.
-    part = _with_src_key(blocks, file_keyed).filter(F.col("column").isin(fetch_cols))
-    if num_partitions:
-        part = part.repartition(num_partitions, "__src", "part_id", "block_id")
-    else:
-        part = part.repartition("__src", "part_id", "block_id")
-    part = part.sortWithinPartitions("__src", "part_id", "block_id")
-
     def dec(batches):
         out = TaskFile(out_dir, "part", ".parquet")
-        w = _BufferedWriter(out.tmp, out_schema, compression, use_dictionary)
+        w = _BufferedWriter(out.tmp, out_schema, compression)
         for grp in _iter_groups(batches, columns, strict=not fill):
             w.write(_decode_group(grp, columns, out_schema, fill_missing=fill))
         if w.close():
@@ -510,104 +540,35 @@ def decode_to_parquet(blocks: DataFrame, out_dir: str,
                 names=["file", "n_rows"],
             )
 
-    return part.mapInArrow(dec, schema="file string, n_rows bigint")
+    manifest = "file string, n_rows bigint"
+    if _per_file(blocks, idx.files, file_keyed):
+        return map_slices(blocks.sparkSession, idx.files,
+                          lambda f: dec(_file_rows(f, fetch_cols)), manifest)
+    return _grouped(blocks, fetch_cols, file_keyed).mapInArrow(dec, manifest)
 
 
 def decode_parquet_dir(spark, blocks_dir: str, out_dir: str,
                        columns: list[str] | None = None,
                        compression: str = "snappy",
-                       use_dictionary=False,
                        missing_columns: str = "error"):
-    """Shuffle-free decode: each task reads one block-parquet FILE with the
-    pyarrow C++ reader, decodes its (complete) groups, and writes decoded
-    parquet in place.
-
-    Valid whenever the blocks were written by this engine's encode (every
-    writer task emits whole groups into its own file), so no repartition is
-    needed to co-locate a block's columns — zero shuffle, C++ IO on both
-    ends. For arbitrary block layouts use ``decode_to_parquet``.
-
-    ``missing_columns="null"``: schema-evolution read — groups lacking a
-    requested column null-fill it (see ``decode_table``).
+    """:func:`decode_to_parquet` of every block file under ``blocks_dir``,
+    nested ones included (the batch dirs of a resumable out_dir), so
+    columns and xref references only a nested file carries are seen.
+    Block files written by this engine's encode decode one task per file.
     """
-    import os
-
-    if missing_columns not in ("error", "null"):
-        raise ValueError("missing_columns must be 'error' or 'null'")
-    fill = missing_columns == "null"
-
     from pyspark.sql.pandas.types import from_arrow_schema
 
     from nail_parquet_spark.codec.encode import BLOCKS_SCHEMA
     from nail_parquet_spark.sources.io import list_parquet_files
 
-    files = list_parquet_files(blocks_dir)
-    if not files:
+    if not list_parquet_files(blocks_dir):
         raise ValueError(f"no block files under {blocks_dir}")
-    # the files list_parquet_files found, nested ones included, so that
-    # columns and xref references only a nested file carries are seen; the
-    # blocks schema is known, and inferring it would cost a Spark job
+    # the blocks schema is known, and inferring it would cost a Spark job
     blocks = (spark.read.schema(from_arrow_schema(BLOCKS_SCHEMA))
               .options(recursiveFileLookup=True, pathGlobFilter="*.parquet")
               .parquet(blocks_dir))
-    idx = BlockIndex.load(blocks, stats=False)
-    headers, refs = idx.headers, idx.refs
-    if columns is None:
-        columns = sorted(headers)
-    out_schema = _schema_from_headers(headers, columns)
-    fetch_cols = _fetch_closure(headers, refs, columns)
-    os.makedirs(out_dir, exist_ok=True)
-
-    # task i decodes block file i (map_slices) — no repartition, so the job
-    # is a single shuffle-free stage (same pattern as encode_parquet_dir)
-    def dec(path):
-        import pyarrow.parquet as _pq
-
-        out = TaskFile(out_dir, "part", ".parquet")
-        w = _BufferedWriter(out.tmp, out_schema, compression, use_dictionary)
-        colset = set(fetch_cols)
-        # use_threads=False: a Spark task owns ONE core (see encode)
-        tbl = _pq.read_table(
-            path,
-            columns=["part_id", "block_id", "column", "header", "payload"],
-            use_threads=False,
-        )
-        pids = tbl.column("part_id").to_pylist()
-        bids = tbl.column("block_id").to_pylist()
-        cols_ = tbl.column("column").to_pylist()
-        hdrs = tbl.column("header").to_pylist()
-        pays = tbl.column("payload")
-        groups: dict[tuple[int, int], dict[str, tuple[str, bytes]]] = {}
-        for i in range(tbl.num_rows):
-            if cols_[i] not in colset:
-                continue  # column-subset decode: ignore unrequested blocks
-            g = groups.setdefault((pids[i], bids[i]), {})
-            if cols_[i] in g:
-                raise ValueError(
-                    f"duplicate block for column {cols_[i]!r} in "
-                    f"group {(pids[i], bids[i])} of {path}: colliding "
-                    "group ids (run compact_blocks to re-key)"
-                )
-            g[cols_[i]] = (hdrs[i], pays[i].as_py())
-        for key, grp in groups.items():
-            # completeness is per group against the REQUESTED
-            # columns (xref deps raise inside _decode_group): blocks
-            # of heterogeneous jobs may carry different column sets
-            missing = [c for c in columns if c not in grp]
-            if missing and not fill:
-                raise ValueError(
-                    f"block group {key} in {path} is missing "
-                    f"requested columns {missing}"
-                )
-            w.write(_decode_group(grp, columns, out_schema,
-                                  fill_missing=fill))
-        if w.close():
-            yield pa.record_batch(
-                [pa.array([out.commit()]), pa.array([w.n_rows], pa.int64())],
-                names=["file", "n_rows"],
-            )
-
-    return map_slices(spark, files, dec, "file string, n_rows bigint")
+    return decode_to_parquet(blocks, out_dir, columns, compression,
+                             missing_columns=missing_columns)
 
 
 # ---------------------------------------------------------------------------
@@ -687,7 +648,6 @@ def prune_blocks_bloom(blocks: DataFrame, column: str, value,
 
 def decode_table_where(blocks: DataFrame, column: str, op: str, value,
                        columns: list[str] | None = None,
-                       num_partitions: int | None = None,
                        file_keyed: bool = True,
                        max_groups: int = 100_000,
                        pre_grouped: bool = False) -> DataFrame:
@@ -696,8 +656,7 @@ def decode_table_where(blocks: DataFrame, column: str, op: str, value,
     equal decode_table(blocks, columns).filter(column op value); cost skips
     reading and decoding every group the stats rule out."""
     return decode_table_where_all(
-        blocks, [(column, op, value)], columns=columns,
-        num_partitions=num_partitions, file_keyed=file_keyed,
+        blocks, [(column, op, value)], columns=columns, file_keyed=file_keyed,
         max_groups=max_groups, pre_grouped=pre_grouped)
 
 
@@ -758,7 +717,6 @@ def _where_index(blocks: DataFrame, predicates,
 
 def decode_table_where_all(blocks: DataFrame, predicates,
                            columns: list[str] | None = None,
-                           num_partitions: int | None = None,
                            file_keyed: bool = True,
                            max_groups: int = 100_000,
                            pre_grouped: bool = False) -> DataFrame:
@@ -776,8 +734,7 @@ def decode_table_where_all(blocks: DataFrame, predicates,
                                   *(p[0] for clause in clauses for p in clause))
     # headers pass through: an all-pruned frame decodes to an empty typed
     # frame, with no emptiness probe job
-    dec = decode_table(pruned, columns=use_cols,
-                       num_partitions=num_partitions, file_keyed=file_keyed,
+    dec = decode_table(pruned, columns=use_cols, file_keyed=file_keyed,
                        headers=idx.headers, refs=idx.refs,
                        pre_grouped=pre_grouped)
     return dec.filter(_cnf_expr(clauses)).select(*out_cols)
@@ -825,7 +782,6 @@ def prune_blocks_topk(blocks: DataFrame, column: str, k: int,
 def decode_topk(blocks: DataFrame, column: str, k: int,
                 tiebreak: str | None = None, descending: bool = True,
                 columns: list[str] | None = None,
-                num_partitions: int | None = None,
                 file_keyed: bool = True,
                 max_groups: int = 100_000,
                 pre_grouped: bool = False) -> DataFrame:
@@ -847,8 +803,7 @@ def decode_topk(blocks: DataFrame, column: str, k: int,
     pruned = _prune_topk(blocks, idx, column, k, descending)
     # headers pass through, so an all-pruned frame decodes to an empty typed
     # frame directly — no emptiness probe job
-    dec = decode_table(pruned, columns=use_cols,
-                       num_partitions=num_partitions, file_keyed=file_keyed,
+    dec = decode_table(pruned, columns=use_cols, file_keyed=file_keyed,
                        headers=idx.headers, refs=idx.refs,
                        pre_grouped=pre_grouped)
     order = [F.col(column).desc() if descending else F.col(column).asc()]
@@ -955,7 +910,6 @@ def prune_blocks_topk_by(blocks: DataFrame, group_col: str, column: str,
 def decode_topk_by(blocks: DataFrame, group_col: str, column: str, k: int,
                    tiebreak: str | None = None, descending: bool = True,
                    columns: list[str] | None = None,
-                   num_partitions: int | None = None,
                    file_keyed: bool = True,
                    max_groups: int = 100_000,
                    pre_grouped: bool = False) -> DataFrame:
@@ -984,8 +938,7 @@ def decode_topk_by(blocks: DataFrame, group_col: str, column: str, k: int,
                                   tiebreak)
     pruned = _prune_topk_by(blocks, idx, group_col, column, k, descending)
     # headers pass through: no emptiness probe job (see decode_topk)
-    dec = decode_table(pruned, columns=use_cols,
-                       num_partitions=num_partitions, file_keyed=file_keyed,
+    dec = decode_table(pruned, columns=use_cols, file_keyed=file_keyed,
                        headers=idx.headers, refs=idx.refs,
                        pre_grouped=pre_grouped)
     order = [F.col(column).desc() if descending else F.col(column).asc()]
@@ -1019,7 +972,6 @@ def _filter_block_pairs(blocks: DataFrame, pairs: set[tuple]) -> DataFrame:
 
 def decode_semijoin(blocks: DataFrame, keys: DataFrame, key_col: str,
                     columns: list[str] | None = None,
-                    num_partitions: int | None = None,
                     file_keyed: bool = True,
                     max_groups: int = 100_000,
                     inline_keys_max: int = 64,
@@ -1085,7 +1037,6 @@ def decode_semijoin(blocks: DataFrame, keys: DataFrame, key_col: str,
 
     # stage 2: key-column-only decode -> matching row coordinates
     keydec = decode_table(pruned, columns=[key_col], with_positions=True,
-                          num_partitions=num_partitions,
                           file_keyed=file_keyed, headers=headers, refs=refs,
                           pre_grouped=pre_grouped)
     coords = keydec.join(probe, key_col, "left_semi").select(*POS_COLUMNS)
@@ -1095,14 +1046,14 @@ def decode_semijoin(blocks: DataFrame, keys: DataFrame, key_col: str,
 
     # stage 3: decode only block groups holding a match, keep exact rows
     return _materialize_coords(pruned, coords, out_cols, use_cols,
-                               num_partitions, file_keyed, max_groups,
+                               file_keyed, max_groups,
                                headers=headers, refs=refs,
                                pre_grouped=pre_grouped)
 
 
 def _materialize_coords(blocks: DataFrame, coords: DataFrame,
                         out_cols: list[str], use_cols: list[str],
-                        num_partitions, file_keyed, max_groups: int,
+                        file_keyed, max_groups: int,
                         headers: dict[str, dict], refs: dict[str, set],
                         pre_grouped: bool = False) -> DataFrame:
     """Late-materialization tail shared by the coordinate-driven decodes:
@@ -1119,8 +1070,8 @@ def _materialize_coords(blocks: DataFrame, coords: DataFrame,
         hit = _filter_block_pairs(
             blocks, {(r["_part_id"], r["_block_id"]) for r in got})
     full = decode_table(hit, columns=use_cols, with_positions=True,
-                        num_partitions=num_partitions, file_keyed=file_keyed,
-                        headers=headers, refs=refs, pre_grouped=pre_grouped)
+                        file_keyed=file_keyed, headers=headers, refs=refs,
+                        pre_grouped=pre_grouped)
     return (full.join(coords, on=POS_COLUMNS, how="left_semi")
             .select(*out_cols))
 
@@ -1128,7 +1079,6 @@ def _materialize_coords(blocks: DataFrame, coords: DataFrame,
 def decode_sample(blocks: DataFrame, key_col: str, fraction: float,
                   seed: int = 0,
                   columns: list[str] | None = None,
-                  num_partitions: int | None = None,
                   file_keyed: bool = True,
                   max_groups: int = 100_000,
                   deletes: DataFrame | None = None,
@@ -1163,7 +1113,6 @@ def decode_sample(blocks: DataFrame, key_col: str, fraction: float,
     if fraction == 0.0:
         return _empty(blocks, headers, out_cols)
     keydec = decode_table(blocks, columns=[key_col], with_positions=True,
-                          num_partitions=num_partitions,
                           file_keyed=file_keyed, headers=headers, refs=refs,
                           pre_grouped=pre_grouped)
     ks = F.coalesce(F.col(key_col).cast("string"), F.lit("\x00"))
@@ -1182,6 +1131,6 @@ def decode_sample(blocks: DataFrame, key_col: str, fraction: float,
         coords = coords.join(deletes.select(*POS_COLUMNS),
                              on=POS_COLUMNS, how="left_anti")
     return _materialize_coords(blocks, coords, out_cols, use_cols,
-                               num_partitions, file_keyed, max_groups,
+                               file_keyed, max_groups,
                                headers=headers, refs=refs,
                                pre_grouped=pre_grouped)

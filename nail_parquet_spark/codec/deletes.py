@@ -91,7 +91,6 @@ def decode_except_where(blocks: DataFrame, deletes: DataFrame, predicates,
 
 def decode_except(blocks: DataFrame, deletes: DataFrame,
                   columns: list[str] | None = None,
-                  num_partitions: int | None = None,
                   file_keyed: bool = True,
                   broadcast_deletes: bool = False,
                   headers: dict | None = None,
@@ -109,8 +108,7 @@ def decode_except(blocks: DataFrame, deletes: DataFrame,
         idx = BlockIndex.load(blocks, stats=False)
         headers, refs = idx.headers, idx.refs
     out_cols = list(columns) if columns is not None else sorted(headers)
-    dec = decode_table(blocks, columns=out_cols,
-                       num_partitions=num_partitions, file_keyed=file_keyed,
+    dec = decode_table(blocks, columns=out_cols, file_keyed=file_keyed,
                        with_positions=True, headers=headers, refs=refs)
     d = deletes.select(*POS_COLUMNS)
     if broadcast_deletes:

@@ -509,7 +509,7 @@ def encode_parquet_dir(
     lineage manifest row (file, rows, bytes) returns. This is the production
     sink path for the 100-TB pipeline; the per-task manifests are the
     Iceberg-commit-shaped lineage records, and group-complete block files
-    feed the shuffle-free ``decode_parquet_dir``.
+    let ``decode_to_parquet`` decode one task per file, with no shuffle.
 
     Why scan-side: ``encode_table`` pays the JVM columnar->Arrow->socket
     conversion for every raw byte (measured ~5 MB/s/core on binary-heavy

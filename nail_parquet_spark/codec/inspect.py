@@ -696,7 +696,6 @@ def column_stats_pushdown(blocks: DataFrame,
 
 
 def group_stats_pushdown(blocks: DataFrame, group_col: str, value_col: str,
-                         num_partitions: int | None = None,
                          max_groups: int = 100_000,
                          pre_grouped: bool = False) -> DataFrame:
     """Exact ``GROUP BY group_col`` aggregates of a numeric ``value_col``
@@ -767,7 +766,6 @@ def group_stats_pushdown(blocks: DataFrame, group_col: str, value_col: str,
            .count().filter(F.col("count") > 1).limit(1).count())
     if dup:
         dec = decode_table(blocks, columns=[group_col, value_col],
-                           num_partitions=num_partitions,
                            headers=headers, refs=refs,
                            pre_grouped=pre_grouped)
         v = F.col(value_col).cast(scast)
@@ -828,7 +826,6 @@ def group_stats_pushdown(blocks: DataFrame, group_col: str, value_col: str,
     if len(got) > max_groups:
         # residual set too large to enumerate: full decode, still exact
         dec = decode_table(blocks, columns=[group_col, value_col],
-                           num_partitions=num_partitions,
                            headers=headers, refs=refs,
                            pre_grouped=pre_grouped)
         v = F.col(value_col).cast(scast)
@@ -856,7 +853,6 @@ def group_stats_pushdown(blocks: DataFrame, group_col: str, value_col: str,
     if pairs:
         rdec = decode_table(_filter_block_pairs(blocks, pairs),
                             columns=[group_col, value_col],
-                            num_partitions=num_partitions,
                             headers=headers, refs=refs,
                             pre_grouped=pre_grouped)
         rside = (rdec.groupBy(group_col)

@@ -75,7 +75,6 @@ def _pos_delete_records(recs: list[dict]) -> list[dict]:
 def table_changes(spark: SparkSession, out_dir: str, from_snapshot: int,
                   to_snapshot: int | None = None,
                   columns: list[str] | None = None,
-                  num_partitions: int | None = None,
                   max_groups: int = 100_000) -> DataFrame:
     """Rows that changed between the table states at ``from_snapshot``
     (EXCLUSIVE — the baseline; 0 = before the first commit) and
@@ -226,7 +225,6 @@ def table_changes(spark: SparkSession, out_dir: str, from_snapshot: int,
         if c not in use_cols:
             use_cols.append(c)
     dec = decode_table(blocks, columns=use_cols, with_positions=True,
-                       num_partitions=num_partitions,
                        headers=headers, refs=refs)
 
     # ---- alive-at-from / alive-at-to flags on the one decoded frame ----
@@ -308,8 +306,7 @@ def _read_cursor(cursor_path: str) -> int:
 
 
 def poll_changes(spark: SparkSession, out_dir: str, cursor_path: str,
-                 columns: list[str] | None = None,
-                 num_partitions: int | None = None):
+                 columns: list[str] | None = None):
     """Incremental changelog consumer, at-least-once: changes committed
     since the cursor's snapshot, plus an ack token.
 
@@ -335,8 +332,7 @@ def poll_changes(spark: SparkSession, out_dir: str, cursor_path: str,
     token = {"from": last, "to": to}
     if to <= last:
         return None, token
-    return (table_changes(spark, out_dir, last, to, columns=columns,
-                          num_partitions=num_partitions), token)
+    return (table_changes(spark, out_dir, last, to, columns=columns), token)
 
 
 def ack_changes(cursor_path: str, token: dict) -> None:

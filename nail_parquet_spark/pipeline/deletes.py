@@ -299,7 +299,6 @@ def equality_positions(spark: SparkSession, out_dir: str,
 def read_table(spark: SparkSession, out_dir: str,
                columns: list[str] | None = None,
                snapshot_id: int | None = None,
-               num_partitions: int | None = None,
                apply_deletes: bool = True) -> DataFrame:
     """Merge-on-read view of the table at ``snapshot_id`` (default latest):
     decoded blocks minus every visible position delete, minus every row a
@@ -308,23 +307,19 @@ def read_table(spark: SparkSession, out_dir: str,
     snapshot_id = _resolve_snapshot(out_dir, snapshot_id)
     blocks = read_blocks_at(spark, out_dir, snapshot_id)
     if not apply_deletes:
-        return decode_table(blocks, columns=columns,
-                            num_partitions=num_partitions)
+        return decode_table(blocks, columns=columns)
     eq_recs = equality_delete_records(out_dir, snapshot_id)
     pos = read_deletes(spark, out_dir, snapshot_id)
     if not eq_recs:
         if pos is None:
-            return decode_table(blocks, columns=columns,
-                                num_partitions=num_partitions)
-        return decode_except(blocks, pos, columns=columns,
-                             num_partitions=num_partitions)
+            return decode_table(blocks, columns=columns)
+        return decode_except(blocks, pos, columns=columns)
     idx = BlockIndex.load(blocks, stats=False)
     headers, refs = idx.headers, idx.refs
     out_cols = list(columns) if columns is not None else sorted(headers)
     eq_all = {c for r in eq_recs for c in r["eq_cols"]}
     need = sorted(set(out_cols) | eq_all)
-    dec = decode_table(blocks, columns=need,
-                       num_partitions=num_partitions, with_positions=True,
+    dec = decode_table(blocks, columns=need, with_positions=True,
                        headers=headers, refs=refs)
     if pos is not None:
         dec = dec.join(pos.select(*POS_COLUMNS), on=POS_COLUMNS,

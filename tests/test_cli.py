@@ -346,7 +346,7 @@ def test_cli_compact_blocks(spark, tmp_path, capsys):
     run("compact", blocks, "-o", cdir, "--num-files", "2")
     assert "compacted" in capsys.readouterr().out
     out = str(tmp_path / "dec")
-    run("decode", cdir, "-o", out, "--shuffle-free")
+    run("decode", cdir, "-o", out)
     assert spark.read.parquet(out).count() == 2_000
 
 
@@ -919,11 +919,6 @@ def test_cli_delete_upsert_purge(spark, tmp_path, capsys):
     run("decode", out, "--where", "k>=20", "-o", dec3)
     capsys.readouterr()
     assert spark.read.parquet(dec3).count() == 10
-
-    # shuffle-free refuses a table with live deletes
-    with pytest.raises(SystemExit):
-        run("decode", out, "--shuffle-free", "-o", str(tmp_path / "x"))
-    capsys.readouterr()
 
     newrows = str(tmp_path / "new")
     spark.createDataFrame(

@@ -70,6 +70,55 @@ def test_unchanged_archives_are_not_reread(spark):
     assert stock == (1 if PATCHED else 0)
 
 
+_FORK = """
+import importlib
+import os
+import sys
+import zipfile
+import zipimport
+
+sys.path.insert(0, {root!r})
+from nail_parquet_spark import _daemon
+
+archive = {archive!r}
+with zipfile.ZipFile(archive, "w") as z:
+    z.writestr("nps_prime_mod.py", "X = 1\\n")
+sys.path.insert(0, archive)
+import nps_prime_mod  # the archive's importer, as the daemon's imports make
+
+
+def first_task_reads():
+    pid = os.fork()
+    if pid == 0:
+        calls = []
+        read = zipimport._read_directory
+        zipimport._read_directory = lambda p: calls.append(p) or read(p)
+        importlib.invalidate_caches()
+        os._exit(len(calls))
+    return os.waitstatus_to_exitcode(os.waitpid(pid, 0)[1])
+
+
+if sys.version_info < (3, 13):
+    zipimport.zipimporter.invalidate_caches = _daemon.invalidate_caches
+unprimed = first_task_reads()
+_daemon.prime()
+print("READS", unprimed, first_task_reads())
+"""
+
+
+def test_workers_forked_after_prime_read_no_archive(tmp_path):
+    """A worker forked after the daemon's start-up step (:func:`prime`)
+    reads no archive directory on its first invalidation: it inherits the
+    stat keys. Forked with the patch installed but not primed, it reads
+    the archive once (before 3.13)."""
+    out = subprocess.run(
+        [sys.executable, "-c", _FORK.format(root=str(ROOT),
+                                            archive=str(tmp_path / "m.zip"))],
+        capture_output=True, text=True, timeout=120)
+    assert out.stdout.split() == ["READS", "1" if PATCHED else "0", "0"], \
+        out.stderr[-4000:]
+
+
 def test_changed_archive_is_reread(spark, tmp_path):
     """An archive on ``sys.path`` rewritten in place (new size and mtime,
     same inode) is re-read on the next invalidation, so a module added
