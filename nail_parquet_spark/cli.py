@@ -976,22 +976,22 @@ def main(argv: list[str] | None = None) -> int:
         # block-table maintenance: merge small block files, re-key groups
         # globally (codec/compact.py) — not a row-table command
         from nail_parquet_spark.codec.compact import compact_blocks
+        from nail_parquet_spark.codec.decode import read_blocks
 
         if not args.output:
             p.error("compact requires -o/--output")
         # recursiveFileLookup: read the block FILES without Hive partition
         # discovery — a resumable out_dir's batch=*/ (or legacy unit=*/)
         # subdirs would otherwise inject partition columns or conflict
-        blocks = (
-            spark.read.option("recursiveFileLookup", "true").parquet(args.input)
-        )
+        blocks = read_blocks(spark, args.input, recursiveFileLookup=True)
         compact_blocks(blocks, args.output, num_files=args.num_files)
-        n = len(spark.read.parquet(args.output).inputFiles())
+        n = len(read_blocks(spark, args.output).inputFiles())
         print(f"compacted -> {args.output} ({n} files)")
         return 0
     if args.cmd == "blockstats":
         # exact count/min/max from block zone stats alone — payloads are
         # never read (codec/inspect.column_stats_pushdown)
+        from nail_parquet_spark.codec.decode import read_blocks
         from nail_parquet_spark.codec.inspect import column_stats_pushdown
 
         import os as _os
@@ -1029,9 +1029,7 @@ def main(argv: list[str] | None = None) -> int:
                     file=sys.stderr)
             blocks = read_blocks_at(spark, args.input, snap)
         else:
-            blocks = (
-                spark.read.option("recursiveFileLookup", "true").parquet(args.input)
-            )
+            blocks = read_blocks(spark, args.input, recursiveFileLookup=True)
         if getattr(args, "distinct", None):
             from nail_parquet_spark.codec.inspect import distinct_pushdown
 
@@ -1096,7 +1094,9 @@ def main(argv: list[str] | None = None) -> int:
                     mor_deletes = (eq_pos if mor_deletes is None
                                    else mor_deletes.unionByName(eq_pos))
         else:
-            df = read_data(spark, args.input)
+            from nail_parquet_spark.codec.decode import read_blocks
+
+            df = read_blocks(spark, args.input)
     else:
         df = read_data(spark, args.input)
     c = args.cmd
@@ -1976,7 +1976,8 @@ def main(argv: list[str] | None = None) -> int:
         info = convert(spark, args.input, args.output, None, args.format)
         print(f"converted {info['rows']} rows x {info['cols']} cols -> {args.output}")
     elif c == "optimize":
-        from nail_parquet_spark.codec.decode import decode_table, verify_roundtrip
+        from nail_parquet_spark.codec.decode import (decode_table, read_blocks,
+                                                   verify_roundtrip)
         from nail_parquet_spark.codec.encode import encode_table
         from nail_parquet_spark.codec.inspect import size_summary
 
@@ -2062,7 +2063,7 @@ def main(argv: list[str] | None = None) -> int:
                               bloom_columns=bloom_cols)
         if args.output:
             blocks.write.mode("overwrite").parquet(args.output)
-            blocks = spark.read.parquet(args.output)
+            blocks = read_blocks(spark, args.output)
         size_summary(blocks).show(truncate=False)
         if args.validate:
             dec = decode_table(blocks, columns=df.columns)

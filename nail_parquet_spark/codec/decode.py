@@ -547,6 +547,29 @@ def decode_to_parquet(blocks: DataFrame, out_dir: str,
     return _grouped(blocks, fetch_cols, file_keyed).mapInArrow(dec, manifest)
 
 
+def read_blocks(spark, *paths: str, **options) -> DataFrame:
+    """The block files under ``paths``, read with the known block schema:
+    inferring it would cost a Spark job. A file without ``bloom`` reads it
+    as NULL. No files, or a local file without the other block columns,
+    is refused, as reading under an inferred schema would have failed."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from nail_parquet_spark.codec.encode import BLOCKS_SCHEMA
+
+    blocks = (spark.read.schema(from_arrow_schema(BLOCKS_SCHEMA))
+              .options(**options).parquet(*paths))
+    files = blocks.inputFiles()
+    if not files:
+        raise ValueError(f"no block files under {', '.join(paths)}")
+    if files[0].startswith("file:"):
+        have = pq.read_schema(_local_path(files[0])).names
+        missing = [c for c in BLOCKS_SCHEMA.names if c not in have + ["bloom"]]
+        if missing:
+            raise ValueError(f"{files[0]} is not a block file: no {missing}")
+    return blocks
+
+
 def decode_parquet_dir(spark, blocks_dir: str, out_dir: str,
                        columns: list[str] | None = None,
                        compression: str = "snappy",
@@ -556,17 +579,8 @@ def decode_parquet_dir(spark, blocks_dir: str, out_dir: str,
     columns and xref references only a nested file carries are seen.
     Block files written by this engine's encode decode one task per file.
     """
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    from nail_parquet_spark.codec.encode import BLOCKS_SCHEMA
-    from nail_parquet_spark.sources.io import list_parquet_files
-
-    if not list_parquet_files(blocks_dir):
-        raise ValueError(f"no block files under {blocks_dir}")
-    # the blocks schema is known, and inferring it would cost a Spark job
-    blocks = (spark.read.schema(from_arrow_schema(BLOCKS_SCHEMA))
-              .options(recursiveFileLookup=True, pathGlobFilter="*.parquet")
-              .parquet(blocks_dir))
+    blocks = read_blocks(spark, blocks_dir, recursiveFileLookup=True,
+                         pathGlobFilter="*.parquet")
     return decode_to_parquet(blocks, out_dir, columns, compression,
                              missing_columns=missing_columns)
 

@@ -31,6 +31,9 @@ the driver.
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from nail_parquet_spark.functions.similarity import (
@@ -150,68 +153,60 @@ def kmeans(df: DataFrame, id_col: str, vec_col: str, k: int = 8,
                          cosine_col=cosine_col)
 
 
-def _pair_dots_arrow(assigned: DataFrame) -> DataFrame:
-    """All within-cluster pairs with their exact dot products.
+# most pairs in one emitted batch of the pair-dot pass: a hot cluster's
+# pairs stream out in bounded blocks instead of being built all at once
+_PAIR_BLOCK = 1 << 20
 
-    Input: (__kid, __kv array<double>, __kn double, cluster). Output one
-    row per unordered position pair inside each cluster:
-    (__xid, __yid, __na, __nb, __dot) — id/norm types pass through Arrow
-    untouched and ``__dot`` is the SAME float as the engine's
-    ``aggregate(zip_with(a, b, x*y), 0.0, acc+v)`` left fold:
+
+def _pair_blocks(tbl: pa.Table, block: int) -> Iterator[pa.RecordBatch]:
+    """Every position pair (i < j, row-major order) of one cluster's rows
+    with its exact dot product, as batches of at most ``block`` pairs.
+
+    Input columns (__kid, __kv array<double>, __kn double); output
+    (__xid, __yid, __na, __nb, __dot). ``__dot`` is the SAME float as the
+    engine's ``aggregate(zip_with(a, b, x*y), 0.0, acc+v)`` left fold:
     the numpy path accumulates ``acc += A[:,i] * B[:,i]`` in element
     order (0.0 + t0 == t0 exactly, then identical IEEE adds), and the
     ragged/null fallback reproduces zip_with's null-padding semantics
-    (length mismatch or any NULL element -> NULL dot, empty pair ->
-    0.0). Each cluster crosses the boundary ONCE (rows, not pairs); the
-    emitted pair rows carry no vectors, so the downstream cosine filter
-    streams 5 scalars per pair instead of 2*dim doubles.
-    """
-    import pyarrow as pa
+    (length mismatch or any NULL element -> NULL dot, empty pair -> 0.0).
+    Each pair's fold is independent of the block it falls in, so the
+    block size never changes a value."""
+    import numpy as np
+    import pyarrow.compute as pc
 
-    from pyspark.sql import types as T
-
-    id_type = assigned.schema["__kid"].dataType
-    out_schema = T.StructType([
-        T.StructField("__xid", id_type),
-        T.StructField("__yid", id_type),
-        T.StructField("__na", T.DoubleType()),
-        T.StructField("__nb", T.DoubleType()),
-        T.StructField("__dot", T.DoubleType()),
-    ])
-
-    def pair_dots(tbl: pa.Table) -> pa.Table:
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        n = tbl.num_rows
-        ids = tbl.column("__kid").combine_chunks()
-        kn = tbl.column("__kn").combine_chunks()
-        kv = tbl.column("__kv").combine_chunks()
-        fields = [pa.field("__xid", ids.type), pa.field("__yid", ids.type),
-                  pa.field("__na", pa.float64()), pa.field("__nb", pa.float64()),
-                  pa.field("__dot", pa.float64())]
-        schema = pa.schema(fields)
-        if n < 2:
-            return schema.empty_table()
-        ia, ib = np.triu_indices(n, k=1)
-        off = kv.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-        lens = np.diff(off)
-        vals = kv.values
-        uniform = (kv.null_count == 0 and vals.null_count == 0
-                   and int(lens.min()) == int(lens.max()))
+    n = tbl.num_rows
+    if n < 2:
+        return
+    ids = tbl.column("__kid").combine_chunks()
+    kn = tbl.column("__kn").combine_chunks().cast(pa.float64())
+    kv = tbl.column("__kv").combine_chunks()
+    off = kv.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    lens = np.diff(off)
+    vals = kv.values
+    uniform = (kv.null_count == 0 and vals.null_count == 0
+               and int(lens.min()) == int(lens.max()))
+    if uniform:
+        d = int(lens[0])
+        M = (vals.to_numpy(zero_copy_only=False)[off[0]:off[-1]].reshape(n, d)
+             if d else None)
+    else:
+        pyv = kv.to_pylist()
+    # row i's pairs (i, i+1..n-1) start at flat index i*(2n-i-1)/2
+    rows = np.arange(n, dtype=np.int64)
+    starts = rows * (2 * n - rows - 1) // 2
+    total = n * (n - 1) // 2
+    for p0 in range(0, total, block):
+        p = np.arange(p0, min(p0 + block, total), dtype=np.int64)
+        ia = np.searchsorted(starts, p, side="right") - 1
+        ib = p - starts[ia] + ia + 1
         if uniform:
-            d = int(lens[0])
-            flat = vals.to_numpy(zero_copy_only=False)
-            M = flat[off[0]:off[-1]].reshape(n, d) if d else None
-            dot = np.zeros(len(ia), dtype=np.float64)
+            dot = np.zeros(len(p), dtype=np.float64)
             # dim-order fold vectorized ACROSS pairs: same multiplies,
             # same adds, same order as the engine's sequential fold
             for i in range(d):
                 dot += M[ia, i] * M[ib, i]
             dot_arr = pa.array(dot, type=pa.float64())
         else:
-            pyv = kv.to_pylist()
             dots: list[float | None] = []
             for x, y in zip(ia, ib):
                 va, vb = pyv[x], pyv[y]
@@ -221,18 +216,37 @@ def _pair_dots_arrow(assigned: DataFrame) -> DataFrame:
                     dots.append(None)
                     continue
                 s = 0.0
-                for p, q in zip(va, vb):
-                    s += p * q
+                for u, v in zip(va, vb):
+                    s += u * v
                 dots.append(s)
             dot_arr = pa.array(dots, type=pa.float64())
-        take_a = pa.array(ia)
-        take_b = pa.array(ib)
-        return pa.Table.from_arrays(
+        take_a, take_b = pa.array(ia), pa.array(ib)
+        yield pa.RecordBatch.from_arrays(
             [pc.take(ids, take_a), pc.take(ids, take_b),
-             pc.take(kn, take_a).cast(pa.float64()),
-             pc.take(kn, take_b).cast(pa.float64()),
-             dot_arr],
-            schema=schema)
+             pc.take(kn, take_a), pc.take(kn, take_b), dot_arr],
+            names=["__xid", "__yid", "__na", "__nb", "__dot"])
+
+
+def _pair_dots_arrow(assigned: DataFrame) -> DataFrame:
+    """All within-cluster pairs with their exact dot products.
+
+    Input: (__kid, __kv array<double>, __kn double, cluster). Output one
+    row per unordered position pair inside each cluster:
+    (__xid, __yid, __na, __nb, __dot) — id/norm types pass through Arrow
+    untouched and ``__dot`` is bit-identical to the engine's HOF fold
+    (:func:`_pair_blocks`). Each cluster crosses the boundary ONCE (rows,
+    not pairs); its pairs come back in batches of at most
+    ``_PAIR_BLOCK``, so a hot cluster costs time, not a task's memory.
+    The emitted pair rows carry no vectors, so the downstream cosine
+    filter streams 5 scalars per pair instead of 2*dim doubles.
+    """
+    t = assigned.schema["__kid"].dataType.simpleString()
+    out_schema = f"__xid {t}, __yid {t}, __na double, __nb double, __dot double"
+    # bound into the closure: the workers see the driver's value
+    block = _PAIR_BLOCK
+
+    def pair_dots(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        yield from _pair_blocks(pa.Table.from_batches(list(batches)), block)
 
     return (assigned.select("__kid", "__kv", "__kn", "cluster")
             .groupBy("cluster").applyInArrow(pair_dots, out_schema))
@@ -267,10 +281,11 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str, k: int = 8,
     the rounded cosine is bit-identical to the previous self-join form.
     The SemDeDup contract is unchanged: ``k`` scales with n to bound
     cluster sizes (the paper uses ~100k clusters) — one cluster's
-    vectors must fit a task (they already had to fit a join partition),
-    and for pathological hot clusters the LSH near-dup path
-    (`functions.similarity.near_dup_pairs_lsh`) is the right tool
-    instead. The final keep is a left_anti on ids.
+    vectors must fit a task (they already had to fit a join partition);
+    its pairs stream out in bounded blocks, so a hot cluster is slow
+    (quadratic), not out of memory, and the LSH near-dup path
+    (`functions.similarity.near_dup_pairs_lsh`) is the faster tool for
+    it. The final keep is a left_anti on ids.
     """
     cents = kmeans_centroids(df, id_col, vec_col, k=k, iters=iters)
     assigned = kmeans_assign(

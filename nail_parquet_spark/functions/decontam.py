@@ -13,10 +13,10 @@ Scale shape (100 TB corpus vs a benchmark set of at most GBs):
   tens of millions of longs for even a large benchmark suite — so it is
   broadcast and the corpus side NEVER shuffles its text: the only exchange
   in the whole operator is the final per-doc count keyed by doc id.
-- The corpus side reuses :func:`~..functions.dedup.word_shingles`
-  (per-row ``array_distinct`` + explode, no global distinct) and hashes
-  every shingle to the portable 60-bit md5 long
-  (:func:`~..functions.text.word_hash`) before anything crosses the wire.
+- Both sides are the hashed-shingle table of the near-dup operators
+  (``functions.dedup._shingle_hashes``: per-row ``array_distinct`` +
+  explode, no global distinct on the corpus side, every n-gram hashed to
+  the portable 60-bit md5 long before anything crosses the wire).
 - ``broadcast_eval=False`` falls back to a hash-join for a pathologically
   large eval set; the corpus side still ships only (id, hash).
 
@@ -29,8 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .dedup import word_shingles
-from .text import word_hash
+from .dedup import _shingle_hashes
 
 
 def eval_ngram_hashes(eval_df: DataFrame, text_col: str, n: int = 13) -> DataFrame:
@@ -40,35 +39,18 @@ def eval_ngram_hashes(eval_df: DataFrame, text_col: str, n: int = 13) -> DataFra
     tagged = eval_df.select(
         F.monotonically_increasing_id().alias("__eid"), F.col(text_col)
     )
-    sh = word_shingles(tagged, "__eid", text_col, k=n)
-    return sh.select(word_hash(F.col("shingle")).alias("__h")).distinct()
+    return _shingle_hashes(tagged, "__eid", text_col, k=n).select("__h").distinct()
 
 
-def ngram_overlap(docs: DataFrame, eval_df: DataFrame, id_col: str,
-                  text_col: str, n: int = 13, eval_text_col: str | None = None,
-                  broadcast_eval: bool = True) -> DataFrame:
-    """Per-document contamination report against the eval set.
-
-    Returns (id, n_grams, n_hit, contam_frac):
-
-    - ``n_grams``  — the doc's DISTINCT word n-gram count,
-    - ``n_hit``    — how many of those appear anywhere in the eval set,
-    - ``contam_frac`` — ``round(n_hit / n_grams, 6)`` (0.0 for docs with
-      fewer than ``n`` words).
-
-    Requires ``id_col`` unique per row (the document-table contract shared
-    with word_shingles). ONE explode + ONE groupBy shuffle keyed by doc id;
-    the eval set joins broadcast by default.
-    """
-    ev = eval_ngram_hashes(eval_df, eval_text_col or text_col, n)
+def _overlap_against(docs: DataFrame, ev: DataFrame, id_col: str,
+                     text_col: str, n: int, broadcast_eval: bool) -> DataFrame:
+    """:func:`ngram_overlap` against :func:`eval_ngram_hashes` output."""
     ev = ev.withColumn("__hit", F.lit(1))
     if broadcast_eval:
         ev = F.broadcast(ev)
-    grams = word_shingles(docs, id_col, text_col, k=n).select(
-        F.col(id_col), word_hash(F.col("shingle")).alias("__h")
-    )
     per_doc = (
-        grams.join(ev, "__h", "left")
+        _shingle_hashes(docs, id_col, text_col, k=n)
+        .join(ev, "__h", "left")
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
@@ -90,6 +72,38 @@ def ngram_overlap(docs: DataFrame, eval_df: DataFrame, id_col: str,
     )
 
 
+def ngram_overlap(docs: DataFrame, eval_df: DataFrame, id_col: str,
+                  text_col: str, n: int = 13, eval_text_col: str | None = None,
+                  broadcast_eval: bool = True) -> DataFrame:
+    """Per-document contamination report against the eval set.
+
+    Returns (id, n_grams, n_hit, contam_frac):
+
+    - ``n_grams``  — the doc's DISTINCT word n-gram count,
+    - ``n_hit``    — how many of those appear anywhere in the eval set,
+    - ``contam_frac`` — ``round(n_hit / n_grams, 6)`` (0.0 for docs with
+      fewer than ``n`` words).
+
+    Requires ``id_col`` unique per row (the document-table contract shared
+    with word_shingles). ONE explode + ONE groupBy shuffle keyed by doc id;
+    the eval set joins broadcast by default.
+    """
+    ev = eval_ngram_hashes(eval_df, eval_text_col or text_col, n)
+    return _overlap_against(docs, ev, id_col, text_col, n, broadcast_eval)
+
+
+def _contaminated(docs: DataFrame, ev: DataFrame, id_col: str,
+                  text_col: str, n: int, min_hits: int, min_frac: float,
+                  broadcast_eval: bool = True) -> DataFrame:
+    """The ids of ``docs`` that :func:`decontaminate`'s rule flags against
+    :func:`eval_ngram_hashes` output, so a stream reduces its eval set
+    once for every micro-batch."""
+    rep = _overlap_against(docs, ev, id_col, text_col, n, broadcast_eval)
+    return rep.filter(
+        (F.col("n_hit") >= min_hits) & (F.col("contam_frac") >= min_frac)
+    ).select(id_col)
+
+
 def decontaminate(docs: DataFrame, eval_df: DataFrame, id_col: str,
                   text_col: str, n: int = 13, min_hits: int = 1,
                   min_frac: float = 0.0, eval_text_col: str | None = None,
@@ -100,15 +114,14 @@ def decontaminate(docs: DataFrame, eval_df: DataFrame, id_col: str,
     counts themselves require unique ids, as documented on ngram_overlap).
 
     A doc is flagged iff ``n_hit >= min_hits`` AND
-    ``contam_frac >= min_frac``. The classic 13-gram rule is the default
-    (``min_hits=1, min_frac=0.0``: one colliding 13-gram removes the doc).
+    ``contam_frac >= min_frac`` (the rounded fraction of
+    :func:`ngram_overlap`; a doc with no n-grams has ``contam_frac`` 0.0).
+    The classic 13-gram rule is the default (``min_hits=1,
+    min_frac=0.0``: one colliding 13-gram removes the doc).
     """
-    rep = ngram_overlap(docs, eval_df, id_col, text_col, n=n,
-                        eval_text_col=eval_text_col,
-                        broadcast_eval=broadcast_eval)
-    bad = rep.filter(
-        (F.col("n_hit") >= min_hits) & (F.col("contam_frac") >= min_frac)
-    ).select(id_col)
+    ev = eval_ngram_hashes(eval_df, eval_text_col or text_col, n)
+    bad = _contaminated(docs, ev, id_col, text_col, n, min_hits, min_frac,
+                        broadcast_eval)
     return docs.join(bad, id_col, "left_anti")
 
 

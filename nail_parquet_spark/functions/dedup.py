@@ -9,6 +9,8 @@ oracle can reproduce them bit-for-bit.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from nail_parquet_spark.functions.text import doc_fingerprint, word_hash
@@ -146,93 +148,94 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     return sh.groupBy(id_col).agg(*aggs)
 
 
+def _band_buckets(sigs: DataFrame, id_col: str, num_hashes: int,
+                  bands: int) -> DataFrame:
+    """(id, bucket) rows, one per LSH band: the band number and the band's
+    MinHash slots joined by ``|``."""
+    per = num_hashes // bands
+    return reduce(DataFrame.unionAll, [
+        sigs.select(F.col(id_col), F.concat_ws(
+            "|", F.lit(str(b)), *[F.col(f"mh_{b * per + r}") for r in range(per)]
+        ).alias("bucket"))
+        for b in range(bands)])
+
+
 def minhash_lsh_candidates(sigs: DataFrame, id_col: str, num_hashes: int = 16,
                            bands: int = 4) -> DataFrame:
-    """LSH banding: concat rows of each band, group, emit candidate pairs
-    (id_a < id_b). Pair extraction is a self-join per band bucket."""
-    rows_per = num_hashes // bands
-    parts = []
-    for b in range(bands):
-        cols = [F.col(f"mh_{b * rows_per + r}") for r in range(rows_per)]
-        parts.append(
-            sigs.select(
-                F.col(id_col),
-                F.concat_ws("|", F.lit(str(b)), *cols).alias("bucket"),
-            )
-        )
-    buckets = parts[0]
-    for p in parts[1:]:
-        buckets = buckets.unionAll(p)
-    a = buckets.alias("a")
-    b_ = buckets.alias("b")
+    """LSH banding: candidate pairs (id_a < id_b) sharing a band bucket.
+    Pair extraction is a self-join per band bucket."""
+    buckets = _band_buckets(sigs, id_col, num_hashes, bands)
     return (
-        a.join(b_, (F.col("a.bucket") == F.col("b.bucket")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+        buckets.alias("a").join(buckets.alias("b"), (F.col("a.bucket") == F.col("b.bucket")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .distinct()
     )
 
 
-def jaccard_verify(df: DataFrame, candidates: DataFrame, id_col: str, text_col: str,
-                   shingle_k: int = 3, threshold: float = 0.7) -> DataFrame:
-    """Exact shingle-set Jaccard on candidate pairs only.
+def _shingle_hashes(df: DataFrame, id_col: str, text_col: str,
+                    k: int = 3) -> DataFrame:
+    """(id, __h): each doc's distinct k-word shingles as portable 60-bit
+    md5 hashes — the set table of every near-dup and decontamination
+    operator.
 
-    The shingle table is read three times (both intersection sides, sizes),
-    so it is hashed to 60-bit longs and distinct'd ONCE — the reused
-    exchange + 8-byte-key argument of ngram_jaccard_pairs applies."""
-    sh = word_shingles(df, id_col, text_col, k=shingle_k)
-    shh = sh.select(F.col(id_col), word_hash(F.col("shingle")).alias("__h")).distinct()
-    sa = shh.select(F.col(id_col).alias("id_a"), "__h")
-    sb = shh.select(F.col(id_col).alias("__idb"), F.col("__h").alias("__shb"))
-    inter = (
-        candidates.join(sa, "id_a")
-        .join(sb, (F.col("id_b") == F.col("__idb")) & (F.col("__h") == F.col("__shb")), "inner")
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sizes = shh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    out = (
-        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-        .withColumn("jaccard", F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return out
+    Consumers read a doc's set several times (both join sides, the sizes,
+    the doc-frequency cap), so shingles are hashed before anything crosses
+    the wire and every later shuffle carries 8-byte longs, not text. Each
+    caller deduplicates (id, __h) ONCE in its own shape; that exchange is
+    the materialization point ReuseExchange shares across all consumers
+    (measured 2x the whole operator at sf0.1 vs recomputing per consumer).
+    A cross-shingle collision within one doc (~2^-60 per pair) could move
+    a count by 1; the DuckDB oracles hash identically, so results stay
+    value-exact."""
+    return word_shingles(df, id_col, text_col, k=k).select(
+        F.col(id_col), word_hash(F.col("shingle")).alias("__h"))
 
 
-def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
-                        shingle_k: int = 3, threshold: float = 0.5,
-                        max_doc_freq: int = 1000) -> DataFrame:
-    """Direct n-gram Jaccard near-dup pairs: candidates = pairs sharing at
-    least one shingle (inverted-index join), then exact verify.
+def _overlap_pairs(inter: DataFrame, side_a: tuple[DataFrame, str],
+                   side_b: tuple[DataFrame, str], threshold: float,
+                   containment: bool = False) -> DataFrame:
+    """The verify tail: ``inter`` is (a, b, n_inter) per pair, and
+    ``side_a``/``side_b`` are the (set table, id column) that a / b refer
+    to. Returns (a, b, jaccard), or with ``containment=True`` (a, b,
+    containment_a, containment_b) = n_inter / n_a, n_inter / n_b kept when
+    the larger passes. The threshold compares the EXACT ratio (as the
+    DuckDB oracles do); only the reported columns round to 6 places."""
+    a, b = inter.columns[:2]
 
-    At 100 TB the shared-shingle join is bounded by dropping ubiquitous
-    shingles (document frequency cap) — the classic inverted-index trick.
-    ``max_doc_freq`` is that cap: shingles present in more docs are excluded
-    from candidate generation (NOT from the exact Jaccard denominator), so a
-    pair whose only shared shingles are all above the cap is missed — the
-    standard recall/cost trade; raise the cap for exactness.
+    def sizes(side: tuple[DataFrame, str], key: str, n: str) -> DataFrame:
+        sh, sid = side
+        return (sh.groupBy(sid).agg(F.count(F.lit(1)).alias("__n"))
+                .withColumnRenamed(sid, key).withColumnRenamed("__n", n))
 
-    This operator reads its shingle table FOUR times (inverted-index join
-    both sides, doc-frequency cap, per-doc sizes), so it hashes each
-    shingle to the portable 60-bit md5 long and runs ONE ``.distinct()`` on
-    (id, hash): the distinct's exchange is a materialization point Spark's
-    ReuseExchange shares across all four consumers (one explode + one
-    16-byte-row shuffle total — measured 2x the whole operator at sf0.1 vs
-    recomputing per consumer), and every downstream join/groupBy shuffles
-    8-byte longs instead of shingle text. A cross-shingle hash collision
-    within one doc could perturb a count by 1 — probability ~2^-60 per
-    pair, and the DuckDB oracle reproduces the identical hashing, so
-    results stay value-exact."""
-    sh = word_shingles(df, id_col, text_col, k=shingle_k)
+    pairs = inter.join(sizes(side_a, a, "n_a"), a).join(sizes(side_b, b, "n_b"), b)
+    n_inter = F.col("n_inter")
+    if containment:
+        ra, rb = n_inter / F.col("n_a"), n_inter / F.col("n_b")
+        return pairs.filter(F.greatest(ra, rb) >= threshold).select(
+            a, b, F.round(ra, 6).alias("containment_a"),
+            F.round(rb, 6).alias("containment_b"))
+    ratio = n_inter / (F.col("n_a") + F.col("n_b") - n_inter)
+    return pairs.filter(ratio >= threshold).select(
+        a, b, F.round(ratio, 6).alias("jaccard"))
+
+
+def _inverted_index_pairs(df: DataFrame, id_col: str, text_col: str,
+                          shingle_k: int, max_doc_freq: int
+                          ) -> tuple[DataFrame, DataFrame]:
+    """The n-gram pair operators' inverted index: (inter, shh), with
+    ``shh`` the deduplicated set table and ``inter`` (id_a, id_b, n_inter)
+    for the pairs (id_a < id_b) sharing a shingle in at most
+    ``max_doc_freq`` docs. The cap bounds the self-join at 100 TB by
+    dropping ubiquitous shingles from it, but NOT from the set sizes: a
+    pair sharing only capped shingles is missed, and one sharing some
+    counts them out of ``n_inter``, so its ratio reads below the exact
+    one — the standard recall/cost trade; raise the cap for exactness."""
     # repartition by the shingle hash BEFORE the dedup: the (id, h) dedup
-    # aggregate only needs rows CLUSTERED by a subset of its keys, so the
-    # h-partitioning satisfies it shuffle-free, and the doc-freq
-    # aggregate, the freq semi-join and the inverted-index self-join all
-    # inherit the same partitioning — one exchange where the plain
-    # .distinct() shape paid an (id, h) exchange plus three h exchanges
-    # (r06 A/B at sf0.1: 6.8 -> 3.4 s first-shot, identical rows)
-    shh = (sh.select(F.col(id_col), word_hash(F.col("shingle")).alias("__h"))
+    # only needs rows clustered by a subset of its keys, so it and the
+    # doc-freq aggregate, freq semi-join and self-join all reuse the one
+    # h-exchange, where .distinct() paid an (id, h) exchange plus three h
+    # exchanges (r06 A/B at sf0.1: 6.8 -> 3.4 s first-shot, same rows)
+    shh = (_shingle_hashes(df, id_col, text_col, k=shingle_k)
            .repartition("__h").dropDuplicates())
     freq = (
         shh.groupBy("__h").agg(F.count(F.lit(1)).alias("__df"))
@@ -247,14 +250,35 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    sizes = shh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    return (
-        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-        .withColumn("jaccard", F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return inter, shh
+
+
+def jaccard_verify(df: DataFrame, candidates: DataFrame, id_col: str, text_col: str,
+                   shingle_k: int = 3, threshold: float = 0.7) -> DataFrame:
+    """Exact shingle-set Jaccard on candidate pairs (id_a, id_b) only:
+    (id_a, id_b, jaccard) for pairs with Jaccard >= ``threshold``."""
+    shh = _shingle_hashes(df, id_col, text_col, k=shingle_k).distinct()
+    sa = shh.select(F.col(id_col).alias("id_a"), "__h")
+    sb = shh.select(F.col(id_col).alias("__idb"), F.col("__h").alias("__shb"))
+    inter = (
+        candidates.join(sa, "id_a")
+        .join(sb, (F.col("id_b") == F.col("__idb")) & (F.col("__h") == F.col("__shb")), "inner")
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_inter"))
     )
+    return _overlap_pairs(inter, (shh, id_col), (shh, id_col), threshold)
+
+
+def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
+                        shingle_k: int = 3, threshold: float = 0.5,
+                        max_doc_freq: int = 1000) -> DataFrame:
+    """Direct n-gram Jaccard near-dup pairs (id_a, id_b, jaccard) from
+    the inverted index: every pair sharing a shingle below the
+    ``max_doc_freq`` cap, with the cap's effect on the ratio described
+    on :func:`_inverted_index_pairs`."""
+    inter, shh = _inverted_index_pairs(df, id_col, text_col, shingle_k,
+                                       max_doc_freq)
+    return _overlap_pairs(inter, (shh, id_col), (shh, id_col), threshold)
 
 
 def ngram_containment_pairs(df: DataFrame, id_col: str, text_col: str,
@@ -274,45 +298,14 @@ def ngram_containment_pairs(df: DataFrame, id_col: str, text_col: str,
     standard fix (reference parity: the reference ships no near-dup
     operator at all; this extends the same inverted-index family).
 
-    Candidate generation, document-frequency cap, and the single reused
-    ``(id, md5-60-bit-hash)`` distinct exchange are identical to
-    :func:`ngram_jaccard_pairs` — see that docstring for the 100-TB cost
-    argument; only the final ratio differs. Pairs are oriented
-    ``id_a < id_b``; both directed ratios are returned so callers can pick
-    the containing side (the smaller set is the one with the higher
-    ratio)."""
-    sh = word_shingles(df, id_col, text_col, k=shingle_k)
-    # repartition by the shingle hash BEFORE the dedup: the (id, h) dedup
-    # aggregate only needs rows CLUSTERED by a subset of its keys, so the
-    # h-partitioning satisfies it shuffle-free, and the doc-freq
-    # aggregate, the freq semi-join and the inverted-index self-join all
-    # inherit the same partitioning — one exchange where the plain
-    # .distinct() shape paid an (id, h) exchange plus three h exchanges
-    # (r06 A/B at sf0.1: 6.8 -> 3.4 s first-shot, identical rows)
-    shh = (sh.select(F.col(id_col), word_hash(F.col("shingle")).alias("__h"))
-           .repartition("__h").dropDuplicates())
-    freq = (
-        shh.groupBy("__h").agg(F.count(F.lit(1)).alias("__df"))
-        .filter(F.col("__df") <= max_doc_freq)
-    )
-    sh2 = shh.join(freq.select("__h"), "__h")
-    a = sh2.select(F.col(id_col).alias("id_a"), "__h")
-    b = sh2.select(F.col(id_col).alias("id_b"), "__h")
-    inter = (
-        a.join(b, ["__h"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sizes = shh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    return (
-        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-        .withColumn("containment_a", F.round(F.col("n_inter") / F.col("n_a"), 6))
-        .withColumn("containment_b", F.round(F.col("n_inter") / F.col("n_b"), 6))
-        .filter(F.greatest(F.col("containment_a"), F.col("containment_b")) >= threshold)
-        .select("id_a", "id_b", "containment_a", "containment_b")
-    )
+    Candidates come from the same inverted index as the Jaccard pairs;
+    only the final ratio differs. Pairs are oriented ``id_a < id_b``; both
+    directed ratios are returned so callers can pick the containing side
+    (the smaller set is the one with the higher ratio)."""
+    inter, shh = _inverted_index_pairs(df, id_col, text_col, shingle_k,
+                                       max_doc_freq)
+    return _overlap_pairs(inter, (shh, id_col), (shh, id_col), threshold,
+                          containment=True)
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFrame:
@@ -503,7 +496,7 @@ def _duplicate_positions(df: DataFrame, id_col: str, text_col: str,
     and the join probe: without it the two consumers' exchanges differ
     (partial-agg vs plain project), ReuseExchange cannot fire, and the
     expensive window-string + md5 build ran twice over the corpus (the
-    same single-materialization pattern ngram_jaccard_pairs documents).
+    same single-materialization pattern as _inverted_index_pairs).
     Rows are 16-byte (id, pos, hash) — the extra unaggregated shuffle
     volume is the same class as the probe side that always shuffled."""
     wins = _window_positions(df, id_col, text_col, w).repartition("h")

@@ -42,7 +42,7 @@ bytes (prefix-sum + modular-inverse-power trick, fully vectorized —
 tokens are never materialized as Python strings). Two DISTINCT tokens in
 the SAME document colliding mod 2^64 would merge two histogram buckets;
 probability ~2^-64 per pair, the same accepted trade as the md5-60-bit
-shingle keys in functions/dedup.ngram_jaccard_pairs.
+shingle keys in functions/dedup._shingle_hashes.
 """
 
 from __future__ import annotations

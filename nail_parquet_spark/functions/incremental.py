@@ -31,8 +31,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from nail_parquet_spark.functions.dedup import minhash_signatures, word_shingles
-from nail_parquet_spark.functions.text import doc_fingerprint, word_hash
+from nail_parquet_spark.functions.dedup import (_band_buckets, _overlap_pairs,
+                                                _shingle_hashes,
+                                                minhash_signatures)
+from nail_parquet_spark.functions.text import doc_fingerprint
 
 
 def dedup_against(df: DataFrame, prior: DataFrame, text_col: str,
@@ -110,23 +112,6 @@ def load_signatures(spark: SparkSession, out_dir: str):
     return spark.read.parquet(path), meta
 
 
-def _band_buckets(sigs: DataFrame, id_col: str, num_hashes: int,
-                  bands: int) -> DataFrame:
-    """(id, bucket) rows, one per band — the same banding rule as
-    ``minhash_lsh_candidates`` so thresholds/recall carry over."""
-    rows_per = num_hashes // bands
-    parts = []
-    for b in range(bands):
-        cols = [F.col(f"mh_{b * rows_per + r}") for r in range(rows_per)]
-        parts.append(sigs.select(
-            F.col(id_col),
-            F.concat_ws("|", F.lit(str(b)), *cols).alias("bucket")))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
-
-
 def near_dup_against_pairs(df: DataFrame, prior: DataFrame, id_col: str,
                            text_col: str, prior_id_col: str | None = None,
                            prior_text_col: str | None = None,
@@ -144,10 +129,9 @@ def near_dup_against_pairs(df: DataFrame, prior: DataFrame, id_col: str,
     the only prior-text work is shingling the docs that actually appear in
     candidate pairs (a semi-join-restricted sliver), not the whole corpus.
 
-    The verify step hashes each side's shingles to the portable 60-bit
-    md5 long and distinct's ONCE per side (ReuseExchange shares the
-    exchange across the intersection join and the size aggregate), so the
-    only wide shuffles carry (id, 8-byte hash) rows.
+    The verify step deduplicates each side's hashed-shingle set ONCE
+    (``functions.dedup._shingle_hashes``), so the only wide shuffles
+    carry (id, 8-byte hash) rows.
     """
     pid = prior_id_col or id_col
     pcol = prior_text_col or text_col
@@ -183,29 +167,18 @@ def near_dup_against_pairs(df: DataFrame, prior: DataFrame, id_col: str,
     prior_cand = prior_view.join(
         cand.select(F.col("id_prior").alias("__pid")).distinct(),
         "__pid", "left_semi")
-    sh_new = (word_shingles(df, id_col, text_col, k=shingle_k)
-              .select(F.col(id_col).alias("id_new"),
-                      word_hash(F.col("shingle")).alias("__h"))
-              .distinct())
-    sh_old = (word_shingles(prior_cand, "__pid", text_col, k=shingle_k)
-              .select(F.col("__pid").alias("id_prior"),
-                      word_hash(F.col("shingle")).alias("__h"))
-              .distinct())
+    sh_new = (_shingle_hashes(df, id_col, text_col, k=shingle_k)
+              .withColumnRenamed(id_col, "id_new").distinct())
+    sh_old = (_shingle_hashes(prior_cand, "__pid", text_col, k=shingle_k)
+              .withColumnRenamed("__pid", "id_prior").distinct())
     inter = (
         cand.join(sh_new, "id_new")
         .join(sh_old, ["id_prior", "__h"])
         .groupBy("id_new", "id_prior")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    size_new = sh_new.groupBy("id_new").agg(F.count(F.lit(1)).alias("n_a"))
-    size_old = sh_old.groupBy("id_prior").agg(F.count(F.lit(1)).alias("n_b"))
-    return (
-        inter.join(size_new, "id_new").join(size_old, "id_prior")
-        .withColumn("jaccard", F.round(
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_new", "id_prior", "jaccard")
-    )
+    return _overlap_pairs(inter, (sh_new, "id_new"), (sh_old, "id_prior"),
+                          threshold)
 
 
 def near_dedup_against(df: DataFrame, prior: DataFrame, id_col: str,

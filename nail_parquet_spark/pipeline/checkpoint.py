@@ -580,7 +580,9 @@ def read_blocks_at(spark: SparkSession, out_dir: str,
         raise ValueError(
             f"snapshot {snapshot_id} holds no data commits (delete-only "
             f"history) under {out_dir}")
-    return spark.read.parquet(*dirs)
+    from nail_parquet_spark.codec.decode import read_blocks
+
+    return read_blocks(spark, *dirs)
 
 
 def read_manifests(out_dir: str) -> list[dict]:

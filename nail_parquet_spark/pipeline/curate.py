@@ -586,16 +586,14 @@ def curate_and_encode_corpus(
         if eval_src is not None:
             # decontamination runs LAST: the post-dedup corpus is the
             # smallest input, and the eval-set grams broadcast either way
-            from nail_parquet_spark.functions.decontam import ngram_overlap
+            from nail_parquet_spark.functions.decontam import (
+                _contaminated, eval_ngram_hashes)
             from nail_parquet_spark.sources.io import read_data
 
-            eval_df = read_data(spark, eval_src)
-            rep = ngram_overlap(
-                cur, eval_df, "__doc_id", text_col, n=decontam_ngram,
-                eval_text_col=eval_text_col or text_col)
-            bad = rep.filter(
-                (F.col("n_hit") >= decontam_min_hits)
-                & (F.col("contam_frac") >= decontam_min_frac)).select("__doc_id")
+            ev = eval_ngram_hashes(read_data(spark, eval_src),
+                                   eval_text_col or text_col, decontam_ngram)
+            bad = _contaminated(cur, ev, "__doc_id", text_col, decontam_ngram,
+                                decontam_min_hits, decontam_min_frac)
             rej = cur.join(bad, "__doc_id", "left_semi")
             rej.select("__doc_id", url_col).write.mode("overwrite").parquet(
                 _reject_dir(out_dir, "decontam"))

@@ -103,27 +103,16 @@ def decontam_stream(
     from pyspark.sql import functions as F
 
     if mode == "ngram":
-        from nail_parquet_spark.functions.dedup import word_shingles
-        from nail_parquet_spark.functions.decontam import eval_ngram_hashes
-        from nail_parquet_spark.functions.text import word_hash
+        from nail_parquet_spark.functions.decontam import (_contaminated,
+                                                           eval_ngram_hashes)
 
         # one eval-side materialization per JOB, reused every micro-batch
         ev = eval_ngram_hashes(eval_df, text_col, n).cache()
         ev.count()
 
         def filter_batch(batch_df: DataFrame, batch_id: int) -> None:
-            grams = word_shingles(batch_df, id_col, text_col, k=n).select(
-                F.col(id_col), word_hash(F.col("shingle")).alias("__h"))
-            per_doc = (
-                grams.join(F.broadcast(ev.withColumn("__hit", F.lit(1))),
-                           "__h", "left")
-                .groupBy(id_col)
-                .agg(F.count(F.lit(1)).alias("n_grams"),
-                     F.sum(F.coalesce(F.col("__hit"), F.lit(0))).alias("n_hit"))
-            )
-            bad = per_doc.filter(
-                (F.col("n_hit") >= min_hits)
-                & (F.col("n_hit") / F.col("n_grams") >= min_frac)).select(id_col)
+            bad = _contaminated(batch_df, ev, id_col, text_col, n, min_hits,
+                                min_frac)
             kept = batch_df.join(bad, id_col, "left_anti")
             kept.write.mode("overwrite").parquet(
                 f"{out_dir}/ingest_batch={batch_id}")

@@ -204,25 +204,12 @@ def test_kmeans_assign_plan_no_shuffle(spark, vecs):
     assert "Exchange" not in plan, plan
 
 
-def test_pair_dots_arrow_matches_hof_join(spark):
-    """The Arrow pair-dot pass (r06 optimization) must reproduce the old
-    cluster-keyed self-join + HOF-fold cosine bit-for-bit — including
-    zip_with's null-padding semantics (ragged pair / NULL element -> NULL
-    dot -> pair dropped) and empty vectors (dot 0.0)."""
+def _pair_dots_both_ways(spark, rows):
+    """(old, new): the cluster-keyed self-join + HOF-fold dots, and the
+    Arrow pair-dot pass, each as (id_a, id_b, dot, nprod) rows."""
     from nail_parquet_spark.functions.cluster import _pair_dots_arrow
     from nail_parquet_spark.functions.similarity import _dot_expr
 
-    rows = [
-        (0, [1.0, 0.25, -0.5], 0),
-        (1, [0.99, 0.24, -0.51], 0),
-        (2, [1.0, 0.25, -0.5, 0.1], 0),    # ragged: pairs with 0/1 NULL out
-        (3, [0.5, None, 0.25], 0),          # NULL element: all pairs NULL out
-        (4, [0.123456789, 1e-9, 7.5], 1),
-        (5, [0.123456788, -1e-9, 7.5], 1),
-        (6, [], 2),
-        (7, [], 2),                         # empty pair: dot 0.0, norm 0.0
-        (8, [2.0, 3.0], 3),                 # singleton cluster: no pairs
-    ]
     df = spark.createDataFrame(rows, "__kid long, __kv array<double>, cluster int")
     assigned = df.withColumn(
         "__kn",
@@ -244,11 +231,62 @@ def test_pair_dots_arrow_matches_hof_join(spark):
                    F.greatest("__xid", "__yid").alias("id_b"),
                    F.col("__dot").alias("dot"),
                    (F.col("__na") * F.col("__nb")).alias("nprod")))
+    return old, new
+
+
+def test_pair_dots_arrow_matches_hof_join(spark):
+    """The Arrow pair-dot pass (r06 optimization) must reproduce the old
+    cluster-keyed self-join + HOF-fold cosine bit-for-bit — including
+    zip_with's null-padding semantics (ragged pair / NULL element -> NULL
+    dot -> pair dropped) and empty vectors (dot 0.0)."""
+    rows = [
+        (0, [1.0, 0.25, -0.5], 0),
+        (1, [0.99, 0.24, -0.51], 0),
+        (2, [1.0, 0.25, -0.5, 0.1], 0),    # ragged: pairs with 0/1 NULL out
+        (3, [0.5, None, 0.25], 0),          # NULL element: all pairs NULL out
+        (4, [0.123456789, 1e-9, 7.5], 1),
+        (5, [0.123456788, -1e-9, 7.5], 1),
+        (6, [], 2),
+        (7, [], 2),                         # empty pair: dot 0.0, norm 0.0
+        (8, [2.0, 3.0], 3),                 # singleton cluster: no pairs
+    ]
+    old, new = _pair_dots_both_ways(spark, rows)
     assert new.exceptAll(old).count() == 0
     assert old.exceptAll(new).count() == 0
     # the NULL-dot pairs (ragged 2x, null-element 3x) survive as NULL
     assert new.filter(F.col("dot").isNull()).count() == \
         old.filter(F.col("dot").isNull()).count() == 5
+
+
+def test_pair_dots_arrow_emits_bounded_blocks(spark, monkeypatch):
+    """A cluster whose pairs span several blocks gives the same rows as
+    the HOF join, and no emitted batch holds more than the block size —
+    for the uniform numpy path and the ragged/NULL fallback alike."""
+    import random
+
+    import pyarrow as pa
+
+    from nail_parquet_spark.functions import cluster
+
+    rng = random.Random(5)
+    uniform = [(i, [rng.uniform(-1, 1) for _ in range(5)], 0) for i in range(9)]
+    ragged = [(100 + i, [rng.uniform(-1, 1) for _ in range(2 + i % 2)], 1)
+              for i in range(6)] + [(106, [0.5, None], 1)]
+    monkeypatch.setattr(cluster, "_PAIR_BLOCK", 4)
+    old, new = _pair_dots_both_ways(spark, uniform + ragged)
+    assert new.count() == 36 + 21
+    assert new.exceptAll(old).count() == 0
+    assert old.exceptAll(new).count() == 0
+    for rows in (uniform, ragged):
+        vecs = [v for _, v, _ in rows]
+        tbl = pa.table({
+            "__kid": pa.array([i for i, _, _ in rows], pa.int64()),
+            "__kv": pa.array(vecs, pa.list_(pa.float64())),
+            "__kn": pa.array([1.0] * len(rows), pa.float64())})
+        sizes = [b.num_rows for b in cluster._pair_blocks(tbl, 4)]
+        n = len(rows)
+        assert len(sizes) > 1 and max(sizes) <= 4
+        assert sum(sizes) == n * (n - 1) // 2
 
 
 def test_lit_double_array_bit_identity(spark):

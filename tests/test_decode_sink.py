@@ -130,3 +130,41 @@ def test_cli_decode_of_a_snapshot_takes_the_per_file_task(spark, tmp_path,
     assert rows("--snapshot", str(first)) == 1_000
     rollback_to(out, first)
     assert rows() == 1_000
+
+
+def test_read_blocks_at_starts_no_job(spark, tmp_path):
+    # the block files' schema is known, so reading a snapshot's batch dirs
+    # needs no inference job; the frame still decodes to the source rows
+    from nail_parquet_spark.pipeline.checkpoint import (encode_resumable,
+                                                        read_blocks_at)
+
+    src = tmp_path / "src"
+    src.mkdir()
+    tables = []
+    for i in range(2):
+        t = pa.Table.from_batches([make_webpages_batch(80 + i, 0, 400)])
+        pq.write_table(t, str(src / f"p{i}.parquet"))
+        tables.append(t)
+    out = str(tmp_path / "enc")
+    encode_resumable(spark, str(src), out, units_per_job=1)
+    sc = spark.sparkContext
+    group = f"sink-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        blocks = read_blocks_at(spark, out)
+    finally:
+        sc.setJobGroup("", "")
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    dec = str(tmp_path / "dec")
+    decode_to_parquet(blocks, dec).collect()
+    assert _decoded(dec, pa.concat_tables(tables).sort_by("url"))
+
+
+def test_read_blocks_refuses_a_plain_parquet_dir(spark, tmp_path):
+    # the known schema would read any parquet file as all-NULL block rows;
+    # a file without the block columns is refused instead
+    from nail_parquet_spark.codec.decode import read_blocks
+
+    pq.write_table(pa.table({"url": ["a"], "n": [1]}), str(tmp_path / "p.parquet"))
+    with pytest.raises(ValueError, match="not a block file"):
+        read_blocks(spark, str(tmp_path))

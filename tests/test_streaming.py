@@ -248,6 +248,31 @@ def test_stream_decontam_matches_batch(spark, tmp_path):
     assert got == want == {1, 3, 4}
 
 
+def test_stream_decontam_frac_boundary_matches_batch(spark, tmp_path):
+    """The stream flags by the same rule as the batch operator: the
+    ROUNDED contamination fraction. Doc 1 has 2 of its 3 trigrams in the
+    eval set (2/3 rounds up to 0.666667), so a min_frac between 2/3 and
+    0.666667 removes it in both."""
+    from nail_parquet_spark.functions.decontam import decontaminate
+    from nail_parquet_spark.streaming.encode_stream import decontam_stream
+
+    src = str(tmp_path / "in")
+    rows = [(1, "x y z w q"), (2, "clean words about spark shuffles")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df.coalesce(1).write.parquet(src)
+    ev = spark.createDataFrame([("x y z w",)], "text string")
+    out = str(tmp_path / "out")
+    decontam_stream(spark, src, out, str(tmp_path / "ck"),
+                    "doc_id long, text string", ev, "doc_id", "text", n=3,
+                    min_frac=0.6666667)
+    got = {r["doc_id"] for r in
+           spark.read.option("recursiveFileLookup", "true").parquet(out).collect()}
+    want = {r["doc_id"] for r in
+            decontaminate(df, ev, "doc_id", "text", n=3,
+                          min_frac=0.6666667).collect()}
+    assert got == want == {2}
+
+
 def test_warc_ingest_stream_incremental(spark, tmp_path):
     """New WARC segments are ingested exactly once: first run parses the
     first segment, a re-run with the same checkpoint after a second
