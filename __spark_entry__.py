@@ -1653,8 +1653,8 @@ def q_count_pushdown(spark, sf_dir):
     orders sorted-within-partitions on o_totalprice, so zone maps DECIDE
     almost every block — interior blocks count from metadata
     (n_rows - null_count), only range-boundary blocks decode the one
-    predicate column, and decode positions pin exact block identity (no
-    double counts through the parts x bids superset filter). Exact by
+    predicate column, and the decode reads exactly the boundary groups
+    (the exact keep-set), so no group is counted twice. Exact by
     construction; oracle is plain COUNT(*) WHERE."""
     from nail_parquet_spark.codec.encode import encode_table
     from nail_parquet_spark.codec.inspect import count_where_pushdown

@@ -111,14 +111,17 @@ def _collect_within(frame: DataFrame, n_parts: int, budget: int):
 def _local_scan_files(blocks: DataFrame) -> list[str] | None:
     """The files of ``blocks``, sorted, when its optimized plan is a bare
     parquet scan (no filter, projection, join or cache above it) of local
-    ``file:`` files; None otherwise. The index reads such a table on the
-    driver (up to its limits below), and the parquet-sink decode runs one
-    task per file."""
+    ``file:`` files and the frame is not cached; None otherwise. The index
+    reads such a table on the driver (up to its limits below), and a
+    decode runs one task per file."""
     try:
         plan = blocks._jdf.queryExecution().optimizedPlan()
     except AttributeError:  # a Spark Connect frame has no JVM plan
         return None
-    if plan.getClass().getSimpleName() != "LogicalRelation":
+    # a frame .cache()d after its plan was optimized still plans as a scan
+    cache = blocks.sparkSession._jsparkSession.sharedState().cacheManager()
+    if (plan.getClass().getSimpleName() != "LogicalRelation"
+            or cache.lookupCachedData(blocks._jdf).isDefined()):
         return None
     rel = plan.relation()
     if (rel.getClass().getSimpleName() != "HadoopFsRelation"
@@ -316,12 +319,15 @@ class BlockIndex:
 
     # ---- pruning --------------------------------------------------------
     def keep(self, clauses) -> set[tuple] | None:
-        """The (part_id, block_id) pairs of the groups that may hold a row
-        of the CNF ``clauses`` (a list of OR-lists of ``(column, op,
-        value)``), or None when the index prunes nothing (over the cap, or
-        every group may match). A group survives a clause when zone maps
-        and blooms both admit it for some disjunct; a group without a block
-        of a disjunct's column never matches that disjunct."""
+        """The exact keep-set of the CNF ``clauses`` (a list of OR-lists of
+        ``(column, op, value)``): the ``(source file, part_id, block_id)``
+        keys of the groups that may hold a matching row, or None when the
+        index prunes nothing (over the cap, or every group may match). A
+        group survives a clause when zone maps and blooms both admit it for
+        some disjunct; a group without a block of a disjunct's column never
+        matches that disjunct. The source file keeps equal-numbered groups
+        of different encode jobs apart (the batch dirs of a resumable
+        out_dir), so a decode of the keep-set reads no other group."""
         for clause in clauses:
             for c, op, _ in clause:
                 self._check(c, op)
@@ -333,9 +339,7 @@ class BlockIndex:
             for c, op, v in clause:
                 hit |= self._keep_one(c, op, v)
             keys = hit if keys is None else keys & hit
-        if len(keys) == self.n_groups:
-            return None
-        return {(p, b) for _, p, b in keys}
+        return None if len(keys) == self.n_groups else keys
 
     def _check(self, column: str, op: str) -> None:
         if op not in zonemap.PRUNE_OPS and op != "contains":

@@ -1,15 +1,24 @@
 """Distributed decode stage: encoded-blocks DataFrame -> original table.
 
-Blocks of one (part_id, block_id) group are co-located by a hash
-repartition, ordered within the partition, then streamed through
-``mapInArrow``: each completed group decodes its per-column payloads back to
-Arrow arrays and emits a record batch of the original schema. The parquet
-sink (:func:`decode_to_parquet`) skips that shuffle for a bare scan of
-local block files, where every file-keyed group lies inside one file: one
-task reads, sorts and decodes each file. Both feed the same group assembly
-(:func:`_iter_groups`). Row order is not preserved across the round trip
-(verification joins on a key — per the north rule, byte-identical ``text``
-per ``url``).
+Every decode streams the blocks of each (source file, part_id, block_id)
+group, sorted by that key, through one group assembly
+(:func:`_iter_groups`): each completed group decodes its per-column
+payloads back to Arrow arrays and emits a record batch of the original
+schema. One source function (:func:`_source`) picks, from the plan alone,
+where those rows come from. A bare scan of local block files under the
+file-keyed group identity, whose files each fit a read split, decodes one
+task per file: this engine's encode writes whole groups per file, so each
+task reads its file's groups with pyarrow, one stage with no Exchange.
+Every other frame is co-located by a hash repartition and sorted.
+
+A pruned read hands the source the index's exact keep-set
+(:meth:`codec.blockindex.BlockIndex.keep`, the source-file-scoped group
+keys). The per-file source reads only the files and row groups that hold
+a kept group; the shuffle pushes the kept part and block ids into the
+parquet scan and then filters the exact keys. Both decode exactly the
+same groups. Row order is not preserved across the round trip
+(verification joins on a key — per the north rule, byte-identical
+``text`` per ``url``).
 """
 
 from __future__ import annotations
@@ -20,7 +29,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from nail_parquet_spark.codec import zonemap
-from nail_parquet_spark.codec.blockindex import (BlockIndex, _local_path,
+from nail_parquet_spark.codec.blockindex import (BlockIndex, _collect_within,
+                                                 _local_path,
+                                                 _local_scan_files,
                                                  _src_expr_frame)
 from nail_parquet_spark.codec.kernels import EncodedBlock, decode_array
 from nail_parquet_spark.sources.io import TaskFile, map_slices
@@ -67,12 +78,17 @@ def _fetch_closure(headers: dict[str, dict], refs: dict[str, set],
 
 
 def _grouped(blocks: DataFrame, fetch_cols: list[str], file_keyed: bool,
-             pre_grouped: bool = False) -> DataFrame:
+             pre_grouped: bool = False, keep: set | None = None) -> DataFrame:
     """(source-file, part_id, block_id, column, header, payload) rows of the
     ``fetch_cols`` blocks, each group's rows adjacent within one partition:
     co-located by a hash repartition and sorted, unless ``pre_grouped``
     says they already are. Columns are restricted BEFORE grouping, so the
     shuffle carries only fetched payloads.
+
+    ``keep`` (an exact keep-set of (source file, part_id, block_id) keys)
+    restricts the rows to those groups: their exact pairs
+    (:func:`_keep_pairs`, pushed into the scan), then under
+    ``file_keyed=True`` the exact keys.
 
     The source file disambiguates block groups across independently-run
     encode jobs (each restarts partition ids at 0 — e.g. the batch dirs of a
@@ -87,15 +103,46 @@ def _grouped(blocks: DataFrame, fetch_cols: list[str], file_keyed: bool,
     tables that were repartitioned/compacted AFTER encoding (groups may span
     files there), and only safe when ALL blocks come from one encode job."""
     base = ["part_id", "block_id", "column", "header", "payload"]
+    # filters sit below input_file_name(): a nondeterministic projection
+    # stops Catalyst from pushing anything above it into the scan
+    blocks = _keep_pairs(blocks.filter(F.col("column").isin(fetch_cols)),
+                         keep)
     if file_keyed:
         part = _src_expr_frame(blocks, warn=True).select("__src", *base)
+        if keep is not None:
+            part = _in_keys(part, ["__src", "part_id", "block_id"], keep)
     else:
         part = blocks.select(F.lit("").alias("__src"), *base)
-    part = part.filter(F.col("column").isin(fetch_cols))
     if pre_grouped:
         return part
     return (part.repartition("__src", "part_id", "block_id")
             .sortWithinPartitions("__src", "part_id", "block_id"))
+
+
+# keys a literal isin carries; larger key sets take a broadcast semi-join
+_LITERAL_KEYS = 4096
+
+
+def _key_cond(cols: list[str], keys) -> F.Column:
+    """Whether a row's ``cols`` equal one of the ``keys`` tuples: one
+    literal ``isin`` on the joined key, for at most ``_LITERAL_KEYS``
+    keys."""
+    ident = F.concat_ws("\x00", *(F.col(c).cast("string") for c in cols))
+    return ident.isin(sorted("\x00".join(map(str, k)) for k in keys))
+
+
+def _in_keys(frame: DataFrame, cols: list[str], keys) -> DataFrame:
+    """The rows of ``frame`` whose ``cols`` equal one of the ``keys``
+    tuples: :func:`_key_cond` up to ``_LITERAL_KEYS`` keys, a broadcast
+    semi-join above. Both are narrow, so rows adjacent within a partition
+    stay adjacent."""
+    if len(keys) <= _LITERAL_KEYS:
+        return frame.filter(_key_cond(cols, keys))
+    ddl = ", ".join(f"{c} {'string' if c == '__src' else 'bigint'}"
+                    for c in cols)
+    kdf = frame.sparkSession.createDataFrame(sorted(keys), ddl)
+    return (frame.join(F.broadcast(kdf), cols, "left_semi")
+            .select(*frame.columns))
 
 
 def _fill_missing(missing_columns: str) -> bool:
@@ -106,21 +153,18 @@ def _fill_missing(missing_columns: str) -> bool:
     return missing_columns == "null"
 
 
-def _iter_groups(batches, columns, strict: bool = True, with_key: bool = False):
+def _iter_groups(batches, columns, strict: bool = True):
     """Shared group-assembly state machine of every decode: rows arrive
     sorted by (src, part_id, block_id); flush on key transition,
     validate the requested columns per group, and refuse duplicate
     (group, column) rows — a duplicate means two distinct groups share a key
     (e.g. a union of in-memory encode jobs where the file key is empty) and
-    silently overwriting would return row-misaligned data.
+    silently overwriting would return row-misaligned data. Yields
+    ``((src, part_id, block_id), {column: (header, payload)})`` per group.
 
     ``strict=False`` (schema evolution) skips the completeness check:
     groups encoded before a column existed yield partial dicts and the
-    decoder null-fills them.
-
-    ``with_key=True`` yields ``(key, grp)`` pairs instead of bare group
-    dicts — the position-decode path needs the (src, part_id, block_id)
-    coordinates to stamp row positions."""
+    decoder null-fills them."""
     cur_key = None
     grp: dict[str, tuple[str, bytes]] = {}
 
@@ -134,9 +178,6 @@ def _iter_groups(batches, columns, strict: bool = True, with_key: bool = False):
                 f"{missing}{_GROUP_HINT}"
             )
 
-    def emit(key):
-        return (key, grp) if with_key else grp
-
     for batch in batches:
         srcs = batch.column(0).to_pylist()
         pids = batch.column(1).to_pylist()
@@ -149,7 +190,7 @@ def _iter_groups(batches, columns, strict: bool = True, with_key: bool = False):
             if key != cur_key:
                 if grp:
                     check_complete()
-                    yield emit(cur_key)
+                    yield cur_key, grp
                 cur_key = key
                 grp = {}
             if cols_[i] in grp:
@@ -161,7 +202,7 @@ def _iter_groups(batches, columns, strict: bool = True, with_key: bool = False):
             grp[cols_[i]] = (hdrs[i], pays[i].as_py())
     if grp:
         check_complete()
-        yield emit(cur_key)
+        yield cur_key, grp
 
 
 _GROUP_HINT = (
@@ -238,8 +279,14 @@ def _columns(headers: dict, columns, *extra) -> tuple[list[str], list[str]]:
 
 def _empty(blocks: DataFrame, headers: dict, columns: list[str]) -> DataFrame:
     """An empty frame typed like the decode of ``columns``."""
-    return blocks.sparkSession.createDataFrame(
-        [], _spark_ddl_of(_schema_from_headers(headers, columns)))
+    return _no_rows(blocks.sparkSession,
+                    _spark_ddl_of(_schema_from_headers(headers, columns)))
+
+
+def _no_rows(spark, schema: str) -> DataFrame:
+    """An empty frame in ``schema`` whose plan folds to an empty local
+    relation, so an action on it starts no job."""
+    return spark.createDataFrame([], schema).filter(F.lit(False))
 
 
 # reserved row-coordinate columns appended by decode_table(with_positions=
@@ -257,6 +304,15 @@ def decode_table(blocks: DataFrame, columns: list[str] | None = None,
                  refs: dict[str, set] | None = None,
                  pre_grouped: bool = False) -> DataFrame:
     """Decode an encoded-blocks DataFrame back to the raw table.
+
+    The source follows the plan (:func:`_source`): a bare scan of local
+    block files (``spark.read.parquet`` of a block dir, ``read_blocks``)
+    under ``file_keyed=True`` whose files each fit one read split decodes
+    one task per file, one stage with no Exchange. Every other frame
+    (in-memory ``encode_table`` output, filtered, cached or joined frames,
+    remote files, ``file_keyed=False``, larger files) is co-located by a
+    hash repartition and sorted. Both give the same rows, and the same
+    ``_src_file`` under ``with_positions``.
 
     ``missing_columns``: ``"error"`` (default) refuses groups that lack a
     requested column; ``"null"`` null-fills them instead — Iceberg
@@ -288,9 +344,9 @@ def decode_table(blocks: DataFrame, columns: list[str] | None = None,
 
     ``headers``/``refs`` (optional): those of a
     :class:`codec.blockindex.BlockIndex` the caller already loaded for THIS
-    blocks table (or a superset) skip this function's own metadata read, as
-    the pushdown operators do; an empty-after-pruning blocks frame then
-    decodes to an empty typed frame instead of raising.
+    blocks table (or a superset) skip this function's own metadata read;
+    an empty-after-pruning blocks frame then decodes to an empty typed
+    frame instead of raising.
 
     ``pre_grouped=True`` (r06) skips the co-locating repartition + sort:
     valid when every block group's rows are already ADJACENT within one
@@ -300,16 +356,36 @@ def decode_table(blocks: DataFrame, columns: list[str] | None = None,
     pipeline shape. It removes the one Exchange that carries payload
     bytes (the decode becomes a pure map stage). NOT valid for blocks
     read back from disk (file splitting can cut a group in half) or any
-    plan with a shuffle between encode and decode. Safety: a violated
-    adjacency assumption splits a group into fragments that are each
-    missing columns, so the strict group assembly REFUSES loudly
+    plan with a shuffle between encode and decode; a bare scan of local
+    block files takes the per-file source whatever it says. Safety: a
+    violated adjacency assumption splits a group into fragments that are
+    each missing columns, so the strict group assembly REFUSES loudly
     (``missing_columns='error'``, the default) instead of mis-decoding;
     combining ``pre_grouped=True`` with ``missing_columns='null'`` puts
     that contract on the caller."""
     fill = _fill_missing(missing_columns)
     if headers is None or refs is None:
         idx = BlockIndex.load(blocks, stats=False)
-        headers, refs = idx.headers, idx.refs
+        headers, refs, files = idx.headers, idx.refs, idx.files
+    else:
+        files = _local_scan_files(blocks)
+    return _decode(blocks, headers, refs, files, columns,
+                   file_keyed=file_keyed, fill=fill,
+                   with_positions=with_positions, pre_grouped=pre_grouped)
+
+
+def _decode(blocks: DataFrame, headers: dict[str, dict],
+            refs: dict[str, set], files: list[str] | None,
+            columns: list[str] | None, file_keyed: bool = True,
+            fill: bool = False, with_positions: bool = False,
+            pre_grouped: bool = False, keep: set | None = None,
+            take: dict | None = None) -> DataFrame:
+    """:func:`decode_table` of ``blocks`` given its index's headers, refs
+    and files (:class:`codec.blockindex.BlockIndex`), reading only the
+    groups of the exact keep-set ``keep`` when given. ``take`` maps each
+    kept group key to the row offsets to emit, in order; the other rows of
+    the group are dropped after its decode, and ``_pos`` keeps the
+    offsets."""
     if columns is None:
         # the index already enumerated the columns — no extra job
         columns = sorted(headers)
@@ -328,7 +404,6 @@ def decode_table(blocks: DataFrame, columns: list[str] | None = None,
            pa.field("_block_id", pa.int64()),
            pa.field("_pos", pa.int64())]
     ) if with_positions else out_schema
-    ddl = _spark_ddl_of(pos_schema)
     # xref columns need their reference column's blocks in the group even
     # when the caller didn't request it
     fetch_cols = _fetch_closure(headers, refs, columns)
@@ -337,18 +412,18 @@ def decode_table(blocks: DataFrame, columns: list[str] | None = None,
     # against the requested columns — so batches encoded by different jobs
     # with different column sets or codecs each decode by their own
     # dependencies instead of a global column count.
-    part = _grouped(blocks, fetch_cols, file_keyed, pre_grouped)
-
     def dec(batches):
-        if not with_positions:
-            for grp in _iter_groups(batches, columns, strict=not fill):
-                yield _decode_group(grp, columns, out_schema, fill_missing=fill)
-            return
         import numpy as np
 
-        for key, grp in _iter_groups(batches, columns, strict=not fill,
-                                     with_key=True):
+        for key, grp in _iter_groups(batches, columns, strict=not fill):
             rb = _decode_group(grp, columns, out_schema, fill_missing=fill)
+            pos = pa.array(np.arange(rb.num_rows, dtype=np.int64))
+            if take is not None:
+                pos = pa.array(take[key], pa.int64())
+                rb = rb.take(pos)
+            if not with_positions:
+                yield rb
+                continue
             src, pid, bid = key
             n = rb.num_rows
             # run-length-style constant columns: one distinct value each —
@@ -357,11 +432,12 @@ def decode_table(blocks: DataFrame, columns: list[str] | None = None,
                 pa.array([src] * n, pa.string()),
                 pa.array(np.full(n, pid, dtype=np.int64)),
                 pa.array(np.full(n, bid, dtype=np.int64)),
-                pa.array(np.arange(n, dtype=np.int64)),
+                pos,
             ]
             yield pa.record_batch(list(rb.columns) + coord, schema=pos_schema)
 
-    return part.mapInArrow(dec, schema=ddl)
+    return _source(blocks, files, fetch_cols, file_keyed, dec,
+                   _spark_ddl_of(pos_schema), keep, pre_grouped)
 
 
 def verify_roundtrip(source: DataFrame, decoded: DataFrame, key: str = "url",
@@ -459,36 +535,82 @@ class _BufferedWriter:
         return True
 
 
-def _per_file(blocks: DataFrame, files: list[str] | None,
-              file_keyed: bool) -> bool:
-    """Whether the sink decode reads ``files`` one task each instead of
+def _per_file(blocks: DataFrame, files: list[str] | None, file_keyed: bool,
+              keep: set | None = None) -> bool:
+    """Whether a decode reads its block files one task each instead of
     shuffling. ``files`` are those of a bare local parquet scan
     (:attr:`BlockIndex.files`); under the file-keyed group identity every
-    group of such a scan lies inside one file. A file larger than
+    group of such a scan lies inside one file. Only the files that hold a
+    group of the keep-set ``keep`` are read, and a keep-set naming any
+    other source shuffles. A file larger than
     ``spark.sql.files.maxPartitionBytes`` would make one task hold more
     than Spark's own reader gives it, so it takes the shuffle too."""
     if files is None or not file_keyed:
         return False
+    read = files if keep is None else {k[0] for k in keep}
+    if not set(read) <= set(files):
+        return False
     split = (blocks.sparkSession._jsparkSession.sessionState().conf()
              .filesMaxPartitionBytes())
-    return all(os.path.getsize(_local_path(f)) <= split for f in files)
+    return all(os.path.getsize(_local_path(f)) <= split for f in read)
 
 
-def _file_rows(uri: str, fetch_cols: list[str]):
+def _file_rows(uri: str, fetch_cols: list[str], pairs: set | None = None):
     """The :func:`_grouped` rows of one block file, read with pyarrow: the
     ``fetch_cols`` blocks sorted by (part_id, block_id), after the file's
-    URI as ``__src``."""
+    URI as ``__src``. ``pairs`` (the file's kept (part_id, block_id)
+    groups) goes into the read as a filter, so row groups without a kept
+    group are skipped, and then keeps exactly those groups."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    want = pc.field("column").isin(fetch_cols)
+    if pairs is not None:
+        want &= (pc.field("part_id").isin(sorted({p for p, _ in pairs}))
+                 & pc.field("block_id").isin(sorted({b for _, b in pairs})))
     # use_threads=False: a Spark task owns ONE core (see encode)
-    t = pq.read_table(_local_path(uri), use_threads=False,
+    t = pq.read_table(_local_path(uri), use_threads=False, filters=want,
                       columns=["part_id", "block_id", "column", "header",
                                "payload"])
-    t = (t.filter(pc.is_in(t.column("column"), pa.array(fetch_cols)))
-         .sort_by([("part_id", "ascending"), ("block_id", "ascending")]))
+    if pairs is not None:
+        t = t.filter(pa.array(
+            [k in pairs for k in zip(t.column("part_id").to_pylist(),
+                                     t.column("block_id").to_pylist())],
+            pa.bool_()))
+    t = t.sort_by([("part_id", "ascending"), ("block_id", "ascending")])
     yield from t.add_column(0, "__src", pa.array([uri] * t.num_rows,
                                                  pa.string())).to_batches()
+
+
+def _source(blocks: DataFrame, files: list[str] | None,
+            fetch_cols: list[str], file_keyed: bool, dec, schema: str,
+            keep: set | None = None, pre_grouped: bool = False) -> DataFrame:
+    """``dec`` over the groups of ``blocks``: it takes the sorted group
+    rows of :func:`_grouped` as Arrow batches and yields batches in
+    ``schema``. ``keep``, an exact keep-set of (source file, part_id,
+    block_id) keys, restricts it to those groups; an empty one gives an
+    empty frame and starts no job. ``files`` are :attr:`BlockIndex.files`.
+
+    Under :func:`_per_file` each task reads the kept groups of one file
+    (:func:`_file_rows`), one stage with no Exchange; every other frame
+    takes :func:`_grouped`'s shuffle. The choice depends on the plan
+    alone."""
+    spark = blocks.sparkSession
+    if keep is not None and not keep:
+        return _no_rows(spark, schema)
+    if not _per_file(blocks, files, file_keyed, keep):
+        return (_grouped(blocks, fetch_cols, file_keyed, pre_grouped, keep)
+                .mapInArrow(dec, schema))
+    if keep is None:
+        slices = [(f, None) for f in files]
+    else:
+        by_file: dict[str, set] = {}
+        for src, pid, bid in keep:
+            by_file.setdefault(src, set()).add((pid, bid))
+        slices = sorted(by_file.items())
+    return map_slices(spark, slices,
+                      lambda s: dec(_file_rows(s[0], fetch_cols, s[1])),
+                      schema)
 
 
 def decode_to_parquet(blocks: DataFrame, out_dir: str,
@@ -504,15 +626,11 @@ def decode_to_parquet(blocks: DataFrame, out_dir: str,
     Returns a small manifest DataFrame (file, n_rows); the decoded table is
     ``spark.read.parquet(out_dir)``.
 
-    The source of each task follows the plan. A bare scan of local block
-    files (``spark.read.parquet`` of a block dir, ``read_blocks_at``)
-    under ``file_keyed=True`` whose files each fit one read split decodes
-    one task per file, one stage with no Exchange: this engine's encode
-    writes whole groups per file. Every other frame (in-memory
-    ``encode_table`` output, filtered, cached or joined frames, remote
-    files, ``file_keyed=False``, larger files) is co-located by a hash
-    repartition and sorted, as in ``decode_table``. Both feed the same
-    group assembly, so duplicate and incomplete groups are refused alike.
+    The source of each task follows the plan as in ``decode_table``: a
+    bare scan of local block files decodes one task per file, every other
+    frame is co-located by a hash repartition and sorted. Both feed the
+    same group assembly, so duplicate and incomplete groups are refused
+    alike.
 
     ``file_keyed`` semantics (and the round-3 breaking default for tables
     rewritten after encoding) are documented on ``decode_table``.
@@ -532,7 +650,7 @@ def decode_to_parquet(blocks: DataFrame, out_dir: str,
     def dec(batches):
         out = TaskFile(out_dir, "part", ".parquet")
         w = _BufferedWriter(out.tmp, out_schema, compression)
-        for grp in _iter_groups(batches, columns, strict=not fill):
+        for _, grp in _iter_groups(batches, columns, strict=not fill):
             w.write(_decode_group(grp, columns, out_schema, fill_missing=fill))
         if w.close():
             yield pa.record_batch(
@@ -540,11 +658,8 @@ def decode_to_parquet(blocks: DataFrame, out_dir: str,
                 names=["file", "n_rows"],
             )
 
-    manifest = "file string, n_rows bigint"
-    if _per_file(blocks, idx.files, file_keyed):
-        return map_slices(blocks.sparkSession, idx.files,
-                          lambda f: dec(_file_rows(f, fetch_cols)), manifest)
-    return _grouped(blocks, fetch_cols, file_keyed).mapInArrow(dec, manifest)
+    return _source(blocks, idx.files, fetch_cols, file_keyed, dec,
+                   "file string, n_rows bigint")
 
 
 def read_blocks(spark, *paths: str, **options) -> DataFrame:
@@ -589,22 +704,20 @@ def decode_parquet_dir(spark, blocks_dir: str, out_dir: str,
 # predicate pushdown: block pruning decided on the driver by the block index
 # ---------------------------------------------------------------------------
 
-def _keep_pairs(blocks: DataFrame, pairs) -> DataFrame:
-    """Restrict a blocks table to a (part_id, block_id) keep-set as LITERAL
-    ``isin`` filters on each coordinate, which Catalyst pushes into the
-    parquet scan. The parts x bids product is a superset of the pair set —
-    safe wherever a residual step keeps answers exact (see
-    :func:`_filter_block_pairs` for the exact form)."""
+def _keep_pairs(blocks: DataFrame, keep) -> DataFrame:
+    """``blocks`` restricted to the (part_id, block_id) pairs of ``keep``
+    (an exact keep-set, or a set of pairs), unpruned when None: the part
+    and block ids as literal ``isin`` filters, which Catalyst pushes into
+    the parquet scan, then the exact pairs (:func:`_in_keys`). An empty
+    set keeps nothing."""
+    if keep is None:
+        return blocks
+    pairs = {k[-2:] for k in keep}
     parts = sorted({p for p, _ in pairs})
     bids = sorted({b for _, b in pairs})
-    return blocks.filter(F.col("part_id").isin(parts) & F.col("block_id").isin(bids))
-
-
-def _prune(blocks: DataFrame, idx: BlockIndex, clauses) -> DataFrame:
-    """``blocks`` restricted to the groups the index keeps for the CNF
-    ``clauses`` (:meth:`BlockIndex.keep`); unpruned when it keeps all."""
-    keep = idx.keep(clauses)
-    return blocks if keep is None else _keep_pairs(blocks, keep)
+    pushed = blocks.filter(F.col("part_id").isin(parts)
+                           & F.col("block_id").isin(bids))
+    return _in_keys(pushed, ["part_id", "block_id"], pairs)
 
 
 def prune_blocks(blocks: DataFrame, column: str, op: str, value,
@@ -614,13 +727,15 @@ def prune_blocks(blocks: DataFrame, column: str, op: str, value,
     ``column op value`` — the engine's parquet-row-group-pruning analogue.
 
     The keep-set is decided on the driver over one metadata read
-    (:class:`codec.blockindex.BlockIndex`; over ``max_groups`` groups
-    pruning is skipped, never wrong) and re-applied as LITERAL ``isin``
-    filters on (part_id, block_id), which Catalyst pushes into the parquet
-    scan: pruned groups' payload bytes are never read, not merely
-    decoded-and-dropped. The pair-of-INs is a superset of the exact pair
-    set — safe, and the residual row filter (decode_table_where) keeps
-    semantics exact.
+    (:meth:`codec.blockindex.BlockIndex.keep`; over ``max_groups`` groups
+    pruning is skipped, never wrong) and applied as its exact (part_id,
+    block_id) pairs (:func:`_keep_pairs`), whose ids Catalyst pushes into
+    the parquet scan: pruned groups' payload bytes are never read. The
+    pairs drop the keep-set's source files, so the frame decodes under
+    either ``file_keyed`` mode; where batch dirs reuse group numbers it
+    keeps the same-numbered groups of other files too, which the residual
+    row filter of a decode drops. The pushdown decodes
+    (``decode_table_where_all`` and the rest) read only the kept groups.
 
     The prune rule and its safety rules (literal coercion, render cap,
     unparsed and missing stats, statless kinds) are
@@ -628,8 +743,8 @@ def prune_blocks(blocks: DataFrame, column: str, op: str, value,
     """
     if op not in zonemap.PRUNE_OPS:
         raise ValueError(f"op must be one of {zonemap.PRUNE_OPS}, got {op!r}")
-    return _prune(blocks, BlockIndex.load(blocks, max_groups),
-                  [[(column, op, value)]])
+    return _keep_pairs(blocks, BlockIndex.load(blocks, max_groups).keep(
+        [[(column, op, value)]]))
 
 
 def prune_blocks_bloom(blocks: DataFrame, column: str, value,
@@ -657,7 +772,7 @@ def prune_blocks_bloom(blocks: DataFrame, column: str, value,
     if op == "prefix" and column in idx.headers \
             and idx.headers[column]["kind"] != "str":
         return blocks  # no prefix keys on a non-string column
-    return _prune(blocks, idx, [[(column, op, value)]])
+    return _keep_pairs(blocks, idx.keep([[(column, op, value)]]))
 
 
 def decode_table_where(blocks: DataFrame, column: str, op: str, value,
@@ -739,23 +854,24 @@ def decode_table_where_all(blocks: DataFrame, predicates,
     triple or a LIST of triples ORed together. One metadata read
     (:class:`codec.blockindex.BlockIndex`) decides on the driver which
     block groups zone maps and blooms admit — a group survives a clause
-    when some disjunct admits it — then ONE decode runs over the surviving
-    groups and the exact CNF expression filters residually. Semantics
-    equal decode_table(...).filter((p11 OR p12 ...) AND (p21 ...) AND ...)."""
+    when some disjunct admits it — then ONE decode runs over exactly the
+    surviving groups (the index's keep-set, one task per kept file on a
+    bare local scan; see ``decode_table``) and the exact CNF expression
+    filters residually. An all-pruned table decodes to an empty typed
+    frame with no job. Semantics equal
+    decode_table(...).filter((p11 OR p12 ...) AND (p21 ...) AND ...)."""
     clauses, idx = _where_index(blocks, predicates, max_groups)
-    pruned = _prune(blocks, idx, clauses)
     out_cols, use_cols = _columns(idx.headers, columns,
                                   *(p[0] for clause in clauses for p in clause))
-    # headers pass through: an all-pruned frame decodes to an empty typed
-    # frame, with no emptiness probe job
-    dec = decode_table(pruned, columns=use_cols, file_keyed=file_keyed,
-                       headers=idx.headers, refs=idx.refs,
-                       pre_grouped=pre_grouped)
+    dec = _decode(blocks, idx.headers, idx.refs, idx.files, use_cols,
+                  file_keyed=file_keyed, pre_grouped=pre_grouped,
+                  keep=idx.keep(clauses))
     return dec.filter(_cnf_expr(clauses)).select(*out_cols)
 
 
-def _prune_topk(blocks: DataFrame, idx: BlockIndex, column: str, k: int,
-                descending: bool) -> DataFrame:
+def _topk_keep(idx: BlockIndex, column: str, k: int,
+               descending: bool) -> set | None:
+    """The exact keep-set of groups that may hold a top-k row, or None."""
     if k < 1:
         raise ValueError("prune_blocks_topk: k must be >= 1")
     if column not in idx.headers:
@@ -763,13 +879,12 @@ def _prune_topk(blocks: DataFrame, idx: BlockIndex, column: str, k: int,
     kind = zonemap.stat_kind(idx.headers, column,
                              need="top-k must decode, then sort")
     if idx.blocks is None:
-        return blocks
+        return None
     rows = [(b.key, b.n_rows - b.null_count, b.min_val, b.max_val)
             for b in idx.blocks.get(column, ())
             if b.n_rows > b.null_count]  # an all-null group never ranks
     keep = zonemap.topk_keep(kind, rows, k, descending)
-    return blocks if keep is None else _keep_pairs(
-        blocks, {(p, b) for _, p, b in keep})
+    return None if keep is None else set(keep)
 
 
 def prune_blocks_topk(blocks: DataFrame, column: str, k: int,
@@ -789,8 +904,8 @@ def prune_blocks_topk(blocks: DataFrame, column: str, k: int,
     Every column kind with zone stats is supported (integer, boolean,
     float, timestamp, date, string); binary and list columns raise.
     """
-    return _prune_topk(blocks, BlockIndex.load(blocks, max_groups), column,
-                       k, descending)
+    idx = BlockIndex.load(blocks, max_groups)
+    return _keep_pairs(blocks, _topk_keep(idx, column, k, descending))
 
 
 def decode_topk(blocks: DataFrame, column: str, k: int,
@@ -814,12 +929,9 @@ def decode_topk(blocks: DataFrame, column: str, k: int,
     """
     idx = BlockIndex.load(blocks, max_groups)
     out_cols, use_cols = _columns(idx.headers, columns, column, tiebreak)
-    pruned = _prune_topk(blocks, idx, column, k, descending)
-    # headers pass through, so an all-pruned frame decodes to an empty typed
-    # frame directly — no emptiness probe job
-    dec = decode_table(pruned, columns=use_cols, file_keyed=file_keyed,
-                       headers=idx.headers, refs=idx.refs,
-                       pre_grouped=pre_grouped)
+    dec = _decode(blocks, idx.headers, idx.refs, idx.files, use_cols,
+                  file_keyed=file_keyed, pre_grouped=pre_grouped,
+                  keep=_topk_keep(idx, column, k, descending))
     order = [F.col(column).desc() if descending else F.col(column).asc()]
     if tiebreak is not None:
         order.append(F.col(tiebreak).asc())
@@ -827,8 +939,10 @@ def decode_topk(blocks: DataFrame, column: str, k: int,
             .orderBy(*order).limit(int(k)).select(*out_cols))
 
 
-def _prune_topk_by(blocks: DataFrame, idx: BlockIndex, group_col: str,
-                   column: str, k: int, descending: bool) -> DataFrame:
+def _topk_by_keep(idx: BlockIndex, group_col: str, column: str, k: int,
+                  descending: bool) -> set | None:
+    """The exact keep-set of groups that may hold a per-group top-k row,
+    or None."""
     if k < 1:
         raise ValueError("prune_blocks_topk_by: k must be >= 1")
     if group_col == column:
@@ -840,7 +954,7 @@ def _prune_topk_by(blocks: DataFrame, idx: BlockIndex, group_col: str,
     vkind = zonemap.stat_kind(idx.headers, column, need=need)
     gkind = zonemap.stat_kind(idx.headers, group_col, need=need)
     if idx.blocks is None:
-        return blocks
+        return None
 
     # physical-block identity is (source file, part_id, block_id): encode
     # jobs restart part ids at 0, so the bare pair COLLIDES across the
@@ -856,7 +970,7 @@ def _prune_topk_by(blocks: DataFrame, idx: BlockIndex, group_col: str,
                 # in-memory encode jobs): stats would shadow each other, so
                 # prune NOTHING — the decode layer's duplicate-group refusal
                 # then decides loudly whether the table is even readable
-                return blocks
+                return None
             side[b.key] = b
 
     keep: set[tuple] = set()
@@ -879,11 +993,7 @@ def _prune_topk_by(blocks: DataFrame, idx: BlockIndex, group_col: str,
     for rows in per_group.values():
         kept = zonemap.topk_keep(vkind, rows, k, descending)
         keep.update(kept if kept is not None else (r[0] for r in rows))
-
-    # project physical keys back to (part, block) pairs: the pair filter
-    # keeps every physical block sharing a kept pair — a superset, sound
-    # (an empty keep-set short-circuits to filter(False) inside the helper)
-    return _filter_block_pairs(blocks, {(p, b) for _, p, b in keep})
+    return keep
 
 
 def prune_blocks_topk_by(blocks: DataFrame, group_col: str, column: str,
@@ -917,8 +1027,9 @@ def prune_blocks_topk_by(blocks: DataFrame, group_col: str, column: str,
     Both columns need zone stats (binary and list columns raise). Over
     ``max_groups`` block groups, pruning is skipped.
     """
-    return _prune_topk_by(blocks, BlockIndex.load(blocks, max_groups),
-                          group_col, column, k, descending)
+    idx = BlockIndex.load(blocks, max_groups)
+    return _keep_pairs(blocks, _topk_by_keep(idx, group_col, column, k,
+                                             descending))
 
 
 def decode_topk_by(blocks: DataFrame, group_col: str, column: str, k: int,
@@ -950,11 +1061,9 @@ def decode_topk_by(blocks: DataFrame, group_col: str, column: str, k: int,
     idx = BlockIndex.load(blocks, max_groups)
     out_cols, use_cols = _columns(idx.headers, columns, group_col, column,
                                   tiebreak)
-    pruned = _prune_topk_by(blocks, idx, group_col, column, k, descending)
-    # headers pass through: no emptiness probe job (see decode_topk)
-    dec = decode_table(pruned, columns=use_cols, file_keyed=file_keyed,
-                       headers=idx.headers, refs=idx.refs,
-                       pre_grouped=pre_grouped)
+    dec = _decode(blocks, idx.headers, idx.refs, idx.files, use_cols,
+                  file_keyed=file_keyed, pre_grouped=pre_grouped,
+                  keep=_topk_by_keep(idx, group_col, column, k, descending))
     order = [F.col(column).desc() if descending else F.col(column).asc()]
     if tiebreak is not None:
         order.append(F.col(tiebreak).asc())
@@ -966,22 +1075,15 @@ def decode_topk_by(blocks: DataFrame, group_col: str, column: str, k: int,
             .select(*out_cols))
 
 
-def _filter_block_pairs(blocks: DataFrame, pairs: set[tuple]) -> DataFrame:
-    """Restrict a blocks table to an exact (part_id, block_id) pair set —
-    NOT the parts x bids superset filter: callers here keep DIFFERENT
-    blocks in different parts, which the superset would undo. Small sets
-    apply as a literal isin on a concat key (pushed into the scan); larger
-    ones as a broadcast semi-join."""
-    if not pairs:
-        return blocks.filter(F.lit(False))
-    if len(pairs) <= 4096:
-        sep_key = F.concat_ws("#", F.col("part_id").cast("string"),
-                              F.col("block_id").cast("string"))
-        return blocks.filter(sep_key.isin([f"{p}#{b}" for p, b in pairs]))
-    keys_df = blocks.sparkSession.createDataFrame(
-        sorted(pairs), "part_id long, block_id long")
-    return blocks.join(F.broadcast(keys_df), ["part_id", "block_id"],
-                       "left_semi")
+# the one-job probe read sends at most this many rows per inline key; a
+# probe it does not settle is deduplicated in Spark, in another job, so the
+# value decides when that job runs, never whether the probe goes inline
+_PROBE_ROWS_PER_KEY = 16
+# the Spark key types whose equality pyarrow's is_in reproduces exactly;
+# floating point (NaN, signed zero), timestamps (the session time zone) and
+# decimals are joined in Spark
+_ARROW_EQ_TYPES = ("string", "binary", "boolean", "tinyint", "smallint",
+                   "int", "bigint", "date")
 
 
 def decode_semijoin(blocks: DataFrame, keys: DataFrame, key_col: str,
@@ -1001,21 +1103,34 @@ def decode_semijoin(blocks: DataFrame, keys: DataFrame, key_col: str,
     (/root/reference/src/commands/data.rs); this is the columnar-native
     plan, staged so payload bytes it can rule out are NEVER read:
 
-    1. a small probe set (<= ``inline_keys_max`` distinct values, found via
-       a limit probe) prunes blocks first through zone maps + equality
-       blooms (the ``'in'`` op of prune_blocks/prune_blocks_bloom);
-    2. ONLY ``key_col`` decodes (with row coordinates) and semi-joins the
-       probe to find matching coordinates — for a web corpus this touches
-       the dict/FSST url blocks, never the text/html payloads;
-    3. block groups holding at least one match decode fully
-       (:func:`_filter_block_pairs` — exact pair filter), and a coordinate
-       semi-join on ``POS_COLUMNS`` keeps exactly the matching rows.
+    1. the probe's distinct values (:func:`_probe_values`: usually one
+       bounded collect deduplicated on the driver). A probe of at most
+       ``inline_keys_max`` distinct values is inline: it prunes blocks
+       through zone maps + equality blooms (the ``'in'`` op of
+       prune_blocks/prune_blocks_bloom) in the index's one metadata read,
+       giving the exact keep-set;
+    2. ONLY ``key_col`` of the kept groups decodes — for a web corpus this
+       touches the dict/FSST url blocks, never the text/html payloads. On
+       the per-file source (a bare scan of local block files, see
+       ``decode_table``) each task judges the inline set itself
+       (``pyarrow.compute.is_in``) and sends the coordinates of its
+       matching rows to the driver, at most ``max_groups`` in all;
+    3. only the groups holding a match decode fully, one task per file,
+       and each group keeps its matching rows by position. A probe that
+       matches nothing returns an empty frame with no decode job.
+
+    Any other case runs the coordinate plan: another source, a larger
+    probe, more than ``max_groups`` matching rows, a key type whose Arrow
+    and Spark equality may differ (floating point, timestamps, decimals,
+    or a probe column of another type), or ``deletes``. There the key
+    decode carries row coordinates and semi-joins the probe in Spark;
+    the groups holding a match (every kept group, over ``max_groups``
+    of them) decode fully, and a coordinate semi-join on
+    ``POS_COLUMNS`` keeps exactly the matching rows.
 
     ``keys`` must either contain ``key_col`` or be a single-column frame
-    (renamed). Above ``max_groups`` matching groups, stage 3's block filter
-    is skipped (decode-all + coordinate semi-join — correct, unpruned).
-    To enrich probe rows instead of filtering the table, join the returned
-    frame back to ``keys`` on ``key_col``.
+    (renamed). To enrich probe rows instead of filtering the table, join
+    the returned frame back to ``keys`` on ``key_col``.
 
     ``deletes`` (optional): committed row coordinates in the ``POS_COLUMNS``
     shape (position deletes, or equality deletes resolved via
@@ -1031,61 +1146,137 @@ def decode_semijoin(blocks: DataFrame, keys: DataFrame, key_col: str,
         raise ValueError(
             f"keys frame (columns {keys.columns}) has no {key_col!r} column "
             "and is not single-column")
-    probe = probe.filter(F.col(key_col).isNotNull()).distinct()
+    probe = probe.filter(F.col(key_col).isNotNull())
 
     # stage 1: an inline-able probe set prunes blocks from metadata alone,
     # read in the same single index load as the headers
-    sample = [r[0] for r in probe.limit(inline_keys_max + 1).collect()]
-    inline = [[(key_col, "in", sample)]] if len(sample) <= inline_keys_max else []
+    sample = _probe_values(probe, inline_keys_max)
+    inline = ([[(key_col, "in", sample)]]
+              if len(sample) <= inline_keys_max else [])
     idx = BlockIndex.load(blocks, max_groups,
                           probes=[p for clause in inline for p in clause])
-    headers, refs = idx.headers, idx.refs
-    if key_col not in headers:
+    if key_col not in idx.headers:
         raise ValueError(f"column {key_col!r} not in the blocks table")
 
-    out_cols, use_cols = _columns(headers, columns, key_col)
-    if not sample:
-        return _empty(blocks, headers, out_cols)
-    # an all-pruned frame flows to empty coords -> an empty frame in the tail
-    pruned = _prune(blocks, idx, inline) if inline else blocks
+    out_cols, use_cols = _columns(idx.headers, columns, key_col)
+    keep = idx.keep(inline) if inline else None
+    if not sample or keep == set():
+        return _empty(blocks, idx.headers, out_cols)
 
-    # stage 2: key-column-only decode -> matching row coordinates
-    keydec = decode_table(pruned, columns=[key_col], with_positions=True,
-                          file_keyed=file_keyed, headers=headers, refs=refs,
-                          pre_grouped=pre_grouped)
+    if inline and deletes is None:
+        # stages 2 and 3 on the per-file source
+        hits = _inline_hits(blocks, idx, key_col, sample,
+                            probe.schema[key_col].dataType, keep,
+                            file_keyed, max_groups)
+        if hits is not None:
+            take: dict[tuple, list] = {}
+            for src, pid, bid, pos in hits:
+                take.setdefault((src, pid, bid), []).append(pos)
+            return _decode(blocks, idx.headers, idx.refs, idx.files,
+                           use_cols, file_keyed=file_keyed,
+                           keep=set(take), take=take).select(*out_cols)
+
+    keydec = _decode(blocks, idx.headers, idx.refs, idx.files, [key_col],
+                     file_keyed=file_keyed, with_positions=True,
+                     pre_grouped=pre_grouped, keep=keep)
     coords = keydec.join(probe, key_col, "left_semi").select(*POS_COLUMNS)
     if deletes is not None:
         coords = coords.join(deletes.select(*POS_COLUMNS),
                              on=POS_COLUMNS, how="left_anti")
-
-    # stage 3: decode only block groups holding a match, keep exact rows
-    return _materialize_coords(pruned, coords, out_cols, use_cols,
-                               file_keyed, max_groups,
-                               headers=headers, refs=refs,
-                               pre_grouped=pre_grouped)
+    return _materialize_coords(blocks, idx, coords, out_cols, use_cols,
+                               file_keyed, max_groups, pre_grouped, keep)
 
 
-def _materialize_coords(blocks: DataFrame, coords: DataFrame,
-                        out_cols: list[str], use_cols: list[str],
-                        file_keyed, max_groups: int,
-                        headers: dict[str, dict], refs: dict[str, set],
-                        pre_grouped: bool = False) -> DataFrame:
-    """Late-materialization tail shared by the coordinate-driven decodes:
-    decode full payloads ONLY for block groups holding at least one
-    coordinate (exact pair filter, driver pull capped at ``max_groups`` —
-    over the cap the filter is skipped, correct but unpruned), then keep
-    exactly the addressed rows by coordinate semi-join."""
-    got = (coords.select("_part_id", "_block_id").distinct()
+def _probe_values(probe: DataFrame, limit: int) -> list:
+    """The distinct values of the one-column ``probe``, up to ``limit + 1``
+    of them. A probe whose plan has no exchange is read in one job, each
+    partition sending at most its share of ``_PROBE_ROWS_PER_KEY`` rows
+    per value, and deduplicated on the driver. A probe that read does not
+    settle (a partition fills its share, or the plan shuffles) runs
+    ``distinct().limit(limit + 1)`` in Spark instead."""
+    try:
+        narrow = (probe._jdf.queryExecution().executedPlan().getClass()
+                  .getSimpleName() != "AdaptiveSparkPlanExec")
+    except AttributeError:  # a Spark Connect frame has no JVM plan
+        narrow = False
+    rows = None
+    if narrow:
+        rows = _collect_within(probe, probe.rdd.getNumPartitions(),
+                               _PROBE_ROWS_PER_KEY * (limit + 1))
+    if rows is None:
+        rows = probe.distinct().limit(limit + 1).collect()
+    return _distinct([r[0] for r in rows])[:limit + 1]
+
+
+def _distinct(values: list) -> list:
+    """``values`` without repeats, in first-seen order, binary values as
+    ``bytes``; unhashable ones (arrays, maps) are left as they are."""
+    vals = [bytes(v) if isinstance(v, bytearray) else v for v in values]
+    try:
+        return list(dict.fromkeys(vals))
+    except TypeError:
+        return vals
+
+
+def _inline_hits(blocks: DataFrame, idx: BlockIndex, key_col: str,
+                 values: list, probe_type, keep: set | None,
+                 file_keyed: bool, max_groups: int) -> list | None:
+    """The ``POS_COLUMNS`` of every row of the kept groups whose
+    ``key_col`` is one of ``values``, judged inside the per-file tasks of
+    one job. None when the source is not per-file, the key's Spark type
+    is not ``probe_type`` or not one of ``_ARROW_EQ_TYPES``, or more than
+    ``max_groups`` rows match."""
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    schema = _schema_from_headers(idx.headers, [key_col])
+    key_type = schema.field(0).type
+    spark_type = from_arrow_type(key_type).simpleString()
+    if (spark_type != probe_type.simpleString()
+            or spark_type not in _ARROW_EQ_TYPES
+            or not _per_file(blocks, idx.files, file_keyed, keep)):
+        return None
+    value_set = pa.array(values, key_type)
+
+    def match(batches):
+        import pyarrow.compute as pc
+
+        for (src, pid, bid), grp in _iter_groups(batches, [key_col]):
+            arr = _decode_group(grp, [key_col], schema).column(0)
+            pos = pc.indices_nonzero(pc.is_in(arr, value_set=value_set))
+            n = len(pos)
+            if n:
+                yield pa.record_batch(
+                    [pa.array([src] * n, pa.string()),
+                     pa.array([pid] * n, pa.int64()),
+                     pa.array([bid] * n, pa.int64()), pos.cast(pa.int64())],
+                    names=POS_COLUMNS)
+
+    hits = _source(blocks, idx.files,
+                   _fetch_closure(idx.headers, idx.refs, [key_col]),
+                   file_keyed, match,
+                   "_src_file string, _part_id bigint, _block_id bigint, "
+                   "_pos bigint", keep)
+    n_tasks = len(idx.files) if keep is None else len({k[0] for k in keep})
+    return _collect_within(hits, n_tasks, max_groups + 1)
+
+
+def _materialize_coords(blocks: DataFrame, idx: BlockIndex,
+                        coords: DataFrame, out_cols: list[str],
+                        use_cols: list[str], file_keyed: bool,
+                        max_groups: int, pre_grouped: bool = False,
+                        keep: set | None = None) -> DataFrame:
+    """Late-materialization tail of the coordinate plans: decode full
+    payloads ONLY for the groups holding at least one coordinate (their
+    exact keys, a driver pull capped at ``max_groups``; over the cap
+    every group of ``keep``, correct but unpruned), then keep exactly
+    the addressed rows by coordinate semi-join."""
+    got = (coords.select("_src_file", "_part_id", "_block_id").distinct()
            .limit(max_groups + 1).collect())
-    hit = blocks
     if len(got) <= max_groups:
-        if not got:
-            return _empty(blocks, headers, out_cols)
-        hit = _filter_block_pairs(
-            blocks, {(r["_part_id"], r["_block_id"]) for r in got})
-    full = decode_table(hit, columns=use_cols, with_positions=True,
-                        file_keyed=file_keyed, headers=headers, refs=refs,
-                        pre_grouped=pre_grouped)
+        keep = {tuple(r) for r in got}
+    full = _decode(blocks, idx.headers, idx.refs, idx.files, use_cols,
+                   file_keyed=file_keyed, with_positions=True,
+                   pre_grouped=pre_grouped, keep=keep)
     return (full.join(coords, on=POS_COLUMNS, how="left_semi")
             .select(*out_cols))
 
@@ -1120,15 +1311,15 @@ def decode_sample(blocks: DataFrame, key_col: str, fraction: float,
     if not (0.0 <= fraction <= 1.0):
         raise ValueError("decode_sample: fraction must be in [0, 1]")
     idx = BlockIndex.load(blocks, stats=False)
-    headers, refs = idx.headers, idx.refs
+    headers = idx.headers
     if key_col not in headers:
         raise ValueError(f"column {key_col!r} not in the blocks table")
     out_cols, use_cols = _columns(headers, columns, key_col)
     if fraction == 0.0:
         return _empty(blocks, headers, out_cols)
-    keydec = decode_table(blocks, columns=[key_col], with_positions=True,
-                          file_keyed=file_keyed, headers=headers, refs=refs,
-                          pre_grouped=pre_grouped)
+    keydec = _decode(blocks, idx.headers, idx.refs, idx.files, [key_col],
+                     file_keyed=file_keyed, with_positions=True,
+                     pre_grouped=pre_grouped)
     ks = F.coalesce(F.col(key_col).cast("string"), F.lit("\x00"))
     u = (
         F.conv(
@@ -1144,7 +1335,5 @@ def decode_sample(blocks: DataFrame, key_col: str, fraction: float,
     if deletes is not None:
         coords = coords.join(deletes.select(*POS_COLUMNS),
                              on=POS_COLUMNS, how="left_anti")
-    return _materialize_coords(blocks, coords, out_cols, use_cols,
-                               file_keyed, max_groups,
-                               headers=headers, refs=refs,
-                               pre_grouped=pre_grouped)
+    return _materialize_coords(blocks, idx, coords, out_cols, use_cols,
+                               file_keyed, max_groups, pre_grouped)

@@ -36,7 +36,8 @@ from nail_parquet_spark.codec.blockindex import BlockIndex
 from nail_parquet_spark.codec.decode import (
     POS_COLUMNS,
     _cnf_expr,
-    _prune,
+    _decode,
+    _keep_pairs,
     _where_index,
     decode_table,
 )
@@ -62,11 +63,10 @@ def positions_where(blocks: DataFrame, predicates,
     missing = [c for c in pred_cols if c not in idx.headers]
     if missing:
         raise ValueError(f"predicate columns not in block table: {missing}")
-    # headers pass through: an all-pruned frame decodes to zero coordinate
-    # rows directly, with no emptiness probe job
-    dec = decode_table(_prune(blocks, idx, clauses), columns=pred_cols,
-                       file_keyed=file_keyed, with_positions=True,
-                       headers=idx.headers, refs=idx.refs)
+    # an all-pruned table decodes to zero coordinate rows, with no job
+    dec = _decode(blocks, idx.headers, idx.refs, idx.files, pred_cols,
+                  file_keyed=file_keyed, with_positions=True,
+                  keep=idx.keep(clauses))
     return dec.filter(_cnf_expr(clauses)).select(*POS_COLUMNS)
 
 
@@ -80,7 +80,7 @@ def decode_except_where(blocks: DataFrame, deletes: DataFrame, predicates,
     never changes a surviving row's coordinates — group identity is
     physical), then the anti-join and the exact residual filter apply."""
     clauses, idx = _where_index(blocks, predicates, max_groups)
-    pruned = _prune(blocks, idx, clauses)
+    pruned = _keep_pairs(blocks, idx.keep(clauses))
     out_cols = list(columns) if columns is not None else sorted(idx.headers)
     kept = decode_except(pruned, deletes, columns=out_cols,
                          file_keyed=file_keyed,

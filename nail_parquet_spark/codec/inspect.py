@@ -32,7 +32,9 @@ def metadata_summary(blocks: DataFrame) -> DataFrame:
             F.min("min_val").alias("min_val"),
             F.max("max_val").alias("max_val"),
         )
-        .orderBy("column")
+        # at most one row per column: one partition sorts them, with no
+        # range-sampling job and no second shuffle
+        .coalesce(1).sortWithinPartitions("column")
     )
 
 
@@ -63,7 +65,7 @@ def encoding_usage(blocks: DataFrame) -> DataFrame:
         blocks.groupBy("column", "codec")
         .agg(F.count("*").alias("n_blocks"), F.sum("enc_bytes").alias("enc_bytes"))
         .withColumn("pct_blocks", F.round(100 * F.col("n_blocks") / F.sum("n_blocks").over(w), 2))
-        .orderBy("column", "codec")
+        .coalesce(1).sortWithinPartitions("column", "codec")
     )
 
 
@@ -433,10 +435,10 @@ def count_where_pushdown(blocks: DataFrame, column: str, op: str, value=None,
       min >= v; constant blocks for ``=``/``in``) → contributes
       ``n_rows - null_count``, payload never read;
     - anything else is a boundary block: ONLY the predicate column of
-      those groups decodes (xref references resolve via the group
-      decoder), the exact residual predicate counts rows, and block
-      identity comes from decode positions so metadata-counted groups can
-      never double-count.
+      exactly those groups decodes (their source-file-scoped keys are the
+      decode's keep-set, so metadata-counted groups never reach it; xref
+      references resolve via the group decoder), and the exact residual
+      predicate counts rows.
 
     ``isnull`` / ``notnull`` answer 100% from null counters — no decode,
     ever. NULL rows never match value predicates (ANSI). Over
@@ -451,14 +453,13 @@ def count_where_pushdown(blocks: DataFrame, column: str, op: str, value=None,
     index actually decided.
     """
     from nail_parquet_spark.codec import zonemap
-    from nail_parquet_spark.codec.blockindex import BlockIndex
-    from nail_parquet_spark.codec.decode import (_keep_pairs, _pred_expr,
-                                                 decode_table)
+    from nail_parquet_spark.codec.blockindex import BlockIndex, _src_expr_frame
+    from nail_parquet_spark.codec.decode import _decode, _pred_expr
 
     if op not in zonemap.PRUNE_OPS:
         raise ValueError(f"op must be one of {zonemap.PRUNE_OPS}, got {op!r}")
     idx = BlockIndex.load(blocks, max_groups)
-    headers, refs = idx.headers, idx.refs
+    headers = idx.headers
     if column not in headers:
         raise ValueError(f"column {column!r} not in the blocks table")
     kind = zonemap.stat_kind(headers, column)
@@ -491,8 +492,6 @@ def count_where_pushdown(blocks: DataFrame, column: str, op: str, value=None,
             elif c == zonemap.BOUNDARY:
                 boundary.append(b.key)
         g_boundary = len(boundary)
-        keys = sorted({f"{s}\x00{p}\x00{q}" for s, p, q in boundary})
-        ident = F.concat_ws("\x00", "_src_file", "_part_id", "_block_id")
     else:
         # over the cap: the same per-block rule, run inside tasks
         def classify_batches(batches):
@@ -500,18 +499,19 @@ def count_where_pushdown(blocks: DataFrame, column: str, op: str, value=None,
 
             for rb in batches:
                 cls, n = zip(*map(classify, *(rb.column(i).to_pylist()
-                                              for i in range(2, 6)))) \
+                                              for i in range(3, 7)))) \
                     if rb.num_rows else ((), ())
                 yield pa.record_batch(
-                    [rb.column(0), rb.column(1), pa.array(cls, pa.int32()),
+                    [*rb.columns[:3], pa.array(cls, pa.int32()),
                      pa.array(n, pa.int64())],
-                    names=["part_id", "block_id", "cls", "n"])
+                    names=["__src", "part_id", "block_id", "cls", "n"])
 
-        classes = (blocks.filter(F.col("column") == column)
-                   .select("part_id", "block_id", "n_rows", "null_count",
-                           "min_val", "max_val")
+        classes = (_src_expr_frame(blocks.filter(F.col("column") == column))
+                   .select("__src", "part_id", "block_id", "n_rows",
+                           "null_count", "min_val", "max_val")
                    .mapInArrow(classify_batches,
-                               "part_id int, block_id bigint, cls int, n bigint"))
+                               "__src string, part_id int, block_id bigint, "
+                               "cls int, n bigint"))
         agg = classes.agg(
             F.sum(F.when(F.col("cls") == zonemap.FULL, F.col("n"))
                   .otherwise(F.lit(0))).alias("meta_count"),
@@ -523,27 +523,22 @@ def count_where_pushdown(blocks: DataFrame, column: str, op: str, value=None,
         g_total = int(agg["g_total"])
         g_boundary = int(agg["g_boundary"] or 0)
         if g_boundary > max_groups:
-            cnt = decode_table(blocks, [column], headers=headers, refs=refs,
-                               pre_grouped=pre_grouped).filter(pred).count()
+            cnt = _decode(blocks, idx.headers, idx.refs, idx.files,
+                          [column],
+                          pre_grouped=pre_grouped).filter(pred).count()
             return {"count": int(cnt), "groups_total": g_total,
                     "groups_metadata": 0, "groups_decoded": g_total}
-        boundary = ([(None, r["part_id"], r["block_id"]) for r in
+        boundary = ([tuple(r) for r in
                      classes.filter(F.col("cls") == zonemap.BOUNDARY)
-                     .select("part_id", "block_id").distinct().collect()]
+                     .select("__src", "part_id", "block_id").collect()]
                     if g_boundary else [])
-        keys = sorted(f"{p}\x00{q}" for _, p, q in boundary)
-        ident = F.concat_ws("\x00", "_part_id", "_block_id")
     if g_boundary == 0:
         return {"count": meta_count, "groups_total": g_total,
                 "groups_metadata": g_total, "groups_decoded": 0}
 
-    # the parts×bids isin filter is a pushdown-friendly SUPERSET; exact
-    # block identity comes from decode positions so full/none groups that
-    # slip through the superset can never be double-counted
-    sub = _keep_pairs(blocks, {(p, q) for _, p, q in boundary})
-    dec = decode_table(sub, [column], with_positions=True,
-                       headers=headers, refs=refs, pre_grouped=pre_grouped)
-    cnt_b = dec.filter(ident.isin(keys)).filter(pred).count()
+    cnt_b = _decode(blocks, idx.headers, idx.refs, idx.files, [column],
+                    pre_grouped=pre_grouped,
+                    keep=set(boundary)).filter(pred).count()
     return {"count": meta_count + int(cnt_b), "groups_total": g_total,
             "groups_metadata": g_total - g_boundary,
             "groups_decoded": g_boundary}
@@ -733,7 +728,7 @@ def group_stats_pushdown(blocks: DataFrame, group_col: str, value_col: str,
     """
     from nail_parquet_spark.codec import zonemap
     from nail_parquet_spark.codec.blockindex import BlockIndex, _src_expr_frame
-    from nail_parquet_spark.codec.decode import _filter_block_pairs, decode_table
+    from nail_parquet_spark.codec.decode import _keep_pairs, decode_table
 
     if group_col == value_col:
         raise ValueError("group_col and value_col must differ")
@@ -851,7 +846,7 @@ def group_stats_pushdown(blocks: DataFrame, group_col: str, value_col: str,
     pairs = {(r["part_id"], r["block_id"]) for r in got}
     sides = [mside]
     if pairs:
-        rdec = decode_table(_filter_block_pairs(blocks, pairs),
+        rdec = decode_table(_keep_pairs(blocks, pairs),
                             columns=[group_col, value_col],
                             headers=headers, refs=refs,
                             pre_grouped=pre_grouped)

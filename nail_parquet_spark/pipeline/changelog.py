@@ -37,7 +37,9 @@ from pyspark.sql import functions as F
 
 from nail_parquet_spark.codec.blockindex import BlockIndex
 from nail_parquet_spark.codec.decode import (
+    _LITERAL_KEYS,
     POS_COLUMNS,
+    _key_cond,
     _schema_from_headers,
     _spark_ddl_of,
     decode_table,
@@ -202,14 +204,12 @@ def table_changes(spark: SparkSession, out_dir: str, from_snapshot: int,
                 got = None  # truncated list: restriction would be unsound
             pairs = ({(r["_part_id"], r["_block_id"]) for r in got}
                      if got is not None else None)
-            if pairs is None or len(pairs) > 4096:
+            if pairs is None or len(pairs) > _LITERAL_KEYS:
                 conds.append(F.lit(True))  # too many hit groups: no pruning
             elif pairs:
-                # same exact-pair literal filter _filter_block_pairs uses,
-                # expressed as a condition so it ORs with the batch test
-                sep = F.concat_ws("#", F.col("part_id").cast("string"),
-                                  F.col("block_id").cast("string"))
-                conds.append(sep.isin([f"{p}#{b}" for p, b in pairs]))
+                # the exact-pair literal filter, as a condition so it ORs
+                # with the batch test
+                conds.append(_key_cond(["part_id", "block_id"], pairs))
         if not conds:
             # no new batches, no window kill coordinates, no eq deletes:
             # nothing can have changed

@@ -76,7 +76,7 @@ def test_over_cap_index_prunes_nothing(spark, small):
     idx = BlockIndex.load(blocks, max_groups=2)
     assert idx.blocks is None and sorted(idx.headers) == ["g", "k", "s"]
     assert idx.keep([[("k", "=", 5)]]) is None
-    assert BlockIndex.load(blocks).keep([[("k", "=", 5)]]) == {(0, 1)}
+    assert BlockIndex.load(blocks).keep([[("k", "=", 5)]]) == {("", 0, 1)}
 
 
 def _collected_rows(monkeypatch, frame):
@@ -111,7 +111,7 @@ def test_load_bounds_rows_before_the_driver(spark, small, monkeypatch,
         assert max(sizes) <= max_groups + 5
     else:
         assert idx.n_groups == 10
-        assert idx.keep([[("k", "=", 5)]]) == {(0, 1)}
+        assert idx.keep([[("k", "=", 5)]]) == {("", 0, 1)}
     # headers only: one collect under the row budget, the grouped read of
     # one row per (column, codec) over it
     for budget, collects in ((4096, [30]), (7, [10, 3])):
@@ -133,7 +133,7 @@ def test_cap_counts_groups_not_rows(spark, small):
             [[("k", "=", 5)]]) is None
     for max_groups in (10, 12, 29):
         assert BlockIndex.load(blocks, max_groups).keep(
-            [[("k", "=", 5)]]) == {(0, 1)}
+            [[("k", "=", 5)]]) == {("", 0, 1)}
     got = count_where_pushdown(blocks, "k", ">=", 13, max_groups=12)
     assert (got["count"], got["groups_decoded"]) == (27, 1)
 
