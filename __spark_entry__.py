@@ -2427,8 +2427,8 @@ def q_decode_pushdown(spark, sf_dir):
 def q_decode_bloom_pushdown(spark, sf_dir):
     """Encode documents with a per-block bloom index on source, then decode
     with an EQUALITY pushdown (codec/decode.prune_blocks_bloom: the probe
-    runs inside the block index's one metadata read, as a higher-order
-    exists over the driver-hashed key; zone maps alone cannot prune a
+    runs inside the block index's one metadata read, a numpy judge of the
+    driver-hashed key in one mapInArrow pass; zone maps alone cannot prune a
     high-cardinality equality). Value-exact against
     plain SQL because decode is bit-identical and the bloom can only skip
     provably-nonmatching blocks (residual filter keeps semantics exact)."""

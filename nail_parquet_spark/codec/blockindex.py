@@ -12,14 +12,16 @@ The read runs on the driver, with no Spark job, when the blocks frame is a
 bare scan of at most ``_DRIVER_HEADER_MAX_FILES`` local parquet files
 whose footers count at most ``_DRIVER_MAX_ROWS`` rows and fewer than the
 budget below: pyarrow reads the metadata columns, and
-:func:`codec.bloom.bloom_admits` judges the probed column's bitmaps. On 4
-local cores it took 0.03-0.2 s at 1k metadata rows and 1.4-2.5 s at 100k
-(4.2-4.6 s with a 50-key probe over 20k 10 KB bitmaps), 0.1-0.9 of the Spark
-read's time at every size up to those limits. Every other frame
-(in-memory encode output, filtered or cached frames, other sources,
-remote files, larger tables) takes ONE Spark action, a plain select with
-one verdict Column per probed predicate (:func:`codec.bloom.bloom_probe`).
-Both give the same index.
+:func:`codec.bloom.bloom_verdicts` judges the probed column's bitmaps. On
+4 local cores (medians of 5 warm runs) it took 0.02-0.05 s at 1k metadata
+rows in 16 files, and at 100k rows in 16 to 256 files 0.8-1.4 s without a
+probe and 1.2-2.1 s with a 50-key probe over 20k 10 KB bitmaps: 0.07-0.96
+of the Spark read's time at every point timed. Every other frame
+(in-memory encode output, filtered or cached frames, other sources, remote
+files, larger tables) takes ONE Spark action: a plain select, and with
+probes one ``mapInArrow`` pass of the same judge over the metadata rows
+and their bitmaps (2.0-3.7 s at those 100k points, 1.5-3.5 s without a
+probe). Both give the same index.
 
 In the Spark read each partition sends at most its share of
 ``max_groups + 1`` rows; when one fills its share, an exact group count
@@ -36,6 +38,7 @@ import json
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 from nail_parquet_spark.codec import bloom, zonemap
 
@@ -50,8 +53,9 @@ _POS_MASK = (1 << 33) - 1
 _HEADER_ROWS = 4096
 # The driver reads a bare local table's index itself (no Spark job) up to
 # these many files and metadata rows. Both are the largest sizes timed
-# against the Spark read (4 local cores, 10 KB url bitmaps), and the driver
-# was not slower at any of them: its reads are O(files) sequential IO and
+# against the Spark read (4 local cores, 10 KB url bitmaps; 100k rows in 16,
+# 64 and 256 files with no, a 1-key and a 50-key probe), and the driver was
+# not slower at any of them: its reads are O(files) sequential IO and
 # O(rows) Python, so a 100k-file lake table belongs to a Spark job.
 # Headers-only loads stop at their _HEADER_ROWS budget: at 30k rows the
 # grouped Spark read already matched the driver's.
@@ -182,32 +186,40 @@ class BlockIndex:
         ``files`` holds the files of a bare local parquet scan, whatever
         their number, and None for any other frame."""
         tz = blocks.sparkSession.conf.get("spark.sql.session.timeZone")
-        cols = []
+        # each probe as the index keeps it and as the bloom judge takes it
+        cols, lanes = [], []
         if stats and "bloom" in blocks.columns:
             for c, op, v in probes:
                 kind = bloom.literal_kind(v) if op in BLOOM_OPS else None
-                if kind and bloom.probe_lanes(op, v, kind) is not None:
+                ln = bloom.probe_lanes(op, v, kind) if kind else None
+                if ln is not None:
                     cols.append((c, op, v, kind))
+                    lanes.append((c, op, ln))
         budget = max_groups + 1 if stats else _HEADER_ROWS
         files = _local_scan_files(blocks)
         idx = None
         if files is not None and len(files) <= _DRIVER_HEADER_MAX_FILES:
-            idx = cls.from_files(files, cols, max_groups, tz,
+            idx = cls.from_files(files, cols, lanes, max_groups, tz,
                                  max_rows=min(budget - 1, _DRIVER_MAX_ROWS))
         if idx is None:
-            idx = cls._spark_read(blocks, cols, max_groups, tz, budget, stats)
+            idx = cls._spark_read(blocks, cols, lanes, max_groups, tz, budget,
+                                  stats)
         idx.files = files
         return idx
 
     @classmethod
-    def _spark_read(cls, blocks: DataFrame, cols, max_groups, tz, budget,
-                    stats: bool) -> "BlockIndex":
+    def _spark_read(cls, blocks: DataFrame, cols, lanes, max_groups, tz,
+                    budget, stats: bool) -> "BlockIndex":
         """The index from one Spark action over ``blocks``, unless a
         partition fills its share of ``budget``."""
         frame = _src_expr_frame(blocks)
-        verdicts = [F.when(F.col("column") == c, bloom.bloom_probe(op, v, kind))
-                    for c, op, v, kind in cols]
-        meta = frame.select("__src", *META_COLUMNS, *verdicts)
+        meta = frame.select("__src", *META_COLUMNS)
+        if lanes:
+            schema = StructType(meta.schema.fields + [
+                StructField(f"__bloom{i}", BooleanType()) for i in range(len(lanes))])
+            meta = frame.select("__src", *META_COLUMNS, "bloom").mapInArrow(
+                lambda batches: (bloom.bloom_verdicts(b, lanes) for b in batches),
+                schema)
         rows = _collect_within(meta, blocks.rdd.getNumPartitions(), budget)
         if rows is None:
             if not stats or (frame.select("__src", "part_id", "block_id")
@@ -217,25 +229,23 @@ class BlockIndex:
         return cls._parse(rows, max_groups, cols, tz)
 
     @classmethod
-    def from_files(cls, files: list[str], probes, max_groups,
+    def from_files(cls, files: list[str], probes, lanes, max_groups,
                    tz: str | None, max_rows: int) -> "BlockIndex | None":
         """The index of block files read with pyarrow on the driver: every
         file's rows, so mixed codecs across resumed jobs are all seen.
         ``files`` are ``file:`` URIs as ``inputFiles()`` gives them
         (percent-encoded), and each row's source key is the URI. ``probes``
-        are the index's ``(column, op, value, kind)``: for the probed
-        column's rows the ``bloom`` bitmap is judged by
-        :func:`codec.bloom.bloom_admits`, and a file without a ``bloom``
-        column reads as NULL bitmaps. None when the footers count more
-        than ``max_rows`` rows; no column is read then."""
+        are the index's ``(column, op, value, kind)`` and ``lanes`` the same
+        probes as :func:`codec.bloom.bloom_verdicts` takes them: for the
+        probed column's rows the ``bloom`` bitmaps are judged by it, and a
+        file without a ``bloom`` column reads as NULL bitmaps. None when the
+        footers count more than ``max_rows`` rows; no column is read then."""
         import pyarrow.parquet as pq
 
         paths = [_local_path(f) for f in files]
         metas = [pq.read_metadata(p) for p in paths]
         if sum(m.num_rows for m in metas) > max_rows:
             return None
-        lanes = [(c, op, bloom.probe_lanes(op, v, kind))
-                 for c, op, v, kind in probes]
 
         def records():
             for f, p, m in zip(files, paths, metas):
@@ -243,18 +253,12 @@ class BlockIndex:
                 # ParquetFile with the footer already read: pq.read_table
                 # sets up a dataset per call, several times the read itself
                 with pq.ParquetFile(p, metadata=m) as pf:
-                    t = pf.read(columns=META_COLUMNS + ["bloom"] * has_bloom,
-                                use_threads=False)
-                cols = t.column("column").to_pylist()
-                bitmaps = t.column("bloom") if has_bloom else None
-                verdicts = [
-                    [bloom.bloom_admits(bitmaps[i].as_py() if has_bloom else None,
-                                        op, ln) if col == c else None
-                     for i, col in enumerate(cols)]
-                    for c, op, ln in lanes]
-                yield from zip([f] * t.num_rows,
-                               *(t.column(c).to_pylist() for c in META_COLUMNS),
-                               *verdicts)
+                    for b in pf.iter_batches(
+                            columns=META_COLUMNS + ["bloom"] * has_bloom,
+                            use_threads=False):
+                        b = bloom.bloom_verdicts(b, lanes)
+                        yield from zip([f] * b.num_rows,
+                                       *(c.to_pylist() for c in b.columns))
 
         return cls._parse(records(), max_groups, probes, tz)
 

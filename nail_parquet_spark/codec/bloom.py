@@ -10,16 +10,15 @@ for ``=``, ``in``, ``prefix`` and ``contains`` predicates.
 
 - Bitmaps never ride with the payload, and a Spark read never sends them
   to the driver. The driver hashes the probe keys once
-  (:func:`probe_lanes`); :func:`bloom_probe` turns them into one Column (a
-  higher-order ``exists`` over an array literal of the key hashes) that
-  the block index (:mod:`codec.blockindex`) projects next to the other
-  metadata columns, so one metadata read returns a verdict per block. When
-  the index reads a local table's files on the driver itself,
-  :func:`bloom_admits` gives the same verdict from the same hashes.
+  (:func:`probe_lanes`), and one numpy judge (:func:`bloom_judge`, per
+  batch :func:`bloom_verdicts`) tests them against a whole Arrow column
+  of bitmaps. Both reads of the block index (:mod:`codec.blockindex`)
+  call it: the driver on each file it reads, a Spark read in one
+  ``mapInArrow`` pass over the metadata rows.
 - Each block is probed with its own stored ``k``, prefix length P and
   n-gram length N, so tables mixing bloom specs need no discovery pass.
-- :func:`bloom_might_contain` is the Python twin of the Column probe and
-  its test oracle.
+- :func:`bloom_might_contain` probes one bitmap in plain Python; it is the
+  judge's test oracle.
 - Opt-in per column (``encode_table(bloom_columns=[...])``): a bloom on a
   low-cardinality or never-probed column is pure write amplification.
 
@@ -30,7 +29,7 @@ not the block header JSON.
 
 Hashing: md5(value-bytes) -> two 57-bit lanes, double hashing
 pos_i = (h1 + i*h2) mod m_bits; the 57-bit lanes keep every numerator
-inside a bigint. Value canonicalization is type-pinned: strings hash their
+inside an int64. Value canonicalization is type-pinned: strings hash their
 UTF-8 bytes, integers/booleans hash str(int(v)) — the probe side must (and
 does) canonicalize identically.
 """
@@ -43,7 +42,6 @@ import math
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import functions as F
 
 from nail_parquet_spark.codec.zonemap import IN_PRUNE_CAP as IN_PROBE_CAP
 
@@ -171,12 +169,19 @@ def bloom_build(arr: pa.Array, bits_per_key: int = DEFAULT_BITS_PER_KEY,
         lanes = (np.frombuffer(digests, dtype=">u8").reshape(n, 2)
                  & np.uint64(_LANE_MASK)).astype(np.int64)
         h1, h2 = lanes[:, :1], lanes[:, 1:] | 1
-        pos = ((h1 + np.arange(k, dtype=np.int64) * h2) % m_bits).ravel()
+        pos = _positions(h1, h2, np.arange(k, dtype=np.int64), m_bits).ravel()
         np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
     flag = (_PREFIX_FLAG if prefix_len else 0) | (_NGRAM_FLAG if ngram_len else 0)
     tail = (bytes([prefix_len]) if prefix_len else b"") + \
         (bytes([ngram_len]) if ngram_len else b"")
     return bytes([k | flag]) + int(m_bits).to_bytes(4, "big") + bits.tobytes() + tail
+
+
+def _positions(h1, h2, j, m_bits):
+    """Bit ``j`` of the key with lanes ``(h1, h2)``: ``(h1 + j*h2) mod
+    m_bits``, broadcast over numpy operands. 57-bit lanes and ``j < 63``
+    keep every sum inside an int64."""
+    return (h1 + j * h2) % m_bits
 
 
 def bloom_prefix_len_of(bloom: bytes) -> int | None:
@@ -195,8 +200,8 @@ def bloom_ngram_len_of(bloom: bytes) -> int | None:
 
 def bloom_might_contain(bloom: bytes, value, kind: str,
                         op: str = "=") -> bool:
-    """Driver/test-side membership probe: the twin and oracle of
-    :func:`bloom_probe`.
+    """Membership probe of one bitmap in plain Python: the oracle of
+    :func:`bloom_judge`.
 
     ``op='prefix'``: probes the tagged truncated prefix; returns True
     (no prune) when the bitmap carries no prefix keys or the query prefix
@@ -280,89 +285,83 @@ def _probe_alternatives(op: str, value, kind: str):
 def probe_lanes(op: str, value, kind: str):
     """:func:`_probe_alternatives` with every key hashed to its lanes:
     ``[(n, [(h1, h2), ...]), ...]``, or None when the predicate cannot be
-    probed. Both verdicts, the Column's and :func:`bloom_admits`, read
-    these."""
+    probed. :func:`bloom_judge` reads these."""
     alts = _probe_alternatives(op, value, kind)
     if alts is None:
         return None
     return [(n, [bloom_lanes(k) for k in keys]) for n, keys in alts]
 
 
-def bloom_admits(bloom: bytes | None, op: str, lanes) -> bool:
-    """The verdict of :func:`bloom_probe`'s Column on one bitmap, in
-    Python: ``lanes`` are :func:`probe_lanes` of the predicate. Only the
-    alternatives whose n equals the bitmap's own key length for ``op``
-    apply; with none, the block may match."""
-    if bloom is None:
-        return True
-    if op == "prefix":
-        own = bloom_prefix_len_of(bloom) or -1
-    elif op == "contains":
-        own = bloom_ngram_len_of(bloom) or -1
-    else:
-        own = 0
-    hits = [keys for n, keys in lanes if n == own]
-    return not hits or any(all(_lanes_set(bloom, h1, h2) for h1, h2 in keys)
-                           for keys in hits)
+def bloom_judge(bitmaps: pa.Array, op: str, lanes,
+                rows: np.ndarray | bool = True) -> np.ndarray:
+    """One verdict per bitmap of ``bitmaps`` (a binary Arrow array): may
+    its block hold a row matching the predicate whose :func:`probe_lanes`
+    are ``lanes``? ``rows`` (a boolean mask) limits the judging to those
+    bitmaps; the others read True. Each bitmap is judged with its own
+    stored ``k``, ``m_bits`` and P/N tail byte: only the alternatives whose
+    n equals the bitmap's own key length for ``op`` apply, and with none
+    the block may match. A NULL bitmap is True, and so is a malformed one
+    (``k`` or ``m_bits`` 0, or a length other than its header and tail
+    give).
+
+    The verdict is :func:`bloom_might_contain`'s, except that a
+    ``contains`` query with more than ``_NGRAM_PROBE_CAP`` grams probes a
+    strided subset, which may keep a block the oracle drops — never the
+    reverse. Each bit of the probe keys is one numpy pass over every
+    (bitmap, alternative) pair still standing."""
+    bitmaps = bitmaps.cast(pa.large_binary())
+    n = len(bitmaps)
+    _, offsets, values = bitmaps.buffers()
+    off = np.frombuffer(offsets, np.int64)[bitmaps.offset:bitmaps.offset + n + 1]
+    data = np.frombuffer(values, np.uint8)
+    start, size = off[:-1], np.diff(off)
+    ok = bitmaps.is_valid().to_numpy(zero_copy_only=False) & (size >= 5) & rows
+    head = np.zeros((n, 5), np.int64)
+    head[ok] = data[start[ok, None] + np.arange(5)]
+    k = head[:, 0] & ~_FLAGS_MASK
+    has_p, has_n = (head[:, 0] & _PREFIX_FLAG) > 0, (head[:, 0] & _NGRAM_FLAG) > 0
+    m_bits = head[:, 1:] @ np.array([1 << 24, 1 << 16, 1 << 8, 1])
+    ok &= (k > 0) & (m_bits > 0) & (size == 5 + (m_bits + 7) // 8 + has_p + has_n)
+    # the key length a block stores for op: 0 (the plain value keys) for
+    # = and in, else its P or N tail byte (P rides before N when both are
+    # present), -1 without one
+    own = np.full(n, -1 if op in ("prefix", "contains") else 0)
+    tail = ok & {"prefix": has_p, "contains": has_n}.get(op, False)
+    own[tail] = data[off[1:][tail] - 1 - (has_n[tail] if op == "prefix" else 0)]
+    # a NULL or malformed bitmap, or one no alternative applies to, may match
+    hit = ~ok | ~np.isin(own, [a for a, _ in lanes])
+    for a in np.unique(own[~hit]):
+        group = np.flatnonzero(~hit & (own == a))
+        alts = [keys for n_a, keys in lanes if n_a == a]
+        # (bitmap, alternative) pairs, narrowed key by key and bit by bit:
+        # a pair drops out at the first unset bit of one of its keys
+        r, p = np.repeat(group, len(alts)), np.tile(np.arange(len(alts)), group.size)
+        for t in range(max(map(len, alts))):
+            # an alternative with fewer keys tests its last one again
+            h1, h2 = np.array([keys[min(t, len(keys) - 1)] for keys in alts]).T
+            for j in range(k[group].max()):
+                pos = _positions(h1[p], h2[p], j, m_bits[r])
+                bit = (data[start[r] + 5 + (pos >> 3)] >> (pos & 7)) & 1
+                keep = (bit > 0) | (j >= k[r])
+                r, p = r[keep], p[keep]
+        hit[r] = True
+    return hit
 
 
-def _byte(bloom, pos):
-    """Byte ``pos`` (1-based; negative counts from the end) of a bitmap."""
-    return F.conv(F.hex(bloom.substr(pos, F.lit(1))), 16, 10).cast("int")
-
-
-def bloom_probe(op: str, value, kind: str):
-    """A boolean Column over a blocks row: may the block hold a row
-    matching ``column op value`` (``=``, ``in``, ``prefix`` or
-    ``contains``), judged by its ``bloom`` bitmap? None when the predicate
-    cannot be probed. A NULL bitmap is always true.
-
-    The keys are hashed on the driver into one array literal of
-    :func:`probe_lanes`, parsed from one SQL string; a higher-order
-    ``exists`` probes each block with its own stored ``k``, P and N. The
-    verdict equals :func:`bloom_admits`'s, and
-    :func:`bloom_might_contain`'s except that a ``contains`` query with
-    more than ``_NGRAM_PROBE_CAP`` grams probes a strided subset, which may
-    keep a block the twin drops — never the reverse."""
-    lanes = probe_lanes(op, value, kind)
-    if lanes is None:
-        return None
-    b = F.col("bloom")
-    b0 = _byte(b, F.lit(1))
-    if op == "prefix":
-        # P rides before the N byte when gram keys are also present
-        ppos = F.when(b0.bitwiseAND(_NGRAM_FLAG) != 0, F.lit(-2)).otherwise(F.lit(-1))
-        own = F.when(b0.bitwiseAND(_PREFIX_FLAG) != 0, _byte(b, ppos))
-    elif op == "contains":
-        own = F.when(b0.bitwiseAND(_NGRAM_FLAG) != 0, _byte(b, F.lit(-1)))
-    else:
-        own = F.lit(0)
-    own = F.coalesce(own, F.lit(-1))
-    k = b0.bitwiseAND(0xFF & ~_FLAGS_MASK)
-    m = F.conv(F.hex(b.substr(F.lit(2), F.lit(4))), 16, 10).cast("bigint")
-    # one parse of an all-integer SQL literal: a nested F.lit/F.struct
-    # build costs a py4j round trip per value
-    lit = F.expr("array(%s)" % ", ".join(
-        "named_struct('n', %d, 'keys', array(%s))" % (n, ", ".join(
-            "named_struct('h1', CAST(%d AS BIGINT), 'h2', CAST(%d AS BIGINT))"
-            % hk for hk in keys))
-        for n, keys in lanes))
-
-    def bit_set(key):
-        # 57-bit lanes keep h1 + j*h2 inside a bigint for every j < 63
-        def probe(j):
-            pos = F.pmod(key["h1"] + j * key["h2"], m)
-            byte = _byte(b, (F.shiftright(pos, 3) + 6).cast("int"))
-            return F.call_function("shiftright", byte,
-                                   pos.bitwiseAND(7).cast("int")).bitwiseAND(1) == 1
-        return F.forall(F.sequence(F.lit(0), k - 1), probe)
-
-    def applies(a):
-        return a["n"] == own
-
-    may = (~F.exists(lit, applies)
-           | F.exists(lit, lambda a: applies(a) & F.forall(a["keys"], bit_set)))
-    return b.isNull() | may
+def bloom_verdicts(batch, probes):
+    """``batch`` (a record batch of blocks-table rows) with its ``bloom``
+    column replaced by one boolean column ``__bloom<i>`` per
+    probe ``(column, op, lanes)``: :func:`bloom_judge` on the rows of that
+    column, NULL on every other row. Without a ``bloom`` column every
+    bitmap reads as NULL. Both block-index reads call this."""
+    has_bloom = "bloom" in batch.schema.names
+    bitmaps = (batch.column("bloom") if has_bloom
+               else pa.nulls(batch.num_rows, pa.binary()))
+    for i, (c, op, lanes) in enumerate(probes):
+        sel = np.asarray(pc.fill_null(pc.equal(batch.column("column"), c), False))
+        v = bloom_judge(bitmaps, op, lanes, rows=sel)
+        batch = batch.append_column(f"__bloom{i}", pa.array(v, mask=~sel))
+    return batch.drop_columns(["bloom"]) if has_bloom else batch
 
 
 def parse_bloom_spec(specs) -> dict[str, "tuple[int | None, int | None]"]:

@@ -761,8 +761,9 @@ def prune_blocks_bloom(blocks: DataFrame, column: str, value,
     wrong, only less pruned).
 
     The membership test runs inside the block index's one metadata read
-    (:func:`codec.bloom.bloom_probe`), so bitmaps never reach the driver;
-    the keep-set, which zone maps narrow too, is applied like
+    (:func:`codec.bloom.bloom_verdicts`: on the driver for a bare local
+    scan, else in the Spark read's one ``mapInArrow`` pass, which never
+    sends bitmaps to the driver); the keep-set, which zone maps narrow too, is applied like
     ``prune_blocks``'. A NULL bloom (no filter on that block, pre-bloom
     dir, unsupported type) always keeps the group, and a ``prefix`` on a
     non-string column prunes nothing."""
