@@ -2318,8 +2318,10 @@ def q_decode_sample(spark, sf_dir):
     (codec/decode.decode_sample): only the key column decodes everywhere;
     rows are picked by the repo's pinned portable 60-bit md5 lane (same
     arithmetic in DuckDB), and payload blocks decode only where a picked
-    row lives. Value-exact: the lane is engine-independent and decode is
-    bit-identical; same key => same draw across layouts and runs."""
+    row lives, keeping the picked rows by position (the tail the
+    semi-join shares). Value-exact: the lane is engine-independent and
+    decode is bit-identical; same key => same draw across layouts and
+    runs."""
     from nail_parquet_spark.codec.decode import decode_sample
     from nail_parquet_spark.codec.encode import encode_table
 
@@ -2374,8 +2376,9 @@ def q_decode_semijoin(spark, sf_dir):
     WHERE o_custkey IN (SELECT c_custkey ...) against an ENCODED table.
     Stage 1 prunes blocks via zone maps + blooms when the probe inlines;
     stage 2 decodes ONLY the key column (with row coordinates) and
-    semi-joins the probe; stage 3 decodes full payloads solely for block
-    groups holding a match and keeps exact rows by coordinate semi-join.
+    semi-joins the probe; stage 3 brings the matched coordinates to the
+    driver, decodes full payloads solely for block groups holding a match
+    and keeps each group's matched rows by position.
     Value-exact because decode is bit-identical and semi-join cardinality
     is pinned (each table row at most once; NULL keys never match)."""
     from nail_parquet_spark.codec.decode import decode_semijoin

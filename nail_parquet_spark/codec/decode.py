@@ -19,6 +19,10 @@ parquet scan and then filters the exact keys. Both decode exactly the
 same groups. Row order is not preserved across the round trip
 (verification joins on a key — per the north rule, byte-identical
 ``text`` per ``url``).
+
+``decode_semijoin`` and ``decode_sample`` share one tail on either
+source (:func:`_take_rows`): only the groups holding a picked row decode,
+each keeping its picked rows by position.
 """
 
 from __future__ import annotations
@@ -294,6 +298,7 @@ def _no_rows(spark, schema: str) -> DataFrame:
 # the same shape as an Iceberg v2 position-delete coordinate (file_path, pos),
 # scoped by the block-group key this table format uses.
 POS_COLUMNS = ["_src_file", "_part_id", "_block_id", "_pos"]
+POS_DDL = "_src_file string, _part_id bigint, _block_id bigint, _pos bigint"
 
 
 def decode_table(blocks: DataFrame, columns: list[str] | None = None,
@@ -845,6 +850,12 @@ def _where_index(blocks: DataFrame, predicates,
     return clauses, BlockIndex.load(blocks, max_groups, probes=probes)
 
 
+def _where_columns(idx: BlockIndex, clauses, columns) -> tuple:
+    """:func:`_columns` of a CNF read: the predicate columns decode too."""
+    return _columns(idx.headers, columns,
+                    *(p[0] for clause in clauses for p in clause))
+
+
 def decode_table_where_all(blocks: DataFrame, predicates,
                            columns: list[str] | None = None,
                            file_keyed: bool = True,
@@ -862,12 +873,10 @@ def decode_table_where_all(blocks: DataFrame, predicates,
     frame with no job. Semantics equal
     decode_table(...).filter((p11 OR p12 ...) AND (p21 ...) AND ...)."""
     clauses, idx = _where_index(blocks, predicates, max_groups)
-    out_cols, use_cols = _columns(idx.headers, columns,
-                                  *(p[0] for clause in clauses for p in clause))
-    dec = _decode(blocks, idx.headers, idx.refs, idx.files, use_cols,
-                  file_keyed=file_keyed, pre_grouped=pre_grouped,
-                  keep=idx.keep(clauses))
-    return dec.filter(_cnf_expr(clauses)).select(*out_cols)
+    return _pruned_read(blocks, idx, _where_columns(idx, clauses, columns),
+                        idx.keep(clauses),
+                        lambda d: d.filter(_cnf_expr(clauses)),
+                        file_keyed=file_keyed, pre_grouped=pre_grouped)
 
 
 def _topk_keep(idx: BlockIndex, column: str, k: int,
@@ -1100,9 +1109,9 @@ def decode_semijoin(blocks: DataFrame, keys: DataFrame, key_col: str,
     (IN semantics); semi-join cardinality (each table row at most once,
     duplicate probe keys don't duplicate output).
 
-    The reference can only decode-everything-then-filter
-    (/root/reference/src/commands/data.rs); this is the columnar-native
-    plan, staged so payload bytes it can rule out are NEVER read:
+    The reference can only decode everything, then filter (nail-parquet's
+    src/commands/data.rs); this is the columnar-native plan, staged so
+    payload bytes it can rule out are NEVER read:
 
     1. the probe's distinct values (:func:`_probe_values`: usually one
        bounded collect deduplicated on the driver). A probe of at most
@@ -1110,24 +1119,15 @@ def decode_semijoin(blocks: DataFrame, keys: DataFrame, key_col: str,
        through zone maps + equality blooms (the ``'in'`` op of
        prune_blocks/prune_blocks_bloom) in the index's one metadata read,
        giving the exact keep-set;
-    2. ONLY ``key_col`` of the kept groups decodes — for a web corpus this
-       touches the dict/FSST url blocks, never the text/html payloads. On
-       the per-file source (a bare scan of local block files, see
-       ``decode_table``) each task judges the inline set itself
-       (``pyarrow.compute.is_in``) and sends the coordinates of its
-       matching rows to the driver, at most ``max_groups`` in all;
-    3. only the groups holding a match decode fully, one task per file,
-       and each group keeps its matching rows by position. A probe that
-       matches nothing returns an empty frame with no decode job.
-
-    Any other case runs the coordinate plan: another source, a larger
-    probe, more than ``max_groups`` matching rows, a key type whose Arrow
-    and Spark equality may differ (floating point, timestamps, decimals,
-    or a probe column of another type), or ``deletes``. There the key
-    decode carries row coordinates and semi-joins the probe in Spark;
-    the groups holding a match (every kept group, over ``max_groups``
-    of them) decode fully, and a coordinate semi-join on
-    ``POS_COLUMNS`` keeps exactly the matching rows.
+    2. ONLY ``key_col`` of the kept groups decodes — for a web corpus the
+       dict/FSST url blocks, never the text/html payloads — to find the
+       matching rows: in the decode tasks (``pyarrow.compute.is_in``) for
+       an inline probe on a key of the probe's type in ``_ARROW_EQ_TYPES``,
+       else by a Spark semi-join to the probe;
+    3. :func:`_take_rows`: only the groups holding a match decode, each
+       keeping its matching rows by position (a 50-key probe on a bare
+       scan of local block files is 3 Spark jobs). A probe that matches
+       nothing returns an empty frame with no decode job.
 
     ``keys`` must either contain ``key_col`` or be a single-column frame
     (renamed). To enrich probe rows instead of filtering the table, join
@@ -1159,51 +1159,39 @@ def decode_semijoin(blocks: DataFrame, keys: DataFrame, key_col: str,
     if key_col not in idx.headers:
         raise ValueError(f"column {key_col!r} not in the blocks table")
 
-    out_cols, use_cols = _columns(idx.headers, columns, key_col)
+    cols = _columns(idx.headers, columns, key_col)
     keep = idx.keep(inline) if inline else None
     if not sample or keep == set():
-        return _empty(blocks, idx.headers, out_cols)
+        return _empty(blocks, idx.headers, cols[0])
+    hits = _inline_hits(blocks, idx, key_col, sample,
+                        probe.schema[key_col].dataType, keep, file_keyed,
+                        pre_grouped) if inline else None
+    return _take_rows(blocks, idx, key_col, cols, keep,
+                      lambda d: d.join(probe, key_col, "left_semi"), deletes,
+                      file_keyed, max_groups, pre_grouped, hits)
 
-    if inline and deletes is None:
-        # stages 2 and 3 on the per-file source
-        hits = _inline_hits(blocks, idx, key_col, sample,
-                            probe.schema[key_col].dataType, keep,
-                            file_keyed, max_groups)
-        if hits is not None:
-            take: dict[tuple, list] = {}
-            for src, pid, bid, pos in hits:
-                take.setdefault((src, pid, bid), []).append(pos)
-            return _decode(blocks, idx.headers, idx.refs, idx.files,
-                           use_cols, file_keyed=file_keyed,
-                           keep=set(take), take=take).select(*out_cols)
 
-    keydec = _decode(blocks, idx.headers, idx.refs, idx.files, [key_col],
-                     file_keyed=file_keyed, with_positions=True,
-                     pre_grouped=pre_grouped, keep=keep)
-    coords = keydec.join(probe, key_col, "left_semi").select(*POS_COLUMNS)
-    if deletes is not None:
-        coords = coords.join(deletes.select(*POS_COLUMNS),
-                             on=POS_COLUMNS, how="left_anti")
-    return _materialize_coords(blocks, idx, coords, out_cols, use_cols,
-                               file_keyed, max_groups, pre_grouped, keep)
+def _narrow_rows(frame: DataFrame, budget: int) -> list | None:
+    """All rows of ``frame`` in one job (:func:`_collect_within`), or None
+    when they may exceed ``budget`` or its plan has an exchange (AQE wraps
+    every plan that has one)."""
+    try:
+        plan = frame._jdf.queryExecution().executedPlan()
+    except AttributeError:  # a Spark Connect frame has no JVM plan
+        return None
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return None
+    return _collect_within(frame, frame.rdd.getNumPartitions(), budget)
 
 
 def _probe_values(probe: DataFrame, limit: int) -> list:
     """The distinct values of the one-column ``probe``, up to ``limit + 1``
-    of them. A probe whose plan has no exchange is read in one job, each
+    of them. A probe without an exchange is read in one job, each
     partition sending at most its share of ``_PROBE_ROWS_PER_KEY`` rows
-    per value, and deduplicated on the driver. A probe that read does not
-    settle (a partition fills its share, or the plan shuffles) runs
-    ``distinct().limit(limit + 1)`` in Spark instead."""
-    try:
-        narrow = (probe._jdf.queryExecution().executedPlan().getClass()
-                  .getSimpleName() != "AdaptiveSparkPlanExec")
-    except AttributeError:  # a Spark Connect frame has no JVM plan
-        narrow = False
-    rows = None
-    if narrow:
-        rows = _collect_within(probe, probe.rdd.getNumPartitions(),
-                               _PROBE_ROWS_PER_KEY * (limit + 1))
+    per value (:func:`_narrow_rows`), and deduplicated on the driver. A
+    probe that read does not settle runs ``distinct().limit(limit + 1)``
+    in Spark instead."""
+    rows = _narrow_rows(probe, _PROBE_ROWS_PER_KEY * (limit + 1))
     if rows is None:
         rows = probe.distinct().limit(limit + 1).collect()
     return _distinct([r[0] for r in rows])[:limit + 1]
@@ -1221,20 +1209,18 @@ def _distinct(values: list) -> list:
 
 def _inline_hits(blocks: DataFrame, idx: BlockIndex, key_col: str,
                  values: list, probe_type, keep: set | None,
-                 file_keyed: bool, max_groups: int) -> list | None:
+                 file_keyed: bool, pre_grouped: bool) -> DataFrame | None:
     """The ``POS_COLUMNS`` of every row of the kept groups whose
-    ``key_col`` is one of ``values``, judged inside the per-file tasks of
-    one job. None when the source is not per-file, the key's Spark type
-    is not ``probe_type`` or not one of ``_ARROW_EQ_TYPES``, or more than
-    ``max_groups`` rows match."""
+    ``key_col`` is one of ``values``, judged inside the key-decode tasks
+    of either source. None when the key's Spark type is not
+    ``probe_type`` or not one of ``_ARROW_EQ_TYPES``."""
     from pyspark.sql.pandas.types import from_arrow_type
 
     schema = _schema_from_headers(idx.headers, [key_col])
     key_type = schema.field(0).type
     spark_type = from_arrow_type(key_type).simpleString()
     if (spark_type != probe_type.simpleString()
-            or spark_type not in _ARROW_EQ_TYPES
-            or not _per_file(blocks, idx.files, file_keyed, keep)):
+            or spark_type not in _ARROW_EQ_TYPES):
         return None
     value_set = pa.array(values, key_type)
 
@@ -1252,34 +1238,67 @@ def _inline_hits(blocks: DataFrame, idx: BlockIndex, key_col: str,
                      pa.array([bid] * n, pa.int64()), pos.cast(pa.int64())],
                     names=POS_COLUMNS)
 
-    hits = _source(blocks, idx.files,
+    return _source(blocks, idx.files,
                    _fetch_closure(idx.headers, idx.refs, [key_col]),
-                   file_keyed, match,
-                   "_src_file string, _part_id bigint, _block_id bigint, "
-                   "_pos bigint", keep)
-    n_tasks = len(idx.files) if keep is None else len({k[0] for k in keep})
-    return _collect_within(hits, n_tasks, max_groups + 1)
+                   file_keyed, match, POS_DDL, keep, pre_grouped)
 
 
-def _materialize_coords(blocks: DataFrame, idx: BlockIndex,
-                        coords: DataFrame, out_cols: list[str],
-                        use_cols: list[str], file_keyed: bool,
-                        max_groups: int, pre_grouped: bool = False,
-                        keep: set | None = None) -> DataFrame:
-    """Late-materialization tail of the coordinate plans: decode full
-    payloads ONLY for the groups holding at least one coordinate (their
-    exact keys, a driver pull capped at ``max_groups``; over the cap
-    every group of ``keep``, correct but unpruned), then keep exactly
-    the addressed rows by coordinate semi-join."""
-    got = (coords.select("_src_file", "_part_id", "_block_id").distinct()
-           .limit(max_groups + 1).collect())
-    if len(got) <= max_groups:
-        keep = {tuple(r) for r in got}
-    full = _decode(blocks, idx.headers, idx.refs, idx.files, use_cols,
-                   file_keyed=file_keyed, with_positions=True,
-                   pre_grouped=pre_grouped, keep=keep)
-    return (full.join(coords, on=POS_COLUMNS, how="left_semi")
-            .select(*out_cols))
+def _minus(frame: DataFrame, deletes: DataFrame | None,
+           broadcast: bool = False) -> DataFrame:
+    """``frame`` (with ``POS_COLUMNS``) without the rows whose coordinates
+    ``deletes`` (if any) names, by one left-anti join."""
+    if deletes is None:
+        return frame
+    d = deletes.select(*POS_COLUMNS)
+    return frame.join(F.broadcast(d) if broadcast else d, POS_COLUMNS,
+                      "left_anti")
+
+
+def _pruned_read(blocks: DataFrame, idx: BlockIndex, cols: tuple,
+                 keep: set | None, where, deletes: DataFrame | None = None,
+                 file_keyed: bool = True, pre_grouped: bool = False,
+                 broadcast_deletes: bool = False) -> DataFrame:
+    """The groups of the keep-set ``keep`` (all when None) decoded as
+    :func:`_columns`' pair ``cols``, minus ``deletes``, filtered by
+    ``where`` (the read's own predicate, a frame-to-frame function)."""
+    out_cols, use_cols = cols
+    dec = _decode(blocks, idx.headers, idx.refs, idx.files, use_cols,
+                  file_keyed=file_keyed, with_positions=deletes is not None,
+                  pre_grouped=pre_grouped, keep=keep)
+    return where(_minus(dec, deletes, broadcast_deletes)).select(*out_cols)
+
+
+def _take_rows(blocks: DataFrame, idx: BlockIndex, key_col: str,
+               cols: tuple, keep: set | None, where,
+               deletes: DataFrame | None, file_keyed: bool, max_groups: int,
+               pre_grouped: bool,
+               matched: DataFrame | None = None) -> DataFrame:
+    """Late-materialization tail of the semi-join and the sample.
+    ``matched`` (the ``POS_COLUMNS`` of the picked rows) defaults to
+    ``where``, the read's own predicate, over a decode of ``key_col``
+    alone. Minus ``deletes``, at most ``max_groups + 1`` of them reach the
+    driver (:func:`_narrow_rows`, else a limit), and the groups holding one
+    decode, keeping those rows by position. Over ``max_groups`` the
+    keep-set is read and filtered by ``where`` (:func:`_pruned_read`):
+    pruned by the index, not by the matches, like every read over its cap."""
+    if matched is None:
+        matched = where(_decode(
+            blocks, idx.headers, idx.refs, idx.files, [key_col],
+            file_keyed=file_keyed, with_positions=True,
+            pre_grouped=pre_grouped, keep=keep)).select(*POS_COLUMNS)
+    matched = _minus(matched, deletes)
+    rows = _narrow_rows(matched, max_groups + 1)
+    if rows is None:
+        rows = matched.limit(max_groups + 1).collect()
+    if len(rows) > max_groups:
+        return _pruned_read(blocks, idx, cols, keep, where, deletes,
+                            file_keyed, pre_grouped)
+    take: dict[tuple, list] = {}
+    for src, pid, bid, pos in rows:
+        take.setdefault((src, pid, bid), []).append(pos)
+    return _decode(blocks, idx.headers, idx.refs, idx.files, cols[1],
+                   file_keyed=file_keyed, pre_grouped=pre_grouped,
+                   keep=set(take), take=take).select(*cols[0])
 
 
 def decode_sample(blocks: DataFrame, key_col: str, fraction: float,
@@ -1295,8 +1314,9 @@ def decode_sample(blocks: DataFrame, key_col: str, fraction: float,
     (``int(md5(key_str || ':' || seed)[:15 hex]) / 2^60 < fraction`` —
     the same lane split_by_group/weighted_sample use, reproducible in any
     engine), and full payloads decode only for block groups holding a
-    picked row. For a web corpus that means sampling 1% of 100 TB reads
-    the key blocks plus ~1% of the payload blocks, never the rest.
+    picked row (:func:`_take_rows`). For a web corpus that means sampling
+    1% of 100 TB reads the key blocks plus ~1% of the payload blocks,
+    never the rest.
 
     Key-stable: the same key always draws the same uniform — re-encodes,
     re-layouts, and re-runs pick the same rows, and duplicate-key rows
@@ -1312,15 +1332,11 @@ def decode_sample(blocks: DataFrame, key_col: str, fraction: float,
     if not (0.0 <= fraction <= 1.0):
         raise ValueError("decode_sample: fraction must be in [0, 1]")
     idx = BlockIndex.load(blocks, stats=False)
-    headers = idx.headers
-    if key_col not in headers:
+    if key_col not in idx.headers:
         raise ValueError(f"column {key_col!r} not in the blocks table")
-    out_cols, use_cols = _columns(headers, columns, key_col)
+    cols = _columns(idx.headers, columns, key_col)
     if fraction == 0.0:
-        return _empty(blocks, headers, out_cols)
-    keydec = _decode(blocks, idx.headers, idx.refs, idx.files, [key_col],
-                     file_keyed=file_keyed, with_positions=True,
-                     pre_grouped=pre_grouped)
+        return _empty(blocks, idx.headers, cols[0])
     ks = F.coalesce(F.col(key_col).cast("string"), F.lit("\x00"))
     u = (
         F.conv(
@@ -1332,9 +1348,6 @@ def decode_sample(blocks: DataFrame, key_col: str, fraction: float,
         ).cast("bigint").cast("double")
         / float(1 << 60)
     )
-    coords = keydec.filter(u < float(fraction)).select(*POS_COLUMNS)
-    if deletes is not None:
-        coords = coords.join(deletes.select(*POS_COLUMNS),
-                             on=POS_COLUMNS, how="left_anti")
-    return _materialize_coords(blocks, idx, coords, out_cols, use_cols,
-                               file_keyed, max_groups, pre_grouped)
+    return _take_rows(blocks, idx, key_col, cols, None,
+                      lambda d: d.filter(u < float(fraction)), deletes,
+                      file_keyed, max_groups, pre_grouped)

@@ -30,19 +30,17 @@ its size). Vectors of deleted rows never move; only coordinates do.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from nail_parquet_spark.codec.blockindex import BlockIndex
 from nail_parquet_spark.codec.decode import (
     POS_COLUMNS,
     _cnf_expr,
     _decode,
-    _keep_pairs,
+    _minus,
+    _pruned_read,
+    _where_columns,
     _where_index,
     decode_table,
 )
-
-POS_DDL = "_src_file string, _part_id bigint, _block_id bigint, _pos bigint"
 
 
 def positions_where(blocks: DataFrame, predicates,
@@ -55,11 +53,7 @@ def positions_where(blocks: DataFrame, predicates,
     prune block groups first; only the predicate columns of surviving
     groups decode. Returns a DataFrame with exactly ``POS_COLUMNS``."""
     clauses, idx = _where_index(blocks, predicates, max_groups)
-    pred_cols: list[str] = []
-    for clause in clauses:
-        for col_, _, _ in clause:
-            if col_ not in pred_cols:
-                pred_cols.append(col_)
+    pred_cols = _where_columns(idx, clauses, [])[1]
     missing = [c for c in pred_cols if c not in idx.headers]
     if missing:
         raise ValueError(f"predicate columns not in block table: {missing}")
@@ -78,15 +72,13 @@ def decode_except_where(blocks: DataFrame, deletes: DataFrame, predicates,
     """``decode_table_where_all`` minus the rows named by ``deletes``:
     zone-map/bloom pruning still skips non-matching block groups (pruning
     never changes a surviving row's coordinates — group identity is
-    physical), then the anti-join and the exact residual filter apply."""
+    physical), the exact keep-set decodes with the predicate columns,
+    then the anti-join and the exact residual filter apply."""
     clauses, idx = _where_index(blocks, predicates, max_groups)
-    pruned = _keep_pairs(blocks, idx.keep(clauses))
-    out_cols = list(columns) if columns is not None else sorted(idx.headers)
-    kept = decode_except(pruned, deletes, columns=out_cols,
-                         file_keyed=file_keyed,
-                         broadcast_deletes=broadcast_deletes,
-                         headers=idx.headers, refs=idx.refs)
-    return kept.filter(_cnf_expr(clauses))
+    return _pruned_read(blocks, idx, _where_columns(idx, clauses, columns),
+                        idx.keep(clauses),
+                        lambda d: d.filter(_cnf_expr(clauses)), deletes,
+                        file_keyed, broadcast_deletes=broadcast_deletes)
 
 
 def decode_except(blocks: DataFrame, deletes: DataFrame,
@@ -104,13 +96,6 @@ def decode_except(blocks: DataFrame, deletes: DataFrame,
     plan can't see its size (e.g. an in-memory ``positions_where`` result —
     a mapInArrow plan has no stats, and a sort-merge anti-join would
     shuffle every decoded row)."""
-    if headers is None or refs is None:
-        idx = BlockIndex.load(blocks, stats=False)
-        headers, refs = idx.headers, idx.refs
-    out_cols = list(columns) if columns is not None else sorted(headers)
-    dec = decode_table(blocks, columns=out_cols, file_keyed=file_keyed,
+    dec = decode_table(blocks, columns=columns, file_keyed=file_keyed,
                        with_positions=True, headers=headers, refs=refs)
-    d = deletes.select(*POS_COLUMNS)
-    if broadcast_deletes:
-        d = F.broadcast(d)
-    return dec.join(d, on=POS_COLUMNS, how="left_anti").select(*out_cols)
+    return _minus(dec, deletes, broadcast_deletes).drop(*POS_COLUMNS)

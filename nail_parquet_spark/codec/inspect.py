@@ -416,6 +416,13 @@ def frequency_pushdown(blocks: DataFrame, column: str,
             .groupBy("value").agg(F.sum("n").alias("n")))
 
 
+def _count_rows(frame: DataFrame) -> int:
+    """``frame.count()`` in one job, summed on the driver from one count
+    per task: ``count()``'s partial aggregate adds an exchange, which AQE
+    runs as a job of its own."""
+    return frame._jdf.queryExecution().toRdd().count()
+
+
 def count_where_pushdown(blocks: DataFrame, column: str, op: str, value=None,
                          max_groups: int = 100_000,
                          pre_grouped: bool = False) -> dict:
@@ -523,9 +530,9 @@ def count_where_pushdown(blocks: DataFrame, column: str, op: str, value=None,
         g_total = int(agg["g_total"])
         g_boundary = int(agg["g_boundary"] or 0)
         if g_boundary > max_groups:
-            cnt = _decode(blocks, idx.headers, idx.refs, idx.files,
-                          [column],
-                          pre_grouped=pre_grouped).filter(pred).count()
+            cnt = _count_rows(_decode(blocks, idx.headers, idx.refs,
+                                      idx.files, [column],
+                                      pre_grouped=pre_grouped).filter(pred))
             return {"count": int(cnt), "groups_total": g_total,
                     "groups_metadata": 0, "groups_decoded": g_total}
         boundary = ([tuple(r) for r in
@@ -536,9 +543,9 @@ def count_where_pushdown(blocks: DataFrame, column: str, op: str, value=None,
         return {"count": meta_count, "groups_total": g_total,
                 "groups_metadata": g_total, "groups_decoded": 0}
 
-    cnt_b = _decode(blocks, idx.headers, idx.refs, idx.files, [column],
-                    pre_grouped=pre_grouped,
-                    keep=set(boundary)).filter(pred).count()
+    cnt_b = _count_rows(_decode(blocks, idx.headers, idx.refs, idx.files,
+                                [column], pre_grouped=pre_grouped,
+                                keep=set(boundary)).filter(pred))
     return {"count": meta_count + int(cnt_b), "groups_total": g_total,
             "groups_metadata": g_total - g_boundary,
             "groups_decoded": g_boundary}

@@ -59,10 +59,10 @@ from nail_parquet_spark.codec.compact import rekey_groups
 from nail_parquet_spark.codec.blockindex import BlockIndex
 from nail_parquet_spark.codec.decode import (
     POS_COLUMNS,
+    POS_DDL,
     decode_table,
 )
 from nail_parquet_spark.codec.deletes import (
-    POS_DDL,
     decode_except,
     positions_where,
 )

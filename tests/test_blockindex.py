@@ -183,34 +183,20 @@ def _fields(idx):
             idx.probes)
 
 
-def _with_jobs(spark, fn):
-    """``fn()`` and the number of Spark jobs it ran."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"blockindex-test-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("", "")
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("table", ["eq", "grams"])
 @pytest.mark.parametrize("max_groups, stats", [(100_000, True), (5, True),
                                                (100_000, False)])
-def test_driver_index_equals_spark_read(spark, on_disk, table, max_groups,
-                                        stats):
+def test_driver_index_equals_spark_read(spark, on_disk, count_jobs, table,
+                                        max_groups, stats):
     # a bare scan is indexed on the driver; the same frame behind a no-op
     # filter takes the Spark read, and both give the same index, bloom
     # verdicts and source keys included
     _, tables = on_disk
     bare = spark.read.parquet(tables[table])
     probes = _PROBES if stats else ()
-    got, jobs = _with_jobs(spark, lambda: BlockIndex.load(
+    got, jobs = count_jobs(lambda: BlockIndex.load(
         bare, max_groups, probes=probes, stats=stats))
-    want, spark_jobs = _with_jobs(spark, lambda: BlockIndex.load(
+    want, spark_jobs = count_jobs(lambda: BlockIndex.load(
         bare.filter(F.col("n_rows") >= 0), max_groups, probes=probes,
         stats=stats))
     assert _fields(got) == _fields(want)
@@ -236,7 +222,8 @@ def test_driver_index_equals_spark_read(spark, on_disk, table, max_groups,
                    for b in got.blocks["k"])
 
 
-def test_malformed_bitmaps_keep_their_block(spark, on_disk, tmp_path):
+def test_malformed_bitmaps_keep_their_block(spark, on_disk, tmp_path,
+                                          count_jobs):
     # bitmaps this library never writes, one cut 10 bytes short and one
     # with m_bits 0 in each file, keep their blocks on both reads; every
     # other block is pruned for an absent url
@@ -264,7 +251,7 @@ def test_malformed_bitmaps_keep_their_block(spark, on_disk, tmp_path):
     bare = spark.read.parquet(str(tmp_path))
     probes = [("url", "=", "https://nowhere.example/p/1"),
               ("url", "in", ["https://nowhere.example/p/2", "nope"])]
-    got, jobs = _with_jobs(spark, lambda: BlockIndex.load(bare, probes=probes))
+    got, jobs = count_jobs(lambda: BlockIndex.load(bare, probes=probes))
     want = BlockIndex.load(bare.filter(F.col("n_rows") >= 0), probes=probes)
     assert jobs == 0 and _fields(got) == _fields(want)
     for i in range(len(probes)):
@@ -294,7 +281,7 @@ def test_driver_index_ops_equal_plain_spark(spark, on_disk):
 
 
 def test_other_frames_take_the_spark_read(spark, on_disk, monkeypatch,
-                                          tmp_path):
+                                          tmp_path, count_jobs):
     # a filtered frame, more files or footer rows than the driver reads,
     # and a footer row count over the budget each take the Spark read,
     # with the same index; decode_parquet_dir follows the same rule
@@ -305,14 +292,14 @@ def test_other_frames_take_the_spark_read(spark, on_disk, monkeypatch,
     assert n_rows > want.n_groups == 12
     for frame, max_groups in ((bare.filter(F.col("n_rows") >= 0), 100_000),
                               (bare, want.n_groups)):
-        got, jobs = _with_jobs(spark, lambda: BlockIndex.load(
+        got, jobs = count_jobs(lambda: BlockIndex.load(
             frame, max_groups, probes=_PROBES))
         assert jobs > 0 and _fields(got) == _fields(want)
     rows = lambda df: sorted(df.select("url", "k").collect())  # noqa: E731
     want_rows = rows(src)
 
     def scan(out):
-        _, jobs = _with_jobs(spark, lambda: decode_parquet_dir(
+        _, jobs = count_jobs(lambda: decode_parquet_dir(
             spark, tables["grams"], str(tmp_path / out)).collect())
         assert rows(spark.read.parquet(str(tmp_path / out))) == want_rows
         return jobs
@@ -322,7 +309,7 @@ def test_other_frames_take_the_spark_read(spark, on_disk, monkeypatch,
                         ("_DRIVER_MAX_ROWS", n_rows - 1)):
         with monkeypatch.context() as m:
             m.setattr(blockindex, name, limit)
-            got, jobs = _with_jobs(spark, lambda: BlockIndex.load(
+            got, jobs = count_jobs(lambda: BlockIndex.load(
                 bare, probes=_PROBES))
             assert jobs > 0 and _fields(got) == _fields(want), name
             assert scan(name) == driver_jobs + 1, name

@@ -4,7 +4,6 @@ Exchange, every other frame through the shuffle. Both sources give the
 same answers and the same row coordinates."""
 import hashlib
 import os
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -24,18 +23,6 @@ from nail_parquet_spark.codec.inspect import (count_where_pushdown,
                                               encoding_usage,
                                               metadata_summary)
 from nail_parquet_spark.synth import make_webpages_batch
-
-
-def _jobs(spark, fn):
-    """``fn()`` and the number of Spark jobs it ran."""
-    sc = spark.sparkContext
-    group = f"keepset-test-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("", "")
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _shuffles(df) -> bool:
@@ -64,37 +51,38 @@ def pages(spark, tmp_path_factory):
     return spark.read.parquet(str(src)), blocks
 
 
-def test_pruned_reads_of_a_bare_scan_run_one_map_stage(spark, pages):
+def test_pruned_reads_of_a_bare_scan_run_one_map_stage(spark, pages,
+                                                        count_jobs):
     src, blocks = pages
     cols = ["url", "warc_ts", "lang", "text"]
     urls = [r["url"] for r in src.orderBy("url").select("url").collect()]
     u = urls[123]
 
-    got, jobs = _jobs(spark, lambda: decode_table_where_all(
+    got, jobs = count_jobs(lambda: decode_table_where_all(
         blocks, [("url", "=", u)]).collect())
     assert jobs == 1
     assert _rows(got, cols) == _rows(src.filter(F.col("url") == u).collect(),
                                      cols)
 
-    got, jobs = _jobs(spark, lambda: decode_topk(blocks, "url", 10).collect())
+    got, jobs = count_jobs(lambda: decode_topk(blocks, "url", 10).collect())
     assert jobs == 1
     assert [r["url"] for r in got] == urls[::-1][:10]
 
     cut = src.select(F.percentile_approx("warc_ts", 0.5)).first()[0]
-    got, jobs = _jobs(spark, lambda: count_where_pushdown(
+    got, jobs = count_jobs(lambda: count_where_pushdown(
         blocks, "warc_ts", ">=", cut))
-    assert got["groups_decoded"] > 0 and jobs <= 2
+    assert got["groups_decoded"] > 0 and jobs == 1
     assert got["count"] == src.filter(F.col("warc_ts") >= F.lit(cut)).count()
 
     keys = urls[::24][:50]
     probe = spark.createDataFrame([(k,) for k in keys], "url string")
-    got, jobs = _jobs(spark, lambda: decode_semijoin(
+    got, jobs = count_jobs(lambda: decode_semijoin(
         blocks, probe, "url").collect())
     assert jobs <= 4
     assert _rows(got, cols) == _rows(
         src.filter(F.col("url").isin(keys)).collect(), cols)
 
-    got, jobs = _jobs(spark, lambda: metadata_summary(blocks).collect())
+    got, jobs = count_jobs(lambda: metadata_summary(blocks).collect())
     assert jobs <= 2
     assert [r["column"] for r in got] == sorted(r["column"] for r in got)
 
@@ -307,11 +295,14 @@ def keyed(spark, tmp_path_factory):
 
 
 @pytest.fixture
-def per_file_only(monkeypatch):
-    def coords(*args, **kwargs):
-        raise AssertionError("the semi-join took the coordinate plan")
+def taken_by_position(monkeypatch):
+    """Fails a semi-join that decodes the index's keep-set, as it does over
+    its ``max_groups`` cap, instead of taking its matched rows by
+    position."""
+    def over_cap(*args, **kwargs):
+        raise AssertionError("the semi-join took the over-cap read")
 
-    monkeypatch.setattr(decode, "_materialize_coords", coords)
+    monkeypatch.setattr(decode, "_pruned_read", over_cap)
 
 
 @pytest.mark.parametrize("probe_rows, want", [
@@ -319,7 +310,7 @@ def per_file_only(monkeypatch):
     ([(5,), (None,)], [5]),                # a NULL probe key
     ([(7,), (8,), (79,)], [7, 8, 79]),     # keys repeating inside a group
 ])
-def test_semijoin_per_file_matches_isin(spark, keyed, per_file_only,
+def test_semijoin_per_file_matches_isin(spark, keyed, taken_by_position,
                                         probe_rows, want):
     df, blocks = keyed
     probe = spark.createDataFrame(probe_rows, "k long")
@@ -332,7 +323,7 @@ def test_semijoin_per_file_matches_isin(spark, keyed, per_file_only,
 
 @pytest.mark.parametrize("shape", ["many_rows", "shuffled", "filtered"])
 def test_semijoin_few_keys_in_many_rows_stay_inline(spark, keyed,
-                                                    per_file_only, shape):
+                                                    taken_by_position, shape):
     # more rows than the one-job probe read takes: the keys still prune
     df, blocks = keyed
     n = decode._PROBE_ROWS_PER_KEY * 65 + 50
@@ -349,7 +340,7 @@ def test_semijoin_few_keys_in_many_rows_stay_inline(spark, keyed,
         df.filter(F.col("k").isin(5, 60)).collect(), cols)
 
 
-def test_semijoin_per_file_column_subsets(spark, keyed, per_file_only):
+def test_semijoin_per_file_column_subsets(spark, keyed, taken_by_position):
     df, blocks = keyed
     probe = spark.createDataFrame([("u0100",), ("u0007",)], "u string")
     want = df.filter(F.col("u").isin("u0100", "u0007"))
@@ -363,12 +354,13 @@ def test_semijoin_per_file_column_subsets(spark, keyed, per_file_only):
 
 
 def test_semijoin_matching_no_group_starts_no_decode(spark, keyed,
-                                                     per_file_only):
+                                                     taken_by_position,
+                                                     count_jobs):
     df, blocks = keyed
     probe = spark.createDataFrame([(10_000,), (-5,)], "k long")
-    out, jobs = _jobs(spark, lambda: decode_semijoin(blocks, probe, "k"))
+    out, jobs = count_jobs(lambda: decode_semijoin(blocks, probe, "k"))
     assert jobs <= 1  # the probe collect only
-    rows, jobs = _jobs(spark, out.collect)
+    rows, jobs = count_jobs(out.collect)
     assert rows == [] and jobs == 0
     assert out.schema == decode_table(blocks).schema
 

@@ -132,7 +132,7 @@ def test_cli_decode_of_a_snapshot_takes_the_per_file_task(spark, tmp_path,
     assert rows() == 1_000
 
 
-def test_read_blocks_at_starts_no_job(spark, tmp_path):
+def test_read_blocks_at_starts_no_job(spark, tmp_path, count_jobs):
     # the block files' schema is known, so reading a snapshot's batch dirs
     # needs no inference job; the frame still decodes to the source rows
     from nail_parquet_spark.pipeline.checkpoint import (encode_resumable,
@@ -147,14 +147,8 @@ def test_read_blocks_at_starts_no_job(spark, tmp_path):
         tables.append(t)
     out = str(tmp_path / "enc")
     encode_resumable(spark, str(src), out, units_per_job=1)
-    sc = spark.sparkContext
-    group = f"sink-test-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        blocks = read_blocks_at(spark, out)
-    finally:
-        sc.setJobGroup("", "")
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    blocks, jobs = count_jobs(lambda: read_blocks_at(spark, out))
+    assert jobs == 0
     dec = str(tmp_path / "dec")
     decode_to_parquet(blocks, dec).collect()
     assert _decoded(dec, pa.concat_tables(tables).sort_by("url"))

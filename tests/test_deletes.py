@@ -10,7 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from nail_parquet_spark.codec.decode import POS_COLUMNS, decode_table
-from nail_parquet_spark.codec.deletes import decode_except, positions_where
+from nail_parquet_spark.codec.deletes import (decode_except,
+                                              decode_except_where,
+                                              positions_where)
 from nail_parquet_spark.codec.encode import encode_table
 
 
@@ -125,6 +127,19 @@ def test_decode_except_ignores_extra_columns(spark, web_blocks):
         "why", F.lit("audit"))
     got = decode_except(blocks, dels, broadcast_deletes=True)
     assert got.count() == 199
+
+
+def test_decode_except_where_filters_on_columns_it_does_not_return(
+        spark, web_blocks):
+    # the predicate column decodes for the filter, then is projected away
+    df, blocks = web_blocks
+    dels = positions_where(blocks, [("k", "<", 50)])
+    got = decode_except_where(blocks, dels, [("score", "=", 3)],
+                              columns=["url"])
+    assert got.columns == ["url"]
+    want = df.filter((F.col("score") == 3) & (F.col("k") >= 50))
+    assert (sorted(r[0] for r in got.collect())
+            == sorted(r[0] for r in want.select("url").collect()))
 
 
 def test_positions_stable_on_disk_and_across_jobs(spark, tmp_path):
